@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** PageRank with the reference's exact numeric semantics
@@ -20,13 +21,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * Spark-first design (NOT a translation of the reference's machinery):
   * the rank vector is a DataFrame `(id, pr)`; the per-iteration state
-  * carries `(id, outdeg, pr, old_pr)` so that sum/dangling/diff reduce to
+  * carries `(id, deg, pr, old_pr)` so that sum/dangling/diff reduce to
   * ONE fused aggregate action per iteration (the reference runs three
   * separate driver loops). The edge list is hash-partitioned on `src`
   * once and cached — across iterations only the small rank frame
   * shuffles, the (potentially 100 TB) edge table never re-shuffles.
-  * Lineage is truncated with `localCheckpoint` every `checkpointEvery`
-  * iterations; on a real cluster swap for `checkpoint` on HDFS.
+  * Lineage is truncated with a `localCheckpoint` every iteration; on a
+  * real cluster swap for `checkpoint` on HDFS.
+  *
+  * Every entry point runs the one loop in [[iterate]]; they differ only
+  * in the data they pass it: the per-edge term ([[Flow]]), the restart
+  * term, the initial vector and the stop rule.
   */
 object PageRank {
 
@@ -49,6 +54,25 @@ object PageRank {
   val DefaultTol = 1e-5
   val DefaultMaxIter = 10000
 
+  /** How rank flows along out-edges. `outWeight` folds a source's
+    * out-edges into its `deg` (null ⇒ dangling); `perVertex` projects
+    * the rank side of the contribution join from `old_pr` and `deg`;
+    * `perEdge` is the term summed per destination. */
+  private final case class Flow(outWeight: Column, perVertex: Seq[Column], perEdge: Column)
+
+  /** `old_pr/outdeg`, once per vertex, then summed. */
+  private val Unweighted =
+    Flow(count(lit(1)), Seq((col("old_pr") / col("deg")).as("c")), col("c"))
+
+  /** `(old_pr·w)/wout` per edge, in EXACTLY that order here and in the
+    * unrolled weighted oracle. */
+  private val Weighted =
+    Flow(sum("w"), Seq(col("old_pr"), col("deg")), (col("old_pr") * col("w")) / col("deg"))
+
+  /** Stop rule of the fixed-round variants: no L1 bound, only the
+    * round count. */
+  private val NoTol = Double.NegativeInfinity
+
   /** Run to convergence. Returns `(id BIGINT, rank DOUBLE)` for the dense
     * universe, ascending ids not guaranteed — order downstream if needed.
     *
@@ -61,13 +85,12 @@ object PageRank {
       websize: Option[Long] = None,
       alpha: Double = DefaultAlpha,
       tol: Double = DefaultTol,
-      maxIter: Int = DefaultMaxIter,
-      checkpointEvery: Int = 10): DataFrame = {
-    val (ranks, _) = runWithStats(spark, edges, websize, alpha, tol, maxIter, checkpointEvery)
-    ranks
-  }
+      maxIter: Int = DefaultMaxIter): DataFrame =
+    iterate(spark, edgePairs(edges), websize, alpha, Unweighted, None, None, tol, maxIter)._1
 
-  /** As [[run]] but also returns the iteration count (for tests/bench). */
+  /** As [[run]] but also returns the iteration count (for tests/bench).
+    * `checkpointEvery` is ignored — every iteration checkpoints; the
+    * parameter stays only so positional callers keep compiling. */
   def runWithStats(
       spark: SparkSession,
       edges: DataFrame,
@@ -75,107 +98,13 @@ object PageRank {
       alpha: Double,
       tol: Double,
       maxIter: Int,
-      checkpointEvery: Int): (DataFrame, Int) = {
-
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val n: Long = websize.getOrElse {
-      val row = e.agg(greatest(max("src"), max("dst"))).head()
-      if (row.isNullAt(0)) 1L else row.getLong(0) + 1L
-    }
-
-    // Static per-vertex frame: (id, outdeg); outdeg null => dangling.
-    val outdeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val verts = vertRange(spark, n)
-      .join(outdeg, Seq("id"), "left")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count() // materialize once
-
-    val oneIv = (1.0 - alpha) / n // (1-α)·sum_pr/n with sum_pr≡1 after normalize
-
-    // state: (id, outdeg, pr, old_pr). old_pr only meaningful after an update.
-    var state = verts
-      .withColumn("pr", when(col("id") === 0, 1.0).otherwise(0.0))
-      .withColumn("old_pr", lit(0.0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var iter = 0
-    var diff = Double.MaxValue
-    // previous round's state, released only after the aggregate below has
-    // materialized the current (lazily checkpointed) state — unpersisting
-    // a localCheckpoint before its successor materializes would destroy
-    // the only copy of the recomputation source.
-    var toRelease: DataFrame = null
-    while (diff > tol && iter < maxIter) {
-      // ONE action per iteration: Σpr and Σ dangling pr of the current
-      // (pre-normalized) vector, plus (from iteration 1) the L1 diff of
-      // the previous update, fused into a single aggregate
-      // (mr-pr-cpp.cpp:131-138,161-174). This same aggregate also
-      // materializes the previous round's lazy localCheckpoint — the
-      // checkpoint-then-aggregate pair costs one job, not two.
-      val row = state.agg(
-        sum("pr"),
-        sum(when(col("outdeg").isNull, col("pr")).otherwise(0.0)),
-        sum(abs(col("pr") - col("old_pr")))).head()
-      if (toRelease != null) {
-        toRelease.unpersist(false) // covers the CacheManager-persisted initial state
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
-        toRelease = null
-      }
-      val sumPr = row.getDouble(0)
-      val danglingPr = row.getDouble(1)
-      if (iter > 0) {
-        diff = row.getDouble(2)
-        // The reference re-checks the guard at loop top AFTER the update
-        // that produced this diff; stopping here performs the same number
-        // of updates (mr-pr-cpp.cpp:130,161-178).
-        if (diff <= tol) return (finish(state), iter)
-      }
-
-      val normalized =
-        if (iter == 0) state.withColumn("old_pr", col("pr"))
-        else state.withColumn("old_pr", col("pr") / sumPr)
-
-      // α·Σ_{j→i} old_pr[j]/outdeg(j): edge-side stays partitioned on src;
-      // only the small rank frame shuffles to meet it, then one exchange
-      // on dst for the sum. Map-side partial aggregation applies.
-      val contrib = e
-        .join(normalized.select(col("id"), (col("old_pr") / col("outdeg")).as("c")),
-          e("src") === col("id"))
-        .groupBy(e("dst").as("id"))
-        .agg(sum("c").as("h"))
-
-      val oneAv = alpha * danglingPr / n
-      val next = normalized.drop("pr")
-        .join(contrib, Seq("id"), "left")
-        .withColumn("pr", coalesce(col("h"), lit(0.0)) * alpha + lit(oneAv + oneIv))
-        .drop("h")
-        .select("id", "outdeg", "pr", "old_pr")
-
-      // localCheckpoint EVERY iteration: `normalized` appears twice
-      // in `next`'s plan (contrib + base), so without truncation the
-      // logical plan doubles per iteration — caching alone does not stop
-      // Catalyst re-analyzing an exponentially growing tree. Lazy: the
-      // next loop-top aggregate (or the caller's first action) scans all
-      // partitions and materializes it. On a real cluster swap for
-      // reliable `checkpoint` at `checkpointEvery`.
-      val cp = next.localCheckpoint(false)
-      toRelease = state
-      state = cp
-      iter += 1
-    }
-    (finish(state), iter)
-  }
-
-  private def finish(state: DataFrame): DataFrame =
-    state.select(col("id"), col("pr").as("rank"))
+      checkpointEvery: Int): (DataFrame, Int) =
+    iterate(spark, edgePairs(edges), websize, alpha, Unweighted, None, None, tol, maxIter)
 
   /** Fixed-iteration variant (no convergence test) — used by the
-    * SQL-oracle-checked query entry, where the oracle unrolls the same
-    * number of iterations. */
-  /** @param init optional WARM-START rank vector (id, rank) — the
+    * SQL-oracle-checked query entries, where the oracle unrolls the same
+    * number of iterations.
+    * @param init optional WARM-START rank vector (id, rank) — the
     *   incremental-refresh shape: after a graph change, continue from
     *   the previous fixpoint instead of re-converging from the unit
     *   impulse. A warm start normalizes on its FIRST iteration too
@@ -187,76 +116,9 @@ object PageRank {
       websize: Long,
       iterations: Int,
       alpha: Double = DefaultAlpha,
-      init: Option[DataFrame] = None): DataFrame = {
-    // persisted: every iteration's contrib join re-reads the edge frame,
-    // and without the persist each of those is a full source re-scan
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outdeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val verts = vertRange(spark, websize).join(broadcast(outdeg), Seq("id"), "left")
-    val n = websize
-    val oneIv = (1.0 - alpha) / n
-
-    var state = (init match {
-      case None =>
-        verts.withColumn("pr", when(col("id") === 0, 1.0).otherwise(0.0))
-      case Some(r0) =>
-        verts.join(r0.select(col("id"), col("rank").as("pr")), Seq("id"), "left")
-          .withColumn("pr", coalesce(col("pr"), lit(0.0)))
-    }).localCheckpoint(true)
-    var iter = 0
-    var toRelease: DataFrame = null
-    while (iter < iterations) {
-      // ONE job per iteration (the run() pattern, r13): the scalar
-      // sum_pr/dangling_pr aggregate ALSO materializes the previous
-      // round's lazy checkpoint — versus the former broadcast-stats +
-      // eager-checkpoint shape, which paid a broadcast-build job AND a
-      // materialization job every iteration (measured: 33 jobs → 14
-      // for the 3-iteration gate query).
-      val row = state.agg(
-        sum("pr"),
-        sum(when(col("outdeg").isNull, col("pr")).otherwise(0.0))).head()
-      if (toRelease != null) {
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
-        toRelease = null
-      }
-      val sumPr = row.getDouble(0)
-      val danglingPr = row.getDouble(1)
-      val normalized =
-        if (iter == 0 && init.isEmpty) state.withColumn("old_pr", col("pr"))
-        else state.withColumn("old_pr", col("pr") / lit(sumPr))
-      val contrib = e
-        .join(normalized.select(col("id"), (col("old_pr") / col("outdeg")).as("c")),
-          e("src") === col("id"))
-        .groupBy(e("dst").as("id"))
-        .agg(sum("c").as("h"))
-      // alpha·dangling/n + (1−α)/n folded driver-side: the identical
-      // double ops in the identical order as the former per-row columns,
-      // so ranks stay bit-exact vs the unrolled oracle
-      val oneAv = alpha * danglingPr / n.toDouble
-      val next = normalized.select("id", "outdeg")
-        .join(contrib, Seq("id"), "left")
-        .withColumn("pr", coalesce(col("h"), lit(0.0)) * alpha + lit(oneAv + oneIv))
-        .select("id", "outdeg", "pr")
-      // lazy checkpoint: next iteration's aggregate materializes it. The
-      // LAST round stays eager so every predecessor (and the cached edge
-      // frame) can be released before returning.
-      if (iter < iterations - 1) {
-        val cp = next.localCheckpoint(false)
-        toRelease = state
-        state = cp
-      } else {
-        val cp = next.localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(state)
-        state = cp
-      }
-      iter += 1
-    }
-    if (toRelease != null)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
-    e.unpersist(false)
-    state.select(col("id"), col("pr").as("rank"))
-  }
+      init: Option[DataFrame] = None): DataFrame =
+    iterate(spark, edgePairs(edges), Some(websize), alpha, Unweighted, None, init,
+      NoTol, iterations)._1
 
   /** WEIGHTED fixed-iteration PageRank — the variant the reference's
     * `add_weight` primitive (`oink/add_weight.cpp`) exists to feed but
@@ -264,11 +126,9 @@ object PageRank {
     * proportion to the edge weight,
     * pr[i] = α·Σ_{j→i} old_pr[j]·w(j,i)/wout(j) + α·dangling/n + (1−α)/n,
     * wout(j) = Σ out-weights of j; dangling = no out-edges (weights are
-    * ≥ 1, so the dangling set matches the unweighted one). Per-edge
-    * contribution is written `(old_pr · w) / wout` in EXACTLY that
-    * order here and in the unrolled oracle. Same single-job-per-
-    * iteration shape, pre-normalization discipline, and edge-frame
-    * reuse as [[runFixed]].
+    * ≥ 1, so the dangling set matches the unweighted one). `init` is
+    * [[runFixed]]'s warm start, with wout and the dangling set
+    * re-derived from the new edge set.
     * @param edges (src, dst, w) — weights are carried as doubles (the
     *   `read_edge_weight` CLI format); INTEGER-valued weights keep wout
     *   exact (integer sums are exact in IEEE below 2^53,
@@ -281,68 +141,8 @@ object PageRank {
       alpha: Double = DefaultAlpha,
       init: Option[DataFrame] = None): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("double").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wout = e.groupBy(col("src").as("id")).agg(sum("w").as("wout"))
-    val verts = vertRange(spark, websize)
-      .join(broadcast(wout), Seq("id"), "left")
-    val n = websize
-    val oneIv = (1.0 - alpha) / n
-
-    // init: optional WARM-START vector (id, rank) — runFixed's
-    // incremental-refresh shape on the weighted surface: continue from
-    // a previous fixpoint after a graph change, re-deriving wout (and
-    // the dangling set) from the new edge set. A warm start normalizes
-    // on its FIRST iteration too (the carried vector is not exactly
-    // unit mass), which the unrolled warm oracle replays.
-    var state = (init match {
-      case None =>
-        verts.withColumn("pr", when(col("id") === 0, 1.0).otherwise(0.0))
-      case Some(r0) =>
-        verts.join(r0.select(col("id"), col("rank").as("pr")), Seq("id"), "left")
-          .withColumn("pr", coalesce(col("pr"), lit(0.0)))
-    }).localCheckpoint(true)
-    var iter = 0
-    var toRelease: DataFrame = null
-    while (iter < iterations) {
-      // one fused scalar aggregate per iteration — see runFixed (r13)
-      val row = state.agg(
-        sum("pr"),
-        sum(when(col("wout").isNull, col("pr")).otherwise(0.0))).head()
-      if (toRelease != null) {
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
-        toRelease = null
-      }
-      val sumPr = row.getDouble(0)
-      val danglingPr = row.getDouble(1)
-      val normalized =
-        if (iter == 0 && init.isEmpty) state.withColumn("old_pr", col("pr"))
-        else state.withColumn("old_pr", col("pr") / lit(sumPr))
-      val contrib = e
-        .join(normalized.select(col("id"), col("old_pr"), col("wout")),
-          e("src") === col("id"))
-        .groupBy(e("dst").as("id"))
-        .agg(sum((col("old_pr") * col("w")) / col("wout")).as("h"))
-      val oneAv = alpha * danglingPr / n.toDouble
-      val next = normalized.select("id", "wout")
-        .join(contrib, Seq("id"), "left")
-        .withColumn("pr", coalesce(col("h"), lit(0.0)) * alpha + lit(oneAv + oneIv))
-        .select("id", "wout", "pr")
-      if (iter < iterations - 1) {
-        val cp = next.localCheckpoint(false)
-        toRelease = state
-        state = cp
-      } else {
-        val cp = next.localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(state)
-        state = cp
-      }
-      iter += 1
-    }
-    if (toRelease != null)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
-    e.unpersist(false)
-    state.select(col("id"), col("pr").as("rank"))
+      col("w").cast("double").as("w"))
+    iterate(spark, e, Some(websize), alpha, Weighted, None, init, NoTol, iterations)._1
   }
 
   /** Personalized PageRank (Jeh & Widom, "Scaling personalized web
@@ -351,9 +151,8 @@ object PageRank {
     * pr[i] = α·Σ_{j→i} old_pr[j]/outdeg(j) + (α·dangling + (1−α))·p(i),
     * p = 1/|S| on the seeds, 0 elsewhere, init pr = p. The similarity
     * ranking "near these pages" that powers related-page and
-    * seed-expansion queries. Same single-job-per-iteration shape and
-    * pre-normalization discipline as [[runFixed]], so the unrolled SQL
-    * oracle is bit-identical. */
+    * seed-expansion queries. `init` is [[runFixed]]'s warm start, with
+    * the restart mass still directed at the seeds. */
   def runPersonalized(
       spark: SparkSession,
       edges: DataFrame,
@@ -363,68 +162,119 @@ object PageRank {
       alpha: Double = DefaultAlpha,
       init: Option[DataFrame] = None): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outdeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val verts = vertRange(spark, websize).join(broadcast(outdeg), Seq("id"), "left")
     // IEEE division, replayed identically in the oracle
     val pSeed = 1.0 / seeds.size
     val restart = when(col("id").isin(seeds: _*), pSeed).otherwise(0.0)
+    iterate(spark, edgePairs(edges), Some(websize), alpha, Unweighted, Some(restart), init,
+      NoTol, iterations)._1
+  }
 
-    // init: optional WARM-START vector (id, rank) — [[runFixed]]'s
-    // incremental-refresh shape with the restart mass still directed
-    // at the seeds: after a graph change, continue from the previous
-    // personalized fixpoint over the new edge set (outdegrees and the
-    // dangling set re-derive). A warm start normalizes on its FIRST
-    // iteration too; the unrolled warm oracle replays it.
-    var state = (init match {
-      case None => verts.withColumn("pr", restart)
+  private def edgePairs(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+
+  /** The PageRank loop behind every entry point.
+    *
+    * @param edges   `(src, dst)`, plus `w` for [[Weighted]]
+    * @param websize page-universe size; None derives max(id)+1
+    * @param restart personalized restart vector p(i); None spreads the
+    *                restart mass uniformly, `α·dangling/n + (1−α)/n`
+    * @param init    warm-start vector (id, rank); None starts cold from
+    *                `restart`, or the unit impulse when that is None too
+    * @param tol     L1 bound that stops the loop; [[NoTol]] never does
+    * @param maxIter round cap — the round count of the fixed variants
+    * @return (`(id, rank)`, rounds run)
+    */
+  private def iterate(
+      spark: SparkSession,
+      edges: DataFrame,
+      websize: Option[Long],
+      alpha: Double,
+      flow: Flow,
+      restart: Option[Column],
+      init: Option[DataFrame],
+      tol: Double,
+      maxIter: Int): (DataFrame, Int) = {
+    // Loop-invariant input: partitioned on src once and cached, so each
+    // round's contribution join meets it without re-shuffling it.
+    val e = edges.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+
+    val n: Long = websize.getOrElse {
+      val row = e.agg(greatest(max("src"), max("dst"))).head()
+      if (row.isNullAt(0)) 1L else row.getLong(0) + 1L
+    }
+
+    val verts = vertRange(spark, n)
+      .join(e.groupBy(col("src").as("id")).agg(flow.outWeight.as("deg")), Seq("id"), "left")
+    val start = init match {
+      case None =>
+        verts.withColumn("pr", restart.getOrElse(when(col("id") === 0, 1.0).otherwise(0.0)))
       case Some(r0) =>
         verts.join(r0.select(col("id"), col("rank").as("pr")), Seq("id"), "left")
           .withColumn("pr", coalesce(col("pr"), lit(0.0)))
-    }).localCheckpoint(true)
+    }
+    // state: (id, deg, pr, old_pr). old_pr only meaningful after an update.
+    // Eager: one job computes deg and the start vector, which every
+    // round's join and the first aggregate then read.
+    var state = start.withColumn("old_pr", lit(0.0)).localCheckpoint(true)
+
+    // ONE action per iteration: Σpr and Σ dangling pr of the current
+    // (pre-normalized) vector, plus the L1 diff of the update that
+    // produced it, fused into a single aggregate (mr-pr-cpp.cpp:131-138,
+    // 161-174). The same aggregate materializes the round's lazy
+    // localCheckpoint — the checkpoint-then-aggregate pair costs one
+    // job, not two.
+    def aggregate(s: DataFrame) = s.agg(
+      sum("pr"),
+      sum(when(col("deg").isNull, col("pr")).otherwise(0.0)),
+      sum(abs(col("pr") - col("old_pr")))).head()
+
+    var row = aggregate(state)
     var iter = 0
-    var toRelease: DataFrame = null
-    while (iter < iterations) {
-      // one fused scalar aggregate per iteration — see runFixed (r13)
-      val row = state.agg(
-        sum("pr"),
-        sum(when(col("outdeg").isNull, col("pr")).otherwise(0.0))).head()
-      if (toRelease != null) {
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
-        toRelease = null
-      }
+    // The reference's loop guard (mr-pr-cpp.cpp:130), checked after the
+    // update that produced the diff.
+    while (iter < maxIter && (iter == 0 || row.getDouble(2) > tol)) {
       val sumPr = row.getDouble(0)
       val danglingPr = row.getDouble(1)
+      // a warm start normalizes on its first round too: the carried
+      // vector is not exactly unit mass
       val normalized =
         if (iter == 0 && init.isEmpty) state.withColumn("old_pr", col("pr"))
-        else state.withColumn("old_pr", col("pr") / lit(sumPr))
+        else state.withColumn("old_pr", col("pr") / sumPr)
+
+      // Σ_{j→i} of the per-edge term: the edge side stays partitioned
+      // on src; only the small rank frame shuffles to meet it, then one
+      // exchange on dst for the sum. Map-side partial aggregation applies.
       val contrib = e
-        .join(normalized.select(col("id"), (col("old_pr") / col("outdeg")).as("c")),
-          e("src") === col("id"))
+        .join(normalized.select((col("id") +: flow.perVertex): _*), e("src") === col("id"))
         .groupBy(e("dst").as("id"))
-        .agg(sum("c").as("h"))
-      // α·dangling + (1−α) folded driver-side (identical op order)
-      val restartMass = alpha * danglingPr + (1.0 - alpha)
-      val next = normalized.select("id", "outdeg")
-        .join(contrib, Seq("id"), "left")
-        .withColumn("pr", coalesce(col("h"), lit(0.0)) * alpha +
-          lit(restartMass) * restart)
-        .select("id", "outdeg", "pr")
-      if (iter < iterations - 1) {
-        val cp = next.localCheckpoint(false)
-        toRelease = state
-        state = cp
-      } else {
-        val cp = next.localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(state)
-        state = cp
+        .agg(sum(flow.perEdge).as("h"))
+
+      // the restart term's scalar part folded driver-side, in the same
+      // double ops and order as the unrolled oracles
+      val teleport = restart match {
+        case None => lit(alpha * danglingPr / n + (1.0 - alpha) / n)
+        case Some(p) => lit(alpha * danglingPr + (1.0 - alpha)) * p
       }
+      val next = normalized.drop("pr")
+        .join(contrib, Seq("id"), "left")
+        .withColumn("pr", coalesce(col("h"), lit(0.0)) * alpha + teleport)
+        .select("id", "deg", "pr", "old_pr")
+
+      // localCheckpoint EVERY iteration: `normalized` appears twice in
+      // `next`'s plan (contrib + base), so without truncation the
+      // logical plan doubles per iteration. Lazy: the aggregate below
+      // materializes it, and only then may its predecessor go —
+      // releasing a checkpoint before its successor materializes would
+      // destroy the only copy of the recomputation source.
+      val cp = next.localCheckpoint(false)
+      row = aggregate(cp)
+      Bridge.releaseCheckpoint(state)
+      state = cp
       iter += 1
     }
-    if (toRelease != null)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(toRelease)
+    // Exit right after the aggregate materialized the returned state:
+    // only its checkpoint outlives the call.
     e.unpersist(false)
-    state.select(col("id"), col("pr").as("rank"))
+    (state.select(col("id"), col("pr").as("rank")), iter)
   }
 }

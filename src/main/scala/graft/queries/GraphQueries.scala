@@ -2304,10 +2304,6 @@ object GraphQueries {
     sb.toString
   }
 
-  /** Unrolled n-iteration PageRank oracle mirroring PageRank.runFixed:
-    * per iteration, sum/dangling from the pre-normalized vector,
-    * normalize (skipped at iteration 0), contributions old_pr/outdeg,
-    * pr = α·h + α·dangling/n + (1−α)/n. */
   /** Two-phase unrolled oracle for g_pagerank_w_warm — the WEIGHTED
     * twin of [[pagerankWarmSql]]: cold iterations over the standing
     * weighted edge set, a phase switch that re-keys wout (and the
@@ -2485,6 +2481,10 @@ object GraphQueries {
     sb.toString
   }
 
+  /** Unrolled n-iteration PageRank oracle mirroring PageRank.runFixed:
+    * per iteration, sum/dangling from the pre-normalized vector,
+    * normalize (skipped at iteration 0), contributions old_pr/outdeg,
+    * pr = α·h + α·dangling/n + (1−α)/n. */
   def pagerankSql(iters: Int): String = {
     val sb = new StringBuilder
     sb.append(s"WITH edges AS ($E),\n")

@@ -66,6 +66,73 @@ class PageRankSpec extends SparkSpec {
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
   }
 
+  /** Checker rule (|Δ| ≤ 1e-4 per id, `correctness_checker.cpp:34-56`)
+    * and the same round count as [[ReferencePageRank]]; then the
+    * fixed-round stop rule run for that many rounds must land on the
+    * converged ranks. */
+  private def parity(edges: org.apache.spark.sql.DataFrame): Unit = {
+    val pairs = edges.as[(Long, Long)].collect().toSeq
+    val (want, wantRounds) = ReferencePageRank.run(pairs.map { case (s, d) => (s.toInt, d.toInt) })
+    val (ranks, rounds) = PageRank.runWithStats(spark, edges, None,
+      PageRank.DefaultAlpha, PageRank.DefaultTol, PageRank.DefaultMaxIter, 0)
+    val got = ranks.as[(Long, Double)].collect().toMap
+    assert(rounds == wantRounds, s"rounds: engine $rounds, reference $wantRounds")
+    assert(got.keySet == want.indices.map(_.toLong).toSet, "id universe differs")
+    val maxDiff = want.indices.map(i => math.abs(got(i.toLong) - want(i))).max
+    assert(maxDiff <= 1e-4, f"max |diff| $maxDiff%.2e exceeds checker tolerance 1e-4")
+
+    def r9(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), round(col("rank"), 9).as("rank"))
+    val fixed = r9(PageRank.runFixed(spark, edges, want.length.toLong, iterations = rounds))
+    val converged = r9(ranks)
+    assert(fixed.exceptAll(converged).isEmpty && converged.exceptAll(fixed).isEmpty,
+      s"runFixed($rounds) differs from run at round 9")
+  }
+
+  test("bull (vendored) matches the reference loop") {
+    val path = getClass.getResource("/bull.txt").getPath
+    parity(EdgeListIO.readValidated(spark, path))
+  }
+
+  test("2-cycle matches the reference loop") {
+    parity(Seq((0L, 1L), (1L, 0L)).toDF("src", "dst"))
+  }
+
+  test("star with a dangling sink matches the reference loop") {
+    parity(Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)).toDF("src", "dst"))
+  }
+
+  test("ids {0,1,7} (dangling gap) match the reference loop") {
+    parity(Seq((0L, 1L), (1L, 7L), (7L, 0L)).toDF("src", "dst"))
+  }
+
+  test("seeded R-MAT graph (2^10 vertices) matches the reference loop") {
+    val edges = RMat.generate(spark, 10, 8L << 10, seed = 11).as[(Long, Long)].collect()
+    parity(edges.toSeq.toDF("src", "dst"))
+  }
+
+  test("every entry point leaves only its returned checkpoint persisted") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 3L)).toDF("src", "dst")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "run" -> (() => PageRank.run(spark, edges)),
+      "runFixed" -> (() => PageRank.runFixed(spark, edges, 4L, iterations = 3)),
+      "runFixedWeighted" -> (() => PageRank.runFixedWeighted(spark,
+        edges.withColumn("w", lit(2L)), 4L, iterations = 3)),
+      "runPersonalized" -> (() =>
+        PageRank.runPersonalized(spark, edges, 4L, Seq(0L, 3L), iterations = 3)))
+    for ((name, call) <- calls) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val ranks = call()
+      ranks.collect()
+      val own = ranks.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }.toSet
+      // the registry holds RDDs weakly, so entries from before the call
+      // may vanish; only additions are checked
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.subsetOf(own), s"$name left persisted RDDs behind: ${added -- own}")
+    }
+  }
+
   test("star with dangling sink: ranks sum to ~1 and sink dominates") {
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)).toDF("src", "dst")
     val m = PageRank.run(spark, edges)

@@ -5,7 +5,7 @@
 #
 #   tools/gate.sh [sfDir]          default /root/testdata/sf0.01
 #
-# Chains: sbt test -> graft.Verify -> tools/check_oracle.py -> graft.Bench.
+# Chains: sbt test -> perfbench sbt test -> graft.Verify -> tools/check_oracle.py -> graft.Bench.
 # Exits non-zero on the first failing stage.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -18,6 +18,13 @@ echo "== gate: sbt test =="
 sbt -batch test 2>&1 | tail -6
 rc=${PIPESTATUS[0]}
 [ "$rc" -ne 0 ] && { echo "GATE FAIL: sbt test (rc=$rc)"; exit 1; }
+
+# perfbench compiles ../src/main/scala and calls engine APIs positionally:
+# an engine signature change must fail here, not in the benchmark run
+echo "== gate: perfbench sbt test =="
+(cd perfbench && sbt -batch test) 2>&1 | tail -6
+rc=${PIPESTATUS[0]}
+[ "$rc" -ne 0 ] && { echo "GATE FAIL: perfbench sbt test (rc=$rc)"; exit 1; }
 
 echo "== gate: graft.Verify @ $SF_DIR =="
 rm -rf "$OUT_DIR"
