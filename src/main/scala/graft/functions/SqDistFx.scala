@@ -23,8 +23,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * SqDistFxSpec still pins both eval paths against the composed twin,
   * which [[graft.pipeline.KMeansInt.costComposed]] keeps in the code.
   * Mismatched lengths → null (zip_with's null padding poisons the
-  * composed sum). Overflow domain is the caller's contract
-  * (KMeansInt's scaladoc bounds it).
+  * composed sum), and so does a null element (it poisons the composed
+  * product). The per-element null test is emitted only for an input
+  * whose element type is nullable, so `containsNull = false` arrays pay
+  * nothing. Overflow domain is the caller's contract (KMeansInt's
+  * scaladoc bounds it).
   */
 case class SqDistFx(left: Expression, right: Expression, scale: Long)
     extends BinaryExpression {
@@ -40,6 +43,11 @@ case class SqDistFx(left: Expression, right: Expression, scale: Long)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
+  private def elementsNullable(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+  private lazy val leftNulls = elementsNullable(left)
+  private lazy val rightNulls = elementsNullable(right)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val m = b.asInstanceOf[ArrayData]
@@ -48,6 +56,7 @@ case class SqDistFx(left: Expression, right: Expression, scale: Long)
     var acc = 0L
     var i = 0
     while (i < n) {
+      if ((leftNulls && x.isNullAt(i)) || (rightNulls && m.isNullAt(i))) return null
       val d = x.getLong(i) * scale - m.getLong(i)
       acc += d * d
       i += 1
@@ -61,11 +70,17 @@ case class SqDistFx(left: Expression, right: Expression, scale: Long)
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
       val d = ctx.freshName("d")
+      val nullTests = Seq(leftNulls -> a, rightNulls -> b)
+        .collect { case (true, arr) => s"$arr.isNullAt($i)" }
+      val nullCheck =
+        if (nullTests.isEmpty) ""
+        else s"if (${nullTests.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = $a.numElements();
          |if ($b.numElements() != $n) { ${ev.isNull} = true; } else {
          |  long $acc = 0L;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    $nullCheck
          |    long $d = $a.getLong($i) * ${scale}L - $b.getLong($i);
          |    $acc += $d * $d;
          |  }

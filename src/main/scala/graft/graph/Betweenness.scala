@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Seeded-source betweenness dependencies via Brandes' algorithm
   * (Brandes, "A faster algorithm for betweenness centrality", J. Math.
@@ -36,56 +37,25 @@ object Betweenness {
     *         per-source BFS depth, shortest-path count, and dependency. */
   def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
       maxIter: Int = 100): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     import spark.implicits._
     // both phases probe edges by src every round — partition once, cache
     val e = edges.select(col("src"), col("dst")).repartition(col("src")).persist()
-    var frontier = sources.toDF("source")
+    // materialized by the first level's count
+    val roots = Bridge.lazyCheckpoint(sources.toDF("source")
       .select(col("source"), col("source").as("v"),
-        lit(0).as("dist"), lit(1L).as("sigma")).localCheckpoint(false)
-    var vis = frontier
-    // frames whose successor checkpoint materializes during the NEXT
-    // round's count — released one round late (KCore's ordering invariant)
-    var lagged: Seq[DataFrame] = Nil
-    var depth = 0
-    var n = 1L
-    while (n > 0 && depth < maxIter) {
-      depth += 1
-      val grown = frontier
-        .join(e, frontier("v") === e("src"))
-        .select(col("source"), col("dst").as("v"), col("sigma"))
-        .join(vis.select(col("source").as("xs"), col("v").as("xv")),
-          col("source") === col("xs") && col("v") === col("xv"), "left_anti")
-        .groupBy("source", "v").agg(sum("sigma").as("sigma"))
-        .select(col("source"), col("v"), lit(depth).as("dist"), col("sigma"))
-        .localCheckpoint(false)
-      // materializes `grown` AND last round's lazy vis checkpoint (the
-      // anti-join input) — so frames queued last round are now releasable
-      n = grown.count()
-      lagged.foreach(Bridge.releaseCheckpoint)
-      lagged = Nil
-      if (n > 0) {
-        val oldVis = vis
-        val oldFrontier = frontier
-        vis = vis.union(grown).localCheckpoint(false)
-        frontier = grown
-        lagged = Seq(oldVis, oldFrontier)
-      } else {
-        // terminating round: the empty checkpoint has no further reader
-        Bridge.releaseCheckpoint(grown)
-      }
-    }
-    if (n > 0) {
-      // a long-lived session must not inherit this loop's blocks on the
-      // failure path — drop everything before throwing
-      lagged.foreach(Bridge.releaseCheckpoint)
-      if (frontier ne vis) Bridge.releaseCheckpoint(frontier)
-      Bridge.releaseCheckpoint(vis)
+        lit(0).as("dist"), lit(1L).as("sigma")))
+    val sweep = GraphOps.bfs(roots, sources.size.toLong, Seq("source", "v")) {
+      (frontier, depth) =>
+        frontier.join(e, frontier("v") === e("src"))
+          .groupBy(col("source"), col("dst").as("v")).agg(sum("sigma").as("sigma"))
+          .select(col("source"), col("v"), lit(depth).as("dist"), col("sigma"))
+    }(_.depth < maxIter)
+    if (!sweep.drained) {
+      sweep.release()
       e.unpersist(false)
       throw new IllegalStateException(s"BFS did not drain in $maxIter levels")
     }
-    if (frontier ne vis) Bridge.releaseCheckpoint(frontier)
-    val maxDepth = depth - 1
+    val vis = sweep.visited
 
     // backward sweep: one level at a time, deepest first; `deltas`
     // accumulates exactly the levels deeper than the one being computed
@@ -94,11 +64,10 @@ object Betweenness {
       lit(0.0), (acc, x) => acc + x.getField("t"))
     var deltas = vis.select(col("source"), col("v"),
       lit(0.0).as("delta")).where(lit(false))
-    var dd = maxDepth - 1
+    var dd = sweep.depth - 1
     while (dd >= 0) {
-      val lvl = vis.where(col("dist") === dd)
-        .select(col("source"), col("v"), col("sigma"))
-      val succ = vis.where(col("dist") === dd + 1)
+      val lvl = sweep.levels(dd).select(col("source"), col("v"), col("sigma"))
+      val succ = sweep.levels(dd + 1)
         .select(col("source").as("ws"), col("v").as("w"), col("sigma").as("wsigma"))
       val dPrev = deltas.select(col("source").as("ds"), col("v").as("dv"),
         col("delta").as("wdelta"))
@@ -110,16 +79,12 @@ object Betweenness {
           ((col("sigma").cast("double") / col("wsigma")) *
             (lit(1.0) + coalesce(col("wdelta"), lit(0.0)))).as("term"))
       val lvlDelta = terms.groupBy("source", "v").agg(termFold.as("delta"))
-      val oldDeltas = deltas
-      deltas = deltas.union(lvlDelta).localCheckpoint(false)
-      // materialize this level before the next one references it; the
-      // predecessor's blocks release only after this succeeds
-      deltas.count()
-      Bridge.releaseCheckpoint(oldDeltas)
+      // materialize this level before the next one references it
+      deltas = GraphOps.advance(deltas.union(lvlDelta), deltas)(_.count())._1
       dd -= 1
     }
     e.unpersist(false)
-    // the returned plan reads only the final vis/deltas checkpoints
+    // the returned plan reads only the level and final deltas checkpoints
     vis
       .join(deltas.select(col("source").as("ds"), col("v").as("dv"), col("delta")),
         col("ds") === col("source") && col("dv") === col("v"), "left")

@@ -26,110 +26,88 @@ object Bipartite {
   /** @param cc (v, comp) labels from [[ConnectedComponents.run]] —
     *           comp MUST be the component minimum (its default)
     * @return (comp BIGINT, size BIGINT, odd_edges BIGINT,
-    *         bipartite BOOLEAN) per component. */
-  /** Adaptive tail cutover (r14, the engine's bounded-tail
-    * discipline): once the UNVISITED set fits one task, a sequential
-    * multi-source BFS finishes the layering. `dist` is the unique
-    * shortest distance from the component root — a pure function of the
-    * graph — so the tail's rows are identical to the distributed
-    * levels' by definition; BipartiteSpec pins both regimes. At
-    * cutover every edge from a vertex visited before the current
-    * frontier into an unvisited vertex is impossible (its endpoint
-    * would already be visited), so the frontier rows plus the
-    * unvisited-endpoint edges are a complete, bounded task input. */
-  val DefaultTailThreshold = 1024
-
+    *         bipartite BOOLEAN) per component.
+    *
+    * Tail ([[GraphOps.TailThreshold]]): one task finishes the layering
+    * with a sequential multi-source BFS over the unvisited vertices.
+    * `dist` is the unique shortest distance from the component root — a
+    * pure function of the graph — so its rows equal the levels'. */
   def run(spark: SparkSession, edges: DataFrame, cc: DataFrame,
-      maxIter: Int = 200, tailThreshold: Int = DefaultTailThreshold): DataFrame = {
+      maxIter: Int = 200, tailThreshold: Int = GraphOps.TailThreshold): DataFrame = {
     val eu = GraphOps.edgeUpper(edges).persist()
     val und = eu.union(eu.select(col("vj").as("vi"), col("vi").as("vj")))
 
     // the labels are consumed by several actions (count, roots, the
     // tail's anti-join); CC.run returns a live plan whose every action
-    // re-derives the vertex set, so pin it once (lazy — the count below
-    // materializes it)
-    val ccl = Bridge.lazyCheckpoint(cc.select(col("v"), col("comp")))
-    val nVerts = ccl.count()
-    var vis = ccl.where(col("v") === col("comp"))
-      .select(col("v"), col("comp"), lit(0L).as("dist"))
-      .localCheckpoint(false)
-    var frontier = vis
-    var visN = vis.count()
-    var n = visN
-    var depth = 0L
-    while (n > 0 && nVerts - visN > tailThreshold.toLong && depth < maxIter) {
-      depth += 1
-      val grown = frontier.join(und, frontier("v") === und("vi"))
+    // re-derives the vertex set, so pin it once. One aggregate counts
+    // both the vertices and the roots, whose checkpoint the first level
+    // (or the tail) materializes.
+    val (ccl, (nVerts, nRoots)) = GraphOps.advance(cc.select(col("v"), col("comp"))) { df =>
+      val r = df.agg(count(lit(1)), count(when(col("v") === col("comp"), 1))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val roots = Bridge.lazyCheckpoint(ccl.where(col("v") === col("comp"))
+      .select(col("v"), col("comp"), lit(0L).as("dist")))
+    val sweep = GraphOps.bfs(roots, nRoots, Seq("v")) { (frontier, depth) =>
+      frontier.join(und, frontier("v") === und("vi"))
         .select(col("vj").as("v"), col("comp"))
         // a vertex can arrive via several frontier edges — one row, its
         // single component label rides along
         .dropDuplicates("v")
-        .withColumn("dist", lit(depth))
-        .join(vis.select(col("v").as("xv")), col("v") === col("xv"), "left_anti")
-        .localCheckpoint(false)
-      // ONE action per level (r14): the union count materializes `grown`
-      // (its source) and grown is disjoint from vis by the anti-join, so
-      // the frontier size is the count delta — one job per level, not
-      // two (the StronglyConnectedComponents sweep discipline).
-      val newVis = vis.union(grown).localCheckpoint(false)
-      val newN = newVis.count()
-      n = newN - visN
-      if (n > 0) {
-        if (frontier ne vis) Bridge.releaseCheckpoint(frontier)
-        Bridge.releaseCheckpoint(vis)
-        vis = newVis
-        frontier = grown
-        visN = newN
-      } else {
-        Bridge.releaseCheckpoint(grown)
-        Bridge.releaseCheckpoint(newVis)
-      }
-    }
-    if (n > 0 && nVerts - visN > tailThreshold.toLong) {
-      if (frontier ne vis) Bridge.releaseCheckpoint(frontier)
-      Bridge.releaseCheckpoint(vis)
+        .withColumn("dist", lit(depth.toLong))
+    }(s => nVerts - s.visitedN > tailThreshold.toLong && s.depth < maxIter)
+    val nUnvisited = nVerts - sweep.visitedN
+    if (!sweep.drained && nUnvisited > tailThreshold.toLong) {
+      sweep.release()
+      Bridge.releaseCheckpoint(ccl)
       eu.unpersist(false)
       throw new IllegalStateException(s"BFS did not drain in $maxIter levels")
     }
-    if (n > 0 && nVerts - visN > 0) {
-      // Bounded sequential tail: multi-source BFS from the (single-
-      // level) frontier over the <= tailThreshold unvisited vertices.
+    val tail = if (sweep.drained || nUnvisited == 0) None else Some {
+      // Bounded sequential tail over the <= tailThreshold unvisited
+      // vertices. Every vertex within `depth` hops of its root is
+      // visited, so the unvisited ones one hop past the frontier sit at
+      // depth + 1 (a distributed semi-join finds them), and every other
+      // one is reached through unvisited vertices only: the task reads
+      // the unvisited set, those seeds and the edges among unvisited
+      // vertices — never the frontier, however large.
       val unvisited = ccl
-        .join(vis.select(col("v").as("xv")), col("v") === col("xv"), "left_anti")
+        .join(sweep.visited.select(col("v").as("xv")), col("v") === col("xv"), "left_anti")
         .select(col("v"), col("comp"))
-      val tailEdges = und
-        .join(unvisited.select(col("v").as("uv")), col("vj") === col("uv"),
-          "left_semi")
-      val rows = frontier
-          .select(col("v").as("a"), col("dist").as("b"), lit(0).as("kind"))
-        .unionAll(unvisited
-          .select(col("v").as("a"), col("comp").as("b"), lit(1).as("kind")))
-        .unionAll(tailEdges
-          .select(col("vi").as("a"), col("vj").as("b"), lit(2).as("kind")))
+      val nearFrontier = und
+        .join(sweep.frontier.select(col("v").as("fv")), col("vi") === col("fv"), "left_semi")
+        .select(col("vj").as("sv"))
+      val seeds = unvisited.join(nearFrontier, col("v") === col("sv"), "left_semi")
+      val inner = und
+        .join(unvisited.select(col("v").as("uv")), col("vi") === col("uv"), "left_semi")
+        .join(unvisited.select(col("v").as("uw")), col("vj") === col("uw"), "left_semi")
+      val rows = unvisited
+          .select(col("v").as("a"), col("comp").as("b"), lit(0).as("kind"))
+        .unionAll(seeds.select(col("v").as("a"), lit(0L).as("b"), lit(1).as("kind")))
+        .unionAll(inner.select(col("vi").as("a"), col("vj").as("b"), lit(2).as("kind")))
+      val seedDist = sweep.depth + 1L
       import spark.implicits._
-      val tail = rows.as[(Long, Long, Int)]
+      rows.as[(Long, Long, Int)]
         .coalesce(1)
         .mapPartitions { it =>
-          val front = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
           val comp = new scala.collection.mutable.HashMap[Long, Long]
+          val dist = new scala.collection.mutable.HashMap[Long, Long]
           val adj = new scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]
+          var queue = scala.collection.mutable.ArrayBuffer.empty[Long]
           it.foreach {
-            case (v, d, 0) => front += ((v, d))
-            case (v, c, 1) => comp(v) = c
+            case (v, c, 0) => comp(v) = c
+            case (v, _, 1) => dist(v) = seedDist; queue += v
             case (a, b, _) =>
               adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
           }
-          val dist = new scala.collection.mutable.HashMap[Long, Long]
-          var queue = front
+          var d = seedDist
           while (queue.nonEmpty) {
-            val nextQ = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-            queue.foreach { case (v, d) =>
+            val nextQ = scala.collection.mutable.ArrayBuffer.empty[Long]
+            d += 1L
+            queue.foreach { v =>
               adj.getOrElse(v, scala.collection.mutable.ArrayBuffer.empty)
                 .foreach { u =>
-                  if (comp.contains(u) && !dist.contains(u)) {
-                    dist(u) = d + 1L
-                    nextQ += ((u, d + 1L))
-                  }
+                  if (!dist.contains(u)) { dist(u) = d; nextQ += u }
                 }
             }
             queue = nextQ
@@ -138,13 +116,9 @@ object Bipartite {
         }
         .toDF("v", "comp", "dist")
         .localCheckpoint(true)
-      val merged = vis.unionAll(tail).localCheckpoint(true)
-      Bridge.releaseCheckpoint(vis)
-      if (frontier ne vis) Bridge.releaseCheckpoint(frontier)
-      vis = merged
-      frontier = vis
     }
-    if (frontier ne vis) Bridge.releaseCheckpoint(frontier)
+    val spent = sweep.levels ++ tail
+    val vis = spent.reduce(_ union _)
 
     val side = vis.select(col("v"), col("comp"), pmod(col("dist"), lit(2L)).as("par"))
     val odd = eu
@@ -158,12 +132,9 @@ object Bipartite {
       .select(col("comp"), col("size"),
         coalesce(col("odd_edges"), lit(0L)).as("odd_edges"))
       .withColumn("bipartite", col("odd_edges") === 0L)
-      .localCheckpoint(false)
-    out.count()
-    Bridge.releaseCheckpoint(vis)
-    Bridge.releaseCheckpoint(ccl)
+    val (ck, _) = GraphOps.advance(out, spent :+ ccl: _*)(_.count())
     eu.unpersist(false)
-    out
+    ck
   }
 
   /** DuckDB oracle: CC labels via reachability closure, min-dist BFS

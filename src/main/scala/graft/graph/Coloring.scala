@@ -33,39 +33,30 @@ import graft.functions.Hashing
   */
 object Coloring {
 
-  /** Adaptive tail cutover (r13): once the uncolored set fits one
-    * bounded task, finish it with the SEQUENTIAL greedy pass the JP
-    * fixpoint provably equals — JP's tail colors O(1) vertices per
-    * round (on a dense graph, ~1: the gate graph ran ~390 rounds /
-    * 100 s at sf0.1), so each tail round pays full distributed-round
-    * freight for trivial work. Same crossover discipline as
-    * [[graft.pipeline.Multimodal.aHashNearDupAuto]]: the scale path
-    * (JP rounds, O(log n) w.h.p. on sparse graphs) runs until the
-    * remainder is ≤ `tailThreshold`, then one task colors the bounded
-    * remainder in ascending (p, v) order against the already-fixed
-    * colors — bit-identical output (ColoringSpec pins both regimes
-    * against the sequential reference). */
-  val DefaultTailThreshold = 1024
-
   /** @return (v BIGINT, color BIGINT) — the greedy coloring of the
-    *         ascending (hash60(seed, v), v) order; colors are 0-based. */
+    *         ascending (hash60(seed, v), v) order; colors are 0-based.
+    *
+    * Tail ([[GraphOps.TailThreshold]]): one task colors the uncolored
+    * remainder in ascending (p, v) order against the already-fixed
+    * colors — the sequential greedy pass the JP fixpoint provably
+    * equals. */
   def run(spark: SparkSession, edges: DataFrame, seed: Long, maxIter: Int = 500,
-      tailThreshold: Int = DefaultTailThreshold): DataFrame =
+      tailThreshold: Int = GraphOps.TailThreshold): DataFrame =
     runCounted(spark, edges, seed, maxIter, tailThreshold)._1
 
   def runCounted(spark: SparkSession, edges: DataFrame, seed: Long,
-      maxIter: Int = 500, tailThreshold: Int = DefaultTailThreshold): (DataFrame, Int) = {
+      maxIter: Int = 500, tailThreshold: Int = GraphOps.TailThreshold): (DataFrame, Int) = {
     import org.apache.spark.sql.graftbridge.Bridge
     val und = Bridge.lazyCheckpoint(
       GraphOps.undirected(edges).repartition(col("vi")))
 
-    var state = Bridge.lazyCheckpoint(
+    def uncolored(df: DataFrame): Long = df.where(col("color").isNull).count()
+    var (state, remaining) = GraphOps.advance(
       GraphOps.vertexExtract(edges)
         .select(col("v"), Hashing.hash60(seed, col("v")).as("p"),
-          lit(null).cast("bigint").as("color")))
+          lit(null).cast("bigint").as("color")))(uncolored)
 
     var iter = 0
-    var remaining = state.where(col("color").isNull).count()
     while (remaining > tailThreshold.toLong) {
       if (iter >= maxIter) {
         Bridge.releaseCheckpoint(state)
@@ -95,18 +86,16 @@ object Coloring {
               struct(col("pj"), col("vj")) < struct(col("pi"), col("vi")),
             1).otherwise(0)).as("blocked"),
           sort_array(collect_set(col("cj"))).as("cols")) // set drops nulls
-      val next = Bridge.lazyCheckpoint(
-        state.join(perV, Seq("v"), "left")
-          .select(col("v"), col("p"), coalesce(
-            col("color"),
-            when(coalesce(col("blocked"), lit(0)) === 0,
-              coalesce(expr("aggregate(cols, CAST(0 AS BIGINT), " +
-                "(acc, x) -> IF(x = acc, acc + 1, acc))"), lit(0L))))
-            .as("color")))
-      // the count materializes `next`; the previous round's blocks can go
-      remaining = next.where(col("color").isNull).count()
-      Bridge.releaseCheckpoint(state)
-      state = next
+      val next = state.join(perV, Seq("v"), "left")
+        .select(col("v"), col("p"), coalesce(
+          col("color"),
+          when(coalesce(col("blocked"), lit(0)) === 0,
+            coalesce(expr("aggregate(cols, CAST(0 AS BIGINT), " +
+              "(acc, x) -> IF(x = acc, acc + 1, acc))"), lit(0L))))
+          .as("color"))
+      val (ck, n) = GraphOps.advance(next, state)(uncolored)
+      state = ck
+      remaining = n
       iter += 1
     }
     if (remaining == 0L) {

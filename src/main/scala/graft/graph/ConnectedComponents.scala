@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Connected components — the reference's `cc_find` zone assignment
   * (`/root/reference/oink/cc_find.cpp:38-109`: every vertex ends up with
@@ -64,23 +65,8 @@ object ConnectedComponents {
     *              graph (the reference treats edges as undirected zones).
     * @return (v BIGINT, comp BIGINT) — comp = min vertex id reachable.
     */
-  /** Bounded one-task cutover (r14, the engine's tail discipline): the
-    * loop's FIRST convergence-signature aggregate already returns the
-    * canonical edge count, so a ≤ tailThreshold edge set skips the star
-    * rounds entirely and one task runs union-find with union-by-min
-    * (invariant: every root is the minimum of its set, so find() yields
-    * exactly the canonical comp = min-reachable-id label — CC output is
-    * a pure function of the graph, no replay argument needed). This is
-    * the shape the incremental/dedup family feeds: contracted refresh
-    * graphs and near-dup pair sets are tiny next to the standing graph,
-    * and each paid O(log n) full-freight star rounds. Isolated vertices
-    * keep riding the existing verts left-join. Distributed path
-    * unchanged for anything larger; GraphAlgoSpec pins both regimes
-    * equal and keeps the star loop exercised with tailThreshold = 0. */
-  val DefaultTailThreshold = 1024
-
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
-      tailThreshold: Int = DefaultTailThreshold): DataFrame =
+      tailThreshold: Int = GraphOps.TailThreshold): DataFrame =
     runCounted(spark, edges, maxIter, tailThreshold)._1
 
   /** INCREMENTAL maintenance: components of (standing graph ∪ edge
@@ -125,15 +111,16 @@ object ConnectedComponents {
 
   /** Like [[run]] but also reports the number of star rounds executed —
     * the O(log n) bound is asserted in GraphAlgoSpec on a long chain.
+    *
+    * Tail ([[GraphOps.TailThreshold]]): the first convergence signature
+    * already counts the canonical edges, so a small edge set skips the
+    * star rounds and one task runs union-find with union-by-min. Every
+    * root is then the minimum of its set, so find() yields exactly the
+    * canonical comp = min-reachable-id label the rounds converge to.
     */
   def runCounted(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
-      tailThreshold: Int = DefaultTailThreshold): (DataFrame, Int) = {
+      tailThreshold: Int = GraphOps.TailThreshold): (DataFrame, Int) = {
     val verts = GraphOps.vertexExtract(edges)
-
-    // Canonical undirected edge set; the star steps rewrite it in place.
-    // Lazy checkpoint: the initial signature aggregate below materializes
-    // it (one job, not checkpoint-then-signature).
-    var e = GraphOps.edgeUpper(edges).localCheckpoint(false)
 
     def signature(df: DataFrame): (Long, Long) = {
       val r = df.agg(
@@ -142,7 +129,8 @@ object ConnectedComponents {
       (r.getLong(0), r.getLong(1))
     }
 
-    var sig = signature(e)
+    // Canonical undirected edge set; the star steps rewrite it in place.
+    var (e, sig) = GraphOps.advance(GraphOps.edgeUpper(edges))(signature)
     if (sig._1 > 0 && sig._1 <= tailThreshold.toLong) {
       import spark.implicits._
       val labels = e.select(col("vi"), col("vj")).as[(Long, Long)]
@@ -174,7 +162,7 @@ object ConnectedComponents {
         }
         .toDF("vi", "vj")
         .localCheckpoint(true)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(e)
+      Bridge.releaseCheckpoint(e)
       val comp = verts.join(labels, verts("v") === labels("vi"), "left")
         .select(col("v"), coalesce(col("vj"), col("v")).as("comp"))
       return (comp, 0)
@@ -182,19 +170,10 @@ object ConnectedComponents {
     var iter = 0
     var converged = sig._1 == 0 // empty edge set: the count is already here
     while (!converged && iter < maxIter) {
-      // localCheckpoint every round: each star step references the
-      // round's edge set twice (groupBy + join), so the logical plan
-      // would double per round without truncation (see PageRank.run).
-      // Lazy (eager=false): the plan is truncated to a LogicalRDD leaf
-      // immediately, but the blocks materialize inside the signature
-      // aggregate below — one job per round instead of a checkpoint job
-      // plus a signature job. The aggregate scans every partition, so
-      // the checkpoint is complete when the job ends.
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nextSig = signature(next) // materializes `next`
-      // safe: successor's blocks exist now. Dataset.unpersist cannot see
-      // checkpoint blocks (RDD-level persist), hence the bridge call.
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(e)
+      // checkpoint every round: each star step references the round's
+      // edge set twice (groupBy + join), so the logical plan would
+      // double per round without truncation
+      val (next, nextSig) = GraphOps.advance(smallStar(largeStar(e)), e)(signature)
       converged = nextSig == sig
       sig = nextSig
       e = next

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Full coreness (core-number) decomposition via the H-index fixpoint
   * (Lü, Chen, Ren, Zhang, Zhou, Stanley, "The H-index of a network node
@@ -37,10 +38,9 @@ object Coreness {
     val und = e0.union(e0.select(col("vj").as("vi"), col("vi").as("vj")))
       .repartition(col("vj"))
       .persist()
-    var h = und.groupBy(col("vi").as("v")).agg(count(lit(1)).as("hv"))
-      .localCheckpoint(false)
-    var prevCk: DataFrame = null
-    var curCk: DataFrame = h
+    // materialized by the first round's checksum
+    var h = Bridge.lazyCheckpoint(
+      und.groupBy(col("vi").as("v")).agg(count(lit(1)).as("hv")))
     // values are positive longs and strictly decrease somewhere until the
     // fixpoint, so the global sum is a complete convergence witness
     var prevSum = -1L
@@ -54,33 +54,21 @@ object Coreness {
         row_number().over(Window.partitionBy("v").orderBy(col("hv").desc)))
       val next = ranked.groupBy("v")
         .agg(max(least(col("rn"), col("hv"))).as("hv"))
-        .localCheckpoint(false)
-      // one job: materializes `next`'s lazy checkpoint and the checksum
-      val s = next.agg(coalesce(sum(col("hv")), lit(0L))).head().getLong(0)
-      if (prevCk != null)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(prevCk)
-      prevCk = curCk
-      curCk = next
-      h = next
+      val (ck, s) = GraphOps.advance(next, h)(
+        _.agg(coalesce(sum(col("hv")), lit(0L))).head().getLong(0))
+      h = ck
       converged = s == prevSum
       prevSum = s
       iter += 1
     }
+    und.unpersist(false)
     if (!converged) {
-      // drop the loop's blocks before failing — the error path must not
-      // leave persisted frames behind in a long-lived session
-      if (prevCk != null)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(prevCk)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(curCk)
-      und.unpersist(false)
+      // the error path must not leave persisted frames behind in a
+      // long-lived session
+      Bridge.releaseCheckpoint(h)
       throw new IllegalStateException(
         s"coreness did not converge within $maxIter H-index rounds")
     }
-    und.unpersist(false)
-    // the result reads only curCk's blocks; the penultimate round's
-    // checkpoint is no longer referenced and can release now
-    if (prevCk != null)
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(prevCk)
     h.select(col("v"), col("hv").as("coreness"))
   }
 

@@ -44,29 +44,23 @@ object DensestSubgraph {
       maxIter: Int = 200): (DataFrame, Int) = {
     import org.apache.spark.sql.graftbridge.Bridge
     var live = Bridge.lazyCheckpoint(GraphOps.edgeUpper(edges))
-    var verts = Bridge.lazyCheckpoint(
-      live.select(explode(array(col("vi"), col("vj"))).as("v")).distinct())
-    var nv = verts.count()
+    var (verts, nv) = GraphOps.advance(
+      live.select(explode(array(col("vi"), col("vj"))).as("v")).distinct())(_.count())
     var ne = live.count()
+    val parts = scala.collection.mutable.Buffer.empty[DataFrame]
+    def alive: Seq[DataFrame] = parts.toSeq ++ Seq(verts, live)
     if (nv == 0) {
-      Bridge.releaseCheckpoint(live)
-      Bridge.releaseCheckpoint(verts)
+      alive.foreach(Bridge.releaseCheckpoint)
       return (spark.range(0).select(col("id").as("v"), lit(0L).as("nv"),
         lit(0L).as("ne"), lit(null).cast("double").as("density")), 0)
     }
-    val parts = scala.collection.mutable.Buffer.empty[DataFrame]
     var round = 0
     var bestI = 0
     var bestNv = nv
     var bestNe = ne
-    def release(): Unit = {
-      Bridge.releaseCheckpoint(verts)
-      Bridge.releaseCheckpoint(live)
-      parts.foreach(Bridge.releaseCheckpoint)
-    }
     while (nv > 0) {
       if (round >= maxIter) {
-        release()
+        alive.foreach(Bridge.releaseCheckpoint)
         throw new IllegalStateException(
           s"densest-subgraph peel did not drain in $maxIter rounds ($nv left)")
       }
@@ -81,28 +75,27 @@ object DensestSubgraph {
       val doomed = Bridge.lazyCheckpoint(
         verts.join(deg, Seq("v"), "left")
           .where(lit(2L) * coalesce(col("d"), lit(0L)) * nv <= lit(5L) * ne)
-          .select("v"))
-      parts += doomed.withColumn("round", lit(round))
-      val nextVerts = Bridge.lazyCheckpoint(
-        verts.join(doomed, Seq("v"), "left_anti"))
-      val nextLive = Bridge.lazyCheckpoint(live
+          .select(col("v"), lit(round).as("round")))
+      parts += doomed
+      // the first count materializes doomed too
+      val (nextVerts, n) = GraphOps.advance(
+        verts.join(doomed, Seq("v"), "left_anti"), verts)(_.count())
+      val (nextLive, m) = GraphOps.advance(live
         .join(doomed.withColumnRenamed("v", "vi"), Seq("vi"), "left_anti")
-        .join(doomed.withColumnRenamed("v", "vj"), Seq("vj"), "left_anti"))
-      nv = nextVerts.count() // materializes doomed + nextVerts
-      ne = nextLive.count()
-      Bridge.releaseCheckpoint(verts)
-      Bridge.releaseCheckpoint(live)
+        .join(doomed.withColumnRenamed("v", "vj"), Seq("vj"), "left_anti"),
+        live)(_.count())
       verts = nextVerts
       live = nextLive
+      nv = n
+      ne = m
       round += 1
     }
-    val out = Bridge.lazyCheckpoint(
+    val out = GraphOps.advance(
       parts.reduce(_ union _)
         .where(col("round") >= bestI)
         .select(col("v"), lit(bestNv).as("nv"), lit(bestNe).as("ne"),
-          lit(bestNe.toDouble / bestNv.toDouble).as("density")))
-    out.count()
-    release()
+          lit(bestNe.toDouble / bestNv.toDouble).as("density")),
+      alive: _*)(_.count())._1
     (out, round)
   }
 

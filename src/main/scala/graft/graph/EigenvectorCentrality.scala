@@ -29,29 +29,23 @@ object EigenvectorCentrality {
     *         rankings/ratios, not magnitudes, across iteration counts. */
   def run(spark: SparkSession, edges: DataFrame, iterations: Int = 8): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    import org.apache.spark.sql.graftbridge.Bridge
     val e = edges.select(col("src"), col("dst")).persist()
     val verts = GraphOps.vertexExtract(e)
-    var x = verts.withColumn("s", lit(1L))
-    var xCk: DataFrame = null
+    var xCk = verts.withColumn("s", lit(1L)) // no checkpoint before round one
+    var x = xCk
     for (_ <- 1 to iterations) {
-      val raw = e.join(x.withColumnRenamed("v", "xv"), col("src") === col("xv"))
-        .groupBy(col("dst").as("v")).agg(sum("s").as("s"))
-        .localCheckpoint(false)
-      // one job: materializes the round AND the exact max the shift uses
-      val mx = raw.agg(coalesce(max("s"), lit(0L))).head().getLong(0)
-      if (xCk != null) Bridge.releaseCheckpoint(xCk)
-      xCk = raw
-      val sh = Hits.shiftOf(mx)
-      x = if (sh == 0) raw else raw.withColumn("s", shiftright(col("s"), sh))
+      val (ck, mx) = GraphOps.advance(
+        e.join(x.withColumnRenamed("v", "xv"), col("src") === col("xv"))
+          .groupBy(col("dst").as("v")).agg(sum("s").as("s")),
+        xCk)(Hits.maxScore)
+      xCk = ck
+      x = Hits.downshift(ck, mx)
     }
-    val out = verts
+    val out = GraphOps.advance(verts
       .join(x.select(col("v").as("xv"), col("s").as("score")),
         col("v") === col("xv"), "left")
-      .select(col("v"), coalesce(col("score"), lit(0L)).as("score"))
-      .localCheckpoint(false)
-    out.count()
-    if (xCk != null) Bridge.releaseCheckpoint(xCk)
+      .select(col("v"), coalesce(col("score"), lit(0L)).as("score")),
+      xCk)(_.count())._1
     e.unpersist(false)
     out
   }

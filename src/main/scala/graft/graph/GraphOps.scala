@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** OINK graph primitives re-expressed as declarative Spark plans.
   * Reference semantics per file:line in each Scaladoc; SURVEY.md §2.5-2.6.
@@ -11,6 +12,74 @@ import org.apache.spark.sql.functions._
   * contract, FIXTURES.md §1).
   */
 object GraphOps {
+
+  /** Bounded-tail policy of the iterative algorithms: once the part
+    * still undecided (uncolored vertices, live edges, unvisited
+    * vertices, …) is at most this many rows, the distributed rounds stop
+    * and ONE task finishes the remainder sequentially. Late rounds
+    * typically settle O(1) rows each while paying a full distributed
+    * round's scheduling, so a tail of bounded size is cheaper in one
+    * task; above the bound the rounds are the scale path. Each
+    * algorithm's scaladoc argues why its tail lands on exactly the rows
+    * its remaining rounds would, and each keeps a `tailThreshold`
+    * parameter (0 = rounds only) so its spec pins both regimes equal. */
+  val TailThreshold = 1024
+
+  /** One round of an iterative loop: lazily checkpoint `next` (through
+    * [[Bridge.lazyCheckpoint]], which caps runaway plan statistics), run
+    * the round's single `action` on the checkpoint — it reads every
+    * row, so the same job materializes the checkpoint — and only then
+    * release `retire`, the checkpoints `next` was computed from. That
+    * order is the invariant every loop relies on: a lazy checkpoint's
+    * blocks are computed from its predecessors, so releasing one before
+    * its successor materialized would destroy the only copy of the
+    * recomputation source. Frames in `retire` that are not checkpoints
+    * (e.g. an uncheckpointed initial state) are left alone.
+    *
+    * @return the checkpointed `next` and the action's result */
+  def advance[A](next: DataFrame, retire: DataFrame*)(action: DataFrame => A): (DataFrame, A) = {
+    val ck = Bridge.lazyCheckpoint(next)
+    val result = action(ck)
+    retire.foreach(Bridge.releaseCheckpoint)
+    (ck, result)
+  }
+
+  /** State of a [[bfs]] sweep: its levels, level 0 the roots, each a
+    * checkpoint, and their total row count. `grownN` is the last
+    * level's row count, or 0 once a level came up empty — the sweep
+    * drained; a positive `grownN` means the caller's stop rule ended it. */
+  final case class Sweep(levels: Seq[DataFrame], visitedN: Long, grownN: Long) {
+    def depth: Int = levels.size - 1
+    def frontier: DataFrame = levels.last
+    /** Every row reached so far; the levels are disjoint. */
+    def visited: DataFrame = levels.reduce(_ union _)
+    def drained: Boolean = grownN == 0
+    def release(): Unit = levels.foreach(Bridge.releaseCheckpoint)
+  }
+
+  /** The level-synchronous BFS loop. Per level, `expand(frontier,
+    * depth)` proposes the next level's rows and an anti-join on `key`
+    * drops those already visited; the [[advance]] that checkpoints the
+    * result counts it, the level's one job. Every level stays: together
+    * they are the visited set, so nothing is copied or released until
+    * the caller is done with them, except a level that came up empty.
+    *
+    * @param roots  level 0, a checkpoint the sweep takes over
+    * @param rootsN the row count of `roots`
+    * @param key    the columns that identify a visited row
+    * @param more   the caller's stop rule, asked before every level; the
+    *               sweep also stops when a level adds nothing */
+  def bfs(roots: DataFrame, rootsN: Long, key: Seq[String])(
+      expand: (DataFrame, Int) => DataFrame)(more: Sweep => Boolean): Sweep = {
+    var s = Sweep(Seq(roots), rootsN, rootsN)
+    while (!s.drained && more(s)) {
+      val (grown, n) = advance(expand(s.frontier, s.depth + 1)
+        .join(s.visited.select(key.map(col): _*), key, "left_anti"))(_.count())
+      val levels = if (n > 0) s.levels :+ grown else { Bridge.releaseCheckpoint(grown); s.levels }
+      s = Sweep(levels, s.visitedN + n, n)
+    }
+    s
+  }
 
   /** `degree dupflag=1` (`/root/reference/oink/degree.cpp:36-59`):
     * out-degree per vertex (src endpoint only). */

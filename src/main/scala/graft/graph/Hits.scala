@@ -45,50 +45,47 @@ object Hits {
   private[graph] def shiftOf(mx: Long): Int =
     math.max(0, (64 - java.lang.Long.numberOfLeadingZeros(mx)) - MaxBits)
 
+  /** Exact max of the score column `s` — a round's one action. */
+  private[graph] def maxScore(df: DataFrame): Long =
+    df.agg(coalesce(max("s"), lit(0L))).head().getLong(0)
+
+  /** `s` downshifted by the [[shiftOf]] its max `mx` calls for. */
+  private[graph] def downshift(df: DataFrame, mx: Long): DataFrame = {
+    val sh = shiftOf(mx)
+    if (sh == 0) df else df.withColumn("s", shiftright(col("s"), sh))
+  }
+
   /** @return (v BIGINT, authority BIGINT, hub BIGINT) over all vertices;
     *         sources with no in-edges score authority 0, sinks hub 0.
     *         Scores are the integer recurrence above (rescaled — compare
     *         ratios/rankings, not magnitudes, across iteration counts). */
   def run(spark: SparkSession, edges: DataFrame, iterations: Int = 3): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    import org.apache.spark.sql.graftbridge.Bridge
     val e = edges.select(col("src"), col("dst")).persist()
     val verts = GraphOps.vertexExtract(e)
     var h = verts.withColumn("s", lit(1L))
     var a: DataFrame = null
-    var hCk: DataFrame = null // checkpoint backing current h
-    var aCk: DataFrame = null // checkpoint backing the FINAL a
-    for (k <- 1 to iterations) {
-      val aRaw = e.join(h.withColumnRenamed("v", "hv"), col("src") === col("hv"))
-        .groupBy(col("dst").as("v")).agg(sum("s").as("s"))
-        .localCheckpoint(false)
-      // one job: materializes aRaw AND the exact max the shift derives from
-      val maxA = aRaw.agg(coalesce(max("s"), lit(0L))).head().getLong(0)
-      if (hCk != null) { Bridge.releaseCheckpoint(hCk); hCk = null }
-      val sa = shiftOf(maxA)
-      a = if (sa == 0) aRaw else aRaw.withColumn("s", shiftright(col("s"), sa))
-      val hRaw = e.join(a.withColumnRenamed("v", "av"), col("dst") === col("av"))
-        .groupBy(col("src").as("v")).agg(sum("s").as("s"))
-        .localCheckpoint(false)
-      val maxH = hRaw.agg(coalesce(max("s"), lit(0L))).head().getLong(0)
-      // aRaw fed hRaw (now materialized); only the last iteration's a is
-      // still read by the returned plan
-      if (k < iterations) Bridge.releaseCheckpoint(aRaw) else aCk = aRaw
-      hCk = hRaw
-      val sh = shiftOf(maxH)
-      h = if (sh == 0) hRaw else hRaw.withColumn("s", shiftright(col("s"), sh))
+    var spent = Seq.empty[DataFrame] // the checkpoints behind the last a and h
+    for (_ <- 1 to iterations) {
+      val (aCk, maxA) = GraphOps.advance(
+        e.join(h.withColumnRenamed("v", "hv"), col("src") === col("hv"))
+          .groupBy(col("dst").as("v")).agg(sum("s").as("s")),
+        spent: _*)(maxScore)
+      a = downshift(aCk, maxA)
+      val (hCk, maxH) = GraphOps.advance(
+        e.join(a.withColumnRenamed("v", "av"), col("dst") === col("av"))
+          .groupBy(col("src").as("v")).agg(sum("s").as("s")))(maxScore)
+      h = downshift(hCk, maxH)
+      spent = Seq(aCk, hCk)
     }
-    val out = verts
+    val out = GraphOps.advance(verts
       .join(a.select(col("v").as("a_v"), col("s").as("authority")),
         col("v") === col("a_v"), "left")
       .join(h.select(col("v").as("h_v"), col("s").as("hub")),
         col("v") === col("h_v"), "left")
       .select(col("v"), coalesce(col("authority"), lit(0L)).as("authority"),
-        coalesce(col("hub"), lit(0L)).as("hub"))
-      .localCheckpoint(false)
-    out.count()
-    Bridge.releaseCheckpoint(aCk)
-    Bridge.releaseCheckpoint(hCk)
+        coalesce(col("hub"), lit(0L)).as("hub")),
+      spent: _*)(_.count())._1
     e.unpersist(false)
     out
   }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** k-core extraction: the maximal subgraph in which every vertex has
   * undirected degree ≥ k (Seidman, "Network structure and minimum
@@ -18,12 +19,12 @@ import org.apache.spark.sql.functions._
   * LubyMIS active-set trick). Rounds are O(peel depth), bounded by the
   * degeneracy ordering length, not |V|.
   *
-  * Plan hygiene matches the other iterative operators: the next edge
-  * set is lazily localCheckpoint'ed (the logical plan references `e`
-  * three times per round — degree + two semi-joins — and would double
-  * without truncation), the convergence count materializes the
-  * PREVIOUS round's checkpoint inside the same job, and a predecessor's
-  * blocks release only after its successor materialized.
+  * Plan hygiene matches the other iterative operators: each round is
+  * one [[GraphOps.advance]] — the next edge set is checkpointed (the
+  * plan references `e` three times per round — degree + two semi-joins
+  * — and would double without truncation), and the round's count of
+  * vertices still below k, taken over that new edge set, is the job
+  * that materializes it.
   */
 object KCore {
 
@@ -36,36 +37,28 @@ object KCore {
   def run(spark: SparkSession, edges: DataFrame, k: Int,
       maxIter: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var e = GraphOps.edgeUpper(edges)
-    var curCk: DataFrame = null
-    var prevCk: DataFrame = null
-    var deg: DataFrame = null
-    var bad = 1L
-    var iter = 0
+    def degrees(e: DataFrame): DataFrame =
+      e.union(e.select(col("vj").as("vi"), col("vi").as("vj")))
+        .groupBy("vi").agg(count(lit(1)).as("deg"))
+    def below(e: DataFrame): Long = degrees(e).where(col("deg") < k).count()
+    var (e, bad) = GraphOps.advance(GraphOps.edgeUpper(edges))(below)
+    var iter = 1
     while (bad > 0 && iter < maxIter) {
-      val und = e.union(e.select(col("vj").as("vi"), col("vi").as("vj")))
-      deg = und.groupBy("vi").agg(count(lit(1)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select(col("vi").as("kv"))
+      val keep = degrees(e).where(col("deg") >= k).select(col("vi").as("kv"))
       val next = e
         .join(keep, e("vi") === keep("kv"), "left_semi")
         .join(keep, e("vj") === keep("kv"), "left_semi")
-        .localCheckpoint(false)
-      // one job per round: this count computes `deg` from `e`, which is
-      // the lazy checkpoint created LAST round — materializing it here
-      bad = deg.where(col("deg") < k).count()
-      if (prevCk != null)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(prevCk)
-      prevCk = curCk
-      curCk = next
-      e = next
+      val (ck, n) = GraphOps.advance(next, e)(below)
+      e = ck
+      bad = n
       iter += 1
     }
-    if (bad > 0)
+    if (bad > 0) {
+      Bridge.releaseCheckpoint(e)
       throw new IllegalStateException(
         s"k-core did not converge within $maxIter peel rounds")
-    // converged: `deg` was computed from the final edge set and every
-    // surviving vertex is ≥ k. prevCk/curCk back `deg`'s lineage — the
-    // caller's action reads the checkpoint blocks, so nothing released.
-    deg.select(col("vi").as("v"), col("deg"))
+    }
+    // converged: every vertex of the final edge set has degree ≥ k
+    degrees(e).select(col("vi").as("v"), col("deg"))
   }
 }

@@ -48,11 +48,10 @@ object Katz {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(alphaShift >= 1 && alphaShift <= 16,
       s"alphaShift must be in [1, 16], got $alphaShift")
-    import org.apache.spark.sql.graftbridge.Bridge
     val e = edges.select(col("src"), col("dst")).persist()
     val verts = GraphOps.vertexExtract(e)
-    var st = verts.select(col("v"), lit(1L).as("p"), lit(0L).as("y"))
-    var stCk: DataFrame = null
+    var stCk = verts.select(col("v"), lit(1L).as("p"), lit(0L).as("y")) // no checkpoint yet
+    var st = stCk
     for (_ <- 1 to iterations) {
       val pNew = e.join(st.select(col("v").as("pv"), col("p")),
           col("src") === col("pv"))
@@ -65,20 +64,16 @@ object Katz {
           coalesce(col("pn"), lit(0L)).as("p"),
           (shiftleft(col("y"), alphaShift) +
             coalesce(col("pn"), lit(0L))).as("y"))
-        .localCheckpoint(false)
-      // one job: materializes the round AND the exact max the shift uses
-      val mx = raw.agg(coalesce(max(greatest(col("p"), col("y"))), lit(0L)))
-        .head().getLong(0)
-      if (stCk != null) Bridge.releaseCheckpoint(stCk)
-      stCk = raw
+      // the round's one job also yields the exact max the shift uses
+      val (ck, mx) = GraphOps.advance(raw, stCk)(
+        _.agg(coalesce(max(greatest(col("p"), col("y"))), lit(0L))).head().getLong(0))
+      stCk = ck
       val sh = Hits.shiftOf(mx)
-      st = if (sh == 0) raw
-           else raw.select(col("v"), shiftright(col("p"), sh).as("p"),
+      st = if (sh == 0) ck
+           else ck.select(col("v"), shiftright(col("p"), sh).as("p"),
              shiftright(col("y"), sh).as("y"))
     }
-    val out = st.select(col("v"), col("y").as("katz")).localCheckpoint(false)
-    out.count()
-    if (stCk != null) Bridge.releaseCheckpoint(stCk)
+    val out = GraphOps.advance(st.select(col("v"), col("y").as("katz")), stCk)(_.count())._1
     e.unpersist(false)
     out
   }

@@ -63,8 +63,7 @@ object LabelPropagation {
     // materialize the final labels so the cached edge frame can release
     // before returning (the checkpoint also truncates the nested
     // `rounds`-deep plan the caller would otherwise re-optimize)
-    val out = lab.localCheckpoint(false)
-    out.count()
+    val out = GraphOps.advance(lab)(_.count())._1
     und.unpersist(false)
     out
   }

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.Hashing
 
@@ -39,48 +39,47 @@ object LubyMIS {
   private val InMis = "I"
   private val Out = "O"
 
-  /** Adaptive tail cutover (r14, the [[Coloring]] discipline): once the
-    * ACTIVE set fits one bounded task, finish with the SEQUENTIAL greedy
-    * MIS pass the Luby fixpoint provably equals — with fixed priorities
-    * the rounds peel exactly the greedy MIS of ascending (p, v) (the
-    * scaladoc invariant above), and Luby's tail admits O(1) winners per
-    * round on dense graphs, each paying full distributed-round freight
-    * (the r13 gate graph: ~10 s of rounds over ≤401 vertices). The tail
-    * is self-contained: an ACTIVE vertex never has an InMis neighbor
-    * (it would be Out), and `activeEdges` is already shrunk to
-    * active–active pairs, so the greedy pass over the bounded active
-    * subgraph is independent of every decided vertex. Bit-identical
-    * output in both regimes is pinned by LubyMISSpec. */
-  val DefaultTailThreshold = 1024
-
-  /** @return single-column (v BIGINT): the MIS, deterministic per seed. */
+  /** @return single-column (v BIGINT): the MIS, deterministic per seed.
+    *
+    * Tail ([[GraphOps.TailThreshold]]): one task runs the greedy MIS
+    * pass in ascending (p, v) over the active subgraph — the rounds peel
+    * exactly that greedy MIS, and an active vertex never has an InMis
+    * neighbor, so the tail is independent of every decided vertex. */
   def run(spark: SparkSession, edges: DataFrame, seed: Long, maxIter: Int = 100,
-      tailThreshold: Int = DefaultTailThreshold): DataFrame =
+      tailThreshold: Int = GraphOps.TailThreshold): DataFrame =
     runCounted(spark, edges, seed, maxIter, tailThreshold)._1
 
   /** Like [[run]] but also reports the round count — the O(log n)
     * w.h.p. bound is asserted in LubyMISSpec on a long chain (with
     * `tailThreshold = 0`, the pure distributed regime). */
   def runCounted(spark: SparkSession, edges: DataFrame, seed: Long, maxIter: Int = 100,
-      tailThreshold: Int = DefaultTailThreshold): (DataFrame, Int) = {
-    // All checkpoints here are LAZY (see ConnectedComponents.runCounted):
-    // the plan truncates to a LogicalRDD leaf immediately, and the blocks
-    // materialize inside the round's own count action — one job per round
-    // instead of three (state checkpoint + count + edge-shrink
-    // checkpoint). Nothing is unpersisted mid-loop, so a lazy frame's
-    // recomputation sources always survive until it materializes.
-    var activeEdges = GraphOps.undirected(edges)
-      .repartition(col("vi"))
-      .localCheckpoint(false)
-
-    var state = GraphOps.vertexExtract(edges)
-      .select(col("v"), Hashing.hash60(seed, col("v")).as("p"), lit(Active).as("st"))
-      .localCheckpoint(false)
+      tailThreshold: Int = GraphOps.TailThreshold): (DataFrame, Int) = {
+    def active(df: DataFrame): DataFrame = df.where(col("st") === Active)
+    // edges between still-active endpoints: winners and their
+    // neighborhoods (a constant fraction per round) drop out
+    def activeOnly(e: DataFrame, state: DataFrame): DataFrame = {
+      val still = active(state).select("v")
+      e.join(still.withColumnRenamed("v", "vi"), Seq("vi"), "left_semi")
+        .join(still.withColumnRenamed("v", "vj"), Seq("vj"), "left_semi")
+        .select("vi", "vj")
+    }
+    // materialized by the first round's count, or read by the tail
+    var activeEdges = Bridge.lazyCheckpoint(
+      GraphOps.undirected(edges).repartition(col("vi")))
+    var (state, remaining) = GraphOps.advance(GraphOps.vertexExtract(edges)
+      .select(col("v"), Hashing.hash60(seed, col("v")).as("p"), lit(Active).as("st")))(
+      active(_).count())
 
     var iter = 0
-    var remaining = state.where(col("st") === Active).count()
     while (remaining > tailThreshold.toLong && iter < maxIter) {
-      val act = state.where(col("st") === Active)
+      // all vertices are active in round one; later rounds shrink the
+      // edges to the survivors of the last, and this round's count
+      // materializes the shrunk frame, so its source retires with it
+      val retired = if (iter == 0) Nil else Seq(activeEdges)
+      if (iter > 0)
+        activeEdges = Bridge.lazyCheckpoint(
+          activeOnly(activeEdges, state))
+      val act = active(state)
       // best (priority, id) among ACTIVE neighbors of each vertex
       val pj = act.select(col("v").as("vj"), col("p").as("pj"))
       val nbrBest = activeEdges.join(pj, "vj")
@@ -93,7 +92,7 @@ object LubyMIS {
         .join(winners.withColumnRenamed("v", "vi"), Seq("vi"), "left_semi")
         .select(col("vj").as("v")).distinct()
 
-      state = state
+      val next = state
         .join(winners.withColumn("w", lit(true)), Seq("v"), "left")
         .join(loserNbrs.withColumn("l", lit(true)), Seq("v"), "left")
         .select(col("v"), col("p"),
@@ -101,35 +100,27 @@ object LubyMIS {
             .when(col("w"), InMis)
             .when(col("l"), Out)
             .otherwise(Active).as("st"))
-        .localCheckpoint(false) // constant plan depth; materialized by the count below
-      remaining = state.where(col("st") === Active).count()
-      // shrink to edges between still-active endpoints — winners and
-      // their neighborhoods (a constant fraction per round) drop out
-      if (remaining > 0) {
-        val still = state.where(col("st") === Active).select("v")
-        activeEdges = activeEdges
-          .join(still.withColumnRenamed("v", "vi"), Seq("vi"), "left_semi")
-          .join(still.withColumnRenamed("v", "vj"), Seq("vj"), "left_semi")
-          .select("vi", "vj")
-          .localCheckpoint(false) // materialized by next round's joins
-      }
+      val (ck, n) = GraphOps.advance(next, state +: retired: _*)(active(_).count())
+      state = ck
+      remaining = n
       iter += 1
     }
     val decided = state.where(col("st") === InMis).select("v")
     // maxIter exit with an oversize active set: legacy behavior (the
     // accumulated MIS) — the tail task must stay bounded by the threshold
-    if (remaining == 0L || remaining > tailThreshold.toLong)
+    if (remaining == 0L || remaining > tailThreshold.toLong) {
+      Bridge.releaseCheckpoint(activeEdges)
       return (decided, iter)
+    }
     // Bounded sequential tail: ≤ tailThreshold vertices still active.
-    // Gather each active vertex's ACTIVE-neighbor list (activeEdges is
-    // exactly the active–active pair set at this point — initially all
-    // vertices are active, and every completed round re-shrinks it),
+    // Gather each active vertex's ACTIVE-neighbor list (all vertices
+    // are active before round one; after it, shrink to the survivors),
     // then ONE task replays the greedy MIS in ascending (p, v): a vertex
     // joins iff no already-joined neighbor — the exact recurrence the
     // Luby fixpoint satisfies for fixed priorities, so the union with
     // the already-decided InMis set is the unchanged result.
-    val act = state.where(col("st") === Active).select(col("v"), col("p"))
-    val adj = activeEdges
+    val act = active(state).select(col("v"), col("p"))
+    val adj = (if (iter == 0) activeEdges else activeOnly(activeEdges, state))
       .groupBy(col("vi").as("v")).agg(collect_set(col("vj")).as("nbrs"))
     val rows = act.join(adj, Seq("v"), "left")
       .select(col("v"), col("p"),

@@ -27,33 +27,25 @@ import graft.functions.Hashing
   */
 object MaximalMatching {
 
-  /** Adaptive tail cutover (r14, the [[LubyMIS]]/[[Coloring]]
-    * discipline): once the live edge set fits one bounded task, finish
-    * with the SEQUENTIAL greedy matching of ascending (h, vi, vj) — the
-    * exact fixpoint the rounds land on (scaladoc above), restricted to
-    * the live edges, whose endpoints are by construction all unmatched.
-    * The tail rounds of Israeli-Itai match O(1) edges each while paying
-    * full distributed-round freight (~60 rounds on the r13 gate graph);
-    * MaximalMatchingSpec pins both regimes against the sequential
-    * reference. */
-  val DefaultTailThreshold = 1024
-
   /** @return (vi BIGINT, vj BIGINT): the matched edges (vi < vj),
-    *         deterministic per seed. */
+    *         deterministic per seed.
+    *
+    * Tail ([[GraphOps.TailThreshold]]): one task runs the sequential
+    * greedy matching of ascending (h, vi, vj) over the live edges, whose
+    * endpoints are all unmatched — the exact remainder of the fixpoint
+    * the rounds land on. */
   def run(spark: SparkSession, edges: DataFrame, seed: Long,
-      maxIter: Int = 100, tailThreshold: Int = DefaultTailThreshold): DataFrame =
+      maxIter: Int = 100, tailThreshold: Int = GraphOps.TailThreshold): DataFrame =
     runCounted(spark, edges, seed, maxIter, tailThreshold)._1
 
   /** Like [[run]] but also reports the round count (spec'd O(log) on a
     * long path with `tailThreshold = 0`, the pure distributed regime;
     * it also bounds the oracle's unroll depth). */
   def runCounted(spark: SparkSession, edges: DataFrame, seed: Long,
-      maxIter: Int = 100, tailThreshold: Int = DefaultTailThreshold): (DataFrame, Int) = {
-    var live = GraphOps.edgeUpper(edges)
+      maxIter: Int = 100, tailThreshold: Int = GraphOps.TailThreshold): (DataFrame, Int) = {
+    var (live, n) = GraphOps.advance(GraphOps.edgeUpper(edges)
       .withColumn("h",
-        Hashing.hash60(concat_ws("|", lit(seed), col("vi"), col("vj"))))
-      .localCheckpoint(false)
-    var n = live.count()
+        Hashing.hash60(concat_ws("|", lit(seed), col("vi"), col("vj")))))(_.count())
     val parts = scala.collection.mutable.Buffer.empty[DataFrame]
     var rounds = 0
     while (n > tailThreshold.toLong && rounds < maxIter) {
@@ -63,24 +55,21 @@ object MaximalMatching {
         .union(live.select(col("vj").as("v"), col("h"), col("vi"), col("vj")))
       val mins = und.groupBy("v")
         .agg(min(struct(col("h"), col("vi"), col("vj"))).as("m"))
-      // matched = min at BOTH endpoints
-      val matched = live
+      // matched = min at BOTH endpoints; the round's count materializes it
+      val matched = Bridge.lazyCheckpoint(live
         .join(mins.select(col("v").as("av"), col("m").as("ma")), col("vi") === col("av"))
         .join(mins.select(col("v").as("bv"), col("m").as("mb")), col("vj") === col("bv"))
         .where(struct(col("h"), col("vi"), col("vj")) === col("ma") &&
           struct(col("h"), col("vi"), col("vj")) === col("mb"))
-        .select(col("vi"), col("vj"))
-        .localCheckpoint(false)
+        .select(col("vi"), col("vj")))
       val mv = matched.select(col("vi").as("v"))
         .union(matched.select(col("vj").as("v")))
       val nextLive = live
         .join(mv.select(col("v").as("x1")), col("vi") === col("x1"), "left_anti")
         .join(mv.select(col("v").as("x2")), col("vj") === col("x2"), "left_anti")
-        .localCheckpoint(false)
-      val nextN = nextLive.count() // materializes matched + nextLive
+      val (ck, nextN) = GraphOps.advance(nextLive, live)(_.count())
       parts += matched
-      Bridge.releaseCheckpoint(live)
-      live = nextLive
+      live = ck
       n = nextN
     }
     if (n > tailThreshold.toLong) {
@@ -113,17 +102,9 @@ object MaximalMatching {
     if (parts.isEmpty)
       return (edges.sparkSession.range(0).toDF("vi")
         .select(col("vi"), col("vi").as("vj")), rounds)
-    val out = parts.reduce(_ union _).localCheckpoint(false)
-    out.count()
-    parts.foreach(Bridge.releaseCheckpoint)
-    (out, rounds)
+    (GraphOps.advance(parts.reduce(_ union _), parts.toSeq: _*)(_.count())._1, rounds)
   }
 
-  /** Unrolled DuckDB oracle replaying the identical rounds; `rounds`
-    * must be ≥ the fixpoint depth (extra rounds are empty no-ops — and
-    * the Spark side fails loudly past maxIter, so a silent undercount
-    * needs the implausible pairing of a deep graph with a small unroll;
-    * [[runCounted]]'s round count sizes it). */
   /** 2-approximate minimum vertex cover — the endpoints of a maximal
     * matching (the classic Gavril/Yannakakis bound: every edge has a
     * matched endpoint, and no cover can take fewer than one vertex per
@@ -139,6 +120,11 @@ object MaximalMatching {
        |SELECT DISTINCT v FROM (
        |  SELECT vi AS v FROM m UNION ALL SELECT vj AS v FROM m)""".stripMargin
 
+  /** Unrolled DuckDB oracle replaying the identical rounds; `rounds`
+    * must be ≥ the fixpoint depth (extra rounds are empty no-ops — and
+    * the Spark side fails loudly past maxIter, so a silent undercount
+    * needs the implausible pairing of a deep graph with a small unroll;
+    * [[runCounted]]'s round count sizes it). */
   def oracleSql(edgesCte: String, seed: Long, rounds: Int): String = {
     val h = Hashing.hash60Sql(s"concat_ws('|', '$seed', vi, vj)")
     val steps = (0 until rounds).map { i =>

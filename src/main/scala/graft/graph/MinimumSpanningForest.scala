@@ -55,19 +55,15 @@ object MinimumSpanningForest {
       col("id").as("vj"), col("id").as("w"))
     // live contracted edges: original endpoints (vi, vj), weight, and
     // the CURRENT component endpoints (ca, cb); initially ca=vi, cb=vj
-    var live = Bridge.lazyCheckpoint(weighted(edges).select(
+    var (live, ne) = GraphOps.advance(weighted(edges).select(
       col("vi"), col("vj"), col("w"),
-      col("vi").as("ca"), col("vj").as("cb")))
-    var ne = live.count()
+      col("vi").as("ca"), col("vj").as("cb")))(_.count())
     val sels = scala.collection.mutable.Buffer.empty[DataFrame]
     var round = 0
-    def release(): Unit = {
-      Bridge.releaseCheckpoint(live)
-      sels.foreach(Bridge.releaseCheckpoint)
-    }
+    def alive: Seq[DataFrame] = live +: sels.toSeq
     while (ne > 0) {
       if (round >= maxIter) {
-        release()
+        alive.foreach(Bridge.releaseCheckpoint)
         throw new IllegalStateException(
           s"Borůvka did not contract in $maxIter rounds ($ne edges left)")
       }
@@ -146,28 +142,26 @@ object MinimumSpanningForest {
         .where(col("ca") =!= col("cb"))
       // prune parallel edges: only the lightest edge between a component
       // pair can ever be selected — the live set strictly shrinks
-      val nextLive = Bridge.lazyCheckpoint(relab
+      val (nextLive, n) = GraphOps.advance(relab
         .withColumn("pa", least(col("ca"), col("cb")))
         .withColumn("pb", greatest(col("ca"), col("cb")))
         .groupBy("pa", "pb")
         .agg(min(struct(col("w"), col("vi"), col("vj"), col("ca"),
           col("cb"))).as("m"))
         .select(col("m.vi").as("vi"), col("m.vj").as("vj"),
-          col("m.w").as("w"), col("m.ca").as("ca"), col("m.cb").as("cb")))
-      ne = nextLive.count()
-      hops.foreach(Bridge.releaseCheckpoint)
-      Bridge.releaseCheckpoint(live)
+          col("m.w").as("w"), col("m.ca").as("ca"), col("m.cb").as("cb")),
+        live +: hops.toSeq: _*)(_.count())
       live = nextLive
+      ne = n
       round += 1
     }
     if (sels.isEmpty) {
-      release()
+      alive.foreach(Bridge.releaseCheckpoint)
       return (emptyOut, round)
     }
-    val out = Bridge.lazyCheckpoint(
-      sels.map(_.select(col("vi"), col("vj"), col("w"))).reduce(_ union _))
-    out.count()
-    release()
+    val out = GraphOps.advance(
+      sels.map(_.select(col("vi"), col("vj"), col("w"))).reduce(_ union _),
+      alive: _*)(_.count())._1
     (out, round)
   }
 

@@ -45,39 +45,29 @@ object NeighborhoodFunction {
       .where(col("src") =!= col("dst")).distinct()
       .persist()
     val verts = GraphOps.vertexExtract(e)
-    val init = verts.groupBy("v")
+    var skCk = Bridge.lazyCheckpoint(verts.groupBy("v")
       .agg(HllUnion.hll60Regs(Hashing.hash60(Seed, col("v"))).as("sk"),
-        HllSketch60.hll60(Hashing.hash60(Seed, col("v"))).as("n_est"))
-      .localCheckpoint(false)
-    var sk = init.select("v", "sk")
-    var skCk = init
-    val estParts = scala.collection.mutable.Buffer.empty[DataFrame]
-    val est0 = init.select(col("v"), lit(0L).as("r"), col("n_est"))
-      .localCheckpoint(false)
-    est0.count()
-    estParts += est0
+        HllSketch60.hll60(Hashing.hash60(Seed, col("v"))).as("n_est")))
+    var sk = skCk.select("v", "sk")
+    val estParts = scala.collection.mutable.Buffer(GraphOps.advance(
+      skCk.select(col("v"), lit(0L).as("r"), col("n_est")))(_.count())._1)
     for (r <- 1 to rounds) {
       val msgs = e.join(sk.withColumnRenamed("v", "sv"), col("dst") === col("sv"))
         .select(col("src").as("v"), col("sk"))
-      val merged = sk.union(msgs).groupBy("v")
+      val merged = Bridge.lazyCheckpoint(sk.union(msgs).groupBy("v")
         .agg(HllUnion.hllUnion(col("sk")).as("sk"),
-          HllUnion.hllUnionEst(col("sk")).as("n_est"))
-        .localCheckpoint(false)
+          HllUnion.hllUnionEst(col("sk")).as("n_est")))
       // the per-round report is tiny (16 B/vertex) and outlives the
       // sketch frame, so it gets its own checkpoint — only TWO
-      // sketch-sized frames are ever alive, not one per round
-      val est = merged.select(col("v"), lit(r.toLong).as("r"), col("n_est"))
-        .localCheckpoint(false)
-      est.count() // materializes merged + est
-      estParts += est
-      Bridge.releaseCheckpoint(skCk)
+      // sketch-sized frames are ever alive, not one per round. Its
+      // count materializes `merged` too.
+      estParts += GraphOps.advance(
+        merged.select(col("v"), lit(r.toLong).as("r"), col("n_est")), skCk)(_.count())._1
       skCk = merged
       sk = merged.select("v", "sk")
     }
-    val out = estParts.reduce(_ union _).localCheckpoint(false)
-    out.count()
-    estParts.foreach(Bridge.releaseCheckpoint)
-    Bridge.releaseCheckpoint(skCk)
+    val out = GraphOps.advance(estParts.reduce(_ union _),
+      estParts.toSeq :+ skCk: _*)(_.count())._1
     e.unpersist(false)
     out
   }

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** PageRank with the reference's exact numeric semantics
@@ -260,16 +259,12 @@ object PageRank {
         .withColumn("pr", coalesce(col("h"), lit(0.0)) * alpha + teleport)
         .select("id", "deg", "pr", "old_pr")
 
-      // localCheckpoint EVERY iteration: `normalized` appears twice in
+      // checkpoint EVERY iteration: `normalized` appears twice in
       // `next`'s plan (contrib + base), so without truncation the
-      // logical plan doubles per iteration. Lazy: the aggregate below
-      // materializes it, and only then may its predecessor go —
-      // releasing a checkpoint before its successor materializes would
-      // destroy the only copy of the recomputation source.
-      val cp = next.localCheckpoint(false)
-      row = aggregate(cp)
-      Bridge.releaseCheckpoint(state)
+      // logical plan doubles per iteration
+      val (cp, r) = GraphOps.advance(next, state)(aggregate)
       state = cp
+      row = r
       iter += 1
     }
     // Exit right after the aggregate materialized the returned state:

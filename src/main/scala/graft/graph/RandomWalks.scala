@@ -67,8 +67,7 @@ object RandomWalks {
     }
     // length is a small constant, so the unioned plan is shallow; the
     // checkpoint lets the cached adjacency release before returning
-    val out = levels.reduce(_ union _).localCheckpoint(false)
-    out.count()
+    val out = GraphOps.advance(levels.reduce(_ union _))(_.count())._1
     adj.unpersist(false)
     out
   }

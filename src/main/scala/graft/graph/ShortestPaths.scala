@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Single-source shortest paths — the reference's `sssp`
   * (`/root/reference/oink/sssp.cpp:49-186`): iterative relaxation — merge
@@ -26,67 +27,8 @@ object ShortestPaths {
       spark: SparkSession,
       edges: DataFrame,
       source: Long,
-      maxIter: Int = 200): DataFrame = {
-    import spark.implicits._
-    // Pre-partitioned ONCE on the per-round join key, then materialized
-    // through a lazy localCheckpoint rather than persist() (r14): the
-    // CacheManager compiles cached plans WITHOUT AQE partition
-    // coalescing, so persist pinned this frame at
-    // spark.sql.shuffle.partitions (= core count) partitions and every
-    // round paid a core-count-wide cache scan + join on a kB-scale
-    // graph — the measured c8-faster-than-c32 anti-scaling. The
-    // checkpoint materializes the AQE-coalesced exchange, so the width
-    // (and the per-round join width, which reuses the carried hash
-    // partitioning) tracks DATA volume at any scale: 1 task at gate
-    // scale, advisory-sized partitions on a 100 TB edge list.
-    val weighted = org.apache.spark.sql.graftbridge.Bridge.lazyCheckpoint(
-      (if (edges.columns.contains("weight")) edges.select(col("src"), col("dst"), col("weight").cast("double"))
-       else edges.select(col("src"), col("dst"), lit(1.0).as("weight")))
-        .repartition(col("src")))
-
-    var dist = Seq((source, 0.0)).toDF("v", "dist")
-    var distCk: DataFrame = null // checkpoint frame owning dist's blocks
-    var frontier = dist
-    var iter = 0
-    var active = 1L
-    while (active > 0 && iter < maxIter) {
-      val candidates = weighted
-        .join(frontier, weighted("src") === frontier("v"))
-        .select(col("dst").as("v"), (col("dist") + col("weight")).as("dist"),
-          lit(false).as("old"))
-      // One aggregation decides BOTH the new state and the improvement
-      // set: prior rows ride the union tagged old=true, so min(dist) is
-      // the merged distance and min(dist WHERE old) the previous one —
-      // the improvement anti-join of earlier revisions collapsed into
-      // the groupBy (one shuffle per round, not two).
-      // localCheckpoint every round: truncate or the logical tree
-      // doubles per round (see PageRank.run). Lazy: the count action
-      // below materializes it inside this round's single job.
-      val merged = dist.withColumn("old", lit(true)).union(candidates)
-        .groupBy("v").agg(min("dist").as("dist"),
-          min(when(col("old"), col("dist"))).as("old_dist"))
-        .localCheckpoint(false)
-      // improved = discovered (no old_dist) or strictly shorter. A plain
-      // filter over the checkpoint — no persist needed: the one re-read
-      // next round scans the checkpoint blocks.
-      val improved = merged
-        .where(col("old_dist").isNull || col("dist") < col("old_dist"))
-        .select("v", "dist")
-      active = improved.count()
-      // Predecessor checkpoint blocks release only AFTER the successor
-      // materialized (the count above) — they were its recomputation
-      // source. Dataset.unpersist cannot see RDD-level checkpoint
-      // blocks, so release goes through the bridge.
-      if (distCk != null)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(distCk)
-      distCk = merged
-      dist = merged.select("v", "dist")
-      frontier = improved
-      iter += 1
-    }
-    org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(weighted)
-    dist
-  }
+      maxIter: Int = 200): DataFrame =
+    runMulti(spark, edges, Seq(source), maxIter).select("v", "dist")
 
   /** The reference's randomized source selection made deterministic:
     * `sssp ncnt seed` seeds `srand48(seed)` and draws ncnt sources from
@@ -119,14 +61,28 @@ object ShortestPaths {
       sources: Seq[Long],
       maxIter: Int = 200): DataFrame = {
     import spark.implicits._
-    // same lazy-checkpoint shape as run() — see the note there
-    val weighted = org.apache.spark.sql.graftbridge.Bridge.lazyCheckpoint(
+    // Pre-partitioned ONCE on the per-round join key, then materialized
+    // through a lazy checkpoint rather than persist() (r14): the
+    // CacheManager compiles cached plans WITHOUT AQE partition
+    // coalescing, so persist pinned this frame at
+    // spark.sql.shuffle.partitions (= core count) partitions and every
+    // round paid a core-count-wide cache scan + join on a kB-scale
+    // graph — the measured c8-faster-than-c32 anti-scaling. The
+    // checkpoint materializes the AQE-coalesced exchange, so the width
+    // (and the per-round join width, which reuses the carried hash
+    // partitioning) tracks DATA volume at any scale: 1 task at gate
+    // scale, advisory-sized partitions on a 100 TB edge list.
+    val weighted = Bridge.lazyCheckpoint(
       (if (edges.columns.contains("weight")) edges.select(col("src"), col("dst"), col("weight").cast("double"))
        else edges.select(col("src"), col("dst"), lit(1.0).as("weight")))
         .repartition(col("src")))
 
-    var dist = sources.map(s => (s, s, 0.0)).toDF("source", "v", "dist")
-    var distCk: DataFrame = null
+    // improved = discovered (no old_dist) or strictly shorter
+    def improved(merged: DataFrame): DataFrame = merged
+      .where(col("old_dist").isNull || col("dist") < col("old_dist"))
+      .select("source", "v", "dist")
+    var distCk = sources.map(s => (s, s, 0.0)).toDF("source", "v", "dist") // no checkpoint yet
+    var dist = distCk
     var frontier = dist
     var iter = 0
     var active = 1L
@@ -135,24 +91,25 @@ object ShortestPaths {
         .join(frontier, weighted("src") === frontier("v"))
         .select(col("source"), col("dst").as("v"),
           (col("dist") + col("weight")).as("dist"), lit(false).as("old"))
-      // old/new-tagged union: merge and improvement check in ONE
-      // aggregation — see run() for the shape and checkpoint rationale.
+      // One aggregation decides BOTH the new state and the improvement
+      // set: prior rows ride the union tagged old=true, so min(dist) is
+      // the merged distance and min(dist WHERE old) the previous one —
+      // the improvement anti-join of earlier revisions collapsed into
+      // the groupBy (one shuffle per round, not two). Checkpointed every
+      // round: the logical tree would double per round otherwise.
       val merged = dist.withColumn("old", lit(true)).union(candidates)
         .groupBy("source", "v").agg(min("dist").as("dist"),
           min(when(col("old"), col("dist"))).as("old_dist"))
-        .localCheckpoint(false)
-      val improved = merged
-        .where(col("old_dist").isNull || col("dist") < col("old_dist"))
-        .select("source", "v", "dist")
-      active = improved.count()
-      if (distCk != null)
-        org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(distCk)
-      distCk = merged
-      dist = merged.select("source", "v", "dist")
-      frontier = improved
+      val (ck, n) = GraphOps.advance(merged, distCk)(improved(_).count())
+      distCk = ck
+      dist = ck.select("source", "v", "dist")
+      // a plain filter over the checkpoint: next round's one re-read
+      // scans its blocks
+      frontier = improved(ck)
+      active = n
       iter += 1
     }
-    org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(weighted)
+    Bridge.releaseCheckpoint(weighted)
     dist
   }
 }

@@ -48,21 +48,14 @@ object StronglyConnectedComponents {
     *              parallel edges are irrelevant to SCC membership
     * @return (v BIGINT, scc BIGINT) for every vertex of `edges`, with
     *         scc = the minimum vertex id of v's strongly connected
-    *         component. */
-  /** Adaptive tail cutover (r14, the [[Coloring]]/[[LubyMIS]]
-    * discipline): once the unassigned vertex set fits one bounded task,
-    * finish with a sequential Kosaraju pass over the induced remaining
-    * subgraph. Unlike the priority-fixpoint tails, NO replay argument is
-    * even needed: the output labels are canonical — scc(v) = min vertex
-    * id of v's component, a pure function of the graph — so any correct
-    * SCC algorithm lands on identical rows. The distributed peel's tail
-    * is Θ(residual-diameter) color/sweep levels over O(1)-size frames,
-    * each paying full round freight; the gate graph spent ~60 of its 71
-    * jobs there. SccSpec pins both regimes equal. */
-  val DefaultTailThreshold = 1024
-
+    *         component.
+    *
+    * Tail ([[GraphOps.TailThreshold]]): one task runs a sequential
+    * Kosaraju pass over the subgraph induced by the unassigned vertices.
+    * The labels are canonical (a pure function of the graph), so any
+    * correct SCC algorithm lands on the rows the peel would. */
   def run(spark: SparkSession, edges: DataFrame, maxOuter: Int = 100,
-      maxInner: Int = 200, tailThreshold: Int = DefaultTailThreshold): DataFrame = {
+      maxInner: Int = 200, tailThreshold: Int = GraphOps.TailThreshold): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
@@ -71,134 +64,94 @@ object StronglyConnectedComponents {
 
     // per-round assigned frames stay checkpointed until the final union
     val assignedParts = scala.collection.mutable.Buffer.empty[DataFrame]
-    var remaining = verts.localCheckpoint(false)
-    var nRemaining = remaining.count()
+    // a long-lived session must not inherit the loop's blocks on a failure
+    def fail(msg: String, live: DataFrame*): Nothing = {
+      (assignedParts.toSeq ++ live).foreach(Bridge.releaseCheckpoint)
+      e0.unpersist(false)
+      throw new IllegalStateException(msg)
+    }
+    var (remaining, nRemaining) = GraphOps.advance(verts)(_.count())
     var outer = 0
     while (nRemaining > tailThreshold.toLong && outer < maxOuter) {
       outer += 1
       // subgraph induced by the unassigned vertices
-      val eR = e0
+      val eR = Bridge.lazyCheckpoint(e0
         .join(remaining.select(col("v").as("rs")), col("src") === col("rs"), "left_semi")
-        .join(remaining.select(col("v").as("rd")), col("dst") === col("rd"), "left_semi")
-        .localCheckpoint(false)
+        .join(remaining.select(col("v").as("rd")), col("dst") === col("rd"), "left_semi"))
 
       // 1. trim (one pass): no out-edge or no in-edge → singleton SCC
-      val nonSingleton = remaining
+      val nonSingleton = Bridge.lazyCheckpoint(remaining
         .join(eR.select(col("src").as("os")), col("v") === col("os"), "left_semi")
-        .join(eR.select(col("dst").as("is")), col("v") === col("is"), "left_semi")
-        .localCheckpoint(false)
-      val trimmed = remaining.join(nonSingleton.select(col("v").as("nv")),
-          col("v") === col("nv"), "left_anti")
-        .select(col("v"), col("v").as("scc"))
-        .localCheckpoint(false)
-      val nTrimmed = trimmed.count() // materializes eR, nonSingleton, trimmed
+        .join(eR.select(col("dst").as("is")), col("v") === col("is"), "left_semi"))
+      // the count materializes eR and nonSingleton too
+      val (trimmed, nTrimmed) = GraphOps.advance(
+        remaining.join(nonSingleton.select(col("v").as("nv")),
+            col("v") === col("nv"), "left_anti")
+          .select(col("v"), col("v").as("scc")))(_.count())
       if (nTrimmed > 0) assignedParts += trimmed else Bridge.releaseCheckpoint(trimmed)
 
       // 2. color the non-singleton subgraph to the forward-min fixpoint
-      val eT = eR
+      val eT = Bridge.lazyCheckpoint(eR
         .join(nonSingleton.select(col("v").as("ts")), col("src") === col("ts"), "left_semi")
-        .join(nonSingleton.select(col("v").as("td")), col("dst") === col("td"), "left_semi")
-        .localCheckpoint(false)
-      var color = nonSingleton.select(col("v"), col("v").as("c"))
-        .localCheckpoint(false)
+        .join(nonSingleton.select(col("v").as("td")), col("dst") === col("td"), "left_semi"))
       // exact decimal sum: labels only decrease, so equal sums == fixpoint
       def colorSum(df: DataFrame): java.math.BigDecimal =
         df.agg(coalesce(sum(col("c").cast("decimal(38,0)")),
           lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-      var prevSum = colorSum(color) // materializes eT and color
+      // materializes eT too
+      var (color, prevSum) = GraphOps.advance(
+        nonSingleton.select(col("v"), col("v").as("c")))(colorSum)
       var inner = 0
       var colorConverged = false
       while (!colorConverged && inner < maxInner) {
         inner += 1
         val msgs = eT.join(color, col("src") === col("v"))
           .select(col("dst").as("v"), col("c"))
-        val next = color.union(msgs).groupBy("v").agg(min("c").as("c"))
-          .localCheckpoint(false)
-        val s = colorSum(next) // materializes next
-        Bridge.releaseCheckpoint(color)
+        val (next, s) = GraphOps.advance(
+          color.union(msgs).groupBy("v").agg(min("c").as("c")), color)(colorSum)
         color = next
         colorConverged = s.compareTo(prevSum) == 0
         prevSum = s
       }
-      if (!colorConverged) {
-        (assignedParts.toSeq ++ Seq(remaining, eR, nonSingleton, eT, color))
-          .foreach(Bridge.releaseCheckpoint)
-        e0.unpersist(false)
-        throw new IllegalStateException(
-          s"SCC coloring did not converge within $maxInner levels")
-      }
+      if (!colorConverged)
+        fail(s"SCC coloring did not converge within $maxInner levels",
+          remaining, eR, nonSingleton, eT, color)
 
       // 3. joint backward BFS from all roots within their color classes
-      val eBack = eT
+      val eBack = Bridge.lazyCheckpoint(eT
         .join(color.select(col("v").as("cs"), col("c").as("c1")), col("src") === col("cs"))
         .join(color.select(col("v").as("cd"), col("c").as("c2")), col("dst") === col("cd"))
         .where(col("c1") === col("c2"))
-        .select(col("dst").as("from"), col("src").as("to"))
-        .localCheckpoint(false)
-      var visited = color.where(col("v") === col("c")).select(col("v"))
-        .localCheckpoint(false)
-      var frontier = visited
-      var visN = visited.count() // materializes the root set
-      var grownN = visN
-      inner = 0
-      while (grownN > 0 && inner < maxInner) {
-        inner += 1
-        val grown = eBack.join(frontier, col("from") === frontier("v"))
+        .select(col("dst").as("from"), col("src").as("to")))
+      val (roots, nRoots) = GraphOps.advance(
+        color.where(col("v") === col("c")).select(col("v")))(_.count())
+      val sweep = GraphOps.bfs(roots, nRoots, Seq("v")) { (frontier, _) =>
+        eBack.join(frontier, col("from") === frontier("v"))
           .select(col("to").as("v")).distinct()
-          .join(visited.select(col("v").as("xv")), col("v") === col("xv"), "left_anti")
-          .localCheckpoint(false)
-        // ONE action per level (r14): counting the union materializes
-        // `grown` too (it is the union's source), and grown is disjoint
-        // from visited by the anti-join, so the frontier size is the
-        // count delta — the former separate grown.count() job halved
-        // away.
-        val newVisited = visited.union(grown).localCheckpoint(false)
-        val newN = newVisited.count()
-        grownN = newN - visN
-        if (grownN > 0) {
-          if (frontier ne visited) Bridge.releaseCheckpoint(frontier)
-          Bridge.releaseCheckpoint(visited)
-          visited = newVisited
-          frontier = grown
-          visN = newN
-        } else {
-          Bridge.releaseCheckpoint(grown)
-          Bridge.releaseCheckpoint(newVisited)
-        }
+      }(_.depth < maxInner)
+      if (!sweep.drained) {
+        // assigning the partial visited set would silently mislabel the
+        // unreached members of the root SCCs in a later round
+        sweep.release()
+        fail(s"SCC backward sweep did not drain in $maxInner levels",
+          remaining, eR, nonSingleton, eT, color, eBack)
       }
-      if (grownN > 0) {
-        // the sweep truncated: assigning the partial `visited` set would
-        // silently mislabel the unreached members of the root SCCs in a
-        // later round — fail loudly like every other BFS in the engine
-        (assignedParts.toSeq ++ Seq(remaining, eR, nonSingleton, eT, color,
-          eBack, visited)).foreach(Bridge.releaseCheckpoint)
-        if (frontier ne visited) Bridge.releaseCheckpoint(frontier)
-        e0.unpersist(false)
-        throw new IllegalStateException(
-          s"SCC backward sweep did not drain in $maxInner levels")
-      }
-      if (frontier ne visited) Bridge.releaseCheckpoint(frontier)
 
-      val assigned = visited
+      // the count materializes `assigned` too
+      val assigned = Bridge.lazyCheckpoint(sweep.visited
         .join(color.withColumnRenamed("v", "cv"), col("v") === col("cv"))
-        .select(col("v"), col("c").as("scc"))
-        .localCheckpoint(false)
-      val newRemaining = nonSingleton
-        .join(assigned.select(col("v").as("av")), col("v") === col("av"), "left_anti")
-        .select(col("v"))
-        .localCheckpoint(false)
-      nRemaining = newRemaining.count() // materializes assigned + newRemaining
+        .select(col("v"), col("c").as("scc")))
+      val (next, n) = GraphOps.advance(
+        nonSingleton
+          .join(assigned.select(col("v").as("av")), col("v") === col("av"), "left_anti")
+          .select(col("v")),
+        Seq(remaining, eR, nonSingleton, eT, color, eBack) ++ sweep.levels: _*)(_.count())
       assignedParts += assigned
-      Seq(remaining, eR, nonSingleton, eT, color, eBack, visited)
-        .foreach(Bridge.releaseCheckpoint)
-      remaining = newRemaining
+      remaining = next
+      nRemaining = n
     }
-    if (nRemaining > tailThreshold.toLong) {
-      (assignedParts.toSeq :+ remaining).foreach(Bridge.releaseCheckpoint)
-      e0.unpersist(false)
-      throw new IllegalStateException(
-        s"SCC did not drain in $maxOuter peel rounds")
-    }
+    if (nRemaining > tailThreshold.toLong)
+      fail(s"SCC did not drain in $maxOuter peel rounds", remaining)
     if (nRemaining > 0) {
       // Bounded sequential tail: one task runs Kosaraju over the
       // subgraph induced by the <= tailThreshold remaining vertices.
@@ -273,13 +226,11 @@ object StronglyConnectedComponents {
       assignedParts += tail
     }
     Bridge.releaseCheckpoint(remaining)
-    if (assignedParts.isEmpty) { // edge list with no vertices at all
-      e0.unpersist(false)
-      return verts.select(col("v"), col("v").as("scc"))
-    }
-    val out = assignedParts.reduce(_ union _).localCheckpoint(false)
-    out.count()
-    assignedParts.foreach(Bridge.releaseCheckpoint)
+    val out =
+      if (assignedParts.isEmpty) // edge list with no vertices at all
+        verts.select(col("v"), col("v").as("scc"))
+      else GraphOps.advance(assignedParts.reduce(_ union _), assignedParts.toSeq: _*)(
+        _.count())._1
     e0.unpersist(false)
     out
   }

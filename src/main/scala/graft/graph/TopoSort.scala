@@ -53,14 +53,14 @@ object TopoSort {
         .select(col("v"),
           greatest(col("level"), coalesce(col("plevel"), lit(0L)))
             .as("level"))
-        .localCheckpoint(false) // lazy: materialized by the signature agg
-      val nsig = next.agg(coalesce(sum("level"), lit(0L))).head().getLong(0)
-      Bridge.releaseCheckpoint(lv)
+      val (ck, nsig) = GraphOps.advance(next, lv)(
+        _.agg(coalesce(sum("level"), lit(0L))).head().getLong(0))
       done = nsig == sig
       sig = nsig
-      lv = next
+      lv = ck
       iter += 1
     }
+    Bridge.releaseCheckpoint(e)
     if (!done)
       throw new IllegalArgumentException(
         s"toposort: no fixpoint after $iter rounds — input has a cycle")

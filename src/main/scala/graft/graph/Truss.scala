@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** k-truss decomposition (Cohen, "Trusses: cohesive subgraphs for social
   * network analysis", NSA tech report 2008 — the same author as the
@@ -46,24 +47,22 @@ object Truss {
   def run(spark: SparkSession, edges: DataFrame, k: Int,
           maxRounds: Int = 64): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
-    import org.apache.spark.sql.graftbridge.Bridge
-    var eCk = GraphOps.edgeUpper(edges).localCheckpoint(false)
-    var e = eCk
-    var n = e.count()
+    var (e, n) = GraphOps.advance(GraphOps.edgeUpper(edges))(_.count())
     var rounds = 0
     while (rounds < maxRounds) {
       val sup = support(e)
-      val kept = sup.where(col("sup") >= k - 2).localCheckpoint(false)
-      val m = kept.count()
-      Bridge.releaseCheckpoint(eCk)
+      // the count materializes `kept`, so the edge set and the
+      // triangle enumeration's own checkpoints (the leaves of `sup`'s
+      // plan) have no reader left
+      val (kept, m) = GraphOps.advance(sup.where(col("sup") >= k - 2),
+        e +: Bridge.checkpointsIn(sup): _*)(_.count())
       // fixpoint: kept's support IS the final support of the truss
       if (m == n) return kept
-      eCk = kept
-      e = kept.select("vi", "vj")
+      e = kept
       n = m
       rounds += 1
     }
-    Bridge.releaseCheckpoint(eCk)
+    Bridge.releaseCheckpoint(e)
     throw new IllegalStateException(
       s"truss peel did not converge in $maxRounds rounds")
   }

@@ -39,6 +39,14 @@ object Bridge {
       case _ => ()
     }
 
+  /** The RDD-backed leaves of `df`'s logical plan — for a plan built
+    * over lazy checkpoints, those checkpoints — as frames
+    * [[releaseCheckpoint]] accepts. */
+  def checkpointsIn(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.DataFrame] =
+    df.queryExecution.logical.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => ofRows(df.sparkSession, l)
+    }
+
   /** Lazy local checkpoint with runaway plan statistics capped.
     *
     * Spark 4's `Dataset.checkpoint` carries the origin plan's estimated

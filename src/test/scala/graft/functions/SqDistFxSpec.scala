@@ -49,6 +49,42 @@ class SqDistFxSpec extends SparkSpec {
     }
   }
 
+  /** Rows where the native kernel and the composed fold disagree,
+    * null-safely, plus how many rows the kernel returned null for. */
+  private def compare(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val out = df.select(
+      SqDistFx.sqDistFx(col("qv"), col("m"), KMeansInt.Scale).as("n"),
+      KMeansInt.costComposed(col("qv"), col("m")).as("c"))
+    (out.where(!(col("n") <=> col("c"))).count(), out.where(col("n").isNull).count())
+  }
+
+  test("null elements give null like the composed fold, interpreted and codegen") {
+    // interpreted: a projection over a local relation folds in the optimizer
+    val local = Seq(
+      (Seq(Some(1L), None), Seq(Some(16384L), Some(0L))),
+      (Seq(Some(1L), Some(2L)), Seq(None, Some(0L))),
+      (Seq(Some(1L), Some(2L)), Seq(Some(16384L), Some(0L))))
+      .toDF("qv", "m")
+    assert(compare(local) == ((0L, 2L)))
+
+    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      // every third vector carries a null element; the centroids are
+      // declared non-null, so only the left side takes the element test
+      val ranged = spark.range(30)
+        .select(
+          array(col("id"), when(col("id") % 3 =!= 0, col("id") * 2)).as("qv"),
+          array(col("id") * 16384L, lit(7L)).as("m"))
+      assert(compare(ranged) == ((0L, 10L)))
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+        case None => spark.conf.unset("spark.sql.codegen.fallback")
+      }
+    }
+  }
+
   test("known values, empty and mismatched arrays") {
     val r = Seq(
       (Array(2L, 3L), Array(2L * 16384L, 3L * 16384L)), // exact centroid → 0

@@ -36,6 +36,14 @@ class BipartiteSpec extends SparkSpec {
     assert(r(20L) == ((3L, 0L, true)), s"P3: ${r(20L)}")
   }
 
+  test("large frontier, small remainder: a star with a path off one leaf") {
+    // at tailThreshold = 16 the sweep stops with all 100 leaves as its
+    // frontier and only the 10 path vertices left for the tail
+    val edges = (1L to 100L).map(l => (0L, l)) ++
+      (0 until 10).map(i => (if (i == 0) 1L else 100L + i, 101L + i))
+    assert(got(edges) == Map(0L -> ((111L, 0L, true))))
+  }
+
   test("agrees with brute-force 2-colorability on random graphs") {
     for (seed <- Seq(3, 31)) {
       val rnd = new scala.util.Random(seed)
