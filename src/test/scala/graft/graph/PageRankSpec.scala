@@ -111,6 +111,28 @@ class PageRankSpec extends SparkSpec {
     parity(edges.toSeq.toDF("src", "dst"))
   }
 
+  test("every entry point leaves only its returned checkpoint persisted") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 3L)).toDF("src", "dst")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "run" -> (() => PageRank.run(spark, edges)),
+      "runFixed" -> (() => PageRank.runFixed(spark, edges, 4L, iterations = 3)),
+      "runFixedWeighted" -> (() => PageRank.runFixedWeighted(spark,
+        edges.withColumn("w", lit(2L)), 4L, iterations = 3)),
+      "runPersonalized" -> (() =>
+        PageRank.runPersonalized(spark, edges, 4L, Seq(0L, 3L), iterations = 3)))
+    for ((name, call) <- calls) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val ranks = call()
+      ranks.collect()
+      val own = ranks.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }.toSet
+      // the registry holds RDDs weakly, so entries from before the call
+      // may vanish; only additions are checked
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.subsetOf(own), s"$name left persisted RDDs behind: ${added -- own}")
+    }
+  }
+
   test("star with dangling sink: ranks sum to ~1 and sink dominates") {
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)).toDF("src", "dst")
     val m = PageRank.run(spark, edges)
