@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark main — one JSON line on stdout per the driver contract.
@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * control
   * (`<family>_ctl_sec`) over BENCHKV stdout lines. Families therefore
   * cannot contaminate each other through shared old-gen state, and
-  * every extras number is clean-JVM-probe-comparable by construction
+  * every extras number is clean-JVM comparable by construction
   * (the r11–r12 d_setsim/ivfpq/ahash watch churn was exactly such
-  * cross-section GC bleed, re-proven each time by SetSimProbe /
-  * AhashProbe).
+  * cross-section GC bleed: in r13 a clean JVM reproduced each anchor
+  * every time).
   *
   * Two sections:
   *  - `queries`: headline operators from SparkEntry on
@@ -45,14 +45,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SECTION ISOLATION (round 13): every extras family runs in a
     // FRESH child JVM, so no section's old-gen pressure bleeds into
     // the next one's numbers — three consecutive rounds (d_setsim
     // r11→12, ivfpq r11→12, ahash r12) re-adjudicated exactly that
-    // GC-bleed pattern; clean-JVM probes (SetSimProbe, AhashProbe)
-    // reproduced the anchors every time. Forking makes every published
-    // number probe-comparable BY CONSTRUCTION, and each child also
+    // GC-bleed pattern; a clean JVM reproduced the anchors every time
+    // (r13). Forking makes every published number clean-JVM
+    // comparable BY CONSTRUCTION, and each child also
     // reports its own q1_agg control (`<family>_ctl_sec`) so host
     // noise during that family's window is visible next to it.
     // `--section <name>` = child mode (run one family, print KV lines);
@@ -60,21 +59,9 @@ object Bench {
     val childTarget: Option[String] =
       args.sliding(2).collectFirst { case Array("--section", n) => n }
     val inline = sys.env.get("SPARK_GRAFT_BENCH_INLINE").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // measure operators, not the cc/tri memo's block-manager writes
-      .config("spark.graft.memoize", "false")
-      .getOrCreate()
-    // ERROR: the iterative algorithms intentionally unpersist finished
-    // localCheckpoints, which logs a WARN per round — noise that would
-    // swamp the one-line JSON contract in the captured tail.
-    spark.sparkContext.setLogLevel("ERROR")
+    // memoize off: measure operators, not the cc/tri memo's
+    // block-manager writes
+    val spark = GraftSession(defaultCpus = 32, memoize = false)
 
     def materialize(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -190,7 +177,6 @@ object Bench {
           "java.base/sun.security.action", "java.base/sun.util.calendar")
           .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
         val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-          "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
           s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
           "-cp", System.getProperty("java.class.path"),
           "graft.Bench", "--section", name)
@@ -238,7 +224,7 @@ object Bench {
         // Both shapes group with LongAdjacencyMap (primitive long keys +
         // long[] adjacency — the reference's KMV build without boxing)
         // over the cached InternalRows directly: the tuple deserializer
-        // alone costs more than the whole grouping loop (MrPhaseBench:
+        // alone costs more than the whole grouping loop (measured in r3:
         // 81 ms tuple path vs 31 ms InternalRow path on barabasi-100000).
         def grouped(df: DataFrame): Unit =
           df.queryExecution.toRdd.mapPartitions { it =>
@@ -254,14 +240,15 @@ object Bench {
         // itself, Spark's fixed scale-out cost on a 1 MB graph.
         // Round-6 tuning note: a raw-RDD HashPartitioner shuffle of boxed
         // (Long, Long) tuples beats this Exchange 43 ms vs 70 ms in a
-        // clean JVM (MrPhaseBench sweep) but LOSES here (~100 ms vs
+        // clean JVM (r6 sweep) but LOSES here (~100 ms vs
         // ~82 ms) — after the headline reps fill the old gen, the boxed
         // path's per-rep allocations pay full GC freight while the
         // UnsafeRow Exchange stays allocation-light. Exactly the property
         // that matters on loaded executors, so the Exchange shape stays.
         // Partition count 2..32 moves the Exchange < 15% (same sweep);
         // the session default (cpus) is kept.
-        val shuffle = median(grouped(edges.repartition(cpus.toInt, col("dst"))))
+        val shuffle = median(grouped(edges.repartition(
+          spark.conf.get("spark.sql.shuffle.partitions").toInt, col("dst"))))
         edges.unpersist(false); e1.unpersist(false)
         Seq(s"$name-local" -> local, s"$name-shuffle" -> shuffle)
       }
@@ -542,7 +529,7 @@ object Bench {
       val fmtName = "graft.sources.EdgeListSource"
       // 20M rows, 50% remapped onto one hot key; 8 write tasks x 32
       // buckets → the hot bucket lands as 8 splittable files. Sizing
-      // note (SkewProbe): at 25%/10M the hot task is cheaper than the
+      // note (measured in r12): at 25%/10M the hot task is cheaper than the
       // pair's fixed costs and the arms tie (~1.3 s each); at 50%/20M
       // the tail dominates and partial clustering collapses it
       // (measured 4.14 s → 1.73 s median, 2.4x).

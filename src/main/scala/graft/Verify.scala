@@ -1,25 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * fails is named on stderr and makes the run exit 1 after the rest are
+  * dumped: a query that throws before writing leaves no output dir, so
+  * the oracle compare, which checks only the dirs that exist, would
+  * never see it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as BIGINT nanos
-      // (Spark 4 rejects nanos timestamps otherwise); queries do exact
-      // integer-microsecond arithmetic on it.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // checkpoint-release WARNs are routine
+    val spark = GraftSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1_agg,e_ewma — builder-side subset for fast
     // single-query mirror iteration; driver never sets it (full dump).
@@ -36,13 +27,7 @@ object Verify {
         SparkEntry.queries.filter { case (n, _) => ks(n) }
       case None     => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dump(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -61,5 +46,25 @@ object Verify {
     graft.queries.GraphQueries.clearCaches()
     graft.text.Bpe.clearCache()
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
+
+  /** Writes each query's result to `outDir/<name>` as parquet and
+    * returns the names of the queries that threw, in order; one
+    * failure does not stop the rest. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Seq[String] =
+    queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
 }

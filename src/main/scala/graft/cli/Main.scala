@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph._
 import graft.io.EdgeListIO
@@ -58,15 +58,7 @@ object Main {
     if (!commands.contains(cmd)) usage()
     val o = opts(args.drop(4))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName(s"graft-$cmd")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(defaultCpus = 8)
 
     def edges() = EdgeListIO.readValidated(spark, input)
     // --dir in reverses the edge set (hyperball / hb_closeness twins)

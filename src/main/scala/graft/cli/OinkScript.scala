@@ -60,14 +60,7 @@ object OinkScript {
         rest = next
       case other => throw new IllegalArgumentException(s"bad args: $other")
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-oink")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(defaultCpus = 8)
     try run(spark, script, vars.toMap)
     finally spark.stop()
   }

@@ -167,7 +167,7 @@ object Ops {
     * BIGINTs. Output = left.* ++ right.*, multiset-equal to
     * [[intervalOverlapJoin]].
     *
-    * MEASURED crossover (tools/IntervalSweepProbe, local[8]): the sweep
+    * MEASURED crossover (r9, local[8]): the sweep
     * is the HOT-BIN plan — 80k short intervals per side bursting into
     * one bin-sized window (6.4·10⁹ shared-bin candidates, 0.87M true
     * overlaps): binned 8.6–14.4 s and growing quadratically with the

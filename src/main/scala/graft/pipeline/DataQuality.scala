@@ -369,8 +369,8 @@ object DataQuality {
     * cumulative count — exact longs), factor = 1 − d/n (one correctly-
     * rounded IEEE division), S(t) = running product in ascending-t
     * order, ROUNDED to 9 decimals (windowed products reassociate
-    * across engines past small frames — tools/ProdProbe — so surv is
-    * the iterative-float convention, not a raw hash).
+    * across engines past small frames — r9, see e_survival — so surv
+    * is the iterative-float convention, not a raw hash).
     * Scale shape: one per-duration count aggregate, one global ordered
     * window over DISTINCT event times (a curve is small by nature),
     * a broadcast 1-row total.

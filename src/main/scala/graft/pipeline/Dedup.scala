@@ -679,7 +679,7 @@ object Dedup {
     // the (doc, gram-hash) frame has THREE consumers (dfreq, prefix, the
     // gram-array verify frame). Deliberately NOT persisted: measured at
     // sf0.1 the re-scan is cheaper than the persist barrier (3.45 s vs
-    // 4.50 s median, tools/SetSimProbe + QueryTime) — at corpus scale,
+    // 4.50 s median, r8) — at corpus scale,
     // where the scan dominates, callers persist `docs` themselves.
     val sh = TextAnalysis.explodedShingleHashes(docs, id, text, n)
       .distinct()
@@ -700,8 +700,8 @@ object Dedup {
       .select("a", "b").distinct()
     // verify on per-doc gram ARRAYS (one row per candidate pair, one
     // array_intersect each) — measured 4.5× cheaper than re-joining the
-    // exploded (doc, gram) rows per pair (tools/SetSimProbe: the
-    // row-level double join was 6.8 s of an 11 s chain at sf0.1). The
+    // exploded (doc, gram) rows per pair (r8: the row-level double
+    // join was 6.8 s of an 11 s chain at sf0.1). The
     // PPJoin length filter (τ·|a| ≤ |b| ≤ |a|/τ, implied by Jaccard ≥ τ)
     // prunes pairs before the intersection is computed.
     val arrays = sh.groupBy("doc_id")
@@ -884,7 +884,7 @@ object Dedup {
     * consecutive ends. Only CHUNK-level rows (≈ tokens/div, 10-50×
     * fewer) ever explode; no per-token rows, no window cumsum, no
     * token-level groupBy (the previous token-explode + window shape
-    * measured 2.1 s of d_cdc's 3.2 s at sf0.1 — tools/CdcProbe). The
+    * measured 2.1 s of d_cdc's 3.2 s at sf0.1 in r8). The
     * cross-doc duplicate check joins 60-bit chunk hashes only. Returns
     * per doc: n_chunks, n_cdc_tokens, n_dup_chunks (chunks whose hash
     * occurs in >1 document), dup_ratio.

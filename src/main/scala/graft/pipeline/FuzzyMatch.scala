@@ -105,8 +105,8 @@ object FuzzyMatch {
     * distance alone can't distinguish a typo in a long name from a
     * different short name). The RAW double is emitted: on ASCII input
     * the expression is bit-identical to DuckDB's
-    * jaro_winkler_similarity (tools/JwParityProbe — 0 ulp diffs over
-    * 256k pairs covering every branch), while a decimal round(x, 6)
+    * jaro_winkler_similarity (r9: 0 ulp diffs over 256k pairs
+    * covering every branch), while a decimal round(x, 6)
     * would re-introduce the Spark-HALF_UP vs DuckDB-std::round
     * half-ulp divergence that broke e_ewma in round 8.
     * @return (name_a, name_b, dist, jw) */

@@ -528,8 +528,8 @@ object Similarity {
     // Each intermediate feeds 2–4 downstream branches; without the
     // eager localCheckpoint Catalyst RE-DERIVES the whole seeded-
     // quantizer subtree per branch — measured 4× the end-to-end time
-    // at bench scale (tools/IvfPqProbe: stage sum ≈ 2 s, uncheckpointed
-    // query 8 s). cents/cb/probes are tiny by construction; lists and
+    // at bench scale (r8: stage sum ≈ 2 s, uncheckpointed query
+    // 8 s). cents/cb/probes are tiny by construction; lists and
     // resid are corpus-row-count (narrow / dim-wide) — localCheckpoint
     // stores MEMORY_AND_DISK, so at corpus scale they spill rather
     // than OOM, and computing each exactly once is precisely what a

@@ -658,9 +658,11 @@ object EventQueries {
     // minus a cumulative count), factor = 1 − d/n (one correctly-
     // rounded IEEE division), S(t) = running product of factors in
     // ascending-t order. The product is NOT order-deterministic across
-    // engines (DuckDB's windowed product reassociates in its segment
-    // tree past small frames — measured max 3.3e-16 at sf0.01, see
-    // tools/ProdProbe), so surv carries the iterative-float round-9
+    // engines: at 4 factors both multiply in frame order, bit-identical
+    // on factors where any reassociation moves the last ulps, but
+    // DuckDB's windowed product reassociates in its segment tree past
+    // small frames (r9: 96 of ~200 sf0.01 curve rows differ, max
+    // 3.3e-16), so surv carries the iterative-float round-9
     // convention (g_pagerank/g_sssp_w): a tolerance on a full-range
     // double, not the e_ewma few-digit-decimal hazard.
     "e_survival" -> ((s, dir) => {
@@ -1141,8 +1143,8 @@ object EventQueries {
         |FROM e JOIN f USING (user_id) GROUP BY 1, 2""".stripMargin,
 
     // identical ladder: exact-long risk sets, one IEEE division per
-    // factor, ordered window product (frame-order multiply both
-    // engines, tools/ProdProbe). CAST(1 AS DOUBLE): a bare 1.0 is
+    // factor, ordered window product (frame-order multiply in both
+    // engines on small frames, r9). CAST(1 AS DOUBLE): a bare 1.0 is
     // DECIMAL in DuckDB and would change the arithmetic.
     "e_survival" ->
       """WITH u AS (SELECT user_id,

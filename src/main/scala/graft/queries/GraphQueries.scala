@@ -330,7 +330,7 @@ object GraphQueries {
     // accepts SINGLE-argument transforms (KeyGroupedPartitioning.
     // isSupportedTransform requires children.size == 1 — verified
     // against the bytecode; a reported bucket(n, src, dst) resolves but
-    // never plans exchange-free, CompoundSpjProbe), so the compound
+    // never plans exchange-free, r13), so the compound
     // layout is a GRID: `bucketBy=src,dst` fans out to n×n cells
     // (tag = bucket(src,n)*n + bucket(dst,n)), the scan reports TWO
     // transforms [bucket(n,src), bucket(n,dst)] with the pair as

@@ -1184,8 +1184,8 @@ object StreamingGateQueries {
         |  CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
         |FROM events""".stripMargin,
 
-    // Outer-join nulls replay Spark's exact eviction arithmetic, probed
-    // empirically (tools/OuterJoinProbe): the GLOBAL watermark is the
+    // Outer-join nulls replay Spark's exact eviction arithmetic, measured
+    // in r7: the GLOBAL watermark is the
     // MIN over the two filtered sides' (ms-floored max − 2 h), and an
     // unmatched purchase null-emits iff p_ts < wm − window. Matched
     // pairs all emit (single data batch: nothing is late).

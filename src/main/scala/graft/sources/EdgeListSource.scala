@@ -711,7 +711,7 @@ private[sources] class EdgeListScan(path: String, chunkBytes: Long,
         // NOT one bucket(n, c1, c2): Spark's SPJ machinery accepts only
         // single-reference transforms (KeyGroupedPartitioning.
         // isSupportedTransform requires children.size == 1; verified
-        // against the 4.1.2 bytecode, probe in CompoundSpjProbe), so
+        // against the 4.1.2 bytecode in r13), so
         // the grid form is what actually plans exchange-free
         new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
           cols.split(",").map(c =>

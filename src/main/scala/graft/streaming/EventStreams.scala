@@ -367,8 +367,8 @@ object EventStreams {
     * window — the outer-join state-eviction path the inner join never
     * exercises. Both sides bound their state by the same horizon.
     *
-    * Watermark subtlety (probed in tools/OuterJoinProbe, replayed by the
-    * gate oracle): the GLOBAL watermark is the MIN across the two
+    * Watermark subtlety (measured in r7, replayed by the gate
+    * oracle): the GLOBAL watermark is the MIN across the two
     * filtered inputs' own delayed watermarks — the slower side (clicks
     * here) gates eviction for both — and a left row null-emits iff
     * p_ts < globalWm − window. */

@@ -412,8 +412,8 @@ object TwsOperators {
     * rides a `ValueState` in the variant's compact binary encoding
     * (never as a JSON string re-parsed per batch). Each event emits the
     * PREVIOUS event's payload for its key as a real VariantVal column
-    * (VariantEncoder composes into product encoders — probed in
-    * tools/VariantStateProbe); typed extraction (`try_variant_get`)
+    * (VariantEncoder composes into product encoders — checked in
+    * r8); typed extraction (`try_variant_get`)
     * happens downstream in the plan, codegen'd. */
   private class VariantLagProcessor
       extends StatefulProcessor[Long, VEvent, VPrev] {

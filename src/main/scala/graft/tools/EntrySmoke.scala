@@ -2,7 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Mirror of the driver's t1 smoke: run SparkEntry.entry, expect rows>0. */
+/** Mirror of the t1 smoke: run SparkEntry.entry, expect rows>0.
+  * The one main that does not use [[graft.GraftSession]]: the smoke
+  * calls the entry point from a bare session (no extensions, no UTC),
+  * so an entry point that works only under graft's conf fails here. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

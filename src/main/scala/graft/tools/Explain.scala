@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dump formatted physical plans for SparkEntry queries — the
   * `.explain("formatted")` feedback loop (scan pushdown, broadcast
@@ -13,21 +13,10 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    // mirror Bench's session exactly (extensions included — the injected
-    // optimizer rules change plan shapes) so dumped plans are the plans
-    // the bench actually runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.memoize", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session (extensions included — the injected optimizer
+    // rules change plan shapes), so dumped plans are the plans the bench
+    // actually runs
+    val spark = GraftSession(defaultCpus = 8, memoize = false)
     names.foreach { name =>
       println(s"\n================ $name ================")
       try println(graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.graph.PageRank
 import graft.io.EdgeListIO
 
@@ -22,13 +22,7 @@ object GoldenSweep {
         .filter(n => new java.io.File(s"/root/reference/result/$n-pr-p.txt").exists())
         .sorted.toSeq
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(defaultCpus = 32)
 
     var failures = 0
     names.foreach { name =>

@@ -94,6 +94,12 @@ object Bridge {
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)
 
+  /** Blocks until every listener event posted so far has reached every
+    * listener (`listenerBus` is `private[spark]`), so counts a listener
+    * keeps are complete once this returns, with no sleep. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Install an extra planner strategy on a live session (idempotent). */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

@@ -5,7 +5,8 @@
 #
 #   tools/gate.sh [sfDir]          default /root/testdata/sf0.01
 #
-# Chains: sbt test -> perfbench sbt test -> graft.Verify -> tools/check_oracle.py -> graft.Bench.
+# Chains: sbt test -> graft.tools.EntrySmoke -> perfbench sbt test -> graft.Verify
+#   -> tools/check_oracle.py -> graft.Bench.
 # Exits non-zero on the first failing stage.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -18,6 +19,12 @@ echo "== gate: sbt test =="
 sbt -batch test 2>&1 | tail -6
 rc=${PIPESTATUS[0]}
 [ "$rc" -ne 0 ] && { echo "GATE FAIL: sbt test (rc=$rc)"; exit 1; }
+
+# the t1 smoke: SparkEntry.entry on a bare session (no graft conf)
+echo "== gate: graft.tools.EntrySmoke =="
+sbt -batch "runMain graft.tools.EntrySmoke" 2>&1 | grep -E "^ENTRY|error|success" | tail -5
+rc=${PIPESTATUS[0]}
+[ "$rc" -ne 0 ] && { echo "GATE FAIL: EntrySmoke (rc=$rc)"; exit 1; }
 
 # perfbench compiles ../src/main/scala and calls engine APIs positionally:
 # an engine signature change must fail here, not in the benchmark run
