@@ -2,11 +2,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
-  * fails is named on stderr and makes the run exit 1 after the rest are
-  * dumped: a query that throws before writing leaves no output dir, so
-  * the oracle compare, which checks only the dirs that exist, would
-  * never see it. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Before the dump
+  * it writes `queries.json`, the names of the queries it runs, so the
+  * compare fails a query that left no output dir instead of skipping it.
+  * A query that fails is named on stderr and makes the run exit 1 after
+  * the rest are dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -27,7 +27,6 @@ object Verify {
         SparkEntry.queries.filter { case (n, _) => ks(n) }
       case None     => SparkEntry.queries
     }
-    val failed = dump(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,6 +39,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    Files.writeString(Paths.get(s"$outDir/queries.json"),
+      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+    val failed = dump(spark, sfDir, outDir, selected)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -26,6 +26,15 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over an RDD of catalyst rows of `schema`; its LogicalRDD
+    * holds `rdd` itself, so releasing that RDD releases the frame's
+    * storage (classic `internalCreateDataFrame` is private[sql]). */
+  def rowsFrame(spark: org.apache.spark.sql.SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, schema)
+
   /** Release the block-manager storage behind a (local)checkpointed
     * DataFrame. `Dataset.unpersist` only uncaches CacheManager entries;
     * a checkpoint's blocks were persisted at the RDD level inside

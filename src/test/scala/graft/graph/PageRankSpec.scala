@@ -133,6 +133,102 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
+  /** [[ReferencePageRank]] parity at 1e-12 relative and the same round
+    * count, with the vertex and edge blocks cut `blocks` ways. */
+  private def blockParity(edges: Seq[(Long, Long)], blocks: Int): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, blocks.toString)
+    try {
+      val (want, wantRounds) =
+        ReferencePageRank.run(edges.map { case (s, d) => (s.toInt, d.toInt) })
+      val (ranks, rounds) = PageRank.runWithStats(spark, edges.toDF("src", "dst"), None,
+        PageRank.DefaultAlpha, PageRank.DefaultTol, PageRank.DefaultMaxIter, 0)
+      val got = ranks.as[(Long, Double)].collect().toMap
+      assert(rounds == wantRounds, s"$blocks blocks: engine $rounds rounds, reference $wantRounds")
+      assert(got.keySet == want.indices.map(_.toLong).toSet, s"$blocks blocks: id universe differs")
+      for (i <- want.indices)
+        assert(math.abs(got(i.toLong) - want(i)) <= 1e-12 * want(i),
+          s"$blocks blocks, id $i: ${got(i.toLong)} vs ${want(i)}")
+    } finally spark.conf.set(key, was)
+  }
+
+  private lazy val rmat10 =
+    RMat.generate(spark, 10, 8L << 10, seed = 11).as[(Long, Long)].collect().toSeq
+
+  test("seeded R-MAT graph matches the reference loop to 1e-12 at 1, 3 and 8 blocks") {
+    for (blocks <- Seq(1, 3, 8)) blockParity(rmat10, blocks)
+  }
+
+  test("a graph with fewer vertices than blocks matches the reference loop") {
+    blockParity(Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 2L)), 8)
+    blockParity(Seq((0L, 0L)), 8)
+  }
+
+  test("edges with an endpoint past websize contribute nothing") {
+    val n = 64L
+    val inside = RMat.generate(spark, 6, 4L << 6, seed = 3).as[(Long, Long)].collect().toSeq
+    val outside = Seq((1L, n), (5L, n + 7), (n, 2L), (n + 3, n + 4), (0L, 200L))
+    val all = (inside ++ outside).toDF("src", "dst")
+    val kept = inside.toDF("src", "dst")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Double)].collect().toMap
+    assert(ranks(PageRank.run(spark, all, Some(n))) == ranks(PageRank.run(spark, kept, Some(n))))
+    assert(ranks(PageRank.runFixed(spark, all, n, iterations = 4)) ==
+      ranks(PageRank.runFixed(spark, kept, n, iterations = 4)))
+    val w = lit(1L) + (col("src") + col("dst")) % 3
+    assert(ranks(PageRank.runFixedWeighted(spark, all.withColumn("w", w), n, iterations = 4)) ==
+      ranks(PageRank.runFixedWeighted(spark, kept.withColumn("w", w), n, iterations = 4)))
+  }
+
+  test("a warm start that misses ids and carries extra ones matches the hand recurrence") {
+    // cycle 0→1→2→0 plus 1→3; ids 3 and 4 dangling; init misses 1, 3, 4
+    // and carries 7 and -1, outside the universe
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 3L)).toDF("src", "dst")
+    val init = Seq((0L, 0.4), (2L, 0.3), (7L, 0.5), (-1L, 0.2)).toDF("id", "rank")
+    val iters = 2
+    val got = PageRank.runFixed(spark, edges, 5L, iters, init = Some(init))
+      .as[(Long, Double)].collect().toMap
+    val n = 5
+    val alpha = 0.85
+    val outdeg = Map(0 -> 1.0, 1 -> 2.0, 2 -> 1.0)
+    var pr = Array(0.4, 0.0, 0.3, 0.0, 0.0)
+    for (_ <- 0 until iters) {
+      val sum = pr.sum
+      val dangling = pr(3) + pr(4)
+      // a warm start normalizes on its first round too
+      val old = pr.map(_ / sum)
+      val h = Array.fill(n)(0.0)
+      for ((s, d) <- Seq((0, 1), (1, 2), (2, 0), (1, 3)))
+        h(d) += old(s) / outdeg(s)
+      pr = h.map(_ * alpha + (alpha * dangling / n + (1.0 - alpha) / n))
+    }
+    assert(got.keySet == (0L until n).toSet)
+    for (i <- 0 until n)
+      assert(math.abs(got(i.toLong) - pr(i)) <= 1e-12 * pr(i), s"id $i: ${got(i.toLong)} vs ${pr(i)}")
+  }
+
+  test("a converged run of k rounds launches at most k + 3 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val edges = rmat10.toDF("src", "dst")
+    val (_, rounds) = PageRank.runWithStats(spark, edges, None,
+      PageRank.DefaultAlpha, PageRank.DefaultTol, PageRank.DefaultMaxIter, 0)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      PageRank.run(spark, edges).collect()
+      Bridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(rounds > 1)
+    assert(jobs.get <= rounds + 3, s"${jobs.get} jobs for $rounds rounds")
+  }
+
   test("star with dangling sink: ranks sum to ~1 and sink dominates") {
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)).toDF("src", "dst")
     val m = PageRank.run(spark, edges)

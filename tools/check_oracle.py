@@ -6,7 +6,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs
 <verifyOutDir>/oracle_sql.json's SQL in DuckDB against the same testdata
 parquet tables, canonicalizes both results (columns sorted by name, rows
-sorted), and reports exact / near / mismatch per query.
+sorted), and reports exact / near / mismatch per query. Every query named
+in <verifyOutDir>/queries.json (the ones Verify ran) is counted: one that
+left no output dir fails as NO OUTPUT.
 """
 import sys, os, json, glob
 import duckdb
@@ -77,9 +79,14 @@ def main():
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
     results = {}
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
-    for name in names:
+    names = {d for d in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, d))}
+    ran = f"{out_dir}/queries.json"
+    if os.path.exists(ran):
+        with open(ran) as f:
+            names |= set(json.load(f))
+    else:
+        print(f"note: no {ran}; checking only the output dirs that exist")
+    for name in sorted(names):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             results[name] = "NO OUTPUT"

@@ -5,45 +5,60 @@
 #
 #   tools/gate.sh [sfDir]          default /root/testdata/sf0.01
 #
-# Chains: sbt test -> graft.tools.EntrySmoke -> perfbench sbt test -> graft.Verify
+# Runs: sbt test -> graft.tools.EntrySmoke -> perfbench sbt test -> graft.Verify
 #   -> tools/check_oracle.py -> graft.Bench.
-# Exits non-zero on the first failing stage.
+# Every stage runs even when an earlier one failed (on a host without the
+# reference tree `sbt test` fails its three golden tests, and the later
+# stages still have to be seen). Exits 1 at the end, naming each failed
+# stage.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${GATE_OUT:-/tmp/graft_gate_out}"
 BENCH_SF="${BENCH_SF:-/root/testdata/sf0.1}"
+FAILED=()
+
+# fail <stage> <rc>: records the stage when rc is non-zero
+fail() {
+  if [ "$2" -ne 0 ]; then
+    echo "GATE FAIL: $1 (rc=$2)"
+    FAILED+=("$1")
+  fi
+}
 
 echo "== gate: sbt test =="
 sbt -batch test 2>&1 | tail -6
-rc=${PIPESTATUS[0]}
-[ "$rc" -ne 0 ] && { echo "GATE FAIL: sbt test (rc=$rc)"; exit 1; }
+fail "sbt test" "${PIPESTATUS[0]}"
 
 # the t1 smoke: SparkEntry.entry on a bare session (no graft conf)
 echo "== gate: graft.tools.EntrySmoke =="
 sbt -batch "runMain graft.tools.EntrySmoke" 2>&1 | grep -E "^ENTRY|error|success" | tail -5
-rc=${PIPESTATUS[0]}
-[ "$rc" -ne 0 ] && { echo "GATE FAIL: EntrySmoke (rc=$rc)"; exit 1; }
+fail "EntrySmoke" "${PIPESTATUS[0]}"
 
 # perfbench compiles ../src/main/scala and calls engine APIs positionally:
 # an engine signature change must fail here, not in the benchmark run
 echo "== gate: perfbench sbt test =="
 (cd perfbench && sbt -batch test) 2>&1 | tail -6
-rc=${PIPESTATUS[0]}
-[ "$rc" -ne 0 ] && { echo "GATE FAIL: perfbench sbt test (rc=$rc)"; exit 1; }
+fail "perfbench sbt test" "${PIPESTATUS[0]}"
 
 echo "== gate: graft.Verify @ $SF_DIR =="
 rm -rf "$OUT_DIR"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" 2>&1 | grep -E "\[verify\]|error|success" | tail -20
-rc=${PIPESTATUS[0]}
-[ "$rc" -ne 0 ] && { echo "GATE FAIL: Verify (rc=$rc)"; exit 1; }
+fail "Verify" "${PIPESTATUS[0]}"
 
 echo "== gate: oracle compare =="
-python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR" || { echo "GATE FAIL: oracle"; exit 1; }
+python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
+fail "oracle compare" "$?"
 
 echo "== gate: graft.Bench @ $BENCH_SF =="
-SPARK_GRAFT_SF_DIR="$BENCH_SF" sbt -batch "runMain graft.Bench" 2>&1 | grep -E '^\{"metric"' \
-  || { echo "GATE FAIL: bench printed no JSON line"; exit 1; }
+SPARK_GRAFT_SF_DIR="$BENCH_SF" sbt -batch "runMain graft.Bench" 2>&1 | grep -E '^\{"metric"'
+# sbt's status, then grep's: 1 when Bench printed no JSON line
+rcs=("${PIPESTATUS[@]}")
+fail "Bench" "$(( rcs[0] || rcs[1] ))"
 
+if [ "${#FAILED[@]}" -ne 0 ]; then
+  echo "== gate: FAILED stages: $(IFS=,; echo "${FAILED[*]}" | sed 's/,/, /g') =="
+  exit 1
+fi
 echo "== gate: ALL GREEN =="
