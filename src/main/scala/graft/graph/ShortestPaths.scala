@@ -36,8 +36,8 @@ object ShortestPaths {
     * `get_good_sources`). We draw index `hash60(seed|i) % |V|` into the
     * id-ordered vertex list — partitioning-independent, identical in
     * the DuckDB oracle. Ranks come from a distributed sortBy +
-    * zipWithIndex (range-partitioned, like readValidated) — a global
-    * row_number window would funnel all of |V| through one task. */
+    * zipWithIndex (range-partitioned) — a global row_number window
+    * would funnel all of |V| through one task. */
   def seededSources(edges: DataFrame, seed: Long, count: Int): Seq[Long] = {
     val verts = GraphOps.vertexExtract(edges)
     val n = verts.count()

@@ -1,7 +1,13 @@
 package graft.io
 
+import graft.graph.PageRank
 import graft.testkit.SparkSpec
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 class EdgeListIOSpec extends SparkSpec {
   import spark.implicits._
@@ -84,5 +90,135 @@ class EdgeListIOSpec extends SparkSpec {
       }
       assert(checked > 100000 && sci > 8000)
     } finally src.close()
+  }
+
+  /** The composed read `readValidated` replaced: a numbering pass, a
+    * bad-line query and a lazy `split`-and-cast frame. The oracle for the
+    * one-pass read. */
+  private def composedRead(path: String): DataFrame = {
+    val lines = spark.read.option("recursiveFileLookup", "true").textFile(path)
+    val numbered = lines
+      .select(col("value").as("line"), input_file_name().as("f"))
+      .rdd.zipWithIndex()
+      .map { case (r, i) => (r.getString(0), r.getString(1), i) }
+      .toDF("line", "f", "gidx")
+    val bad = numbered
+      .where(!col("line").rlike("^(0|[1-9][0-9]*)\\s(0|[1-9][0-9]*)$"))
+      .orderBy("gidx")
+      .limit(1)
+      .select("gidx", "f", "line")
+      .collect()
+    bad.headOption.foreach { r =>
+      val n = numbered
+        .where(col("f") === r.getString(1) && col("gidx") <= r.getLong(0))
+        .count()
+      throw EdgeListIO.InvalidLine(n, r.getString(2))
+    }
+    numbered.select(
+      split(col("line"), "\\s").getItem(0).cast("long").as("src"),
+      split(col("line"), "\\s").getItem(1).cast("long").as("dst"))
+  }
+
+  /** The rows in order, the bad line's number, or the exception class. */
+  private def outcome(read: String => DataFrame, path: String): Either[String, Seq[(Any, Any)]] =
+    try Right(read(path).collect().toSeq.map(r => (r.get(0), r.get(1))))
+    catch {
+      case e: EdgeListIO.InvalidLine => Left(s"InvalidLine(${e.lineNumber}, ${e.content})")
+      case e: Exception => Left(e.getClass.getName)
+    }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val id: Gen[String] = Gen.frequency(
+    6 -> Gen.choose(0L, 99999L).map(_.toString),
+    1 -> Gen.zip(Gen.choose(1, 2), Gen.choose(0L, 99L)).map { case (z, v) => "0" * z + v },
+    2 -> Gen.choose(18, 20).flatMap(k =>
+      Gen.zip(Gen.choose('1', '9'), Gen.listOfN(k - 1, Gen.numChar))
+        .map { case (h, t) => h +: t.mkString }),
+    1 -> Gen.oneOf("9223372036854775807", "9223372036854775808"),
+    1 -> Gen.oneOf("\u0661", "1\u0662", "\uff13"))
+  private val sep = Gen.frequency(5 -> " ", 1 -> "\t", 1 -> "\f", 1 -> "\u000b", 1 -> "  ", 1 -> " \t")
+  private val end = Gen.frequency(8 -> "", 1 -> " ", 1 -> "\u0085", 1 -> "\u2028")
+  private val line: Gen[String] = Gen.frequency(
+    12 -> (for (a <- id; s <- sep; b <- id; e <- end) yield a + s + b + e),
+    1 -> Gen.const(""),
+    1 -> Gen.alphaNumStr.map(_.take(4)))
+
+  test("one-pass read agrees with the composed read on generated lines") {
+    val kinds = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(Gen.choose(1, 6).flatMap(Gen.listOfN(_, line))) { ls =>
+      val p = tmp(ls.mkString("\n") + "\n")
+      val (got, want) = (outcome(EdgeListIO.readValidated(spark, _), p), outcome(composedRead, p))
+      kinds += got.fold(_.takeWhile(_ != '('), _ => "rows")
+      Prop(got == want) :| s"lines ${ls.map(_.map(_.toInt))}: got $got, want $want"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(60)
+      .withInitialSeed(Seed(6L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    // the cases reached all three outcomes
+    assert(kinds == Set("rows", "InvalidLine", "org.apache.spark.SparkNumberFormatException"),
+      kinds)
+  }
+
+  test("without ANSI an id past Long.MaxValue reads as null, as the composed read does") {
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      val p = tmp("1 2\n3 99999999999999999999\n9223372036854775808 4\n5 6\u0085\n")
+      val got = outcome(EdgeListIO.readValidated(spark, _), p)
+      assert(got == outcome(composedRead, p))
+      assert(got == Right(Seq((1L, 2L), (3L, null), (null, 4L), (5L, null))))
+    }
+  }
+
+  test("a bad line in a later partition of a split file keeps its line number") {
+    val p = tmp((0 until 40).map(i => if (i == 32 || i == 37) "bad" else s"$i ${i + 1}")
+      .mkString("", "\n", "\n"))
+    withConf("spark.sql.files.maxPartitionBytes" -> "64") {
+      assert(spark.read.text(p).rdd.getNumPartitions > 2)
+      val e = intercept[EdgeListIO.InvalidLine](EdgeListIO.readValidated(spark, p))
+      assert(e.lineNumber == 33 && e.content == "bad")
+      assert(outcome(composedRead, p) == Left("InvalidLine(33, bad)"))
+    }
+  }
+
+  test("files packed into one partition number their lines per file") {
+    val dir = Files.createTempDirectory("edgepack")
+    Files.writeString(dir.resolve("a.txt"), "0 1\n1 2\n2 3\n3 4\n4 5\n")
+    Files.writeString(dir.resolve("b.txt"), "5 6\n6 7\n7 8\n")
+    Files.writeString(dir.resolve("c.txt"), "8 9\nx\n")
+    withConf("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1") {
+      assert(spark.read.text(dir.toString).rdd.getNumPartitions == 1)
+      val e = intercept[EdgeListIO.InvalidLine](EdgeListIO.readValidated(spark, dir.toString))
+      assert(e.lineNumber == 2 && e.content == "x")
+      Files.writeString(dir.resolve("c.txt"), "8 9\n")
+      val got = EdgeListIO.readValidated(spark, dir.toString).as[(Long, Long)].collect().toSet
+      assert(got == (0L until 9L).map(i => (i, i + 1)).toSet)
+    }
+  }
+
+  test("the returned frame never reads the text again") {
+    val vendored = getClass.getResource("/bull.txt").getPath
+    val p = Files.createTempFile("bull", ".txt")
+    Files.copy(Paths.get(vendored), p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val edges = EdgeListIO.readValidated(spark, p.toString)
+    Files.delete(p)
+    def ranks(e: DataFrame) =
+      PageRank.run(spark, e).as[(Long, Double)].collect().toMap
+    assert(ranks(edges) == ranks(EdgeListIO.readValidated(spark, vendored)))
+  }
+
+  test("releaseCheckpoint on the returned frame frees the read's storage") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val edges = EdgeListIO.readValidated(spark, tmp("0 1\n1 2\n"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet != before)
+    Bridge.releaseCheckpoint(edges)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 }

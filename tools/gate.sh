@@ -5,7 +5,8 @@
 #
 #   tools/gate.sh [sfDir]          default /root/testdata/sf0.01
 #
-# Runs: sbt test -> graft.tools.EntrySmoke -> perfbench sbt test -> graft.Verify
+# Runs: sbt test -> graft.tools.EntrySmoke -> CLI pagerank on bull (cmp against
+#   src/test/resources/bull-pr.expected) -> perfbench sbt test -> graft.Verify
 #   -> tools/check_oracle.py -> graft.Bench.
 # Every stage runs even when an earlier one failed (on a host without the
 # reference tree `sbt test` fails its three golden tests, and the later
@@ -35,6 +36,22 @@ fail "sbt test" "${PIPESTATUS[0]}"
 echo "== gate: graft.tools.EntrySmoke =="
 sbt -batch "runMain graft.tools.EntrySmoke" 2>&1 | grep -E "^ENTRY|error|success" | tail -5
 fail "EntrySmoke" "${PIPESTATUS[0]}"
+
+# the paper's query through the CLI on the vendored bull graph, byte for
+# byte against its pinned output (recorded at the CLI's default session,
+# so the cpu and master overrides are cleared)
+echo "== gate: CLI pagerank on bull =="
+BULL_OUT="$(mktemp)"
+env -u SPARK_GRAFT_CPUS -u SPARK_MASTER sbt -batch \
+  "runMain graft.cli.Main pagerank src/test/resources/bull.txt -o $BULL_OUT" 2>&1 \
+  | grep -E "^Pagerank|success" | tail -3
+rc="${PIPESTATUS[0]}"
+if [ "$rc" -eq 0 ]; then
+  cmp "$BULL_OUT" src/test/resources/bull-pr.expected
+  rc=$?
+fi
+rm -f "$BULL_OUT"
+fail "CLI bull output" "$rc"
 
 # perfbench compiles ../src/main/scala and calls engine APIs positionally:
 # an engine signature change must fail here, not in the benchmark run
