@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, RuntimeReplaceable, UnsafeRow}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -50,12 +51,14 @@ object EdgeListIO {
 
   /** Strictly validated distributed read → `(src BIGINT, dst BIGINT)`.
     *
-    * One job parses each text partition once into an [[EdgeBlock]] and
-    * persists it; the returned frame reads those blocks, never the text,
-    * and [[Bridge.releaseCheckpoint]] on it frees them. The same job
-    * returns each partition's [[Tally]]: the first bad line in partition
-    * order (the order a sequential scan sees) aborts the read, numbered
-    * within its file by adding that file's lines in earlier partitions.
+    * The text is scanned in one split per core ([[perCoreText]]), even
+    * when it is one small file. One job parses each text partition once
+    * into an [[EdgeBlock]] and persists it; the returned frame reads
+    * those blocks, never the text, and [[Bridge.releaseCheckpoint]] on it
+    * frees them. The same job returns each partition's [[Tally]]: the
+    * first bad line in partition order (the order a sequential scan sees)
+    * aborts the read, numbered within its file by adding that file's
+    * lines in earlier partitions.
     *
     * A line on the reference grammar with ids of at most 18 digits is
     * parsed from its bytes. Any other line goes to [[LinePattern]] (Java
@@ -64,11 +67,8 @@ object EdgeListIO {
     * an id past `Long.MaxValue` still fails the read as that cast does.
     */
   def readValidated(spark: SparkSession, path: String): DataFrame = {
-    // Directory trees/globs read like the reference's file-list map.
-    val text = spark.read.option("recursiveFileLookup", "true").text(path)
-      .select(col("value"), input_file_name())
     val fallback = splitParse(spark)
-    val blocks = text.queryExecution.toRdd
+    val blocks = perCoreText(spark, path).queryExecution.toRdd
       .mapPartitions(rows => Iterator(parseBlock(rows, fallback)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -79,6 +79,32 @@ object EdgeListIO {
     }
     Bridge.rowsFrame(spark, new EdgeRows(blocks),
       StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
+  }
+
+  /** The `(line, file)` rows of the text under `path` (directory trees
+    * and globs read like the reference's file-list map), scanned as
+    * Spark scans files but sized for this read: a split is
+    * ⌈bytes / n⌉, with opening a file counted as one byte and `n` the
+    * split count the session's file scans aim for (`minPartitionNum`,
+    * else the default parallelism), capped by `maxPartitionBytes`. So a
+    * small single file splits into `n` pieces rather than staying under
+    * the `openCostInBytes` floor. The sizing is set on a clone of the
+    * session; `spark`'s conf never changes. */
+  private[io] def perCoreText(spark: SparkSession, path: String): DataFrame = {
+    val scan = Bridge.cloneSession(spark)
+    val text = scan.read.option("recursiveFileLookup", "true").text(path)
+    val index = text.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.get
+    val (maxBytes, n) = Bridge.fileSplitFigures(scan)
+    val bytes = index.sizeInBytes + index.inputFiles.length
+    // With one byte per open and the target as the only split count,
+    // Spark's own split sizing yields exactly `split`.
+    val split = math.max(1L, math.min(maxBytes, (bytes + n - 1) / n))
+    scan.conf.set("spark.sql.files.openCostInBytes", 1L)
+    scan.conf.set("spark.sql.files.minPartitionNum", 1L)
+    scan.conf.set("spark.sql.files.maxPartitionBytes", split)
+    text.select(col("value"), input_file_name())
   }
 
   /** The read's failure, if any: the first bad line in partition order,
@@ -267,14 +293,15 @@ object EdgeListIO {
       .select(explode(filter(split(col("line"), "\\s+"), w => w =!= lit(""))).as("word"))
   }
 
-  /** C++ `operator<<(double)` under `setprecision(12)`: up to 12
-    * significant digits, trailing zeros trimmed, scientific notation
-    * when the decimal exponent < -4 or >= 12 (%g semantics) — what the
-    * golden files contain. Byte-level parity with the reference's cpp
-    * goldens is asserted by EdgeListIOSpec over barabasi-100000. */
+  /** C++ `operator<<(double)` under `setprecision(12)`, i.e. glibc
+    * `%.12g`: the exact binary value rounded to 12 significant digits,
+    * ties to even, trailing zeros trimmed, scientific notation when the
+    * rounded value's decimal exponent is < -4 or >= 12 — what the golden
+    * files contain. `EdgeListIOSpec` pins it against printf's output. */
   def formatRank(x: Double): String = {
     if (x == 0.0) return "0"
-    val bd = new java.math.BigDecimal(x).round(new java.math.MathContext(12))
+    val bd = new java.math.BigDecimal(x)
+      .round(new java.math.MathContext(12, java.math.RoundingMode.HALF_EVEN))
     val unscaled = bd.stripTrailingZeros()
     val exp = unscaled.precision() - unscaled.scale() - 1 // decimal exponent
     if (exp < -4 || exp >= 12) {
@@ -285,33 +312,106 @@ object EdgeListIO {
     } else unscaled.toPlainString
   }
 
-  /** Write ranks in golden format, streamed: the rows come in `id`
-    * order through `toLocalIterator`, so the driver holds one partition
-    * of the sorted frame at a time, and the `s =` trailer sums the ranks
-    * in that same sequential order. */
-  def writeGolden(ranks: DataFrame, path: String): Unit = {
-    val out = Files.newBufferedWriter(Paths.get(path), StandardCharsets.UTF_8)
+  /** Ids per [[writeGolden]] job: the driver holds one slab's lines. */
+  private[io] val GoldenSlab = 1 << 20
+
+  /** One partition's rows with ids in a slab `lo until lo + slab`:
+    * their offsets from `lo`, ranks and golden lines; whether the
+    * partition also has an id past the slab; its smallest id; and
+    * whether it has a null id or rank. */
+  private final case class SlabRows(at: Array[Int], rank: Array[Double], line: Array[String],
+      beyond: Boolean, min: Long, nulls: Boolean)
+
+  private def slabRows(rows: Iterator[InternalRow], lo: Long, slab: Int): SlabRows = {
+    val at = new ArrayBuilder.ofInt
+    val rank = new ArrayBuilder.ofDouble
+    val line = mutable.ArrayBuffer.empty[String]
+    var beyond = false
+    var min = Long.MaxValue
+    var nulls = false
+    while (rows.hasNext) {
+      val r = rows.next()
+      if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+      else {
+        val id = r.getLong(0)
+        min = math.min(min, id)
+        if (id - lo >= slab) beyond = true
+        else if (id >= lo) {
+          at += (id - lo).toInt
+          rank += r.getDouble(1)
+          line += s"$id = ${formatRank(r.getDouble(1))}\n"
+        }
+      }
+    }
+    SlabRows(at.result(), rank.result(), line.toArray, beyond, min, nulls)
+  }
+
+  /** Write `(id, rank)` in golden format. The frame must hold each id of
+    * the dense universe `0..n-1` once, as PageRank's output does; else
+    * this fails naming the first missing or repeated id (or a negative
+    * one) and leaves no file.
+    *
+    * No sort and no shuffle: one job per slab of [[GoldenSlab]] ids, in
+    * which each task formats its own rows of the slab. The driver puts
+    * each line at `id − lo`, writes the slab in id order and adds Σrank
+    * in that same sequential order for the `s =` trailer, so it holds one
+    * slab at a time. Each slab's job scans the whole frame. */
+  def writeGolden(ranks: DataFrame, path: String): Unit = writeGolden(ranks, path, GoldenSlab)
+
+  private[io] def writeGolden(ranks: DataFrame, path: String, slab: Int): Unit = {
+    val rows = ranks.select(col("id").cast("long"), col("rank").cast("double")).queryExecution.toRdd
+    val file = Paths.get(path)
+    val out = Files.newBufferedWriter(file, StandardCharsets.UTF_8)
+    var written = false
     try {
-      val rows = ranks.orderBy("id").toLocalIterator()
       var s = 0.0
-      while (rows.hasNext) {
-        val r = rows.next()
-        val rank = r.getDouble(1)
-        s += rank
-        out.write(r.getLong(0).toString)
-        out.write(" = ")
-        out.write(formatRank(rank))
-        out.write('\n')
+      var lo = 0L
+      var more = true
+      while (more) {
+        val from = lo
+        val parts = ranks.sparkSession.sparkContext.runJob(rows,
+          (it: Iterator[InternalRow]) => slabRows(it, from, slab))
+        def fail(what: String) = throw new IllegalArgumentException(
+          s"golden output needs each id of 0..n-1 once: $what")
+        if (parts.exists(_.nulls)) fail("an id or rank is null")
+        val min = parts.foldLeft(Long.MaxValue)(_ min _.min)
+        if (min < 0) fail(s"id $min is negative")
+        more = parts.exists(_.beyond)
+        val end = if (more) slab else parts.flatMap(_.at).maxOption.fold(0)(_ + 1)
+        val line = new Array[String](end)
+        val rank = new Array[Double](end)
+        var repeated = end
+        for (p <- parts; k <- p.at.indices) {
+          val i = p.at(k)
+          if (line(i) != null) repeated = math.min(repeated, i)
+          line(i) = p.line(k)
+          rank(i) = p.rank(k)
+        }
+        val missing = line.indexOf(null)
+        if (missing >= 0 && missing < repeated) fail(s"id ${lo + missing} is missing")
+        if (repeated < end) fail(s"id ${lo + repeated} is repeated")
+        var i = 0
+        while (i < end) {
+          s += rank(i)
+          out.write(line(i))
+          i += 1
+        }
+        lo += slab
       }
       out.write("s = ")
       out.write(formatRank(s))
-    } finally out.close()
+      written = true
+    } finally {
+      out.close()
+      if (!written) Files.deleteIfExists(file)
+    }
   }
 
   /** Parse a golden file into (id → value, trailer). Mirrors
     * `correctness_checker.cpp:34-56` (tolerance handled by caller). */
   def parseGolden(path: String): (Map[Long, Double], Double) = {
-    val lines = scala.io.Source.fromFile(path).getLines().toVector.filter(_.nonEmpty)
+    val src = scala.io.Source.fromFile(path)
+    val lines = try src.getLines().toVector.filter(_.nonEmpty) finally src.close()
     val kv = scala.collection.mutable.Map[Long, Double]()
     var trailer = 0.0
     lines.foreach { l =>

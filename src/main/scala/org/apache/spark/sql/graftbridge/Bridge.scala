@@ -35,6 +35,22 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** A copy of `spark` with its own conf: setting a key on the copy
+    * leaves `spark` as it was (classic `cloneSession` is private[sql]). */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** The two figures a file scan sizes its splits by, as
+    * `FilePartition.maxSplitBytes` takes them:
+    * `spark.sql.files.maxPartitionBytes`, and the split count it aims
+    * for, `spark.sql.files.minPartitionNum` or else the leaf-node
+    * default parallelism. */
+  def fileSplitFigures(spark: org.apache.spark.sql.SparkSession): (Long, Int) = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = s.sessionState.conf
+    (conf.filesMaxPartitionBytes, conf.filesMinPartitionNum.getOrElse(s.leafNodeDefaultParallelism))
+  }
+
   /** Release the block-manager storage behind a (local)checkpointed
     * DataFrame. `Dataset.unpersist` only uncaches CacheManager entries;
     * a checkpoint's blocks were persisted at the RDD level inside

@@ -229,6 +229,20 @@ class PageRankSpec extends SparkSpec {
     assert(jobs.get <= rounds + 3, s"${jobs.get} jobs for $rounds rounds")
   }
 
+  test("ranks are bit-identical from a 1-partition and a 4-partition read") {
+    val path = java.nio.file.Files.createTempFile("rmat10", ".txt")
+    java.nio.file.Files.writeString(path, rmat10.map { case (s, d) => s"$s $d\n" }.mkString)
+    val key = "spark.sql.files.minPartitionNum"
+    def ranks(parts: Int): Map[Long, Double] = {
+      spark.conf.set(key, parts.toLong)
+      val edges = try EdgeListIO.readValidated(spark, path.toString) finally spark.conf.unset(key)
+      assert(edges.rdd.getNumPartitions == parts)
+      PageRank.run(spark, edges).as[(Long, Double)].collect().toMap
+    }
+    val one = ranks(1)
+    assert(one.size > 512 && ranks(4) == one)
+  }
+
   test("star with dangling sink: ranks sum to ~1 and sink dominates") {
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)).toDF("src", "dst")
     val m = PageRank.run(spark, edges)

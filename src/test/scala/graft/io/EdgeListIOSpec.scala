@@ -74,6 +74,30 @@ class EdgeListIOSpec extends SparkSpec {
       assert(math.abs(EdgeListIO.formatRank(x).toDouble - x) <= 1e-12 * math.max(1, x))
   }
 
+  test("formatRank is glibc %.12g: exact value, ties to even") {
+    // expected strings are Python's '%.12g' % x, which rounds as glibc printf does
+    val cases = Seq(
+      0.0 -> "0",
+      0.25 -> "0.25",
+      1.5 -> "1.5",
+      100.0 -> "100",
+      1.0 / 3.0 -> "0.333333333333",
+      0.1 -> "0.1",
+      1e-4 -> "0.0001",
+      1e-5 -> "1e-05",
+      5e-5 -> "5e-05",
+      0.00012345678901234 -> "0.000123456789012",
+      9.99999999999995e-05 -> "0.0001",
+      999999999999.0 -> "999999999999",
+      1e12 -> "1e+12",
+      123456789012.0 -> "123456789012",
+      math.pow(2, -18) -> "3.81469726562e-06", // 3.814697265625e-06, a tie: to even
+      1000000000005.0 -> "1e+12",              // a tie: to even
+      math.pow(2, -20) -> "9.53674316406e-07") // 9.5367431640625e-07, no tie
+    for ((x, want) <- cases)
+      assert(EdgeListIO.formatRank(x) == want, s"formatRank($x)")
+  }
+
   test("formatRank is byte-identical to the reference cpp golden notation") {
     // barabasi-100000 spans fixed and scientific notation (8021 e-05
     // lines, plus e-06/e-07): every value string must reproduce exactly.
@@ -181,11 +205,29 @@ class EdgeListIOSpec extends SparkSpec {
     val p = tmp((0 until 40).map(i => if (i == 32 || i == 37) "bad" else s"$i ${i + 1}")
       .mkString("", "\n", "\n"))
     withConf("spark.sql.files.maxPartitionBytes" -> "64") {
-      assert(spark.read.text(p).rdd.getNumPartitions > 2)
+      assert(EdgeListIO.perCoreText(spark, p).rdd.getNumPartitions > 2)
       val e = intercept[EdgeListIO.InvalidLine](EdgeListIO.readValidated(spark, p))
       assert(e.lineNumber == 33 && e.content == "bad")
       assert(outcome(composedRead, p) == Left("InvalidLine(33, bad)"))
     }
+  }
+
+  test("a small single file reads in one partition per core, conf untouched") {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores >= 2 && spark.conf.getOption("spark.sql.files.minPartitionNum").isEmpty)
+    val lines = (0 until 2000).map(i => s"$i ${i * 7 % 2000}")
+    val good = tmp(lines.mkString("", "\n", "\n"))
+    val bad = tmp(lines.updated(1990, "1990  5").mkString("", "\n", "\n"))
+    val conf = spark.conf.getAll
+    assert(EdgeListIO.perCoreText(spark, good).rdd.getNumPartitions == cores)
+    assert(EdgeListIO.readValidated(spark, good).rdd.getNumPartitions == cores)
+    assert(spark.read.text(good).rdd.getNumPartitions == 1) // the session's own sizing
+    val rows = outcome(EdgeListIO.readValidated(spark, _), good)
+    assert(rows.map(_.size) == Right(2000) && rows == outcome(composedRead, good))
+    // line 1991 sits in the last of the splits
+    assert(outcome(EdgeListIO.readValidated(spark, _), bad) == Left("InvalidLine(1991, 1990  5)"))
+    assert(outcome(composedRead, bad) == Left("InvalidLine(1991, 1990  5)"))
+    assert(spark.conf.getAll == conf)
   }
 
   test("files packed into one partition number their lines per file") {
@@ -194,7 +236,7 @@ class EdgeListIOSpec extends SparkSpec {
     Files.writeString(dir.resolve("b.txt"), "5 6\n6 7\n7 8\n")
     Files.writeString(dir.resolve("c.txt"), "8 9\nx\n")
     withConf("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1") {
-      assert(spark.read.text(dir.toString).rdd.getNumPartitions == 1)
+      assert(EdgeListIO.perCoreText(spark, dir.toString).rdd.getNumPartitions == 1)
       val e = intercept[EdgeListIO.InvalidLine](EdgeListIO.readValidated(spark, dir.toString))
       assert(e.lineNumber == 2 && e.content == "x")
       Files.writeString(dir.resolve("c.txt"), "8 9\n")
@@ -220,5 +262,80 @@ class EdgeListIOSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet != before)
     Bridge.releaseCheckpoint(edges)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  /** The writer `writeGolden` replaced: a global sort streamed through
+    * `toLocalIterator`. The oracle for the slab writer. */
+  private def sortedGolden(ranks: DataFrame, path: String): Unit = {
+    val out = Files.newBufferedWriter(Paths.get(path), java.nio.charset.StandardCharsets.UTF_8)
+    try {
+      val rows = ranks.orderBy("id").toLocalIterator()
+      var s = 0.0
+      while (rows.hasNext) {
+        val r = rows.next()
+        val rank = r.getDouble(1)
+        s += rank
+        out.write(r.getLong(0).toString)
+        out.write(" = ")
+        out.write(EdgeListIO.formatRank(rank))
+        out.write('\n')
+      }
+      out.write("s = ")
+      out.write(EdgeListIO.formatRank(s))
+    } finally out.close()
+  }
+
+  /** The slab writer's file and the oracle's file, as bytes. */
+  private def bothGoldens(ranks: DataFrame, slab: Int = EdgeListIO.GoldenSlab): (Seq[Byte], Seq[Byte]) = {
+    val got = Files.createTempFile("golden", ".txt")
+    val want = Files.createTempFile("golden-sorted", ".txt")
+    EdgeListIO.writeGolden(ranks, got.toString, slab)
+    sortedGolden(ranks, want.toString)
+    (Files.readAllBytes(got).toSeq, Files.readAllBytes(want).toSeq)
+  }
+
+  test("writeGolden matches the sorted writer byte for byte on PageRank outputs") {
+    for (parts <- Seq("1", "3", "4"); seed <- Seq(3L, 4L)) withConf(
+        "spark.sql.shuffle.partitions" -> parts) {
+      val edges = graft.graph.RMat.generate(spark, 9, 4L << 9, seed)
+      val ranks = PageRank.run(spark, edges)
+      assert(ranks.rdd.getNumPartitions == parts.toInt)
+      val (got, want) = bothGoldens(ranks)
+      assert(got == want, s"shuffle.partitions=$parts seed=$seed")
+      assert(new String(got.toArray, "UTF-8").linesIterator.size > 256)
+    }
+  }
+
+  test("writeGolden places ids from partitions in any order, over several slabs") {
+    val rnd = new scala.util.Random(8)
+    val n = 1000
+    val rows = rnd.shuffle((0 until n).toList).map(i => (i.toLong, rnd.nextDouble() / (i + 1)))
+    val ranks = rows.toDF("id", "rank").repartition(7)
+    for (slab <- Seq(EdgeListIO.GoldenSlab, n, 100, 64, 1)) {
+      val (got, want) = bothGoldens(ranks, slab)
+      assert(got == want, s"slab $slab")
+    }
+    val (got, want) = bothGoldens(Seq.empty[(Long, Double)].toDF("id", "rank"))
+    assert(got == want && new String(got.toArray, "UTF-8") == "s = 0")
+  }
+
+  test("writeGolden refuses a frame that is not dense 0..n-1, naming the id") {
+    def error(ids: Seq[Long], slab: Int = EdgeListIO.GoldenSlab): String = {
+      val out = Files.createTempFile("golden-bad", ".txt")
+      val e = intercept[IllegalArgumentException] {
+        EdgeListIO.writeGolden(ids.map(i => (i, 0.5)).toDF("id", "rank").repartition(3),
+          out.toString, slab)
+      }
+      assert(!Files.exists(out), "a refused frame leaves no file")
+      e.getMessage
+    }
+    val all = (0L until 100L)
+    assert(error(all.filter(_ != 42)).endsWith("id 42 is missing"))
+    assert(error(all :+ 7L :+ 60L).endsWith("id 7 is repeated"))
+    assert(error(all.filter(_ != 80) :+ 30L).endsWith("id 30 is repeated"))
+    assert(error(all :+ -3L).endsWith("id -3 is negative"))
+    // the gap is in the second slab, found after the first is checked
+    assert(error((0L until 10L) :+ 20L, slab = 16).endsWith("id 10 is missing"))
+    assert(error(all.filter(_ != 0)).endsWith("id 0 is missing"))
   }
 }
