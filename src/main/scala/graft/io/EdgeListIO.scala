@@ -293,6 +293,8 @@ object EdgeListIO {
       .select(explode(filter(split(col("line"), "\\s+"), w => w =!= lit(""))).as("word"))
   }
 
+  private val TwelveDigits = new java.math.MathContext(12, java.math.RoundingMode.HALF_EVEN)
+
   /** C++ `operator<<(double)` under `setprecision(12)`, i.e. glibc
     * `%.12g`: the exact binary value rounded to 12 significant digits,
     * ties to even, trailing zeros trimmed, scientific notation when the
@@ -300,15 +302,19 @@ object EdgeListIO {
     * files contain. `EdgeListIOSpec` pins it against printf's output. */
   def formatRank(x: Double): String = {
     if (x == 0.0) return "0"
-    val bd = new java.math.BigDecimal(x)
-      .round(new java.math.MathContext(12, java.math.RoundingMode.HALF_EVEN))
+    val bd = new java.math.BigDecimal(x).round(TwelveDigits)
     val unscaled = bd.stripTrailingZeros()
     val exp = unscaled.precision() - unscaled.scale() - 1 // decimal exponent
     if (exp < -4 || exp >= 12) {
-      val m = java.math.BigDecimal.valueOf(unscaled.unscaledValue().longValue(), unscaled.precision() - 1)
-      val mant = m.stripTrailingZeros().toPlainString
-      val sign = if (exp < 0) "-" else "+"
-      f"${mant}e$sign${math.abs(exp)}%02d"
+      // d.ddde±XX from the (zero-free) significant digits themselves
+      val digits = java.lang.Long.toString(math.abs(unscaled.unscaledValue().longValue()))
+      val out = new java.lang.StringBuilder(24)
+      if (unscaled.signum() < 0) out.append('-')
+      out.append(digits.charAt(0))
+      if (digits.length > 1) out.append('.').append(digits, 1, digits.length)
+      out.append(if (exp < 0) "e-" else "e+")
+      if (math.abs(exp) < 10) out.append('0')
+      out.append(math.abs(exp)).toString
     } else unscaled.toPlainString
   }
 

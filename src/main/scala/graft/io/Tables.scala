@@ -1,7 +1,9 @@
 package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables
   * (`/root/testdata/sf0.001` etc., see TESTDATA.md) plus the canonical derived
@@ -15,11 +17,44 @@ import org.apache.spark.sql.functions._
   * `0..max_id` page-universe semantics, `/root/reference/mr-pr-cpp.cpp:203-210`)
   * and each order contributes the directed edge
   * `(o_custkey mod GraphN) -> (o_orderkey mod GraphN)`.
+  *
+  * A table read launches no Spark job: the table's schema is read from
+  * one parquet footer on the driver and handed to the read, where
+  * `spark.read.parquet` alone would run a one-task job to read that
+  * footer (see [[parquetSchema]]).
   */
 object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The schema `spark.read.parquet(path)` infers, with no Spark job.
+    *
+    * With schema merging off, Spark's inference reads one footer: the
+    * first `_common_metadata`, else `_metadata`, else the first data
+    * file in path order of the path's listing (one file, or a directory
+    * of part files). This reads that same footer on the driver, converts
+    * it with Spark's converter under the session conf (`nanosAsLong`,
+    * `inferTimestampNTZ`, `binaryAsString`, the Spark row metadata), and
+    * resolves the read with it as the given schema, so partition columns
+    * and nullability come out as Spark's own. The footer is read again on
+    * every call: a rewritten file is seen, and `spark.graft.memoize=false`
+    * runs stay full work.
+    *
+    * With `spark.sql.parquet.mergeSchema` on every footer counts, so the
+    * read is Spark's own `spark.read.parquet(path)`, job and all. So it is
+    * when the listing holds no footer to read (an empty directory), so
+    * that read fails with Spark's own error. A missing path fails with
+    * Spark's `PATH_NOT_FOUND`, and a corrupt footer fails naming its file. */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    parquet(spark, path).schema
+
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    (if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+     else FooterSchema.infer(spark, path)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "orders")

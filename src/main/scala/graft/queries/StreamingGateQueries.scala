@@ -854,7 +854,7 @@ object StreamingGateQueries {
     // pass as a stream transform (every row emits immediately — no
     // state, no watermark), sharing t_chunk's oracle verbatim.
     "st_chunk" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = graft.io.Tables.parquetSchema(s, s"$dir/documents.parquet")
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       drain(s, graft.text.TextAnalysis.chunk(
@@ -866,7 +866,7 @@ object StreamingGateQueries {
     // per-doc feature hashing + bag sum, so every row emits immediately
     // and the batch t_classify oracle carries over verbatim
     "st_classify" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = graft.io.Tables.parquetSchema(s, s"$dir/documents.parquet")
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       drain(s, graft.text.TextAnalysis.classify(
@@ -890,7 +890,7 @@ object StreamingGateQueries {
         "st_variant_gate")),
 
     "st_neardup" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = graft.io.Tables.parquetSchema(s, s"$dir/documents.parquet")
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .withColumn("tts", timestamp_micros((col("doc_id") + 1) * 1000000L))

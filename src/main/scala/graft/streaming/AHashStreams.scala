@@ -103,7 +103,7 @@ object AHashStreams {
           org.apache.spark.sql.types.LongType, nullable = false))))
 
     val stream = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
+      .schema(graft.io.Tables.parquetSchema(spark, staged))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 

@@ -90,7 +90,7 @@ object DecontamStreams {
             org.apache.spark.sql.types.LongType, containsNull = false)))))
 
     val stream = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
+      .schema(graft.io.Tables.parquetSchema(spark, staged))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 

@@ -19,7 +19,7 @@ object EventStreams {
   /** Streaming source over the testdata directory (FileStreamSource
     * monitors a directory; the glob filter selects the events table). */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet")
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -80,7 +80,7 @@ object EventStreams {
   def readEventsMultiBatch(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
     val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet")
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
@@ -752,7 +752,7 @@ object EventStreams {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dimSchema)
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
     val stream = events.select(col("user_id"), col("event_type"), col("value"),
@@ -806,7 +806,7 @@ object EventStreams {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapSchema)
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
     val stream = events
@@ -897,7 +897,7 @@ object EventStreams {
         StructField("cnt", LongType))))
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 
@@ -945,7 +945,7 @@ object EventStreams {
         StructField("n", LongType), StructField("total", LongType))))
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 
@@ -1211,7 +1211,7 @@ object EventStreams {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 
@@ -1345,7 +1345,7 @@ object EventStreams {
         StructField("c", LongType))))
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 
@@ -1388,7 +1388,7 @@ object EventStreams {
         StructField("k", LongType), StructField("x", LongType))))
 
     val events = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 

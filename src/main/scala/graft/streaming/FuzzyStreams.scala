@@ -93,7 +93,7 @@ object FuzzyStreams {
           org.apache.spark.sql.types.IntegerType))))
 
     val stream = spark.readStream
-      .schema(spark.read.parquet(staged).schema)
+      .schema(graft.io.Tables.parquetSchema(spark, staged))
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
 

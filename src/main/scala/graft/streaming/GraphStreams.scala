@@ -30,7 +30,7 @@ object GraphStreams {
   /** Streaming source over the testdata orders table, derived to the
     * canonical edge list exactly like [[graft.io.Tables.edges]]. */
   def readEdges(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
+    val schema = graft.io.Tables.parquetSchema(spark, s"$dir/orders.parquet")
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "orders.parquet")
       .parquet(dir)

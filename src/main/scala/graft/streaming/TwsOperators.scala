@@ -264,7 +264,7 @@ object TwsOperators {
       .groupByKey(_.event_type)
       .mapValues(m => RunningState(m.n, m.sum, m.sumSq))
 
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet")
     val tail = spark.readStream.schema(schema)
       .option("pathGlobFilter", "b0[23].parquet")
       .option("maxFilesPerTrigger", "1")

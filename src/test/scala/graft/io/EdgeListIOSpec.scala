@@ -98,6 +98,44 @@ class EdgeListIOSpec extends SparkSpec {
       assert(EdgeListIO.formatRank(x) == want, s"formatRank($x)")
   }
 
+  /** `formatRank` as it was before its scientific branch built the
+    * mantissa from the digits: a second `BigDecimal` and the `f""`
+    * interpolator. The oracle of the sweep below. */
+  private def formatRankViaBigDecimal(x: Double): String = {
+    if (x == 0.0) return "0"
+    val bd = new java.math.BigDecimal(x)
+      .round(new java.math.MathContext(12, java.math.RoundingMode.HALF_EVEN))
+    val unscaled = bd.stripTrailingZeros()
+    val exp = unscaled.precision() - unscaled.scale() - 1
+    if (exp < -4 || exp >= 12) {
+      val m = java.math.BigDecimal.valueOf(unscaled.unscaledValue().longValue(), unscaled.precision() - 1)
+      val mant = m.stripTrailingZeros().toPlainString
+      val sign = if (exp < 0) "-" else "+"
+      f"${mant}e$sign${math.abs(exp)}%02d"
+    } else unscaled.toPlainString
+  }
+
+  test("formatRank matches the BigDecimal mantissa formatter on a fixed-seed sweep") {
+    val rng = new scala.util.Random(20261019L)
+    // PageRank-sized values (1/n around 1e-4..1e-7), uniform doubles
+    // scaled across both notation boundaries, random bit patterns
+    // (subnormals, three-digit exponents, negatives) and 12-digit ties
+    val values = Iterator.fill(40000)(rng.nextDouble() / (1 + rng.nextInt(1 << 24))) ++
+      Iterator.fill(40000)(rng.nextDouble() * math.pow(10, rng.nextInt(40) - 20)) ++
+      Iterator.fill(40000)(java.lang.Double.longBitsToDouble(rng.nextLong()))
+        .filter(d => !d.isNaN && !d.isInfinite) ++
+      Iterator.fill(5000)(rng.nextLong(1000000000000L) * math.pow(10, rng.nextInt(30) - 18))
+    var n = 0
+    var sci = 0
+    values.foreach { x =>
+      val got = EdgeListIO.formatRank(x)
+      assert(got == formatRankViaBigDecimal(x), s"formatRank($x)")
+      n += 1
+      if (got.contains('e')) sci += 1
+    }
+    assert(n >= 100000 && sci > n / 2, s"$n values, $sci in scientific notation")
+  }
+
   test("formatRank is byte-identical to the reference cpp golden notation") {
     // barabasi-100000 spans fixed and scientific notation (8021 e-05
     // lines, plus e-06/e-07): every value string must reproduce exactly.
