@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Benchmark main — one JSON line on stdout per the driver contract.
   *
@@ -54,11 +55,9 @@ object Bench {
     // comparable BY CONSTRUCTION, and each child also
     // reports its own q1_agg control (`<family>_ctl_sec`) so host
     // noise during that family's window is visible next to it.
-    // `--section <name>` = child mode (run one family, print KV lines);
-    // SPARK_GRAFT_BENCH_INLINE=1 restores the pre-r13 in-process run.
+    // `--section <name>` = child mode (run one family, print KV lines).
     val childTarget: Option[String] =
       args.sliding(2).collectFirst { case Array("--section", n) => n }
-    val inline = sys.env.get("SPARK_GRAFT_BENCH_INLINE").contains("1")
     // memoize off: measure operators, not the cc/tri memo's
     // block-manager writes
     val spark = GraftSession(defaultCpus = 32, memoize = false)
@@ -112,13 +111,11 @@ object Bench {
     // whole bench (round-5 postmortem — a streaming AnalysisException
     // outside any try/catch killed the entire JSON line). Each section
     // runs fenced; a failed section contributes no keys and the line
-    // still prints with whatever succeeded. Three modes (r13 isolation):
-    //  - parent (default): fork `graft.Bench --section <name>` in a
-    //    fresh JVM, collect its BENCHKV lines;
+    // still prints with whatever succeeded. Two modes (r13 isolation):
+    //  - parent: fork `graft.Bench --section <name>` in a fresh JVM,
+    //    collect its BENCHKV lines (mr_phase: sections run in-process);
     //  - child: execute ONLY the target family (preceded by a q1_agg
-    //    control), print results as BENCHKV lines;
-    //  - inline (SPARK_GRAFT_BENCH_INLINE=1): the pre-r13 in-process
-    //    run, kept for debugging and quick local iteration.
+    //    control), print results as BENCHKV lines.
     def section(name: String)(f: => Seq[(String, Double)]): Seq[(String, Double)] =
       childTarget match {
         case Some(t) if t != name => Nil // child: not my family
@@ -149,7 +146,7 @@ object Bench {
         // and BASELINE comparability lives in the warmed-process shape,
         // and ms-scale phases are not GC-bleed victims (own warm rep,
         // median of 5)
-        case None if !inline && !name.startsWith("mr_phase:") =>
+        case None if !name.startsWith("mr_phase:") =>
           forkSection(name)
         case None =>
           try f catch { case e: Throwable =>
@@ -402,9 +399,7 @@ object Bench {
     // manifest file-diff should cost ~append-size, not ~table-size —
     // the incremental-ingest claim as a measured pair.
     val changesFeed = section("edge_changes") {
-      val root = java.nio.file.Files.createTempDirectory("graft_bench_cf_")
-        .toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_bench_cf")
       val fmtName = "graft.sources.EdgeListSource"
       // the 60k-row graph table is overhead-bound (agg pushdown makes
       // a full scan ~free at that size) — replicate the lineitem key
@@ -459,9 +454,7 @@ object Bench {
     // join time, the plain plan exchanges both sides every query. The
     // gap is what the layout buys EVERY downstream join on the key.
     val bucketSpj = section("bucket_spj") {
-      val root = java.nio.file.Files.createTempDirectory("graft_bench_spj_")
-        .toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_bench_spj")
       spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmtName = "graft.sources.EdgeListSource"
       val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -522,9 +515,7 @@ object Bench {
     // EdgeListScan.sortedBuckets); the pair measures that trade where
     // it matters, on the skewed table where the tail dominates.
     val bucketSkew = section("bucket_skew") {
-      val root = java.nio.file.Files.createTempDirectory("graft_bench_skw_")
-        .toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_bench_skw")
       spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmtName = "graft.sources.EdgeListSource"
       // 20M rows, 50% remapped onto one hot key; 8 write tasks x 32
@@ -573,9 +564,7 @@ object Bench {
     // through plain tables (both sides exchange). What the compound
     // layout buys every multi-column-key join.
     val bucketGrid = section("bucket_grid") {
-      val root = java.nio.file.Files.createTempDirectory("graft_bench_grid_")
-        .toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_bench_grid")
       spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmtName = "graft.sources.EdgeListSource"
       val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -622,9 +611,7 @@ object Bench {
     // the kept-layout Morton pass buys a multi-dimensional scan
     // (file-skipping via zone maps) without costing the SPJ anything.
     val zorderBucket = section("zorder_bucket") {
-      val root = java.nio.file.Files.createTempDirectory("graft_bench_zb_")
-        .toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_bench_zb")
       val fmtName = "graft.sources.EdgeListSource"
       val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey").cast("long").as("src"),

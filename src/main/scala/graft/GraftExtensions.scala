@@ -30,57 +30,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // levenshtein(a,b) <= k join -> FastSS deletion-neighborhood
     // blocked join, OPT-IN (spark.graft.fuzzyJoin.enabled)
     ext.injectOptimizerRule(_ => graft.plans.FuzzyJoinRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(
-        classOf[graft.functions.CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.CosineSimilarity(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hash60"),
-      new ExpressionInfo(graft.functions.Hashing.getClass.getName, "hash60"),
-      graft.functions.GraftFunctions.hash60Builder _))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(
-        classOf[graft.functions.JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.JaroWinkler(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("normalize_nfc"),
-      new ExpressionInfo(
-        classOf[graft.functions.NormalizeNfc].getName, "normalize_nfc"),
-      graft.functions.GraftFunctions.normalizeNfcBuilder _))
-    ext.injectFunction((
-      FunctionIdentifier("hll60"),
-      new ExpressionInfo(classOf[graft.functions.HllSketch60].getName, "hll60"),
-      graft.functions.GraftFunctions.hll60Builder _))
-    ext.injectFunction((
-      FunctionIdentifier("hdrq"),
-      new ExpressionInfo(classOf[graft.functions.HdrQuantiles].getName, "hdrq"),
-      graft.functions.GraftFunctions.hdrqBuilder _))
-    ext.injectFunction((
-      FunctionIdentifier("lgq"),
-      new ExpressionInfo(classOf[graft.functions.LogQuantiles].getName, "lgq"),
-      graft.functions.GraftFunctions.lgqBuilder _))
-    ext.injectFunction((
-      FunctionIdentifier("hll60_regs"),
-      new ExpressionInfo(classOf[graft.functions.Hll60Regs].getName, "hll60_regs"),
-      graft.functions.GraftFunctions.hll60RegsBuilder _))
-    ext.injectFunction((
-      FunctionIdentifier("hll_union"),
-      new ExpressionInfo(classOf[graft.functions.HllUnion].getName, "hll_union"),
-      graft.functions.GraftFunctions.hllUnionBuilder _))
-    ext.injectFunction((
-      FunctionIdentifier("hll_union_est"),
-      new ExpressionInfo(classOf[graft.functions.HllUnionEst].getName, "hll_union_est"),
-      graft.functions.GraftFunctions.hllUnionEstBuilder _))
-    ext.injectFunction((
-      FunctionIdentifier("kmv"),
-      new ExpressionInfo(classOf[graft.functions.KmvSketch].getName, "kmv"),
-      graft.functions.GraftFunctions.kmvBuilder _))
-    // SQL TABLE functions: SELECT * FROM graft_rmat(levels, n, seed) /
-    // graft_edges(path[, chunkBytes])
+    // the SQL functions: the same table GraftFunctions.register reads
+    graft.functions.GraftFunctions.sqlFunctions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.exprClass.getName, f.name), f.build))
+    }
+    // SQL TABLE functions (extension-only): SELECT * FROM
+    // graft_rmat(levels, n, seed) / graft_edges(path[, chunkBytes]) / ...
     ext.injectTableFunction((
       FunctionIdentifier("graft_rmat"),
       new ExpressionInfo(graft.graph.RMat.getClass.getName, "graft_rmat"),

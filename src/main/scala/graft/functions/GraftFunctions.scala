@@ -1,29 +1,72 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** SQL-surface registration for the engine's native expressions, so
   * `spark.sql("SELECT cosine_sim(a, b) ...")` works alongside the
-  * Column API. */
+  * Column API. [[sqlFunctions]] is the one list both registration
+  * paths read: [[register]] for an existing session, and
+  * [[graft.GraftExtensions]] for sessions built with
+  * `spark.sql.extensions`. */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    Bridge.registerFunction(spark, "cosine_sim",
-      exprs => CosineSimilarity(exprs.head, exprs(1)))
-    Bridge.registerFunction(spark, "hash60", hash60Builder)
-    Bridge.registerFunction(spark, "normalize_nfc", normalizeNfcBuilder)
-    Bridge.registerFunction(spark, "hll60", hll60Builder)
-    Bridge.registerFunction(spark, "hdrq", hdrqBuilder)
-    Bridge.registerFunction(spark, "lgq", lgqBuilder)
-    // register-level HLL surface (the HyperANF building blocks):
-    // hll60_regs(hash60(x)) → blob, hll_union(blob) → blob,
-    // hll_union_est(blob) → estimate
-    Bridge.registerFunction(spark, "hll60_regs", hll60RegsBuilder)
-    Bridge.registerFunction(spark, "hll_union", hllUnionBuilder)
-    Bridge.registerFunction(spark, "hll_union_est", hllUnionEstBuilder)
+
+  /** One SQL function: its name, the class `DESCRIBE FUNCTION` names,
+    * and the builder the analyzer calls with the argument expressions. */
+  case class SqlFunction(name: String, exprClass: Class[_],
+      build: Seq[Expression] => Expression)
+
+  // an aggregate row: arity check with the function's own usage text,
+  // then the aggregate wrapped for the analyzer
+  private def agg(arity: Int, usage: String)(
+      f: Seq[Expression] => AggregateFunction): Seq[Expression] => Expression =
+    exprs => {
+      require(exprs.length == arity, usage)
+      f(exprs).toAggregateExpression()
+    }
+
+  val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("cosine_sim", classOf[CosineSimilarity],
+      exprs => CosineSimilarity(exprs.head, exprs(1))),
+    SqlFunction("hash60", Hashing.getClass, hash60Builder),
+    SqlFunction("jaro_winkler", classOf[JaroWinkler],
+      exprs => JaroWinkler(exprs.head, exprs(1))),
+    SqlFunction("normalize_nfc", classOf[NormalizeNfc], exprs => {
+      require(exprs.length == 1, "normalize_nfc expects one string argument")
+      NormalizeNfc(exprs.head)
+    }),
+    // HLL distinct sketch: hll60(hash60(x)) → estimate; the register
+    // surface (the HyperANF building blocks): hll60_regs(hash60(x)) →
+    // blob, hll_union(blob) → blob, hll_union_est(blob) → estimate
+    SqlFunction("hll60", classOf[HllSketch],
+      agg(1, "hll60 expects exactly one hash60 argument")(
+        e => HllSketch(e.head, blobIn = false, blobOut = false))),
+    SqlFunction("hll60_regs", classOf[HllSketch],
+      agg(1, "hll60_regs expects one hash60 argument")(
+        e => HllSketch(e.head, blobIn = false, blobOut = true))),
+    SqlFunction("hll_union", classOf[HllSketch],
+      agg(1, "hll_union expects one register blob")(
+        e => HllSketch(e.head, blobIn = true, blobOut = true))),
+    SqlFunction("hll_union_est", classOf[HllSketch],
+      agg(1, "hll_union_est expects one register blob")(
+        e => HllSketch(e.head, blobIn = true, blobOut = false))),
+    // log-bin quantile sketches: hdrq(v, array(0.5, 0.95)) and
+    // lgq(v, array(0.5, 0.99)) → ARRAY<BIGINT>
+    SqlFunction("hdrq", classOf[LogBinQuantiles],
+      agg(2, "hdrq expects (BIGINT value, ARRAY<DOUBLE> quantiles)")(
+        e => LogBinQuantiles(e.head, e(1), LogBinQuantiles.HdrM))),
+    SqlFunction("lgq", classOf[LogBinQuantiles],
+      agg(2, "lgq expects (BIGINT value, ARRAY<DOUBLE> quantiles)")(
+        e => LogBinQuantiles(e.head, e(1), LogBinQuantiles.LgqM))),
     // KMV distinct-value synopsis: kmv(hash60(x), 256) → ARRAY<BIGINT>
-    Bridge.registerFunction(spark, "kmv", kmvBuilder)
-  }
+    SqlFunction("kmv", classOf[KmvSketch],
+      agg(2, "kmv expects (BIGINT hash60 value, INT k)")(
+        e => KmvSketch(e.head, e(1)))))
+
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach(f => Bridge.registerFunction(spark, f.name, f.build))
 
   /** SQL TABLE function `graft_rmat(levels, n_edges, seed)` — the R-MAT
     * generator as a relation: `SELECT * FROM graft_rmat(8, 2000, 7)`.
@@ -174,69 +217,6 @@ object GraftFunctions {
       .option("changesFromVersion", intOf(exprs(1)))
     exprs.lift(2).fold(reader)(e => reader.option("versionAsOf", intOf(e)))
       .load(path).queryExecution.logical
-  }
-
-  private[graft] def kmvBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 2, "kmv expects (BIGINT hash60 value, INT k)")
-    KmvSketch(exprs.head, exprs(1)).toAggregateExpression()
-  }
-
-  private[graft] def normalizeNfcBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 1, "normalize_nfc expects one string argument")
-    NormalizeNfc(exprs.head)
-  }
-
-  private[graft] def hll60RegsBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 1, "hll60_regs expects one hash60 argument")
-    Hll60Regs(exprs.head).toAggregateExpression()
-  }
-
-  private[graft] def hllUnionBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 1, "hll_union expects one register blob")
-    HllUnion(exprs.head).toAggregateExpression()
-  }
-
-  private[graft] def hllUnionEstBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 1, "hll_union_est expects one register blob")
-    HllUnionEst(exprs.head).toAggregateExpression()
-  }
-
-  /** SQL surface for the sparse log-bin quantile sketch:
-    * `lgq(v, array(0.5, 0.99))` → ARRAY<BIGINT>. */
-  private[graft] def lgqBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 2,
-      "lgq expects (BIGINT value, ARRAY<DOUBLE> quantiles)")
-    LogQuantiles(exprs.head, exprs(1)).toAggregateExpression()
-  }
-
-  /** SQL surface for the HDR-bin quantile sketch:
-    * `hdrq(v, array(0.5, 0.95))` → ARRAY<BIGINT>. */
-  private[graft] def hdrqBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 2,
-      "hdrq expects (BIGINT value, ARRAY<DOUBLE> quantiles)")
-    HdrQuantiles(exprs.head, exprs(1)).toAggregateExpression()
-  }
-
-  /** SQL surface for the HLL distinct sketch: `hll60(hash60(x))`. */
-  private[graft] def hll60Builder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    require(exprs.length == 1, "hll60 expects exactly one hash60 argument")
-    HllSketch60(exprs.head).toAggregateExpression()
   }
 
   /** SQL surface for the portable 60-bit hash every deterministic

@@ -7,22 +7,40 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
 
 /** Deterministic HyperLogLog distinct-count sketch over pre-hashed
   * 60-bit keys (Flajolet et al., "HyperLogLog: the analysis of a
   * near-optimal cardinality estimation algorithm", AofA 2007) — the
   * approximate `kv_stats`-style corpus statistic the reference computes
-  * exactly (`/root/reference/mapreduce-7Apr14/src/mapreduce.cpp`
-  * `kv_stats`) re-expressed as a mergeable aggregate, which is what
-  * survives 100 TB: the shuffle carries one 256-byte register array per
-  * group instead of every distinct key.
+  * exactly (MR-MPI's `src/mapreduce.cpp` `kv_stats`) re-expressed as a
+  * mergeable aggregate, which is what survives 100 TB: the shuffle
+  * carries one 256-byte register array per group instead of every
+  * distinct key.
   *
-  * Input MUST be [[Hashing.hash60]] output (a uniform 60-bit long) —
-  * taking the hash as input rather than hashing internally is what makes
-  * the sketch oracle-checkable: DuckDB reproduces hash60 exactly, and
-  * every downstream step here is integer arithmetic plus exact powers of
-  * two, so the SQL replica computes the identical estimate.
+  * One aggregate over the register array, four SQL names; the name fixes
+  * what goes in and what comes out:
+  *
+  * | name            | input                | output              |
+  * |-----------------|----------------------|---------------------|
+  * | `hll60`         | hash60 BIGINT        | estimate DOUBLE     |
+  * | `hll60_regs`    | hash60 BIGINT        | register blob BINARY|
+  * | `hll_union`     | register blob BINARY | register blob BINARY|
+  * | `hll_union_est` | register blob BINARY | estimate DOUBLE     |
+  *
+  * The blob forms make sketches FIRST-CLASS VALUES — the piece the
+  * neighborhood-function/HyperBall iteration needs (Boldi, Rosa, Vigna,
+  * "HyperANF: approximating the neighbourhood function of very large
+  * graphs on a budget", WWW 2011): per-vertex sketches live in a BINARY
+  * column, rounds union them along edges, and a group-max merge is the
+  * only shuffle payload (256 B per vertex, never vertex sets).
+  *
+  * Input hashes MUST be [[Hashing.hash60]] output (a uniform 60-bit
+  * long) — taking the hash as input rather than hashing internally is
+  * what makes the sketch oracle-checkable: DuckDB reproduces hash60
+  * exactly, and every downstream step here is integer arithmetic plus
+  * exact powers of two, so the SQL replica computes the identical
+  * estimate.
   *
   * Determinism over merge order (the property a distributed aggregate
   * needs): registers combine by max (commutative, associative, idempotent)
@@ -34,27 +52,34 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   *
   * p=8 (256 registers) → ~6.5% relative standard error.
   */
-case class HllSketch60(
+case class HllSketch(
     child: Expression,
+    blobIn: Boolean,
+    blobOut: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
 
-  import HllSketch60._
+  import HllSketch._
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+    if (child.dataType == (if (blobIn) BinaryType else LongType))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"hll60 expects a BIGINT hash60 value, got ${child.dataType.simpleString}")
+      s"$prettyName expects " +
+        (if (blobIn) "a BINARY register blob" else "a BIGINT hash60 value") +
+        s", got ${child.dataType.simpleString}")
 
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = if (blobOut) BinaryType else DoubleType
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
 
   override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
     val v = child.eval(input)
-    if (v != null) {
+    if (v == null) buf
+    else if (blobIn) mergeRegs(buf, v.asInstanceOf[Array[Byte]])
+    else {
       val h = v.asInstanceOf[Long]
       val bucket = (h >>> W).toInt & (M - 1)
       val w = h & WMask
@@ -63,31 +88,32 @@ case class HllSketch60(
       val rho = math.min(if (w == 0L) W + 1
         else java.lang.Long.numberOfLeadingZeros(w) - (64 - W) + 1, RhoCap)
       if (rho > buf(bucket)) buf(bucket) = rho.toByte
+      buf
     }
-    buf
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < M) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
+  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = mergeRegs(a, b)
 
-  override def eval(buf: Array[Byte]): Any = estimate(buf)
+  override def eval(buf: Array[Byte]): Any = if (blobOut) buf else estimate(buf)
 
   override def serialize(buf: Array[Byte]): Array[Byte] = buf
   override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
 
-  override def withNewMutableAggBufferOffset(o: Int): HllSketch60 =
+  override def withNewMutableAggBufferOffset(o: Int): HllSketch =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllSketch60 =
+  override def withNewInputAggBufferOffset(o: Int): HllSketch =
     copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): HllSketch60 =
+  override protected def withNewChildInternal(c: Expression): HllSketch =
     copy(child = c)
-  override def prettyName: String = "hll60"
+  override def prettyName: String = (blobIn, blobOut) match {
+    case (false, false) => "hll60"
+    case (false, true) => "hll60_regs"
+    case (true, true) => "hll_union"
+    case (true, false) => "hll_union_est"
+  }
 }
 
-object HllSketch60 {
+object HllSketch {
   /** Register-index bits; m = 2^p registers. */
   val P = 8
   val M: Int = 1 << P
@@ -98,6 +124,13 @@ object HllSketch60 {
   val RhoCap = 40
   /** Bias correction for m ≥ 128 (Flajolet et al. §4). */
   val Alpha: Double = 0.7213 / (1.0 + 1.079 / M)
+
+  /** Element-wise max of `blob` into `buf` (the register union). */
+  private def mergeRegs(buf: Array[Byte], blob: Array[Byte]): Array[Byte] = {
+    var i = 0
+    while (i < M) { if (blob(i) > buf(i)) buf(i) = blob(i); i += 1 }
+    buf
+  }
 
   /** Estimate from a register array — raw harmonic-mean form with the
     * standard small-range linear-counting correction, floor-rounded to
@@ -118,13 +151,20 @@ object HllSketch60 {
     math.floor(est * 10000.0 + 0.5) / 10000.0
   }
 
-  /** Column form: `hll60(Hashing.hash60(x))`. */
-  def hll60(hashed: Column): Column =
-    Bridge.column(HllSketch60(Bridge.expression(hashed)).toAggregateExpression())
+  private def column(c: Column, blobIn: Boolean, blobOut: Boolean): Column =
+    Bridge.column(HllSketch(Bridge.expression(c), blobIn, blobOut).toAggregateExpression())
 
-  /** DuckDB replica of the whole sketch for oracle SQL: same buckets,
-    * same capped ranks, same exact-power sum, same correction branch.
-    * `hashExpr` must be the hash60Sql of the same input. Yields
+  /** Column forms: `hll60(Hashing.hash60(x))` → estimate,
+    * `hll60Regs(hash)` → blob, `hllUnion(blob)` → blob,
+    * `hllUnionEst(blob)` → estimate. */
+  def hll60(hashed: Column): Column = column(hashed, blobIn = false, blobOut = false)
+  def hll60Regs(hashed: Column): Column = column(hashed, blobIn = false, blobOut = true)
+  def hllUnion(blob: Column): Column = column(blob, blobIn = true, blobOut = true)
+  def hllUnionEst(blob: Column): Column = column(blob, blobIn = true, blobOut = false)
+
+  /** DuckDB replica of `hll60` for oracle SQL: same buckets, same capped
+    * ranks, same exact-power sum, same correction branch. `hashExpr`
+    * must be the hash60Sql of the same input. Yields
     * ($groupCol, approx_distinct) rows. */
   def oracleSql(table: String, hashExpr: String, groupCol: String): String =
     oracleSqlGrouped(table, hashExpr, Seq(groupCol -> groupCol))

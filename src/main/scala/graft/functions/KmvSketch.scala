@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * "Counting distinct elements in a data stream", RANDOM 2002; multiset
   * operations per Beyer et al., "On synopses for distinct-value
   * estimation under multiset operations", SIGMOD 2007) — the
-  * set-operation companion to [[HllSketch60]]: where HLL registers can
+  * set-operation companion to [[HllSketch]]: where HLL registers can
   * only union, a KMV synopsis supports INTERSECTION and Jaccard
   * estimates, which is what corpus-overlap / decontamination sizing
   * needs at 100 TB (is eval-set contamination 0.1% or 10% of a source?

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.functions.{Hashing, HllSketch60, HllUnion}
+import graft.functions.{Hashing, HllSketch}
 
 /** Approximate per-vertex neighborhood function — ANF (Palmer, Gibbons,
   * Faloutsos, "ANF: a fast and scalable tool for data mining in massive
@@ -18,9 +18,9 @@ import graft.functions.{Hashing, HllSketch60, HllUnion}
   * Round r: sketch_r(v) = sketch_{r-1}(v) ∪ ⋃_{v→u} sketch_{r-1}(u) —
   * one edge join + one group-merge aggregation; the shuffle carries one
   * 256-byte blob per (vertex, partition) thanks to partial aggregation
-  * ([[graft.functions.HllUnion]]), never vertex sets. Registers merge
-  * by max and the estimate is exact-power arithmetic
-  * ([[graft.functions.HllSketch60]]'s discipline), so every estimate is
+  * ([[graft.functions.HllSketch]]'s blob forms), never vertex sets.
+  * Registers merge by max and the estimate is exact-power arithmetic
+  * (the sketch's own discipline), so every estimate is
   * bit-reproducible under any partitioning and a DuckDB replica over
   * (v, bucket, rho) rows verifies each round exactly.
   */
@@ -46,8 +46,8 @@ object NeighborhoodFunction {
       .persist()
     val verts = GraphOps.vertexExtract(e)
     var skCk = Bridge.lazyCheckpoint(verts.groupBy("v")
-      .agg(HllUnion.hll60Regs(Hashing.hash60(Seed, col("v"))).as("sk"),
-        HllSketch60.hll60(Hashing.hash60(Seed, col("v"))).as("n_est")))
+      .agg(HllSketch.hll60Regs(Hashing.hash60(Seed, col("v"))).as("sk"),
+        HllSketch.hll60(Hashing.hash60(Seed, col("v"))).as("n_est")))
     var sk = skCk.select("v", "sk")
     val estParts = scala.collection.mutable.Buffer(GraphOps.advance(
       skCk.select(col("v"), lit(0L).as("r"), col("n_est")))(_.count())._1)
@@ -55,8 +55,8 @@ object NeighborhoodFunction {
       val msgs = e.join(sk.withColumnRenamed("v", "sv"), col("dst") === col("sv"))
         .select(col("src").as("v"), col("sk"))
       val merged = Bridge.lazyCheckpoint(sk.union(msgs).groupBy("v")
-        .agg(HllUnion.hllUnion(col("sk")).as("sk"),
-          HllUnion.hllUnionEst(col("sk")).as("n_est")))
+        .agg(HllSketch.hllUnion(col("sk")).as("sk"),
+          HllSketch.hllUnionEst(col("sk")).as("n_est")))
       // the per-round report is tiny (16 B/vertex) and outlives the
       // sketch frame, so it gets its own checkpoint — only TWO
       // sketch-sized frames are ever alive, not one per round. Its
@@ -238,7 +238,7 @@ object NeighborhoodFunction {
   }
 
   /** DuckDB replica: per-vertex (bucket, rho) register rows, one
-    * group-max round per hop, then [[HllSketch60]]'s exact estimator
+    * group-max round per hop, then [[HllSketch]]'s exact estimator
     * per (v, r). */
   def oracleSql(edgesCte: String, rounds: Int): String =
     s"""${oracleCtes(edgesCte, rounds)}
@@ -248,7 +248,7 @@ object NeighborhoodFunction {
     * `anf(v, r, n_est)` — shared by the g_anf oracle and the derived
     * hop-plot / HyperBall oracles. */
   def oracleCtes(edgesCte: String, rounds: Int): String = {
-    import HllSketch60.{M, RhoCap, W}
+    import HllSketch.{M, RhoCap, W}
     val two52 = 1L << W
     val h = Hashing.hash60Sql(Seed, "v")
     val steps = (1 to rounds).map { r =>

@@ -33,8 +33,9 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
     else plan.transformUp {
       case agg: Aggregate => agg.transformExpressions {
         case AggregateExpression(Count(Seq(e: Expression)), _, true, None, _) =>
-          val est = graft.functions.HllSketch60(
-            graft.functions.Hash60(Cast(e, StringType)))
+          val est = graft.functions.HllSketch(
+            graft.functions.Hash60(Cast(e, StringType)),
+            blobIn = false, blobOut = false)
             .toAggregateExpression()
           // estimate is DOUBLE; floor(est + 0.5) is Spark's BIGINT floor
           Floor(Add(est, Literal(0.5d)))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate queries over the `events` stream table: tumbling-window
   * aggregation (the batch twin of the Structured Streaming path in
@@ -193,8 +194,7 @@ object EventQueries {
     // contract every long-lived 100 TB dataset depends on, gate-proven
     // through an actual two-schema write + merged read-back.
     "e_schema_evolution" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_schevo_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_schevo")
       val e = Tables.events(s, dir)
       val early = e.where(col("event_type").isin("view", "click"))
         .select("event_id", "user_id")
@@ -214,8 +214,7 @@ object EventQueries {
     // JSON text full of quotes/braces) and reader parsing must be
     // value-exact end to end for the hash to gate.
     "e_xml" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_xml_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_xml")
       val e = Tables.events(s, dir).select(
         col("event_id"), col("user_id"), col("event_type"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"),
@@ -261,8 +260,7 @@ object EventQueries {
     // rows proves the mixed `maybe` types survived the round-trip as
     // two distinct runtime shapes rather than being widened away.
     "e_variant_pq" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_variant_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_variant")
       Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), expr(
           """parse_json(concat(
@@ -690,12 +688,12 @@ object EventQueries {
     }),
 
     // Approximate distinct users per event type via the custom HLL
-    // aggregate (graft.functions.HllSketch60) next to the exact count —
+    // aggregate (graft.functions.HllSketch) next to the exact count —
     // at corpus scale the sketch shuffles 256 bytes per group instead of
     // every distinct key; the exact column is the small-SF audit.
     "e_approx_distinct" -> ((s, dir) =>
       Tables.events(s, dir).groupBy("event_type")
-        .agg(graft.functions.HllSketch60.hll60(
+        .agg(graft.functions.HllSketch.hll60(
             graft.functions.Hashing.hash60(col("user_id").cast("string")))
             .as("approx_users"),
           countDistinct("user_id").as("exact_users"))),
@@ -1190,7 +1188,7 @@ object EventQueries {
         |FROM dth""".stripMargin,
 
     "e_approx_distinct" ->
-      s"""WITH sk AS (${graft.functions.HllSketch60.oracleSql("events",
+      s"""WITH sk AS (${graft.functions.HllSketch.oracleSql("events",
              graft.functions.Hashing.hash60Sql("CAST(user_id AS VARCHAR)"),
              "event_type")}),
          |ex AS (SELECT event_type, COUNT(DISTINCT user_id) AS exact_users

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{Betweenness, Bipartite, Coloring, CommunityMetrics, ConnectedComponents, Coreness, DensestSubgraph, EigenvectorCentrality, GraphOps, Hits, Katz, KCore, LinkPrediction, LabelPropagation, LubyMIS, MaximalMatching, MinimumSpanningForest, NeighborhoodFunction, PageRank, RMat, RandomWalks, ShortestPaths, StronglyConnectedComponents, TopoSort, Triangles, Truss}
 import graft.io.Tables
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate queries for the OINK graph suite (SURVEY.md §2.5) over the
   * canonical derived edge list ([[Tables.edges]]). Oracle SQL shares the
@@ -20,107 +21,73 @@ object GraphQueries {
   private val SsspSeed = 5L
   private val SsspCount = 3
 
-  // g_cc/g_cc_stats and g_tri/g_tri_count share their expensive stage;
-  // memoize per (session, dir) so a Verify sweep computes each once.
-  // The persist is governed by spark.graft.memoize (default true): a
-  // Verify sweep wants the reuse, but a benchmark rep must not pay the
-  // block-manager write — at sf0.1 the triangle set is 6.4M rows, and
-  // caching it costs more than enumerating it.
-  private def memoize(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.memoize", "true").toBoolean
-  private val ccCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def ccOf(s: SparkSession, dir: String): DataFrame =
-    ccCache.getOrElseUpdate((s, dir), {
-      val df = ConnectedComponents.run(s, Tables.edges(s, dir))
-      if (memoize(s)) df.persist() else df
-    })
-  // g_msf / g_msf_stats share the Borůvka forest.
-  private val msfCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def msfOf(s: SparkSession, dir: String): DataFrame =
-    msfCache.getOrElseUpdate((s, dir), {
-      val df = MinimumSpanningForest.run(s, Tables.edges(s, dir))
-      if (memoize(s)) df.persist() else df
-    })
+  // Query families that share an expensive stage (g_cc/g_cc_stats,
+  // g_tri/g_tri_count, ...) memoize it per (stage, session, dir) so a
+  // Verify sweep computes each once. A memoized frame is persisted
+  // unless spark.graft.memoize is false (default true): a Verify sweep
+  // wants the reuse, but a benchmark rep must not pay the block-manager
+  // write — at sf0.1 the triangle set is 6.4M rows, and caching it
+  // costs more than enumerating it.
+  private val memo =
+    scala.collection.concurrent.TrieMap.empty[(String, SparkSession, String), AnyRef]
+  private def memoized[T <: AnyRef](stage: String, s: SparkSession, dir: String)(
+      build: => T): T =
+    memo.getOrElseUpdate((stage, s, dir), build match {
+      case df: DataFrame if s.conf.get("spark.graft.memoize", "true").toBoolean =>
+        df.persist()
+      case v => v
+    }).asInstanceOf[T]
 
-  private val triCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private def ccOf(s: SparkSession, dir: String): DataFrame =
+    memoized("cc", s, dir)(ConnectedComponents.run(s, Tables.edges(s, dir)))
+  // g_msf / g_msf_stats share the Borůvka forest.
+  private def msfOf(s: SparkSession, dir: String): DataFrame =
+    memoized("msf", s, dir)(MinimumSpanningForest.run(s, Tables.edges(s, dir)))
   private def triOf(s: SparkSession, dir: String): DataFrame =
-    triCache.getOrElseUpdate((s, dir), {
-      val df = Triangles.run(Tables.edges(s, dir))
-      if (memoize(s)) df.persist() else df
-    })
+    memoized("tri", s, dir)(Triangles.run(Tables.edges(s, dir)))
 
   // g_sssp_multi / g_closeness / g_harmonic share the seeded
-  // multi-source BFS, and g_betweenness its source derivation — same
-  // memoization shape as cc/tri above.
-  private val srcsCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Long]]
+  // multi-source BFS, and g_betweenness its source derivation.
   private def srcsOf(s: SparkSession, dir: String): Seq[Long] =
-    srcsCache.getOrElseUpdate((s, dir), ShortestPaths.seededSources(
+    memoized("srcs", s, dir)(ShortestPaths.seededSources(
       Tables.edges(s, dir), seed = SsspSeed, count = SsspCount))
-  private val ssspCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def ssspOf(s: SparkSession, dir: String): DataFrame =
-    ssspCache.getOrElseUpdate((s, dir), {
-      val df = ShortestPaths.runMulti(s, Tables.edges(s, dir), srcsOf(s, dir))
-      if (memoize(s)) df.persist() else df
-    })
+    memoized("sssp", s, dir)(
+      ShortestPaths.runMulti(s, Tables.edges(s, dir), srcsOf(s, dir)))
 
   // g_anf / g_hopplot / g_hyperball share the HyperANF sketch rounds.
   private val AnfRounds = 3
-  private val anfCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def anfOf(s: SparkSession, dir: String): DataFrame =
-    anfCache.getOrElseUpdate((s, dir), {
-      val df = NeighborhoodFunction.run(s, Tables.edges(s, dir), AnfRounds)
-      if (memoize(s)) df.persist() else df
-    })
+    memoized("anf", s, dir)(
+      NeighborhoodFunction.run(s, Tables.edges(s, dir), AnfRounds))
 
   // In-direction ANF twin (edges reversed): g_hyperball_in /
   // g_hb_closeness_in — in-harmonic ranks receivers, in-closeness the
   // classic closeness on incoming paths.
-  private val anfInCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def anfInOf(s: SparkSession, dir: String): DataFrame =
-    anfInCache.getOrElseUpdate((s, dir), {
+    memoized("anfIn", s, dir) {
       val rev = Tables.edges(s, dir)
         .select(col("dst").as("src"), col("src").as("dst"))
-      val df = NeighborhoodFunction.run(s, rev, AnfRounds)
-      if (memoize(s)) df.persist() else df
-    })
+      NeighborhoodFunction.run(s, rev, AnfRounds)
+    }
 
   // g_scc / g_scc_stats / g_scc_condense share the SCC labels.
-  private val sccCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def sccOf(s: SparkSession, dir: String): DataFrame =
-    sccCache.getOrElseUpdate((s, dir), {
-      val df = StronglyConnectedComponents.run(s, Tables.edges(s, dir))
-      if (memoize(s)) df.persist() else df
-    })
+    memoized("scc", s, dir)(StronglyConnectedComponents.run(s, Tables.edges(s, dir)))
 
   // g_lpa / g_community / g_modularity share the 4-round LPA labels.
-  private val lpaCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def lpaOf(s: SparkSession, dir: String): DataFrame =
-    lpaCache.getOrElseUpdate((s, dir), {
-      val df = LabelPropagation.run(s, Tables.edges(s, dir), rounds = 4)
-      if (memoize(s)) df.persist() else df
-    })
+    memoized("lpa", s, dir)(LabelPropagation.run(s, Tables.edges(s, dir), rounds = 4))
 
-  /** Release the memoized cc/tri/sssp frames — call after a sweep
-    * (Verify, Bench) so persisted blocks don't outlive their usefulness
-    * in a long-lived session. */
+  /** Release the memoized frames — call after a sweep (Verify, Bench)
+    * so persisted blocks don't outlive their usefulness in a long-lived
+    * session. */
   def clearCaches(): Unit = {
-    ccCache.values.foreach(_.unpersist(false))
-    ccCache.clear()
-    msfCache.values.foreach(_.unpersist(false))
-    msfCache.clear()
-    triCache.values.foreach(_.unpersist(false))
-    triCache.clear()
-    ssspCache.values.foreach(_.unpersist(false))
-    ssspCache.clear()
-    anfCache.values.foreach(_.unpersist(false))
-    anfCache.clear()
-    anfInCache.values.foreach(_.unpersist(false))
-    anfInCache.clear()
-    sccCache.values.foreach(_.unpersist(false))
-    sccCache.clear()
-    lpaCache.values.foreach(_.unpersist(false))
-    lpaCache.clear()
-    srcsCache.clear()
+    memo.values.foreach {
+      case df: DataFrame => df.unpersist(false)
+      case _ => ()
+    }
+    memo.clear()
   }
 
   val queries: Map[String, Q] = Map(
@@ -134,8 +101,7 @@ object GraphQueries {
     // sees the on-disk detour, so any emit / parse / boundary /
     // pushdown defect breaks the hash.
     "g_dsv2_edges" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2")
       Tables.edges(s, dir)
         .repartition(3).write.format("graft.sources.EdgeListSource")
         .mode("overwrite").save(s"$root/edges")
@@ -153,8 +119,7 @@ object GraphQueries {
     // commit's rows while the live table holds both. The oracle never
     // sees the on-disk detour: it just filters the low half.
     "g_dsv2_timetravel" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2t_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2t")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.where(col("dst") < 5000).repartition(2)
@@ -175,8 +140,7 @@ object GraphQueries {
     // exactly, so the cast-to-long total hash-gates. The oracle never
     // sees the on-disk text detour.
     "g_dsv2_weighted" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2w_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2w")
       val fmtName = "graft.sources.EdgeListSource"
       Tables.edges(s, dir)
         .withColumn("weight",
@@ -197,8 +161,7 @@ object GraphQueries {
     // negative for half the edges, so the gate exercises the signed
     // parse; exact longs end to end.
     "g_dsv2_labeled" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2l_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2l")
       val fmtName = "graft.sources.EdgeListSource"
       Tables.edges(s, dir)
         .withColumn("label", (col("src") + col("dst")) % 9 - 4)
@@ -216,8 +179,7 @@ object GraphQueries {
     // second commit's rows — the standing table is never rescanned
     // (the incremental-ingest read path). Oracle filters the high half.
     "g_dsv2_changes" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2c_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2c")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.where(col("dst") < 5000).repartition(2)
@@ -239,8 +201,7 @@ object GraphQueries {
     // before (the oracle sees all edges, never the maintenance op).
     // The op that bounds metadata growth at thousands of commits/day.
     "g_dsv2_vacuum" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2v_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2v")
       val fmtName = "graft.sources.EdgeListSource"
       val tbl = new java.io.File(s"$root/edges")
       val e = Tables.edges(s, dir)
@@ -281,8 +242,7 @@ object GraphQueries {
     // assignment ≡ the full-graph closure (g_cc_inc's oracle verbatim
     // — equality proven, not assumed).
     "g_dsv2_cc_inc" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2cc_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2cc")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.where((col("src") + col("dst")) % 10 =!= 0).repartition(2)
@@ -311,8 +271,7 @@ object GraphQueries {
     // then a two-sided range filter reads through the pruned file set.
     // The oracle never sees the on-disk detour or the layout.
     "g_dsv2_zorder" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2z_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2z")
       Tables.edges(s, dir)
         .repartition(4).write.format("graft.sources.EdgeListSource")
         .mode("overwrite").save(s"$root/edges")
@@ -342,8 +301,7 @@ object GraphQueries {
     // per dimension. The oracle computes the same two-key join.
     "g_dsv2_bucket_multi" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2bm_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2bm")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(4).write.format(fmtName)
@@ -402,8 +360,7 @@ object GraphQueries {
     // the reported two-transform partitioning survives filter().
     // Oracle: the plain join aggregate.
     "g_dsv2_grid_runtime" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2gr_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2gr")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(2).write.format(fmtName)
@@ -456,8 +413,7 @@ object GraphQueries {
     // the filtered aggregate.
     "g_dsv2_zorder_bucket" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2zb_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2zb")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(4).write.format(fmtName)
@@ -523,8 +479,7 @@ object GraphQueries {
     // the thrift-server / SQL-script access path. Shares g_dsv2_degree's
     // oracle shape.
     "g_dsv2_tvf" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2tvf_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2tvf")
       Tables.edges(s, dir)
         .repartition(3).write.format("graft.sources.EdgeListSource")
         .mode("overwrite").save(s"$root/edges")
@@ -544,8 +499,7 @@ object GraphQueries {
     // on-disk files.
     "g_dsv2_dml" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2dml_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2dml")
       val p = s"$root/edges"
       val t = s"graft.`$p`"
       s.sql(s"CREATE TABLE $t (src BIGINT, dst BIGINT)")
@@ -573,8 +527,7 @@ object GraphQueries {
     // the derived edge list and never sees names, layout, or plan.
     "g_dsv2_catalog" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2cat_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2cat")
       s.conf.set("spark.sql.catalog.graft.warehouse", root.getPath)
       val confs = Seq(
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
@@ -638,8 +591,7 @@ object GraphQueries {
     // never sees the layout, the catalog, or the plan.
     "g_dsv2_bucket_join" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2bj_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2bj")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.write.format(fmtName)
@@ -695,8 +647,7 @@ object GraphQueries {
     // plan (AQE stages included) for both absences.
     "g_dsv2_bucket_sorted" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2bs_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2bs")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(3).write.format(fmtName)
@@ -759,8 +710,7 @@ object GraphQueries {
     // The oracle computes the same join from the derived edge list.
     "g_dsv2_bucket_compat" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2bc_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2bc")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(2).write.format(fmtName)
@@ -813,8 +763,7 @@ object GraphQueries {
     // fewer files than the on-disk census. Oracle: the plain join.
     "g_dsv2_bucket_pfilter" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2pf_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2pf")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(2).write.format(fmtName)
@@ -882,8 +831,7 @@ object GraphQueries {
     // join from the derived tables and never sees the layout.
     "g_dsv2_bucket_skew" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2sk_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2sk")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       // hot key 7 carries ~25% of the fact; 4 write tasks x 8 buckets
@@ -953,8 +901,7 @@ object GraphQueries {
     // silently vanish — the oracle's exact counts would catch it.
     "g_dsv2_bucket_mixed" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2bm_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2bm")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.write.format(fmtName)
@@ -1003,8 +950,7 @@ object GraphQueries {
     // precisely the allowed buckets' files (a strict subset); the
     // oracle sees only the WHERE clause.
     "g_dsv2_bucket_prune" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2bp_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2bp")
       val fmtName = "graft.sources.EdgeListSource"
       Tables.edges(s, dir).repartition(2).write.format(fmtName)
         .option("bucketBy", "src").option("numBuckets", "8")
@@ -1047,8 +993,7 @@ object GraphQueries {
     // against the on-disk file census). The oracle computes the same
     // join from the derived tables and never sees the pruning.
     "g_dsv2_runtime_prune" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2rt_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2rt")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
       e.repartition(2).write.format(fmtName)
@@ -1098,8 +1043,7 @@ object GraphQueries {
     // provably merges duplicate partials of the same group. The oracle
     // never sees the connector round-trip.
     "g_dsv2_degree" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2d_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2d")
       Tables.edges(s, dir)
         .repartition(3).write.format("graft.sources.EdgeListSource")
         .mode("overwrite").save(s"$root/edges")
@@ -1124,8 +1068,7 @@ object GraphQueries {
     // degree snapshot is gated against an oracle that never sees the
     // stream.
     "g_dsv2_stream" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2st_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2st")
       val fmt = "graft.sources.EdgeListSource"
       val p = s"$root/edges"
       val edges = Tables.edges(s, dir)
@@ -1214,8 +1157,7 @@ object GraphQueries {
     // g_pagerank_w's (shared oracle). The reference's read_edge_weight
     // → pagerank pipeline, on the modern source.
     "g_dsv2_pagerank_w" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2pw_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2pw")
       val fmtName = "graft.sources.EdgeListSource"
       Tables.edges(s, dir)
         .withColumn("weight",

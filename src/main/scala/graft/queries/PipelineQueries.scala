@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.pipeline.{Bloom, Dedup, FuzzyMatch, KMeansInt, MergeInto, Multimodal, Sampling, Scd2, Similarity}
 import graft.functions.Hashing
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate queries for the dedup / similarity-search / multimodal
   * operators (the LLM-data-pipeline suite). All hash arithmetic rides on
@@ -1040,8 +1041,7 @@ object PipelineQueries {
     // the size-aware count was actually applied, and the xor fold (no
     // overflow, order-free) pins content identity, not just counts.
     "d_compact" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_compact_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_compact")
       val p = s"$root/docs"
       docs(s, dir).repartition(64).write.mode("overwrite").parquet(p)
       val rep = graft.io.Compaction.compactParquet(s, p, targetFileBytes = 1L << 30)

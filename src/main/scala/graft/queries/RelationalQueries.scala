@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Ops
 import graft.io.Tables
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate queries demonstrating the reference's core operator
   * algebra (SURVEY.md §2.1/§2.8) on the TPC-H-ish testdata tables.
@@ -114,11 +115,12 @@ object RelationalQueries {
         round(expr("percentile(l_extendedprice, 0.99)"), 4).as("p99"))),
 
     // Sketch counterpart of q18: single-pass mergeable HDR-bin quantiles
-    // (graft.functions.HdrQuantiles) over exact integer cents — bounded
-    // state per group, ≤1.6% relative error, bit-exact DuckDB replica.
+    // (graft.functions.LogBinQuantiles at m = 6) over exact integer
+    // cents — bounded state per group, ≤1.6% relative error, bit-exact
+    // DuckDB replica.
     "q20_quantile_sketch" -> ((s, dir) => Tables.lineitem(s, dir)
       .groupBy("l_returnflag")
-      .agg(graft.functions.HdrQuantiles.hdrQuantiles(
+      .agg(graft.functions.LogBinQuantiles.hdrQuantiles(
         floor(col("l_extendedprice") * 100 + 0.5).cast("long"),
         Seq(0.5, 0.95, 0.99)).as("qq"))
       .select(col("l_returnflag"),
@@ -126,12 +128,13 @@ object RelationalQueries {
         element_at(col("qq"), 2).as("p95_cents"),
         element_at(col("qq"), 3).as("p99_cents"))),
 
-    // Variable-resolution counterpart of q20: the sparse log-bin sketch
-    // (graft.functions.LogQuantiles) at 2^-12 relative error — the
-    // heavy-tail/t-digest niche with deterministic bin-wise merge.
+    // Variable-resolution counterpart of q20: the same log-bin sketch
+    // (graft.functions.LogBinQuantiles) at m = 12, 2^-12 relative
+    // error — the heavy-tail/t-digest niche with deterministic bin-wise
+    // merge.
     "q21_logq_sketch" -> ((s, dir) => Tables.lineitem(s, dir)
       .groupBy("l_returnflag")
-      .agg(graft.functions.LogQuantiles.logQuantiles(
+      .agg(graft.functions.LogBinQuantiles.logQuantiles(
         floor(col("l_extendedprice") * 100 + 0.5).cast("long"),
         Seq(0.5, 0.95, 0.99)).as("qq"))
       .select(col("l_returnflag"),
@@ -536,8 +539,7 @@ object RelationalQueries {
     // r9: deleteOnExit cannot remove non-empty dirs).
     "q44_defaults" -> ((s, dir) => {
       val runId = java.util.UUID.randomUUID().toString.replace("-", "_")
-      val loc = java.nio.file.Files.createTempDirectory("graft_defaults_")
-        .toFile
+      val loc = Bridge.scratchDir("graft_defaults")
       val tbl = s"graft_defaults_tbl_$runId"
       val src = s"graft_defaults_src_$runId"
       try {
@@ -579,8 +581,7 @@ object RelationalQueries {
     // the oracle sees only the relational answer.
     "q45_bucket_join" -> ((s, dir) => {
       val runId = java.util.UUID.randomUUID().toString.replace("-", "_")
-      val loc = java.nio.file.Files.createTempDirectory("graft_bucket_")
-        .toFile
+      val loc = Bridge.scratchDir("graft_bucket")
       val li = s"graft_bkt_li_$runId"
       val od = s"graft_bkt_od_$runId"
       try {
@@ -963,12 +964,12 @@ object RelationalQueries {
         | round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
 
-    "q20_quantile_sketch" -> graft.functions.HdrQuantiles.oracleSql(
+    "q20_quantile_sketch" -> graft.functions.LogBinQuantiles.hdrqOracleSql(
       "lineitem", "CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT)",
       "l_returnflag",
       Seq("p50_cents" -> 0.5, "p95_cents" -> 0.95, "p99_cents" -> 0.99)),
 
-    "q21_logq_sketch" -> graft.functions.LogQuantiles.oracleSql(
+    "q21_logq_sketch" -> graft.functions.LogBinQuantiles.lgqOracleSql(
       "lineitem", "CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT)",
       "l_returnflag",
       Seq("p50_cents" -> 0.5, "p95_cents" -> 0.95, "p99_cents" -> 0.99)),

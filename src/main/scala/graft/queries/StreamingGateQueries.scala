@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStreams
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate entries that execute the Structured Streaming surface in a
   * bounded run: the events parquet is read through `readStream`
@@ -442,8 +443,7 @@ object StreamingGateQueries {
     // discipline as query output. The running-moments state after a
     // full drain must equal the whole corpus's exact integer moments.
     "st_state_reader" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_sreader_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_sreader")
       val ckpt = new java.io.File(root, "ckpt").getPath
       val out = new java.io.File(root, "out").getPath
       withStateProvider(s, RocksDbProvider) {
@@ -475,8 +475,7 @@ object StreamingGateQueries {
     // publish breaks the hash.
     "st_dsv2_sink" -> ((s, dir) => {
       val fmt = "graft.sources.EdgeListSource"
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2sink_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2sink")
       val out = s"$root/edges"
       val q = EventStreams.readEventsMultiBatch(s, dir)
         .where(col("event_type") === "purchase")
@@ -513,8 +512,7 @@ object StreamingGateQueries {
     "st_dsv2_bucket" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmt = "graft.sources.EdgeListSource"
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2sb_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2sb")
       val standing = s"$root/standing"
       graft.io.Tables.edges(s, dir).repartition(2).write.format(fmt)
         .option("bucketBy", "src").option("numBuckets", "8")
@@ -589,8 +587,7 @@ object StreamingGateQueries {
     // st_dsv2_sink's stream-blind oracle.
     "st_dsv2_compact" -> ((s, dir) => {
       val fmt = "graft.sources.EdgeListSource"
-      val root = java.nio.file.Files.createTempDirectory("graft_dsv2cmp_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_dsv2cmp")
       val out = s"$root/edges"
       val q = EventStreams.readEventsMultiBatch(s, dir)
         .where(col("event_type") === "purchase")
@@ -747,9 +744,7 @@ object StreamingGateQueries {
     // the batch e_xml round trip, shared oracle.
     "st_xml" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-      val root = java.nio.file.Files.createTempDirectory("graft_stxml_")
-        .toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_stxml")
       val e = graft.io.Tables.events(s, dir).select(
         col("event_id"), col("user_id"), col("event_type"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"),
@@ -954,8 +949,7 @@ object StreamingGateQueries {
     // read-back union equals the events table row-for-row, which is the
     // whole exactly-once claim, hash-checked by DuckDB.
     "st_exactly_once" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_eo_").toFile
-      root.deleteOnExit()
+      val root = Bridge.scratchDir("graft_eo")
       val out = new java.io.File(root, "out")
       val ckpt = new java.io.File(root, "ckpt")
       def run(): Unit = {
@@ -1065,7 +1059,7 @@ object StreamingGateQueries {
          |FROM c GROUP BY 1, 2""".stripMargin,
 
     "st_approx_distinct" ->
-      s"""WITH sk AS (${graft.functions.HllSketch60.oracleSqlGrouped(
+      s"""WITH sk AS (${graft.functions.HllSketch.oracleSqlGrouped(
              table = s"""(SELECT (epoch_ns(ts) // 1000)
                         |     - (epoch_ns(ts) // 1000) % $HourUs AS ws,
                         |     event_type, user_id
@@ -1242,7 +1236,7 @@ object StreamingGateQueries {
         |  AND NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
         |    AND c.ts_us >= p.p_ts_us AND c.ts_us <= p.p_ts_us + 1800000000)""".stripMargin,
 
-    "st_window_lgq" -> graft.functions.LogQuantiles.oracleSqlGrouped(
+    "st_window_lgq" -> graft.functions.LogBinQuantiles.lgqOracleSqlGrouped(
       table = s"""(SELECT (epoch_ns(ts) // 1000)
                  |    - (epoch_ns(ts) // 1000) % $HourUs AS ws,
                  |    event_type,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.Multimodal
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming cross-document aHash near-dup index (VERDICT r9 #4): the
   * standing corpus' frame fingerprints are banded ONCE at stream start
@@ -35,30 +36,11 @@ object AHashStreams {
       nFiles: Int): String =
     stageCache.getOrElseUpdate(
       (spark.sparkContext.applicationId, dir, nFiles), {
-      val batch = graft.io.Tables.documents(spark, dir)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"))
-      val n = batch.count()
-      require(n > 0, s"no batch-side docs staged from $dir")
-      val out = java.nio.file.Files.createTempDirectory("graft_ah_docs_").toFile
-      out.deleteOnExit()
-      import org.apache.spark.sql.expressions.Window
-      val ranked = batch.withColumn("__rn",
-        row_number().over(Window.orderBy(col("doc_id"))))
-      val t0 = System.currentTimeMillis() - 3600L * 1000L
-      (0 until nFiles).foreach { k =>
-        val lo = k * n / nFiles
-        val hi = (k + 1) * n / nFiles
-        val stage = new java.io.File(out, s"_stage$k")
-        ranked.where(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(out, f"b$k%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(t0 + k * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      out.getPath
+      MicroBatchStage.sliced("graft_ah_docs",
+        graft.io.Tables.documents(spark, dir)
+          .where(col("doc_id") % 10 === 0)
+          .select(col("doc_id")),
+        nFiles, col("doc_id"))
     })
 
   /** Drain the staged new-clip doc ids (doc_id % 10 == 0) one file per
@@ -68,8 +50,7 @@ object AHashStreams {
   def aHashStreamingSink(spark: SparkSession, dir: String,
       maxDist: Int = 8, nFiles: Int = 4): DataFrame = {
     val staged = stageDocBatches(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ah_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_ah_ckpt")
 
     // standing state: decode + hash + band the corpus ONCE; the
     // per-batch probe reads THESE (the distinct-value band index plus

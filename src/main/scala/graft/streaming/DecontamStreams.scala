@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.Decontam
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** STREAMING decontamination monitor — the live twin closing the round-9
   * pair (d_decontam_kmv batch refresh ⟷ this): training documents
@@ -36,28 +37,10 @@ object DecontamStreams {
       nFiles: Int): String =
     stageCache.getOrElseUpdate(
       (spark.sparkContext.applicationId, dir, nFiles), {
-      val train = spark.read.parquet(s"$dir/documents.parquet")
-        .where(col("source") =!= "src0")
-      val n = train.count()
-      val out = java.nio.file.Files.createTempDirectory("graft_dc_docs_").toFile
-      out.deleteOnExit()
-      import org.apache.spark.sql.expressions.Window
-      val ranked = train.withColumn("__rn",
-        row_number().over(Window.orderBy(col("doc_id"))))
-      val t0 = System.currentTimeMillis() - 3600L * 1000L
-      (0 until nFiles).foreach { k =>
-        val lo = k * n / nFiles
-        val hi = (k + 1) * n / nFiles
-        val stage = new java.io.File(out, s"_stage$k")
-        ranked.where(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(out, f"b$k%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(t0 + k * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      out.getPath
+      MicroBatchStage.sliced("graft_dc_docs",
+        spark.read.parquet(s"$dir/documents.parquet")
+          .where(col("source") =!= "src0"),
+        nFiles, col("doc_id"))
     })
 
   /** Drain the training docs one staged file per trigger, folding each
@@ -68,8 +51,7 @@ object DecontamStreams {
   def decontamStreamingSink(spark: SparkSession, dir: String,
       k: Int = 128, nFiles: Int = 4): DataFrame = {
     val staged = stageDocBatches(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dc_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_dc_ckpt")
 
     // the held-out eval synopsis: standing state, one bootstrap scan
     val evalSk = Decontam.shingleHashes(

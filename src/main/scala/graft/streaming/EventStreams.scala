@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Structured Streaming surface for the events table: windowed
   * aggregation with watermarking and stateful gap-sessionization via
@@ -45,33 +46,9 @@ object EventStreams {
       nFiles: Int): String =
     mbCache.getOrElseUpdate(
       (spark.sparkContext.applicationId, dir, nFiles), {
-      import org.apache.spark.sql.expressions.Window
-      val ev = spark.read.parquet(s"$dir/events.parquet")
-      val n = ev.count()
-      val out = java.nio.file.Files.createTempDirectory("graft_mb_events_").toFile
-      out.deleteOnExit()
-      // Global sort through one partition: gate-staging only (sf<=0.1
-      // events) — a production stream's arrival order comes from the
-      // source, not from a driver-side re-sort.
-      val ranked = ev.withColumn("__rn",
-        row_number().over(Window.orderBy(col("ts"), col("event_id"))))
-      val t0 = System.currentTimeMillis() - 3600L * 1000L
-      (0 until nFiles).foreach { k =>
-        val lo = k * n / nFiles
-        val hi = (k + 1) * n / nFiles
-        val stage = new java.io.File(out, s"_stage$k")
-        ranked.where(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(out, f"b$k%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // FileStreamSource orders by modification time (oldest first);
-        // 60 s spacing keeps the order unambiguous on coarse filesystems,
-        // and the b00..bNN names break any residual tie the same way.
-        dst.setLastModified(t0 + k * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      out.getPath
+      MicroBatchStage.sliced("graft_mb_events",
+        spark.read.parquet(s"$dir/events.parquet"),
+        nFiles, col("ts"), col("event_id"))
     })
 
   /** Multi-batch twin of [[readEvents]]: the same rows, staged as
@@ -177,7 +154,7 @@ object EventStreams {
         col("event_type"), col("cnt"), col("total_cents"))
 
   /** Windowed approximate distinct users per event type via the custom
-    * HLL aggregate ([[graft.functions.HllSketch60]]). The state store
+    * HLL aggregate ([[graft.functions.HllSketch]]). The state store
     * holds one 256-byte register array per open (window, type) group —
     * constant per group no matter how many distinct users stream
     * through, which is the whole point at stream scale; an exact
@@ -188,7 +165,7 @@ object EventStreams {
       .withColumn("tts", graft.io.Tables.eventTime(events))
       .withWatermark("tts", "2 hours")
       .groupBy(window(col("tts"), "1 hour"), col("event_type"))
-      .agg(graft.functions.HllSketch60.hll60(
+      .agg(graft.functions.HllSketch.hll60(
         graft.functions.Hashing.hash60(col("user_id").cast("string")))
         .as("approx_users"))
       .select(
@@ -217,9 +194,9 @@ object EventStreams {
         graft.functions.KmvSketch.estimate(col("sk"), k).as("approx_users"))
 
   /** Windowed value quantiles per event type via the HDR-bin sketch
-    * ([[graft.functions.HdrQuantiles]]): state per open (window, type)
-    * group is one sparse bin-count array (≤ 4033 slots, in practice a
-    * few dozen), never the values — same bounded-state story as
+    * ([[graft.functions.LogBinQuantiles]] at m = 6): state per open
+    * (window, type) group is one sparse bin-count map (≤ 4033 bins, in
+    * practice a few dozen), never the values — same bounded-state story as
     * [[approxDistinctStream]]. Values are exact integer cents so the
     * sketch is bit-reproducible against its batch twin. */
   def quantileStream(events: DataFrame): DataFrame =
@@ -227,7 +204,7 @@ object EventStreams {
       .withColumn("tts", graft.io.Tables.eventTime(events))
       .withWatermark("tts", "2 hours")
       .groupBy(window(col("tts"), "1 hour"), col("event_type"))
-      .agg(graft.functions.HdrQuantiles.hdrQuantiles(
+      .agg(graft.functions.LogBinQuantiles.hdrQuantiles(
         floor(col("value") * 100 + 0.5).cast("long"),
         Seq(0.5, 0.95, 0.99)).as("qq"))
       .select(
@@ -238,16 +215,16 @@ object EventStreams {
         element_at(col("qq"), 3).as("p99_cents"))
 
   /** [[quantileStream]]'s heavy-tail twin on the sparse log-bin sketch
-    * ([[graft.functions.LogQuantiles]]): same bounded-state story, but
-    * 2^-12 relative error with state tracking only the occupied
-    * octaves — bin counts add, so the stream is bit-equal to the batch
+    * ([[graft.functions.LogBinQuantiles]] at m = 12): same bounded-state
+    * story, but 2^-12 relative error with state tracking only the
+    * occupied octaves — bin counts add, so the stream is bit-equal to the batch
     * sketch under any trigger cadence. */
   def logQuantileStream(events: DataFrame): DataFrame =
     events
       .withColumn("tts", graft.io.Tables.eventTime(events))
       .withWatermark("tts", "2 hours")
       .groupBy(window(col("tts"), "1 hour"), col("event_type"))
-      .agg(graft.functions.LogQuantiles.logQuantiles(
+      .agg(graft.functions.LogBinQuantiles.logQuantiles(
         floor(col("value") * 100 + 0.5).cast("long"),
         Seq(0.5, 0.95, 0.99)).as("qq"))
       .select(
@@ -668,8 +645,7 @@ object EventStreams {
     * operator keys-hash-partitions only the batch. */
   def asOfEnrichDynamicDrain(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageSortedEventFiles(spark, dir, 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_asof_dyn_").toFile
-    root.deleteOnExit()
+    val root = Bridge.scratchDir("graft_asof_dyn")
     val out = new java.io.File(root, "out").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
 
@@ -740,8 +716,7 @@ object EventStreams {
   def scd2StreamingSink(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val staged = stageSortedEventFiles(spark, dir, 4)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_scd2_ckpt")
 
     val dimSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("value", DoubleType),
@@ -798,8 +773,7 @@ object EventStreams {
   def mergeStreamingSink(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val staged = stageSortedEventFiles(spark, dir, 4)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_merge_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_merge_ckpt")
     val snapSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("value", DoubleType)))
     var snap = spark.createDataFrame(
@@ -888,8 +862,7 @@ object EventStreams {
       nFiles: Int = 4): DataFrame = {
     import org.apache.spark.sql.types._
     val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sp_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_sp_ckpt")
     var acc = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("grp", StringType),
@@ -937,8 +910,7 @@ object EventStreams {
       nFiles: Int = 4): DataFrame = {
     import org.apache.spark.sql.types._
     val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mv_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_mv_ckpt")
     var mv = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("k", StringType),
@@ -981,8 +953,7 @@ object EventStreams {
     * @return (event_type, event_id, cents) — k rows per key */
   def topkLeaderboardSink(spark: SparkSession, dir: String,
       nFiles: Int = 4, k: Int = 3): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_topk_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_topk_ckpt")
     var standing: Option[DataFrame] = None
     val q = readEventsMultiBatch(spark, dir, nFiles).writeStream
       .option("checkpointLocation", ckpt.getPath)
@@ -1026,8 +997,7 @@ object EventStreams {
       nFiles: Int = 4, targetCents: Long = 5000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cus_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_cus_ckpt")
     val stSchema = StructType(Seq(
       StructField("grp", StringType), StructField("cum", LongType),
       StructField("rmin", LongType), StructField("peak", LongType),
@@ -1197,8 +1167,7 @@ object EventStreams {
       keys: Seq[String], merge: Map[String, String] = Map.empty)(
       batchCounts: DataFrame => DataFrame): DataFrame = {
     val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cnt_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_cnt_ckpt")
     val sums = schema.fieldNames.filterNot(keys.contains).toSeq
     def agg1(c: String) = merge.getOrElse(c, "sum") match {
       case "sum" => sum(c).as(c)
@@ -1336,8 +1305,7 @@ object EventStreams {
       nFiles: Int): DataFrame = {
     import org.apache.spark.sql.types._
     val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ks_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_ks_ckpt")
     var acc = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("grp", StringType),
@@ -1380,8 +1348,7 @@ object EventStreams {
       nFiles: Int = 4): DataFrame = {
     import org.apache.spark.sql.types._
     val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_skew_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_skew_ckpt")
     var acc = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("grp", StringType),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.FuzzyMatch
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming fuzzy match — the FastSS family's streaming twin (VERDICT
   * r8 #6): the standing catalog's deletion-key index is built ONCE and
@@ -38,29 +39,11 @@ object FuzzyStreams {
       nFiles: Int): String =
     stageCache.getOrElseUpdate(
       (spark.sparkContext.applicationId, dir, nFiles), {
-      val batch = spark.read.parquet(s"$dir/part.parquet")
-        .where(col("p_partkey") % 10 === 0)
-        .select(col("p_partkey"), col("p_name"))
-      val n = batch.count()
-      val out = java.nio.file.Files.createTempDirectory("graft_fz_parts_").toFile
-      out.deleteOnExit()
-      import org.apache.spark.sql.expressions.Window
-      val ranked = batch.withColumn("__rn",
-        row_number().over(Window.orderBy(col("p_partkey"))))
-      val t0 = System.currentTimeMillis() - 3600L * 1000L
-      (0 until nFiles).foreach { k =>
-        val lo = k * n / nFiles
-        val hi = (k + 1) * n / nFiles
-        val stage = new java.io.File(out, s"_stage$k")
-        ranked.where(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(out, f"b$k%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(t0 + k * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      out.getPath
+      MicroBatchStage.sliced("graft_fz_parts",
+        spark.read.parquet(s"$dir/part.parquet")
+          .where(col("p_partkey") % 10 === 0)
+          .select(col("p_partkey"), col("p_name")),
+        nFiles, col("p_partkey"))
     })
 
   /** Drain the staged batch-side names (p_partkey % 10 == 0) one file
@@ -70,8 +53,7 @@ object FuzzyStreams {
   def fuzzyMatchStreamingSink(spark: SparkSession, dir: String,
       maxDist: Int = 2, nFiles: Int = 4): DataFrame = {
     val staged = stagePartBatches(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fz_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_fz_ckpt")
 
     // standing state: the deletion-key index, built once at stream
     // start and persisted — the per-batch join reads THIS, not the

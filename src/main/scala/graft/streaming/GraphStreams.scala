@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Hashing, HllSketch60, HllUnion}
+import graft.functions.{Hashing, HllSketch}
 import graft.graph.NeighborhoodFunction
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Structured Streaming surface for EDGE streams — the incremental twin
   * of the batch HyperANF machinery ([[graft.graph.NeighborhoodFunction]]).
@@ -72,20 +73,9 @@ object GraphStreams {
           s"staged edge bucket $k/$nFiles is empty at $dir — " +
             "phase count would not match the unrolled oracle")
       }
-      val out = java.nio.file.Files.createTempDirectory("graft_mb_edges_").toFile
-      out.deleteOnExit()
-      val t0 = System.currentTimeMillis() - 3600L * 1000L
-      (0 until nFiles).foreach { k =>
-        val stage = new java.io.File(out, s"_stage$k")
+      MicroBatchStage.write("graft_mb_edges", (0 until nFiles).map { k =>
         e.where(pmod(col("src") * 7 + col("dst"), lit(nFiles.toLong)) === k)
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(out, f"b$k%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(t0 + k * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      out.getPath
+      })
     })
 
   /** Streaming CONNECTED-COMPONENTS maintenance — the incremental
@@ -104,8 +94,7 @@ object GraphStreams {
       nFiles: Int = 4): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ccm_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_ccm_ckpt")
     var standing: Option[DataFrame] = None
 
     val edges = spark.readStream
@@ -146,8 +135,7 @@ object GraphStreams {
       nFiles: Int = 4): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_trim_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_trim_ckpt")
     var acc: Option[DataFrame] = None     // accumulated edges
     var carried: Option[DataFrame] = None // 1-row maintained count
 
@@ -196,8 +184,7 @@ object GraphStreams {
       nFiles: Int = 4, iters: Int = 2): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_prm_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_prm_ckpt")
     var acc: Option[DataFrame] = None
     var ranks: Option[DataFrame] = None
 
@@ -240,8 +227,7 @@ object GraphStreams {
       nFiles: Int = 4, iters: Int = 2): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_prw_ckpt_").toFile
-    ckpt.deleteOnExit()
+    val ckpt = Bridge.scratchDir("graft_prw_ckpt")
     var acc: Option[DataFrame] = None
     var ranks: Option[DataFrame] = None
 
@@ -288,6 +274,6 @@ object GraphStreams {
       .select(col("r.v").as("v"),
         Hashing.hash60(NeighborhoodFunction.Seed, col("r.u")).as("h"))
       .groupBy("v")
-      .agg(HllUnion.hll60Regs(col("h")).as("sk"),
-        HllSketch60.hll60(col("h")).as("n_est"))
+      .agg(HllSketch.hll60Regs(col("h")).as("sk"),
+        HllSketch.hll60(col("h")).as("n_est"))
 }

@@ -14,6 +14,15 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A fresh directory `<java.io.tmpdir>/<prefix>-<uuid>` that is
+    * deleted WITH ITS CONTENTS when the JVM exits: Spark's own
+    * `Utils.createTempDir`, which registers a recursive delete with
+    * Spark's `ShutdownHookManager` (`File.deleteOnExit` cannot remove a
+    * non-empty directory, so it leaks every staged or checkpoint dir). */
+  def scratchDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(
+      System.getProperty("java.io.tmpdir"), prefix)
+
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry

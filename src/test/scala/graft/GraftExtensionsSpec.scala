@@ -12,6 +12,47 @@ import org.scalatest.funsuite.AnyFunSuite
   * The default session is cleared for the build and restored after. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
+  test("both registration paths give the same SQL functions") {
+    import graft.functions.GraftFunctions
+    val base = graft.testkit.SparkSpec.session
+    // extension-built: a fresh session of the shared context, whose
+    // spark.sql.extensions is graft.GraftExtensions; no register call
+    val viaExt = base.newSession()
+    val bare = org.apache.spark.sql.graftbridge.BareSession.of(base)
+    val names = GraftFunctions.sqlFunctions.map(_.name)
+    // the bare session knows none of them beyond Spark's own built-ins
+    // (Spark ships an unrelated DataSketches `hll_union`, which both
+    // paths shadow)
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    names.filterNot(n => builtin.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      .foreach(n => assert(!bare.catalog.functionExists(n), s"$n in a bare session"))
+    GraftFunctions.register(bare)
+    // one fixed input; one probe query per table row
+    val t = "(VALUES ('martha', CAST(7 AS BIGINT)), ('marhta', CAST(1000003 AS BIGINT)), " +
+      "('e\u0301', CAST(-2 AS BIGINT)), ('abc', CAST(42 AS BIGINT))) AS t(x, v)"
+    val regs = s"SELECT v, hll60_regs(hash60(x)) AS r FROM $t GROUP BY v"
+    val probes = Map(
+      "cosine_sim" -> (s"SELECT cosine_sim(array(CAST(v AS FLOAT), CAST(1.0 AS FLOAT)), " +
+        s"array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) FROM $t"),
+      "hash60" -> s"SELECT hash60(x), hash60(v, x) FROM $t",
+      "jaro_winkler" -> s"SELECT jaro_winkler(x, 'martha') FROM $t",
+      "normalize_nfc" -> s"SELECT normalize_nfc(x) FROM $t",
+      "hll60" -> s"SELECT hll60(hash60(x)) FROM $t",
+      "hll60_regs" -> s"SELECT hex(hll60_regs(hash60(x))) FROM $t",
+      "hll_union" -> s"SELECT hex(hll_union(r)) FROM ($regs)",
+      "hll_union_est" -> s"SELECT hll_union_est(r) FROM ($regs)",
+      "hdrq" -> s"SELECT hdrq(v, array(0.0, 0.5, 1.0)) FROM $t",
+      "lgq" -> s"SELECT lgq(v, array(0.0, 0.5, 1.0)) FROM $t",
+      "kmv" -> s"SELECT kmv(hash60(x), 2) FROM $t")
+    assert(probes.keySet == names.toSet, "every table row needs a probe")
+    for (n <- names) {
+      def run(s: SparkSession) = s.sql(probes(n)).collect().map(_.toString).sorted.toSeq
+      val (a, b) = (run(viaExt), run(bare))
+      assert(a.nonEmpty && a == b, s"$n: extension $a vs registered $b")
+    }
+  }
+
   test("GraftExtensions wires functions and strategy at session build") {
     // Initialize the SHARED testkit session (and thus the SparkContext)
     // FIRST: spark.sql.extensions is a static conf read from the

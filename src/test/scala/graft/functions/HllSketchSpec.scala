@@ -10,14 +10,14 @@ class HllSketchSpec extends SparkSpec {
     val df = (0 until n).map(i => (i % 4, s"k$i")).toDF("g", "k")
       .repartition(parts)
     df.groupBy("g")
-      .agg(HllSketch60.hll60(Hashing.hash60(col("k"))).as("a"))
+      .agg(HllSketch.hll60(Hashing.hash60(col("k"))).as("a"))
       .as[(Int, Double)].collect().toMap
   }
 
   test("estimate lands within HLL error bounds and tracks exact counts") {
     val est = (0 until 4).map { g =>
       val keys = (0 until 5000).map(i => s"g$g-$i").toDF("k")
-      keys.agg(HllSketch60.hll60(Hashing.hash60(col("k")))).as[Double].head()
+      keys.agg(HllSketch.hll60(Hashing.hash60(col("k")))).as[Double].head()
     }
     est.foreach { e =>
       assert(math.abs(e - 5000) / 5000.0 < 0.2,
@@ -35,7 +35,7 @@ class HllSketchSpec extends SparkSpec {
   test("small-range linear counting handles tiny groups exactly enough") {
     val df = Seq.tabulate(10)(i => ("only", s"x$i")).toDF("g", "k")
     val e = df.groupBy("g")
-      .agg(HllSketch60.hll60(Hashing.hash60(col("k"))).as("a"))
+      .agg(HllSketch.hll60(Hashing.hash60(col("k"))).as("a"))
       .select("a").as[Double].head()
     // 10 distinct keys: 256 * ln(256/246) with at most one collision
     assert(e > 7 && e < 14, s"linear-counting estimate $e implausible for 10 keys")
@@ -44,19 +44,19 @@ class HllSketchSpec extends SparkSpec {
   test("register math matches a by-hand replica of the update path") {
     // replicate buckets/ranks on the driver with the same hash
     val keys = (0 until 1000).map(i => s"42|$i")
-    val regs = new Array[Int](HllSketch60.M)
+    val regs = new Array[Int](HllSketch.M)
     keys.foreach { s =>
       val h = Hashing.hash60Local(s)
-      val b = (h >>> HllSketch60.W).toInt
-      val w = h & HllSketch60.WMask
-      val rho = math.min(if (w == 0L) HllSketch60.W + 1
-        else java.lang.Long.numberOfLeadingZeros(w) - (64 - HllSketch60.W) + 1,
-        HllSketch60.RhoCap)
+      val b = (h >>> HllSketch.W).toInt
+      val w = h & HllSketch.WMask
+      val rho = math.min(if (w == 0L) HllSketch.W + 1
+        else java.lang.Long.numberOfLeadingZeros(w) - (64 - HllSketch.W) + 1,
+        HllSketch.RhoCap)
       regs(b) = math.max(regs(b), rho)
     }
-    val expected = HllSketch60.estimate(regs.map(_.toByte))
+    val expected = HllSketch.estimate(regs.map(_.toByte))
     val got = keys.toDF("k")
-      .agg(HllSketch60.hll60(Hashing.hash60(col("k")))).as[Double].head()
+      .agg(HllSketch.hll60(Hashing.hash60(col("k")))).as[Double].head()
     assert(got == expected, s"agg $got != driver replica $expected")
   }
 

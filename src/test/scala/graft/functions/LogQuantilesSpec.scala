@@ -3,12 +3,25 @@ package graft.functions
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Sparse log-bin quantile sketch: bin math, tight rank-error bound on
+/** Sparse log-bin quantile sketch (`lgq`: [[LogBinQuantiles]] at
+  * m = 12): bin math, tight rank-error bound on
   * heavy-tailed data, merge independence, SQL surface. */
 class LogQuantilesSpec extends SparkSpec {
 
   import spark.implicits._
-  import LogQuantiles.{binOf, lowerOf, M}
+  private val M = LogBinQuantiles.LgqM
+  private def binOf(v: Long): Int = LogBinQuantiles.binOf(v, M)
+  private def lowerOf(idx: Int): Long = LogBinQuantiles.lowerOf(idx, M)
+
+  // exact reference over the sorted input: the lower bound of the bin
+  // holding the rank-⌈q·n⌉ value
+  private def sortedReference(vals: Seq[Long], qs: Seq[Double]): Seq[Long] = {
+    val sorted = vals.sorted
+    qs.map { q =>
+      val r = math.max(math.ceil(q * sorted.size).toLong, 1L)
+      lowerOf(binOf(sorted((r - 1).toInt)))
+    }
+  }
 
   test("bin math: monotone, lower-bound, 2^-M relative error, exact small values") {
     for (seed <- Seq(5, 23)) {
@@ -38,7 +51,7 @@ class LogQuantilesSpec extends SparkSpec {
     val vals = Seq.fill(8000)(math.exp(rnd.nextGaussian() * 2.5 + 8.0).toLong + 1)
     val df = vals.toDF("v")
     val qs = Seq(0.01, 0.1, 0.5, 0.9, 0.99, 0.999)
-    val got = df.agg(LogQuantiles.logQuantiles(col("v"), qs).as("qq"))
+    val got = df.agg(LogBinQuantiles.logQuantiles(col("v"), qs).as("qq"))
       .head().getSeq[Long](0)
     val sorted = vals.sorted
     for ((q, est) <- qs.zip(got)) {
@@ -52,14 +65,27 @@ class LogQuantilesSpec extends SparkSpec {
   test("result is independent of partitioning and includes edge cases") {
     val vals = Seq(0L, 0L, -5L, 1L, Long.MaxValue / 2) ++
       (1 to 2000).map(_.toLong)
-    val a = vals.toDF("v").agg(LogQuantiles.logQuantiles(col("v"),
+    val a = vals.toDF("v").agg(LogBinQuantiles.logQuantiles(col("v"),
       Seq(0.0, 0.5, 1.0))).head().getSeq[Long](0)
     val b = scala.util.Random.shuffle(vals).toDF("v").repartition(13)
-      .agg(LogQuantiles.logQuantiles(col("v"), Seq(0.0, 0.5, 1.0)))
+      .agg(LogBinQuantiles.logQuantiles(col("v"), Seq(0.0, 0.5, 1.0)))
       .head().getSeq[Long](0)
     assert(a == b, s"merge-order dependence: $a vs $b")
     assert(a(2) <= Long.MaxValue / 2 && a(2) >= lowerOf(binOf(Long.MaxValue / 2)))
     assert(a(0) == 0L)
+    // a wide-range input (zeros, negatives, every magnitude) against the
+    // sorted-array reference, under 1, 3 and 7 partitions
+    val rnd = new scala.util.Random(62)
+    val wide = Seq(0L, -3L, Long.MaxValue) ++ Seq.fill(3000) {
+      val bits = rnd.nextInt(63) + 1
+      (rnd.nextLong() & ((1L << bits) - 1)) | (1L << (bits - 1))
+    }
+    val wqs = Seq(0.0, 0.01, 0.25, 0.5, 0.9, 0.999, 1.0)
+    for (parts <- Seq(1, 3, 7)) {
+      val got = wide.toDF("v").repartition(parts)
+        .agg(LogBinQuantiles.logQuantiles(col("v"), wqs)).head().getSeq[Long](0)
+      assert(got == sortedReference(wide, wqs), s"$parts partitions: $got")
+    }
   }
 
   test("lgq is callable from SQL and tighter than hdrq on wide values") {

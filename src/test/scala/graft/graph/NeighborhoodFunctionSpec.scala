@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.testkit.SparkSpec
-import graft.functions.{Hashing, HllSketch60}
+import graft.functions.{Hashing, HllSketch}
 
 /** HyperANF sketches vs a driver replica: exact reach sets pushed
   * through the identical register math must reproduce every estimate
@@ -32,7 +32,7 @@ class NeighborhoodFunctionSpec extends SparkSpec {
   /** The sketch estimate of an exact vertex set, via the same register
     * math the engine runs (hash60 → bucket/rho → estimate). */
   private def sketchOf(vs: Set[Long]): Double = {
-    import HllSketch60.{M, RhoCap, W, WMask}
+    import HllSketch.{M, RhoCap, W, WMask}
     val regs = new Array[Byte](M)
     for (u <- vs) {
       val h = Hashing.hash60Local(s"${NeighborhoodFunction.Seed}|$u")
@@ -42,7 +42,7 @@ class NeighborhoodFunctionSpec extends SparkSpec {
         else java.lang.Long.numberOfLeadingZeros(w) - (64 - W) + 1, RhoCap)
       if (rho > regs(bucket)) regs(bucket) = rho.toByte
     }
-    HllSketch60.estimate(regs)
+    HllSketch.estimate(regs)
   }
 
   test("estimates equal the register math over exact reach sets, bit for bit") {

@@ -33,7 +33,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streaming HLL approx-distinct equals the batch sketch per window") {
-    import graft.functions.{Hashing, HllSketch60}
+    import graft.functions.{Hashing, HllSketch}
     val stream = EventStreams.readEvents(spark, dir)
     val q = EventStreams.runToMemory(
       EventStreams.approxDistinctStream(stream), "hll_out", OutputMode.Append)
@@ -46,7 +46,7 @@ class EventStreamsSpec extends SparkSpec {
       val b = ev
         .withColumn("win_start_us", usC - usC % (3600L * 1000000L))
         .groupBy("win_start_us", "event_type")
-        .agg(HllSketch60.hll60(Hashing.hash60(col("user_id").cast("string")))
+        .agg(HllSketch.hll60(Hashing.hash60(col("user_id").cast("string")))
           .as("approx_users"))
       assert(s.count() > 0, "stream emitted nothing")
       assert(s.except(b).isEmpty, "streamed sketch estimate disagrees with batch")
@@ -54,7 +54,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streaming HDR quantiles equal the batch sketch per window") {
-    import graft.functions.HdrQuantiles
+    import graft.functions.LogBinQuantiles
     val stream = EventStreams.readEvents(spark, dir)
     val q = EventStreams.runToMemory(
       EventStreams.quantileStream(stream), "hdrq_out", OutputMode.Append)
@@ -67,7 +67,7 @@ class EventStreamsSpec extends SparkSpec {
       val b = ev
         .withColumn("win_start_us", usC - usC % (3600L * 1000000L))
         .groupBy("win_start_us", "event_type")
-        .agg(HdrQuantiles.hdrQuantiles(
+        .agg(LogBinQuantiles.hdrQuantiles(
           floor(col("value") * 100 + 0.5).cast("long"),
           Seq(0.5, 0.95, 0.99)).as("qq"))
         .select(col("win_start_us"), col("event_type"),
@@ -80,7 +80,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streamed log-bin quantiles equal the batch lgq sketch exactly") {
-    import graft.functions.LogQuantiles
+    import graft.functions.LogBinQuantiles
     val stream = EventStreams.readEvents(spark, dir)
     val q = EventStreams.runToMemory(
       EventStreams.logQuantileStream(stream), "lgq_out", OutputMode.Append)
@@ -91,7 +91,7 @@ class EventStreamsSpec extends SparkSpec {
       val b = ev
         .withColumn("win_start_us", usC - usC % (3600L * 1000000L))
         .groupBy("win_start_us", "event_type")
-        .agg(LogQuantiles.logQuantiles(
+        .agg(LogBinQuantiles.logQuantiles(
           floor(col("value") * 100 + 0.5).cast("long"),
           Seq(0.5, 0.95, 0.99)).as("qq"))
         .select(col("win_start_us"), col("event_type"),
