@@ -32,7 +32,13 @@ object Main {
     "hb_closeness", "linkpred", "truss", "toposort", "transitivity", "reciprocity",
     "assortativity", "msf", "msf_stats", "densest")
 
-  def usage(): Nothing = {
+  /** The `--key` options [[usage]] lists. */
+  private val optionKeys = Set("source", "nsources", "seed", "levels", "edges",
+    "k", "rounds", "iters", "alpha-shift", "max-center-degree", "dir", "length",
+    "top")
+
+  def usage(problem: String = ""): Nothing = {
+    if (problem.nonEmpty) System.err.println(problem)
     System.err.println(
       s"""usage: graft.cli.Main <command> <input> -o <output> [--key value ...]
          |commands: ${commands.mkString(" ")}
@@ -47,16 +53,23 @@ object Main {
     sys.exit(2)
   }
 
-  private def opts(rest: Array[String]): Map[String, String] =
-    rest.grouped(2).collect { case Array(k, v) if k.startsWith("--") =>
-      k.drop(2) -> v
-    }.toMap
+  /** `--key value` pairs, or the first token that is not one: a key
+    * [[usage]] does not list, a key with no value, or a stray value. */
+  private[cli] def parseOpts(rest: Seq[String]): Either[String, Map[String, String]] =
+    rest match {
+      case Seq() => Right(Map.empty)
+      case k +: _ if !k.startsWith("--") || !optionKeys(k.drop(2)) =>
+        Left(s"unknown option: $k")
+      case k +: (v +: tail) if !v.startsWith("--") =>
+        parseOpts(tail).map(Map(k.drop(2) -> v) ++ _)
+      case k +: _ => Left(s"missing value for option: $k")
+    }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 4 || args(2) != "-o") usage()
     val Array(cmd, input, _, output) = args.take(4)
     if (!commands.contains(cmd)) usage()
-    val o = opts(args.drop(4))
+    val o = parseOpts(args.drop(4).toSeq).fold(usage(_), o => o)
 
     val spark = graft.GraftSession(defaultCpus = 8)
 

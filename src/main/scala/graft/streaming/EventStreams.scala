@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface for the events table: windowed
   * aggregation with watermarking and stateful gap-sessionization via
@@ -36,32 +37,19 @@ object EventStreams {
   // drain runs one micro-batch per file in event-time order — the
   // watermark only ever advances, no row is late, and the final result
   // equals the single-batch drain (same oracles).
-  // keyed by applicationId, not the session object (ADVICE r9: a
-  // SparkSession key pins the session and its staged dirs for the JVM
-  // lifetime)
-  private val mbCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), String]
-
   private def stageSortedEventFiles(spark: SparkSession, dir: String,
       nFiles: Int): String =
-    mbCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, nFiles), {
-      MicroBatchStage.sliced("graft_mb_events",
+    MicroBatchStage.staged(spark, "graft_mb_events", dir, nFiles)(
+      MicroBatchStage.sliced(_,
         spark.read.parquet(s"$dir/events.parquet"),
-        nFiles, col("ts"), col("event_id"))
-    })
+        nFiles, col("ts"), col("event_id")))
 
   /** Multi-batch twin of [[readEvents]]: the same rows, staged as
     * `nFiles` time-sorted files read one per trigger, so a bounded drain
     * exercises state carry ACROSS micro-batches instead of within one. */
   def readEventsMultiBatch(spark: SparkSession, dir: String,
-      nFiles: Int = 4): DataFrame = {
-    val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val schema = graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet")
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-  }
+      nFiles: Int = 4): DataFrame =
+    MicroBatchStage.read(spark, stageSortedEventFiles(spark, dir, nFiles))
 
   /** Directory holding the time-sorted staged slices (test/restart
     * harnesses copy individual slices from here to simulate arrival). */
@@ -621,8 +609,8 @@ object EventStreams {
     * a real pipeline hits daily where [[asOfEnrichStream]]'s dim is
     * frozen per drain: the dimension (signup versions) grows WITH the
     * stream, and each micro-batch joins against the versions ingested so
-    * far. Implemented as foreachBatch: per batch, rebuild the dim from
-    * the staged source at the batch's own event-time high-water mark
+    * far. Implemented as a [[MicroBatchStage.drain]]: per batch, rebuild
+    * the dim from the staged source at the batch's own event-time mark
     * (`ts_us <= max(batch.ts_us)` — a mid-drain version flip every
     * batch), run the NATIVE as-of operator ([[graft.plans.AsOfJoin]],
     * backward) against it, and write idempotently per batch id (the
@@ -647,15 +635,13 @@ object EventStreams {
     val staged = stageSortedEventFiles(spark, dir, 4)
     val root = Bridge.scratchDir("graft_asof_dyn")
     val out = new java.io.File(root, "out").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
 
-    val events = readEventsMultiBatch(spark, dir)
+    val events = MicroBatchStage.read(spark, staged)
     val stream = events.select(col("user_id"), col("event_id"),
       graft.io.Tables.eventMicros(events).as("ts_us"))
 
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatchStage.drain(stream, new java.io.File(root, "ckpt").getPath) {
+      (batch, batchId) =>
         batch.persist()
         val hiRow = batch.agg(max("ts_us")).first()
         if (!hiRow.isNullAt(0)) {
@@ -686,11 +672,7 @@ object EventStreams {
             .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
         }
         batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(out).drop("batch_id")
   }
 
@@ -710,109 +692,66 @@ object EventStreams {
     * Scale shape: per batch ONE full-outer shuffle join between the
     * OPEN slice and the update batch (closed history is append-only,
     * never re-joined — [[graft.pipeline.Scd2]]'s O(open + batch)
-    * contract); `localCheckpoint` truncates the per-batch lineage so the
-    * plan does not grow with batch count — the streaming-side equivalent
-    * of the checkpoint a long-lived merge loop needs on any engine. */
+    * contract); the fold checkpoints each batch's dimension, so the plan
+    * does not grow with batch count, and releases the one it superseded
+    * — the streaming-side equivalent of the checkpoint a long-lived merge
+    * loop needs on any engine. */
   def scd2StreamingSink(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val staged = stageSortedEventFiles(spark, dir, 4)
-    val ckpt = Bridge.scratchDir("graft_scd2_ckpt")
-
-    val dimSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("value", DoubleType),
-      StructField("valid_from", LongType), StructField("valid_to", LongType)))
-    // accumulated dimension, checkpointed per batch (driver-held handle;
-    // the data itself lives in executor block storage)
-    var dim = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dimSchema)
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
+    val events = readEventsMultiBatch(spark, dir)
     val stream = events.select(col("user_id"), col("event_type"), col("value"),
       graft.io.Tables.eventMicros(events).as("ts_us"), col("event_id"))
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        val hiRow = batch.agg(max("ts_us")).first()
-        if (!hiRow.isNullAt(0)) {
-          val hi = hiRow.getLong(0)
-          // one update row per user: the batch's latest signup value,
-          // latest by (ts_us, event_id) — deterministic under ties
-          val updates = batch.where(col("event_type") === "signup")
+    val noDim = MicroBatchStage.empty(spark, StructType.fromDDL(
+      "user_id BIGINT, value DOUBLE, valid_from BIGINT, valid_to BIGINT"))
+    MicroBatchStage.fold(stream, Seq(noDim)) { case (Seq(dim), batch) =>
+      val hiRow = batch.agg(max("ts_us")).first()
+      if (hiRow.isNullAt(0)) None
+      else {
+        // one update row per user: the batch's latest signup value,
+        // latest by (ts_us, event_id) — deterministic under ties
+        MicroBatchStage.nonEmpty(batch.where(col("event_type") === "signup")
             .groupBy("user_id")
             .agg(max_by(col("value"),
-              struct(col("ts_us"), col("event_id"))).as("value"))
-          if (!updates.isEmpty) {
-            dim = graft.pipeline.Scd2.merge(dim, updates, "user_id",
-              Seq("value"), hi).localCheckpoint()
-          }
-        }
-        batch.unpersist()
-        ()
+              struct(col("ts_us"), col("event_id"))).as("value")))
+          .map(updates => Seq(graft.pipeline.Scd2.merge(
+            dim, updates, "user_id", Seq("value"), hiRow.getLong(0))))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dim
+    }(_.head)
   }
 
   /** Streaming MERGE-INTO sink — [[scd2StreamingSink]]'s stateless
-    * companion: foreachBatch folds each micro-batch into an accumulating
-    * SNAPSHOT (no history) via [[graft.pipeline.MergeInto]]. Per batch,
-    * each user's latest signup/error event (by ts_us, event_id) becomes
-    * the merge action: signup upserts the value, error deletes the row;
-    * the conditional insert clause (op <> 'd') keeps a delete for an
-    * absent user a no-op instead of resurrecting it. Because each batch
+    * companion: a [[MicroBatchStage.fold]] of each micro-batch into an
+    * accumulating SNAPSHOT (no history) via [[graft.pipeline.MergeInto]].
+    * Per batch, each user's latest signup/error event (by ts_us,
+    * event_id) becomes the merge action: signup upserts the value, error
+    * deletes the row; the conditional insert clause (op <> 'd') keeps a
+    * delete for an absent user a no-op instead of resurrecting it. Because each batch
     * applies last-writer-wins per user, the final snapshot equals the
     * one-shot batch rule "globally latest signup/error decides" — the
     * cadence-independent oracle. */
   def mergeStreamingSink(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val staged = stageSortedEventFiles(spark, dir, 4)
-    val ckpt = Bridge.scratchDir("graft_merge_ckpt")
-    val snapSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("value", DoubleType)))
-    var snap = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapSchema)
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
+    val events = readEventsMultiBatch(spark, dir)
     val stream = events
       .where(col("event_type").isin("signup", "error"))
       .select(col("user_id"), col("event_type"), col("value"),
         graft.io.Tables.eventMicros(events).as("ts_us"), col("event_id"))
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val upd = batch.groupBy("user_id")
-          .agg(max_by(struct(col("event_type"), col("value")),
-            struct(col("ts_us"), col("event_id"))).as("last"))
-          .select(col("user_id"),
-            when(col("last.event_type") === "error", lit("d"))
-              .otherwise(lit("u")).as("op"),
-            col("last.value").as("value"))
-        if (!upd.isEmpty) {
-          snap = graft.pipeline.MergeInto.mergeInto(snap, upd, "user_id",
-            matchedDeleteWhen = Some(col("s_op") === "d"),
-            matchedUpdate = Seq("value" -> col("s_value")),
-            notMatchedInsert = Seq("user_id" -> col("s_user_id"),
-              "value" -> col("s_value")),
-            notMatchedInsertWhen = Some(col("s_op") =!= "d"))
-            .localCheckpoint()
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    snap
+    val noSnap = MicroBatchStage.empty(spark,
+      StructType.fromDDL("user_id BIGINT, value DOUBLE"))
+    MicroBatchStage.fold(stream, Seq(noSnap)) { case (Seq(snap), batch) =>
+      val upd = batch.groupBy("user_id")
+        .agg(max_by(struct(col("event_type"), col("value")),
+          struct(col("ts_us"), col("event_id"))).as("last"))
+        .select(col("user_id"),
+          when(col("last.event_type") === "error", lit("d"))
+            .otherwise(lit("u")).as("op"),
+          col("last.value").as("value"))
+      Option.when(!upd.isEmpty)(Seq(graft.pipeline.MergeInto.mergeInto(
+        snap, upd, "user_id",
+        matchedDeleteWhen = Some(col("s_op") === "d"),
+        matchedUpdate = Seq("value" -> col("s_value")),
+        notMatchedInsert = Seq("user_id" -> col("s_user_id"),
+          "value" -> col("s_value")),
+        notMatchedInsertWhen = Some(col("s_op") =!= "d"))))
+    }(_.head)
   }
 
   /** Streaming Kolmogorov–Smirnov drift monitor — the live twin of
@@ -859,40 +798,14 @@ object EventStreams {
     * result ≡ the one-shot batch dq_spearman (identical exact-integer
     * accumulators ⇒ identical bit pattern; shared oracle). */
   def spearmanMonitorSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_sp_ckpt")
-    var acc = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("grp", StringType),
-        StructField("x", DoubleType), StructField("y", LongType),
-        StructField("cnt", LongType))))
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = events.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bc = batch.groupBy(col("event_type").as("grp"),
-            col("value").as("x"),
-            graft.io.Tables.eventMicros(batch).as("y"))
+      nFiles: Int = 4): DataFrame =
+    graft.pipeline.DataQuality.spearmanFromPairCounts(
+      foldCountTable(spark, dir, nFiles,
+        "grp STRING, x DOUBLE, y BIGINT, cnt BIGINT", Seq("grp", "x", "y")) { b =>
+        b.groupBy(col("event_type").as("grp"), col("value").as("x"),
+            graft.io.Tables.eventMicros(b).as("y"))
           .agg(count(lit(1)).as("cnt"))
-        if (!bc.isEmpty) {
-          acc = acc.unionByName(bc)
-            .groupBy("grp", "x", "y").agg(sum("cnt").as("cnt"))
-            .localCheckpoint()
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.pipeline.DataQuality.spearmanFromPairCounts(acc)
-  }
+      })
 
   /** Streaming materialized-aggregate maintenance — the live twin of
     * the d_mv_inc batch refresh: each micro-batch reduces to per-key
@@ -908,37 +821,17 @@ object EventStreams {
     * @return (k, n, total) — key = event_type|user_id, total = cents */
   def mvMaintenanceSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_mv_ckpt")
-    var mv = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("k", StringType),
-        StructField("n", LongType), StructField("total", LongType))))
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = events.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val noMv = MicroBatchStage.empty(spark,
+      StructType.fromDDL("k STRING, n BIGINT, total BIGINT"))
+    MicroBatchStage.fold(readEventsMultiBatch(spark, dir, nFiles), Seq(noMv)) {
+      case (Seq(mv), batch) =>
         val rows = batch.select(
           concat_ws("|", col("event_type"), col("user_id")).as("key"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        if (!rows.isEmpty) {
-          mv = graft.pipeline.IncrementalAgg.refresh(mv,
-            graft.pipeline.IncrementalAgg.delta(
-              rows, col("key"), col("cents"), lit(false)))
-            .localCheckpoint()
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    mv
+        Option.when(!rows.isEmpty)(Seq(graft.pipeline.IncrementalAgg.refresh(mv,
+          graft.pipeline.IncrementalAgg.delta(
+            rows, col("key"), col("cents"), lit(false)))))
+    }(_.head)
   }
 
   /** Streaming TOP-K LEADERBOARD maintenance — the custom TopKPerKey
@@ -952,28 +845,18 @@ object EventStreams {
     * q17_topk_per_key shape; oracle = row_number window).
     * @return (event_type, event_id, cents) — k rows per key */
   def topkLeaderboardSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4, k: Int = 3): DataFrame = {
-    val ckpt = Bridge.scratchDir("graft_topk_ckpt")
-    var standing: Option[DataFrame] = None
-    val q = readEventsMultiBatch(spark, dir, nFiles).writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
+      nFiles: Int = 4, k: Int = 3): DataFrame =
+    MicroBatchStage.fold(readEventsMultiBatch(spark, dir, nFiles), Nil) {
+      (standing, batch) =>
+        Option.when(!batch.isEmpty) {
           val b = batch.select(col("event_type"), col("event_id"),
             floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-          val merged = standing.map(_.unionByName(b)).getOrElse(b)
-          standing = Some(graft.plans.TopKPerKey.topKPerKey(merged,
-            Seq(col("event_type")),
-            Seq(col("cents").desc, col("event_id")), k).localCheckpoint())
+          Seq(graft.plans.TopKPerKey.topKPerKey(
+            standing.headOption.fold(b)(_.unionByName(b)),
+            Seq(col("event_type")), Seq(col("cents").desc, col("event_id")), k))
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    standing.getOrElse(spark.range(0).select(
-      lit("").as("event_type"), lit(0L).as("event_id"), lit(0L).as("cents")))
-  }
+    }(_.headOption.getOrElse(spark.range(0).select(
+      lit("").as("event_type"), lit(0L).as("event_id"), lit(0L).as("cents"))))
 
   /** Streaming CUSUM changepoint monitor — a third fold ALGEBRA next
     * to the additive counts and the min/max semilattices: the CUSUM
@@ -996,76 +879,56 @@ object EventStreams {
   def cusumMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4, targetCents: Long = 5000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
-    val ckpt = Bridge.scratchDir("graft_cus_ckpt")
-    val stSchema = StructType(Seq(
-      StructField("grp", StringType), StructField("cum", LongType),
-      StructField("rmin", LongType), StructField("peak", LongType),
-      StructField("cp_t", LongType), StructField("cp_eid", LongType),
-      StructField("n", LongType)))
-    var st = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stSchema)
-
-    val q = readEventsMultiBatch(spark, dir, nFiles).writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val wc = Window.partitionBy("grp").orderBy(col("t"), col("eid"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-          val loc = batch.select(col("event_type").as("grp"),
-              graft.io.Tables.eventMicros(batch).as("t"),
-              col("event_id").as("eid"),
-              (floor(col("value") * 100 + 0.5).cast("long") -
-                lit(targetCents)).as("dev"))
-            .withColumn("cumb", sum("dev").over(wc))
-            .withColumn("rminb", least(lit(0L), min(col("cumb")).over(wc)))
-            .join(broadcast(st.select(col("grp"), col("cum"), col("rmin"))),
-              Seq("grp"), "left")
-            .withColumn("cumA", coalesce(col("cum"), lit(0L)))
-            .withColumn("rminA", coalesce(col("rmin"), lit(0L)))
-            .withColumn("sadj", col("cumA") + col("cumb") -
-              least(col("rminA"), col("cumA") + col("rminb")))
-            .localCheckpoint()
-          val bpeak = loc.withColumn("rn", row_number().over(
-              Window.partitionBy("grp")
-                .orderBy(col("sadj").desc, col("t"), col("eid"))))
-            .where(col("rn") === 1)
-            .select(col("grp"), col("sadj").as("bpeak"),
-              col("t").as("bt"), col("eid").as("beid"))
-          val blast = loc.withColumn("rn", row_number().over(
-              Window.partitionBy("grp")
-                .orderBy(col("t").desc, col("eid").desc)))
-            .where(col("rn") === 1)
-            .select(col("grp"),
-              (col("cumA") + col("cumb")).as("cum2"),
-              least(col("rminA"), col("cumA") + col("rminb")).as("rmin2"))
-          val bn = loc.groupBy("grp").agg(count(lit(1)).as("bn"))
-          val bsumm = bpeak.join(blast, Seq("grp")).join(bn, Seq("grp"))
-          st = st.join(bsumm, Seq("grp"), "full_outer")
-            .select(col("grp"),
-              coalesce(col("cum2"), col("cum")).as("cum"),
-              coalesce(col("rmin2"), col("rmin")).as("rmin"),
-              // carried peak wins ties: it is the EARLIER occurrence
-              when(col("bpeak").isNull || (col("peak").isNotNull &&
-                  col("peak") >= col("bpeak")), col("peak"))
-                .otherwise(col("bpeak")).as("peak"),
-              when(col("bpeak").isNull || (col("peak").isNotNull &&
-                  col("peak") >= col("bpeak")), col("cp_t"))
-                .otherwise(col("bt")).as("cp_t"),
-              when(col("bpeak").isNull || (col("peak").isNotNull &&
-                  col("peak") >= col("bpeak")), col("cp_eid"))
-                .otherwise(col("beid")).as("cp_eid"),
-              (coalesce(col("n"), lit(0L)) + coalesce(col("bn"), lit(0L)))
-                .as("n"))
-            .localCheckpoint()
-        }
-        ()
+    val noSt = MicroBatchStage.empty(spark, StructType.fromDDL("grp STRING, " +
+      "cum BIGINT, rmin BIGINT, peak BIGINT, cp_t BIGINT, cp_eid BIGINT, n BIGINT"))
+    MicroBatchStage.fold(readEventsMultiBatch(spark, dir, nFiles), Seq(noSt)) {
+      case (Seq(st), batch) => Option.when(!batch.isEmpty) {
+        val wc = Window.partitionBy("grp").orderBy(col("t"), col("eid"))
+          .rowsBetween(Window.unboundedPreceding, 0)
+        val (loc, _) = MicroBatchStage.checkpoint(batch.select(
+            col("event_type").as("grp"),
+            graft.io.Tables.eventMicros(batch).as("t"),
+            col("event_id").as("eid"),
+            (floor(col("value") * 100 + 0.5).cast("long") -
+              lit(targetCents)).as("dev"))
+          .withColumn("cumb", sum("dev").over(wc))
+          .withColumn("rminb", least(lit(0L), min(col("cumb")).over(wc)))
+          .join(broadcast(st.select(col("grp"), col("cum"), col("rmin"))),
+            Seq("grp"), "left")
+          .withColumn("cumA", coalesce(col("cum"), lit(0L)))
+          .withColumn("rminA", coalesce(col("rmin"), lit(0L)))
+          .withColumn("sadj", col("cumA") + col("cumb") -
+            least(col("rminA"), col("cumA") + col("rminb"))))
+        val bpeak = loc.withColumn("rn", row_number().over(
+            Window.partitionBy("grp")
+              .orderBy(col("sadj").desc, col("t"), col("eid"))))
+          .where(col("rn") === 1)
+          .select(col("grp"), col("sadj").as("bpeak"),
+            col("t").as("bt"), col("eid").as("beid"))
+        val blast = loc.withColumn("rn", row_number().over(
+            Window.partitionBy("grp")
+              .orderBy(col("t").desc, col("eid").desc)))
+          .where(col("rn") === 1)
+          .select(col("grp"),
+            (col("cumA") + col("cumb")).as("cum2"),
+            least(col("rminA"), col("cumA") + col("rminb")).as("rmin2"))
+        val bn = loc.groupBy("grp").agg(count(lit(1)).as("bn"))
+        val bsumm = bpeak.join(blast, Seq("grp")).join(bn, Seq("grp"))
+        // carried peak wins ties: it is the EARLIER occurrence
+        val keepPeak = col("bpeak").isNull ||
+          (col("peak").isNotNull && col("peak") >= col("bpeak"))
+        Seq(st.join(bsumm, Seq("grp"), "full_outer")
+          .select(col("grp"),
+            coalesce(col("cum2"), col("cum")).as("cum"),
+            coalesce(col("rmin2"), col("rmin")).as("rmin"),
+            when(keepPeak, col("peak")).otherwise(col("bpeak")).as("peak"),
+            when(keepPeak, col("cp_t")).otherwise(col("bt")).as("cp_t"),
+            when(keepPeak, col("cp_eid")).otherwise(col("beid")).as("cp_eid"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("bn"), lit(0L)))
+              .as("n")))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    st.select(col("grp"), col("n"), col("peak").as("max_cusum"),
-      col("cp_eid").as("cp_event_id"), col("cp_t").as("cp_ts"))
+    }(_.head.select(col("grp"), col("n"), col("peak").as("max_cusum"),
+      col("cp_eid").as("cp_event_id"), col("cp_t").as("cp_ts")))
   }
 
   /** Streaming SURVIVAL-CURVE maintenance — per-user lifetime state is
@@ -1081,12 +944,9 @@ object EventStreams {
   // last-ts, max purchase flag) — shared by the single-curve and
   // per-cohort survival monitors: one fold, two terminals
   private def foldUserLifetimes(spark: SparkSession, dir: String,
-      nFiles: Int): DataFrame = {
-    import org.apache.spark.sql.types._
+      nFiles: Int): DataFrame =
     foldCountTable(spark, dir, nFiles,
-      StructType(Seq(StructField("user_id", LongType),
-        StructField("t0", LongType), StructField("t1", LongType),
-        StructField("evt", LongType))), Seq("user_id"),
+      "user_id BIGINT, t0 BIGINT, t1 BIGINT, evt BIGINT", Seq("user_id"),
       merge = Map("t0" -> "min", "t1" -> "max", "evt" -> "max")) { b =>
       b.select(col("user_id"), graft.io.Tables.eventMicros(b).as("ts_us"),
           col("event_type"))
@@ -1095,7 +955,6 @@ object EventStreams {
           max(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("evt"))
     }
-  }
 
   def survivalMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
@@ -1133,11 +992,9 @@ object EventStreams {
     * one-shot batch e_retention (shared oracle). */
   def retentionMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     val day = 86400L * 1000000L
     val folded = foldCountTable(spark, dir, nFiles,
-      StructType(Seq(StructField("user_id", LongType),
-        StructField("d", LongType), StructField("one", LongType))),
+      "user_id BIGINT, d BIGINT, one BIGINT",
       Seq("user_id", "d"), merge = Map("one" -> "min")) { b =>
       val ts = graft.io.Tables.eventMicros(b)
       b.select(col("user_id"), (ts - (ts % day)).as("d"))
@@ -1161,13 +1018,14 @@ object EventStreams {
     * count table; every remaining column is merged with its entry in
     * `merge` (default sum; min/max extend the fold to join-semilattice
     * state — extrema and indicator sets — with the same cadence-
-    * independence argument: idempotent + commutative + associative). */
+    * independence argument: idempotent + commutative + associative).
+    * `schemaDdl` is the count table's schema, the result of a drain
+    * with no rows. */
   private def foldCountTable(spark: SparkSession, dir: String,
-      nFiles: Int, schema: org.apache.spark.sql.types.StructType,
-      keys: Seq[String], merge: Map[String, String] = Map.empty)(
+      nFiles: Int, schemaDdl: String, keys: Seq[String],
+      merge: Map[String, String] = Map.empty)(
       batchCounts: DataFrame => DataFrame): DataFrame = {
-    val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_cnt_ckpt")
+    val schema = StructType.fromDDL(schemaDdl)
     val sums = schema.fieldNames.filterNot(keys.contains).toSeq
     def agg1(c: String) = merge.getOrElse(c, "sum") match {
       case "sum" => sum(c).as(c)
@@ -1176,30 +1034,13 @@ object EventStreams {
       case other => throw new IllegalArgumentException(
         s"foldCountTable: unknown merge '$other' for column $c")
     }
-    var acc = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = events.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bc = batchCounts(batch)
-        if (!bc.isEmpty) {
-          acc = acc.unionByName(bc)
-            .groupBy(keys.map(col): _*)
-            .agg(agg1(sums.head), sums.tail.map(agg1): _*)
-            .localCheckpoint()
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    acc
+    // the first batch's counts, unique on `keys`, are the state as they stand
+    MicroBatchStage.fold(readEventsMultiBatch(spark, dir, nFiles), Nil) {
+      (state, batch) =>
+        MicroBatchStage.nonEmpty(batchCounts(batch)).map(bc => Seq(state.headOption
+          .fold(bc)(_.unionByName(bc).groupBy(keys.map(col): _*)
+            .agg(agg1(sums.head), sums.tail.map(agg1): _*))))
+    }(_.headOption.getOrElse(MicroBatchStage.empty(spark, schema)))
   }
 
   /** Streaming Benford monitor — the live twin of
@@ -1209,12 +1050,9 @@ object EventStreams {
     * Terminal result ≡ the one-shot batch dq_benford (shared oracle). */
   def benfordMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     graft.pipeline.DataQuality.benfordFromCounts(
       foldCountTable(spark, dir, nFiles,
-        StructType(Seq(StructField("grp", StringType),
-          StructField("digit", IntegerType),
-          StructField("n_obs", LongType))), Seq("grp", "digit")) { b =>
+        "grp STRING, digit INT, n_obs BIGINT", Seq("grp", "digit")) { b =>
         graft.pipeline.DataQuality.digitCounts(b, col("event_type"),
           floor(col("value") * 100 + 0.5).cast("long"))
       })
@@ -1227,15 +1065,15 @@ object EventStreams {
     * batch dq_mad (shared oracle). */
   def madMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    graft.pipeline.DataQuality.madFromCounts(
-      foldCountTable(spark, dir, nFiles,
-        StructType(Seq(StructField("grp", StringType),
-          StructField("c", LongType),
-          StructField("cnt", LongType))), Seq("grp", "c")) { b =>
-        graft.pipeline.DataQuality.centsCounts(b, col("event_type"),
-          floor(col("value") * 100 + 0.5).cast("long"))
-      })
+    val counts = foldCountTable(spark, dir, nFiles,
+        "grp STRING, c BIGINT, cnt BIGINT", Seq("grp", "c")) { b =>
+      graft.pipeline.DataQuality.centsCounts(b, col("event_type"),
+        floor(col("value") * 100 + 0.5).cast("long"))
+    }
+    // the report's lazy checkpoints are computed from the folded counts:
+    // materialized as one checkpoint, the report frees them and the counts
+    val report = graft.pipeline.DataQuality.madFromCounts(counts)
+    MicroBatchStage.checkpoint(report, counts +: Bridge.checkpointsIn(report): _*)._1
   }
 
   /** Streaming IQR (Tukey-fence) outlier monitor — the last dq entry
@@ -1249,12 +1087,9 @@ object EventStreams {
     * one-shot batch dq_outliers_c (shared oracle). */
   def outlierMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     graft.pipeline.DataQuality.iqrOutliersFromCounts(
       foldCountTable(spark, dir, nFiles,
-        StructType(Seq(StructField("grp", StringType),
-          StructField("c", LongType),
-          StructField("cnt", LongType))), Seq("grp", "c")) { b =>
+        "grp STRING, c BIGINT, cnt BIGINT", Seq("grp", "c")) { b =>
         graft.pipeline.DataQuality.centsCounts(b, col("event_type"),
           floor(col("value") * 100 + 0.5).cast("long"))
       })
@@ -1266,13 +1101,9 @@ object EventStreams {
     * Terminal result ≡ the one-shot batch dq_qq (shared oracle). */
   def qqMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     graft.pipeline.DataQuality.qqFromCounts(
       foldCountTable(spark, dir, nFiles,
-        StructType(Seq(StructField("grp", StringType),
-          StructField("v", LongType),
-          StructField("b", LongType),
-          StructField("c", LongType))), Seq("grp", "v")) { batch =>
+        "grp STRING, v BIGINT, b BIGINT, c BIGINT", Seq("grp", "v")) { batch =>
         graft.pipeline.DataQuality.sideCounts(batch, col("event_type"),
           floor(col("value") * 100 + 0.5).cast("long"),
           col("event_id") % 2 =!= 0)
@@ -1286,55 +1117,26 @@ object EventStreams {
     * (shared oracle). */
   def contingencyMonitorSink(spark: SparkSession, dir: String,
       nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     graft.pipeline.DataQuality.contingencyFromCounts(
       foldCountTable(spark, dir, nFiles,
-        StructType(Seq(StructField("a", StringType),
-          StructField("b", StringType),
-          StructField("n_obs", LongType))), Seq("a", "b")) { b =>
+        "a STRING, b STRING, n_obs BIGINT", Seq("a", "b")) { b =>
         graft.pipeline.DataQuality.cellCounts(b, col("event_type"),
           concat(lit("u"), (col("user_id") % 4).cast("string")))
       })
   }
 
-  /** The shared fold: drain the staged event files one micro-batch per
-    * file, reducing each batch to its (group, value) side counts and
-    * key-sum-merging into the accumulated state. Counts are additive →
-    * any batching of the same events ends at the identical table. */
+  /** The side-count fold [[ksMonitorSink]], [[mwuMonitorSink]] and
+    * [[tvdMonitorSink]] share: each batch reduces to its (group, value)
+    * side counts, key-sum-merged into the accumulated state. Counts are
+    * additive → any batching of the same events ends at the identical
+    * table. */
   private def foldSideCounts(spark: SparkSession, dir: String,
-      nFiles: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_ks_ckpt")
-    var acc = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("grp", StringType),
-        StructField("v", DoubleType), StructField("b", LongType),
-        StructField("c", LongType))))
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = events.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bc = graft.pipeline.DataQuality.sideCounts(
-          batch, col("event_type"), col("value"), col("event_id") % 2 =!= 0)
-        if (!bc.isEmpty) {
-          acc = acc.unionByName(bc)
-            .groupBy("grp", "v")
-            .agg(sum("b").as("b"), sum("c").as("c"))
-            .localCheckpoint()
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    acc
-  }
+      nFiles: Int): DataFrame =
+    foldCountTable(spark, dir, nFiles,
+      "grp STRING, v DOUBLE, b BIGINT, c BIGINT", Seq("grp", "v")) { batch =>
+      graft.pipeline.DataQuality.sideCounts(
+        batch, col("event_type"), col("value"), col("event_id") % 2 =!= 0)
+    }
 
   /** Streaming hot-key (skew) monitor — [[ksMonitorSink]]'s companion
     * on the per-key COUNT state: each micro-batch reduces to its
@@ -1345,38 +1147,13 @@ object EventStreams {
     * Terminal result ≡ the one-shot batch dq_skew (shared oracle).
     * @return skewReport's schema */
   def skewMonitorSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val staged = stageSortedEventFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_skew_ckpt")
-    var acc = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("grp", StringType),
-        StructField("k", LongType), StructField("x", LongType))))
-
-    val events = spark.readStream
-      .schema(graft.io.Tables.parquetSchema(spark, s"$dir/events.parquet"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = events.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bc = batch.groupBy(col("event_type").as("grp"),
-            col("user_id").as("k"))
+      nFiles: Int = 4): DataFrame =
+    graft.pipeline.DataQuality.skewFromCounts(
+      foldCountTable(spark, dir, nFiles,
+        "grp STRING, k BIGINT, x BIGINT", Seq("grp", "k")) { b =>
+        b.groupBy(col("event_type").as("grp"), col("user_id").as("k"))
           .agg(count(lit(1)).as("x"))
-        if (!bc.isEmpty) {
-          acc = acc.unionByName(bc)
-            .groupBy("grp", "k").agg(sum("x").as("x"))
-            .localCheckpoint()
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.pipeline.DataQuality.skewFromCounts(acc)
-  }
+      })
 
   /** Gap sessionization on the NATIVE `session_window` aggregate — the
     * Catalyst-built-in twin of the hand-rolled
@@ -1498,7 +1275,7 @@ object EventStreams {
       .toDF()
   }
 
-  /** Exactly-once parquet sink via the idempotent-batch-id foreachBatch
+  /** Exactly-once parquet sink via the idempotent-batch-id drain
     * pattern — the production recipe for sinks WITHOUT a transactional
     * commit log (object stores, plain directories): each micro-batch
     * overwrites its own `batch_id=<id>` subdirectory, so a batch
@@ -1508,17 +1285,10 @@ object EventStreams {
     * checkpoint guarantees batch ids are stable across restarts, which
     * is the whole idempotence key. Blocks until drained. */
   def exactlyOnceParquetSink(df: DataFrame, outDir: String,
-      checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    MicroBatchStage.drain(df, checkpointDir) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
 
   /** Drive a streaming frame into an in-memory table and block until the
     * source drains — the local smoke harness. */

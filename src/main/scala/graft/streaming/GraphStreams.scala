@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, HllSketch}
 import graft.graph.NeighborhoodFunction
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Structured Streaming surface for EDGE streams — the incremental twin
   * of the batch HyperANF machinery ([[graft.graph.NeighborhoodFunction]]).
@@ -42,12 +41,6 @@ object GraphStreams {
 
   // ---- staged edge micro-batches (multi-batch drain harness) ----
 
-  // keyed by applicationId, not the session object (ADVICE r9: a
-  // SparkSession key pins the session and its staged dirs for the JVM
-  // lifetime)
-  private val edgeStageCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), String]
-
   /** Stage the canonical edge list as `nFiles` parquet files with
     * strictly increasing modification times, so a maxFilesPerTrigger=1
     * AvailableNow drain delivers one edge micro-batch per file — the
@@ -58,8 +51,7 @@ object GraphStreams {
     * g_tri_inc), so any split and any batching end at the same state. */
   private def stageEdgeFiles(spark: SparkSession, dir: String,
       nFiles: Int): String =
-    edgeStageCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, nFiles), {
+    MicroBatchStage.staged(spark, "graft_mb_edges", dir, nFiles) { prefix =>
       val e = graft.io.Tables.edges(spark, dir)
       // every hash bucket must be non-empty: the pagerank maintenance
       // sink skips empty micro-batches while its oracle unrolls exactly
@@ -73,10 +65,14 @@ object GraphStreams {
           s"staged edge bucket $k/$nFiles is empty at $dir — " +
             "phase count would not match the unrolled oracle")
       }
-      MicroBatchStage.write("graft_mb_edges", (0 until nFiles).map { k =>
+      MicroBatchStage.write(prefix, (0 until nFiles).map { k =>
         e.where(pmod(col("src") * 7 + col("dst"), lit(nFiles.toLong)) === k)
       })
-    })
+    }
+
+  private def readStagedEdges(spark: SparkSession, dir: String,
+      nFiles: Int): DataFrame =
+    MicroBatchStage.read(spark, stageEdgeFiles(spark, dir, nFiles))
 
   /** Streaming CONNECTED-COMPONENTS maintenance — the incremental
     * family's streaming graph member: edge micro-batches fold into a
@@ -91,36 +87,14 @@ object GraphStreams {
     * cadence — shared oracle (the full-graph closure).
     * @return (v, comp) for every vertex of the drained graph */
   def ccMaintenanceSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_ccm_ckpt")
-    var standing: Option[DataFrame] = None
-
-    val edges = spark.readStream
-      .schema(graft.io.Tables.edges(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = edges.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val next = standing match {
-            case None => graft.graph.ConnectedComponents.run(spark, batch)
-            case Some(st) =>
-              graft.graph.ConnectedComponents.incremental(spark, st, batch)
-          }
-          standing = Some(next.localCheckpoint())
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    standing.getOrElse(
-      spark.emptyDataFrame.select(lit(0L).as("v"), lit(0L).as("comp")).limit(0))
-  }
+      nFiles: Int = 4): DataFrame =
+    MicroBatchStage.fold(readStagedEdges(spark, dir, nFiles), Nil) {
+      (standing, batch) =>
+        Option.when(!batch.isEmpty)(Seq(standing.headOption.fold(
+          graft.graph.ConnectedComponents.run(spark, batch))(
+          graft.graph.ConnectedComponents.incremental(spark, _, batch))))
+    }(_.headOption.getOrElse(
+      spark.emptyDataFrame.select(lit(0L).as("v"), lit(0L).as("comp")).limit(0)))
 
   /** Streaming TRIANGLE-COUNT maintenance — the carried-count shape of
     * [[graft.graph.Triangles.incrementalCount]] folded per micro-batch:
@@ -132,42 +106,20 @@ object GraphStreams {
     * equals the one-shot full-graph triangle count under ANY cadence.
     * @return one row (tri_total BIGINT) */
   def triMaintenanceSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_trim_ckpt")
-    var acc: Option[DataFrame] = None     // accumulated edges
-    var carried: Option[DataFrame] = None // 1-row maintained count
-
-    val edges = spark.readStream
-      .schema(graft.io.Tables.edges(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = edges.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          (acc, carried) match {
-            case (Some(st), Some(cnt)) =>
-              val r = graft.graph.Triangles
-                .incrementalCount(st, batch, cnt).localCheckpoint()
-              carried = Some(r.select(col("tri_total").as("tri_standing")))
-              acc = Some(st.unionAll(batch).localCheckpoint())
-            case _ => // bootstrap: first batch seeds the maintained count
-              carried = Some(graft.graph.Triangles.run(batch)
-                .agg(count(lit(1)).as("tri_standing")).localCheckpoint())
-              acc = Some(batch.localCheckpoint())
-          }
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    carried.getOrElse(spark.range(1).select(lit(0L).as("tri_standing")))
-      .select(col("tri_standing").cast("long").as("tri_total"))
-  }
+      nFiles: Int = 4): DataFrame =
+    // state: the accumulated edges and the 1-row maintained count
+    MicroBatchStage.fold(readStagedEdges(spark, dir, nFiles), Nil) {
+      (state, batch) =>
+        Option.when(!batch.isEmpty)(state match {
+          case Seq(acc, carried) => Seq(acc.unionAll(batch),
+            graft.graph.Triangles.incrementalCount(acc, batch, carried)
+              .select(col("tri_total").as("tri_standing")))
+          case _ => // bootstrap: first batch seeds the maintained count
+            Seq(batch, graft.graph.Triangles.run(batch)
+              .agg(count(lit(1)).as("tri_standing")))
+        })
+    }(_.lastOption.getOrElse(spark.range(1).select(lit(0L).as("tri_standing")))
+      .select(col("tri_standing").cast("long").as("tri_total")))
 
   /** Streaming PAGERANK maintenance — the rank-refresh shape of the
     * nightly-graph pipeline: each edge micro-batch joins the standing
@@ -181,37 +133,11 @@ object GraphStreams {
     * (each batch buys `iters` more iterations), so the oracle unrolls
     * exactly the staged phase sequence. @return (id, rank) round-9 */
   def pagerankMaintenanceSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4, iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_prm_ckpt")
-    var acc: Option[DataFrame] = None
-    var ranks: Option[DataFrame] = None
-
-    val edges = spark.readStream
-      .schema(graft.io.Tables.edges(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = edges.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val union = acc.map(_.unionAll(batch)).getOrElse(batch)
-            .localCheckpoint()
-          acc = Some(union)
-          ranks = Some(graft.graph.PageRank.runFixed(spark, union,
-            graft.io.Tables.GraphN, iterations = iters,
-            init = ranks).localCheckpoint())
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ranks.getOrElse(spark.range(0).select(col("id"), lit(0.0).as("rank")))
-      .select(col("id"), round(col("rank"), 9).as("rank"))
-  }
+      nFiles: Int = 4, iters: Int = 2): DataFrame =
+    warmRanks(spark, dir, nFiles) { (union, ranks) =>
+      graft.graph.PageRank.runFixed(spark, union, graft.io.Tables.GraphN,
+        iterations = iters, init = ranks)
+    }
 
   /** Streaming WEIGHTED PageRank maintenance — [[pagerankMaintenanceSink]]
     * on the weighted surface (completes the streaming × weighted ×
@@ -224,38 +150,28 @@ object GraphStreams {
     * the oracle unrolls the exact staged phase sequence in the
     * weighted algebra. @return (id, rank) round-9 */
   def pagerankWeightedMaintenanceSink(spark: SparkSession, dir: String,
-      nFiles: Int = 4, iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val staged = stageEdgeFiles(spark, dir, nFiles)
-    val ckpt = Bridge.scratchDir("graft_prw_ckpt")
-    var acc: Option[DataFrame] = None
-    var ranks: Option[DataFrame] = None
+      nFiles: Int = 4, iters: Int = 2): DataFrame =
+    warmRanks(spark, dir, nFiles) { (union, ranks) =>
+      graft.graph.PageRank.runFixedWeighted(spark,
+        union.withColumn("w", lit(1L) + (col("src") + col("dst")) % 5),
+        graft.io.Tables.GraphN, iterations = iters, init = ranks)
+    }
 
-    val edges = spark.readStream
-      .schema(graft.io.Tables.edges(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-
-    val q = edges.writeStream
-      .option("checkpointLocation", ckpt.getPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val union = acc.map(_.unionAll(batch)).getOrElse(batch)
-            .localCheckpoint()
-          acc = Some(union)
-          ranks = Some(graft.graph.PageRank.runFixedWeighted(spark,
-            union.withColumn("w", lit(1L) + (col("src") + col("dst")) % 5),
-            graft.io.Tables.GraphN, iterations = iters,
-            init = ranks).localCheckpoint())
+  /** The fold both PageRank maintenance sinks share: state is the
+    * accumulated edges and the carried ranks; each non-empty batch joins
+    * the edges and `rank(union, carried)` continues the ranks warm (cold
+    * on the first batch). The skip matters: the oracles unroll exactly
+    * one phase per staged file. */
+  private def warmRanks(spark: SparkSession, dir: String, nFiles: Int)(
+      rank: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame =
+    MicroBatchStage.fold(readStagedEdges(spark, dir, nFiles), Nil) {
+      (state, batch) =>
+        Option.when(!batch.isEmpty) {
+          val union = state.headOption.fold(batch)(_.unionAll(batch))
+          Seq(union, rank(union, state.lift(1)))
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ranks.getOrElse(spark.range(0).select(col("id"), lit(0.0).as("rank")))
-      .select(col("id"), round(col("rank"), 9).as("rank"))
-  }
+    }(_.lift(1).getOrElse(spark.range(0).select(col("id"), lit(0.0).as("rank")))
+      .select(col("id"), round(col("rank"), 9).as("rank")))
 
   /** Incremental radius-1 ANF ball per vertex over an edge stream:
     * each edge contributes its dst to src's ball and both endpoints to

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The extension class must wire the SQL function and the planner
   * strategy into a fresh session with no imperative registration.
@@ -126,8 +127,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         err.getMessage.toLowerCase.contains("resolve"), err.getMessage.take(200))
       // graft_edges: the connector as a pure-SQL relation, with the
       // grouped pushdown still reaching the scan through the TVF path
-      val dir = java.nio.file.Files.createTempDirectory("graft_tvf_edges")
-      dir.toFile.deleteOnExit()
+      val dir = Bridge.scratchDir("graft_tvf_edges").toPath
       java.nio.file.Files.write(dir.resolve("e.txt"),
         "1 2\n1 3\n2 3\n2 4\n".getBytes)
       val q = spark.sql(

@@ -2,7 +2,7 @@ package graft
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** A query that throws must be reported, not swallowed: it leaves no
   * output dir, so the oracle compare (which checks only the dirs that
@@ -10,7 +10,7 @@ import java.nio.file.Files
 class VerifySpec extends SparkSpec {
 
   test("a throwing builder is reported and the other queries are still dumped") {
-    val out = Files.createTempDirectory("verify").toString
+    val out = Bridge.scratchDir("verify").getPath
     val queries = Seq[(String, (SparkSession, String) => DataFrame)](
       "first" -> ((s, _) => s.range(3).toDF("id")),
       "broken" -> ((_, _) => throw new IllegalStateException("no table")),

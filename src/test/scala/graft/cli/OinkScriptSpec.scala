@@ -3,6 +3,7 @@ package graft.cli
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The interpreter must run the reference's shipped example scripts
   * (small-scale parameter variants) end to end, with results equal to
@@ -11,7 +12,7 @@ class OinkScriptSpec extends SparkSpec {
   import spark.implicits._
 
   test("in.luby shape: rmat -> edge_upper -> luby_find -> print") {
-    val dir = Files.createTempDirectory("oink")
+    val dir = Bridge.scratchDir("oink").toPath
     val out = dir.resolve("mis.csv").toString
     val reg = OinkScript.run(spark, Seq(
       "# OINK script for Luby's algorithm",
@@ -40,7 +41,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("in.wordfreq shape: -var files variable resolves in -i") {
-    val dir = Files.createTempDirectory("oinkwf")
+    val dir = Bridge.scratchDir("oinkwf").toPath
     Files.writeString(dir.resolve("a.txt"), "alpha beta alpha\n")
     Files.writeString(dir.resolve("b.txt"), "beta gamma\n")
     val reg = OinkScript.run(spark, Seq(
@@ -67,7 +68,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("include splices a sub-script in place, with cycle detection") {
-    val dir = Files.createTempDirectory("oinkinc")
+    val dir = Bridge.scratchDir("oinkinc").toPath
     val sub = dir.resolve("sub.oink")
     Files.writeString(sub, "rmat 4 2 0.25 0.25 0.25 0.25 0.0 5 -o NULL mrinc\n")
     val reg = OinkScript.run(spark, Seq(
@@ -88,7 +89,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("sql verb: scripted named-catalog DDL/DML/query round trip") {
-    val wh = Files.createTempDirectory("oinksql").toFile
+    val wh = Bridge.scratchDir("oinksql")
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh.getPath)
     try {
@@ -115,7 +116,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("edge sink refuses an input carrying BOTH weight and label") {
-    val dir = Files.createTempDirectory("oinkwl")
+    val dir = Bridge.scratchDir("oinkwl").toPath
     import spark.implicits._
     Seq((1L, 2L, 1.5, 7L)).toDF("src", "dst", "weight", "label")
       .write.parquet(s"$dir/wl.parquet")
@@ -132,7 +133,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("shell mkdir/cd scope relative sink paths; rm deletes; rest rejected") {
-    val dir = Files.createTempDirectory("oinkshell")
+    val dir = Bridge.scratchDir("oinkshell").toPath
     OinkScript.run(spark, Seq(
       s"shell mkdir $dir/out",
       s"shell cd $dir/out",
@@ -162,7 +163,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("dsv2 verbs: rmat -> write_edge_dsv2 -> read_edge_dsv2 round trip") {
-    val dir = Files.createTempDirectory("oinkdsv2").toString
+    val dir = Bridge.scratchDir("oinkdsv2").getPath
     val reg = OinkScript.run(spark, Seq(
       "rmat 4 3 0.25 0.25 0.25 0.25 0.0 777 -o NULL mre",
       s"write_edge_dsv2 -i mre -o $dir/edges mre2",
@@ -242,8 +243,7 @@ class OinkScriptSpec extends SparkSpec {
 
   test("toposort runs from a script over a DAG object") {
     import spark.implicits._
-    val dag = java.nio.file.Files.createTempDirectory("graft_dag_").toFile
-    dag.deleteOnExit()
+    val dag = Bridge.scratchDir("graft_dag_")
     Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
       .write.mode("overwrite").parquet(dag.getPath)
     val reg = OinkScript.run(spark, Seq(
@@ -409,7 +409,7 @@ class OinkScriptSpec extends SparkSpec {
 
     // asof verb: tiny facts/dim parquet round-tripped through the script
     import spark.implicits._
-    val tmp = Files.createTempDirectory("oinkasof")
+    val tmp = Bridge.scratchDir("oinkasof").toPath
     Seq((0L, 50L, 1L), (0L, 150L, 2L), (1L, 10L, 3L))
       .toDF("k", "t", "fid")
       .write.parquet(tmp.resolve("facts").toString)
@@ -433,7 +433,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("chunk and compact verbs: pipeline prep + table maintenance from a script") {
-    val dir = Files.createTempDirectory("oinkchunk")
+    val dir = Bridge.scratchDir("oinkchunk").toPath
     val tbl = dir.resolve("docs").toString
     spark.range(0L, 40L).selectExpr("id AS doc_id",
         "concat('tok', id, ' tok tok tok tok tok tok tok tok tok') AS text")
@@ -481,7 +481,7 @@ class OinkScriptSpec extends SparkSpec {
 
   test("stream_asof + write_edge_stream verbs: temporal join and epoch sink") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("oinksink").resolve("edges").toString
+    val out = Bridge.scratchDir("oinksink").toPath.resolve("edges").toString
     val ConfKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(ConfKey)
     try {
@@ -516,7 +516,7 @@ class OinkScriptSpec extends SparkSpec {
 
   test("containment, merge, and hard_negatives verbs run from scripts") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("oinkmerge")
+    val tmp = Bridge.scratchDir("oinkmerge").toPath
     Seq((1L, "a", 1), (2L, "b", 2), (3L, "c", 3))
       .toDF("id", "text", "keepme")
       .write.parquet(tmp.resolve("target").toString)
@@ -555,7 +555,7 @@ class OinkScriptSpec extends SparkSpec {
 
   test("setsim, fuzzy_pairs, and fuzzy_entities verbs run from scripts") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("oinkfuzzy")
+    val tmp = Bridge.scratchDir("oinkfuzzy").toPath
     Seq("cold bolt", "old bolt", "bold bolt", "red gear", "red gears",
       "widget").toDF("p_name")
       .write.parquet(tmp.resolve("names").toString)
@@ -580,7 +580,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("cc_inc and tri_inc verbs: incremental maintenance from scripts") {
-    val tmp = Files.createTempDirectory("oinkinc")
+    val tmp = Bridge.scratchDir("oinkinc").toPath
     Seq((0L, 1L), (1L, 2L), (10L, 11L)).toDF("src", "dst")
       .write.parquet(tmp.resolve("standing").toString)
     Seq((2L, 10L), (20L, 21L)).toDF("src", "dst")
@@ -662,8 +662,7 @@ class OinkScriptSpec extends SparkSpec {
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"), col("user_id").as("key"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mv_verb_")
-    tmp.toFile.deleteOnExit()
+    val tmp = Bridge.scratchDir("graft_mv_verb_").toPath
     graft.pipeline.IncrementalAgg.bootstrap(
         ev.where(col("event_id") % 2 === 0), col("key"), col("cents"))
       .write.parquet(s"$tmp/standing")
@@ -682,7 +681,7 @@ class OinkScriptSpec extends SparkSpec {
   test("classify and write_edge_bucketed verbs run from scripts") {
     val docs = "/root/testdata/sf0.001/documents.parquet"
     assume(new java.io.File(docs).exists())
-    val dir = Files.createTempDirectory("oinkbkt").toString
+    val dir = Bridge.scratchDir("oinkbkt").getPath
     val reg = OinkScript.run(spark, Seq(
       s"read_parquet -i $docs -o NULL docs",
       "classify -i docs -o NULL scored",
@@ -700,7 +699,7 @@ class OinkScriptSpec extends SparkSpec {
   }
 
   test("append_edge_idem: the same token appended twice lands exactly once") {
-    val dir = Files.createTempDirectory("oinkidem").toString
+    val dir = Bridge.scratchDir("oinkidem").getPath
     val reg = OinkScript.run(spark, Seq(
       "rmat 5 2 0.25 0.25 0.25 0.25 0.0 7 -o NULL base",
       s"write_edge_bucketed src 2 -i base -o $dir/t b2",

@@ -3,6 +3,7 @@ package graft.graph
 import graft.testkit.SparkSpec
 import graft.io.EdgeListIO
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Golden-file parity with the reference (`/root/reference/result/
   * <name>-pr-p.txt`, checker tolerance 1e-4 per
@@ -210,7 +211,6 @@ class PageRankSpec extends SparkSpec {
 
   test("a converged run of k rounds launches at most k + 3 jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graftbridge.Bridge
     val edges = rmat10.toDF("src", "dst")
     val (_, rounds) = PageRank.runWithStats(spark, edges, None,
       PageRank.DefaultAlpha, PageRank.DefaultTol, PageRank.DefaultMaxIter, 0)
@@ -230,7 +230,7 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("ranks are bit-identical from a 1-partition and a 4-partition read") {
-    val path = java.nio.file.Files.createTempFile("rmat10", ".txt")
+    val path = Bridge.scratchDir("rmat10").toPath.resolve("rmat10.txt")
     java.nio.file.Files.writeString(path, rmat10.map { case (s, d) => s"$s $d\n" }.mkString)
     val key = "spark.sql.files.minPartitionNum"
     def ranks(parts: Int): Map[Long, Double] = {

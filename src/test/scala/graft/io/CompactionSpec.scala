@@ -2,13 +2,13 @@ package graft.io
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   test("compaction rewrites many small files to the size-derived count, content-equal") {
-    val dir = Files.createTempDirectory("graft-compact").resolve("t").toString
+    val dir = Bridge.scratchDir("graft-compact").toPath.resolve("t").toString
     // 64 tiny files
     spark.range(100000L).select(col("id"), (col("id") % 97).as("k"))
       .repartition(64).write.parquet(dir)
@@ -38,7 +38,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a table already at target count is left untouched") {
-    val dir = Files.createTempDirectory("graft-compact2").resolve("t").toString
+    val dir = Bridge.scratchDir("graft-compact2").toPath.resolve("t").toString
     spark.range(1000L).coalesce(1).write.parquet(dir)
     val fileBefore = new java.io.File(dir).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
@@ -52,8 +52,7 @@ class CompactionSpec extends SparkSpec {
 
   test("compacting a bucketed edge table PRESERVES the layout: sidecar, tags, sortedness, SPJ") {
     val fmt = "graft.sources.EdgeListSource"
-    val root = Files.createTempDirectory("graft-compact-b").toFile
-    root.deleteOnExit()
+    val root = Bridge.scratchDir("graft-compact-b")
     val dir = s"$root/t"
     val edges = spark.range(4000L)
       .selectExpr("id % 97 AS src", "(id * 7) % 89 AS dst")
@@ -107,8 +106,7 @@ class CompactionSpec extends SparkSpec {
 
   test("zorder on a bucketed table is BUCKET-LOCAL: layout kept, files z-narrow, SPJ intact") {
     val fmt = "graft.sources.EdgeListSource"
-    val root = Files.createTempDirectory("graft-zorder-b").toFile
-    root.deleteOnExit()
+    val root = Bridge.scratchDir("graft-zorder-b")
     val dir = s"$root/t"
     val edges = spark.range(8000L)
       .selectExpr("id % 97 AS src", "(id * 7) % 89 AS dst")

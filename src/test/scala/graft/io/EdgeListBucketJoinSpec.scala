@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The connector's STORAGE-PARTITIONED JOIN must actually be
   * exchange-free: two edge-list tables bucketed alike report
@@ -20,10 +21,7 @@ class EdgeListBucketJoinSpec extends SparkSpec {
 
   private val fmt = "graft.sources.EdgeListSource"
 
-  private def tmp(): java.io.File = {
-    val f = java.nio.file.Files.createTempDirectory("graft_bktj_").toFile
-    f.deleteOnExit(); f
-  }
+  private def tmp(): java.io.File = Bridge.scratchDir("graft_bktj_")
 
   private def edges(n: Int): DataFrame =
     spark.range(n).selectExpr("id % 97 AS src", "(id * 7) % 89 AS dst")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Seeded randomized sweep of the connector's parser and pushdowns:
   * random edge files (value ranges crossing every literal-width
@@ -34,8 +35,7 @@ class EdgeListFuzzSpec extends SparkSpec {
       val edges = randomEdges(1 + rnd.nextInt(200))
       val nFiles = 1 + rnd.nextInt(3)
       val trailing = rnd.nextBoolean()
-      val dir = Files.createTempDirectory(s"graft_fuzz_$caseIdx")
-      dir.toFile.deleteOnExit()
+      val dir = Bridge.scratchDir(s"graft_fuzz_$caseIdx").toPath
       edges.grouped(math.max(1, edges.size / nFiles)).zipWithIndex.foreach {
         case (part, i) =>
           val body = part.map { case (s, d) => s"$s $d" }.mkString("\n")
@@ -87,8 +87,7 @@ class EdgeListFuzzSpec extends SparkSpec {
       val buckets = 1 + rnd.nextInt(12)
       val tasks = 1 + rnd.nextInt(5)
       val keyCol = if (rnd.nextBoolean()) "src" else "dst"
-      val dir = Files.createTempDirectory(s"graft_fuzz_sb_$caseIdx")
-      dir.toFile.deleteOnExit()
+      val dir = Bridge.scratchDir(s"graft_fuzz_sb_$caseIdx").toPath
       val tag = s"case=$caseIdx n=$n buckets=$buckets tasks=$tasks key=$keyCol"
       edges.toDF("src", "dst").repartition(tasks)
         .write.format(Fmt)

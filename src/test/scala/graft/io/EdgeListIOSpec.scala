@@ -13,7 +13,7 @@ class EdgeListIOSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(content: String): String = {
-    val f = Files.createTempFile("edges", ".txt")
+    val f = Bridge.scratchDir("edges").toPath.resolve("edges.txt")
     Files.writeString(f, content)
     f.toString
   }
@@ -43,7 +43,7 @@ class EdgeListIOSpec extends SparkSpec {
   }
 
   test("readers walk directory trees recursively (file-list map semantics)") {
-    val dir = Files.createTempDirectory("edgetree")
+    val dir = Bridge.scratchDir("edgetree").toPath
     Files.createDirectory(dir.resolve("sub"))
     Files.writeString(dir.resolve("a.txt"), "0 1\n1 2\n")
     Files.writeString(dir.resolve("sub").resolve("b.txt"), "2 3\n")
@@ -54,7 +54,7 @@ class EdgeListIOSpec extends SparkSpec {
   }
 
   test("multi-file validation aborts with the PER-FILE line number") {
-    val dir = Files.createTempDirectory("edgebad")
+    val dir = Bridge.scratchDir("edgebad").toPath
     Files.writeString(dir.resolve("a.txt"), "0 1\n1 2\n2 3\n")
     Files.writeString(dir.resolve("b.txt"), "5 6\nBAD LINE\n")
     val e = intercept[EdgeListIO.InvalidLine] {
@@ -269,7 +269,7 @@ class EdgeListIOSpec extends SparkSpec {
   }
 
   test("files packed into one partition number their lines per file") {
-    val dir = Files.createTempDirectory("edgepack")
+    val dir = Bridge.scratchDir("edgepack").toPath
     Files.writeString(dir.resolve("a.txt"), "0 1\n1 2\n2 3\n3 4\n4 5\n")
     Files.writeString(dir.resolve("b.txt"), "5 6\n6 7\n7 8\n")
     Files.writeString(dir.resolve("c.txt"), "8 9\nx\n")
@@ -285,7 +285,7 @@ class EdgeListIOSpec extends SparkSpec {
 
   test("the returned frame never reads the text again") {
     val vendored = getClass.getResource("/bull.txt").getPath
-    val p = Files.createTempFile("bull", ".txt")
+    val p = Bridge.scratchDir("bull").toPath.resolve("bull.txt")
     Files.copy(Paths.get(vendored), p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val edges = EdgeListIO.readValidated(spark, p.toString)
     Files.delete(p)
@@ -325,8 +325,8 @@ class EdgeListIOSpec extends SparkSpec {
 
   /** The slab writer's file and the oracle's file, as bytes. */
   private def bothGoldens(ranks: DataFrame, slab: Int = EdgeListIO.GoldenSlab): (Seq[Byte], Seq[Byte]) = {
-    val got = Files.createTempFile("golden", ".txt")
-    val want = Files.createTempFile("golden-sorted", ".txt")
+    val got = Bridge.scratchDir("golden").toPath.resolve("golden.txt")
+    val want = Bridge.scratchDir("golden-sorted").toPath.resolve("golden-sorted.txt")
     EdgeListIO.writeGolden(ranks, got.toString, slab)
     sortedGolden(ranks, want.toString)
     (Files.readAllBytes(got).toSeq, Files.readAllBytes(want).toSeq)
@@ -359,7 +359,7 @@ class EdgeListIOSpec extends SparkSpec {
 
   test("writeGolden refuses a frame that is not dense 0..n-1, naming the id") {
     def error(ids: Seq[Long], slab: Int = EdgeListIO.GoldenSlab): String = {
-      val out = Files.createTempFile("golden-bad", ".txt")
+      val out = Bridge.scratchDir("golden-bad").toPath.resolve("golden-bad.txt")
       val e = intercept[IllegalArgumentException] {
         EdgeListIO.writeGolden(ids.map(i => (i, 0.5)).toDF("id", "rank").repartition(3),
           out.toString, slab)

@@ -3,6 +3,7 @@ package graft.io
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** RUNTIME (executor-side) filtering into the connector — the 100 TB
   * star-join shape: a bucketed fact joined to a small dim through a
@@ -22,10 +23,7 @@ class EdgeListRuntimeFilterSpec extends SparkSpec {
 
   private val fmt = "graft.sources.EdgeListSource"
 
-  private def tmp(): java.io.File = {
-    val f = java.nio.file.Files.createTempDirectory("graft_rtf_").toFile
-    f.deleteOnExit(); f
-  }
+  private def tmp(): java.io.File = Bridge.scratchDir("graft_rtf_")
 
   test("broadcast dim's keys prune the bucketed fact's files at execution") {
     val root = tmp()

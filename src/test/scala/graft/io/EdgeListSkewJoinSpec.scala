@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** SPJ SKEW MITIGATION (partially-clustered distribution): a storage-
   * partitioned join runs one task per bucket, so a skewed key inside
@@ -29,10 +30,7 @@ class EdgeListSkewJoinSpec extends SparkSpec {
 
   private val fmt = "graft.sources.EdgeListSource"
 
-  private def tmp(): java.io.File = {
-    val f = java.nio.file.Files.createTempDirectory("graft_skew_").toFile
-    f.deleteOnExit(); f
-  }
+  private def tmp(): java.io.File = Bridge.scratchDir("graft_skew_")
 
   private def withConfs[A](confs: Seq[(String, String)])(f: => A): A = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.testkit.SparkSpec
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The DataSourceV2 edge-list connector must read the reference format
   * byte-identically to the spark.read.text + parse path, at EVERY
@@ -18,8 +19,7 @@ class EdgeListSourceSpec extends SparkSpec {
   private val Fmt = "graft.sources.EdgeListSource"
 
   private def writeEdges(name: String, text: String): String = {
-    val dir = Files.createTempDirectory(s"graft_els_$name")
-    dir.toFile.deleteOnExit()
+    val dir = Bridge.scratchDir(s"graft_els_$name").toPath
     Files.write(dir.resolve("part-0.txt"), text.getBytes(StandardCharsets.UTF_8))
     dir.toString
   }
@@ -205,8 +205,7 @@ class EdgeListSourceSpec extends SparkSpec {
 
   test("write path: round trip, overwrite truncation, append, schema check") {
     import org.apache.spark.sql.functions.{col => c}
-    val dir = Files.createTempDirectory("graft_els_write")
-    dir.toFile.deleteOnExit()
+    val dir = Bridge.scratchDir("graft_els_write").toPath
     val p = dir.toString + "/out"
     val edges = (0 until 50).map(i => (i.toLong, (i * 3 % 31).toLong))
     edges.toDF("src", "dst").repartition(4)
@@ -242,8 +241,7 @@ class EdgeListSourceSpec extends SparkSpec {
   }
 
   test("micro-batch stream: new files arrive as new batches, exactly once") {
-    val dir = Files.createTempDirectory("graft_els_stream")
-    dir.toFile.deleteOnExit()
+    val dir = Bridge.scratchDir("graft_els_stream").toPath
     Files.write(dir.resolve("part-00000.txt"),
       "1 2\n3 4\n".getBytes(StandardCharsets.UTF_8))
     val q = spark.readStream.format(Fmt)
@@ -268,8 +266,7 @@ class EdgeListSourceSpec extends SparkSpec {
   }
 
   test("appended connector writes sort after processed files (offset contract)") {
-    val dir = Files.createTempDirectory("graft_els_appendstream")
-    dir.toFile.deleteOnExit()
+    val dir = Bridge.scratchDir("graft_els_appendstream").toPath
     val p = dir.toString + "/edges"
     // generation 1 through the connector's own writer, 2 task files
     Seq((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L)).toDF("src", "dst")

@@ -2,7 +2,7 @@ package graft.io
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** A long-lived corpus evolves: later ingest batches add columns. The
   * read surface must unify old and new files (missing values null) and
@@ -20,7 +20,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("mergeSchema unifies evolved files; old rows null-fill the new column") {
-    val dir = Files.createTempDirectory("graft-evo").resolve("t").toString
+    val dir = Bridge.scratchDir("graft-evo").toPath.resolve("t").toString
     writeEvolved(dir)
     val df = spark.read.option("mergeSchema", "true").parquet(dir)
     assert(df.columns.toSet == Set("doc_id", "text", "lang"))
@@ -31,7 +31,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("compaction preserves evolved columns and yields a schema-uniform table") {
-    val dir = Files.createTempDirectory("graft-evo2").resolve("t").toString
+    val dir = Bridge.scratchDir("graft-evo2").toPath.resolve("t").toString
     writeEvolved(dir)
     // force a rewrite: tiny target so want < current file count is false;
     // instead inflate file count first

@@ -2,7 +2,7 @@ package graft.io
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -11,7 +11,7 @@ class SinksSpec extends SparkSpec {
     .toDF("id", "tag", "v")
 
   test("csv round-trip preserves rows; single=true yields one file") {
-    val dir = Files.createTempDirectory("sinks-csv").toString
+    val dir = Bridge.scratchDir("sinks-csv").getPath
     Sinks.writeCsv(df, dir, single = true)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
     assert(files.length == 1)
@@ -21,7 +21,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("partitioned parquet prunes on the partition column") {
-    val dir = Files.createTempDirectory("sinks-parq").toString
+    val dir = Bridge.scratchDir("sinks-parq").getPath
     Sinks.writeParquet(df, dir, partitionBy = Seq("tag"))
     assert(new java.io.File(s"$dir/tag=a").exists())
     val back = spark.read.parquet(dir).where(col("tag") === "a")
@@ -32,13 +32,13 @@ class SinksSpec extends SparkSpec {
   }
 
   test("json round-trip") {
-    val dir = Files.createTempDirectory("sinks-json").toString
+    val dir = Bridge.scratchDir("sinks-json").getPath
     Sinks.writeJson(df, dir)
     assert(Sinks.readJson(spark, dir).count() == 3)
   }
 
   test("orc round-trip with partition pruning and filter pushdown") {
-    val dir = Files.createTempDirectory("sinks-orc").toString
+    val dir = Bridge.scratchDir("sinks-orc").getPath
     Sinks.writeOrc(df, dir, partitionBy = Seq("tag"))
     assert(new java.io.File(s"$dir/tag=a").exists())
     val back = Sinks.readOrc(spark, dir)
@@ -55,7 +55,7 @@ class SinksSpec extends SparkSpec {
     // partition must not clobber the other days (static overwrite wipes
     // the whole table root — the classic data-loss footgun)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpo").toString + "/t"
+    val dir = Bridge.scratchDir("graft_dpo").getPath + "/t"
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {

@@ -16,7 +16,7 @@ class TablesSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmpDir(): Path = Files.createTempDirectory("tables-spec")
+  private def tmpDir(): Path = Bridge.scratchDir("tables-spec").toPath
 
   /** Run `body` with `kvs` set on the session, then put each key back. */
   private def withConf[T](kvs: (String, String)*)(body: => T): T = {

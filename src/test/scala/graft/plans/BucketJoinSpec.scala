@@ -4,6 +4,7 @@ import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The bucketed co-located join must actually be shuffle-free: both
   * sides CLUSTERED BY the join key into the same bucket count, so the
@@ -18,7 +19,7 @@ class BucketJoinSpec extends SparkSpec {
 
   test("q45's join plans a bucket-local sort-merge join with zero exchanges") {
     val runId = java.util.UUID.randomUUID().toString.replace("-", "_")
-    val loc = java.nio.file.Files.createTempDirectory("graft_bktspec_").toFile
+    val loc = Bridge.scratchDir("graft_bktspec_")
     val li = s"bktspec_li_$runId"; val od = s"bktspec_od_$runId"
     try {
       graft.io.Tables.lineitem(spark, dir)

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The two runtime re-plan features a 100 TB deployment leans on,
   * demonstrated live so a conf regression can't silently disable them:
@@ -106,7 +107,7 @@ class ScaleFeaturesSpec extends SparkSpec {
     // filter (2 of 20 keys) must reach the fact SCAN as a
     // DynamicPruningExpression — at 100 TB this is the difference between
     // reading 2 partitions and reading all of them
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = Bridge.scratchDir("graft-dpp").getPath
     spark.range(100000L)
       .select((col("id") % 20).as("pk"), col("id").as("v"))
       .write.mode("overwrite").partitionBy("pk").parquet(dir)

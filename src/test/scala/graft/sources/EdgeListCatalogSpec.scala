@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The connector as a SQL DML target: the path-based catalog resolves
   * CREATE / INSERT / SELECT / DELETE / RENAME / DROP, and deletes are
@@ -15,7 +15,7 @@ class EdgeListCatalogSpec extends SparkSpec {
   spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
 
   private def freshTable(): String = {
-    val dir = Files.createTempDirectory("graftcat").resolve("edges")
+    val dir = Bridge.scratchDir("graftcat").toPath.resolve("edges")
     s"graft.`$dir`"
   }
 
@@ -86,7 +86,7 @@ class EdgeListCatalogSpec extends SparkSpec {
   }
 
   test("delete rewrites only files with matches (atomic, others untouched)") {
-    val root = Files.createTempDirectory("graftcat").resolve("edges").toString
+    val root = Bridge.scratchDir("graftcat").toPath.resolve("edges").toString
     Seq((1L, 2L)).toDF("src", "dst").coalesce(1)
       .write.format("graft.sources.EdgeListSource").mode("append").save(root)
     Seq((3L, 4L)).toDF("src", "dst").coalesce(1)
@@ -107,7 +107,7 @@ class EdgeListCatalogSpec extends SparkSpec {
   }
 
   test("_file metadata column exposes row provenance") {
-    val root = Files.createTempDirectory("graftcat").resolve("edges").toString
+    val root = Bridge.scratchDir("graftcat").toPath.resolve("edges").toString
     Seq((1L, 2L)).toDF("src", "dst").coalesce(1)
       .write.format("graft.sources.EdgeListSource").mode("append").save(root)
     Seq((3L, 4L)).toDF("src", "dst").coalesce(1)
@@ -121,7 +121,7 @@ class EdgeListCatalogSpec extends SparkSpec {
   }
 
   test("CREATE rejects a wrong schema; RENAME moves the directory") {
-    val dir = Files.createTempDirectory("graftcat")
+    val dir = Bridge.scratchDir("graftcat").toPath
     val bad = s"graft.`${dir.resolve("bad")}`"
     intercept[Exception](
       spark.sql(s"CREATE TABLE $bad (a INT, b STRING)"))
@@ -136,7 +136,7 @@ class EdgeListCatalogSpec extends SparkSpec {
   }
 
   test("named tables under a warehouse: namespaces, listing, rename, errors") {
-    val wh = Files.createTempDirectory("graftwh").toFile
+    val wh = Bridge.scratchDir("graftwh")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh.getPath)
     try {
       spark.sql("CREATE NAMESPACE graft.mart")
@@ -171,14 +171,14 @@ class EdgeListCatalogSpec extends SparkSpec {
       spark.sql("DROP NAMESPACE graft.raw CASCADE")
       assert(!new java.io.File(wh, "raw").exists())
       // the path-literal face is untouched by the warehouse conf
-      val abs = Files.createTempDirectory("graftcat").resolve("absedges")
+      val abs = Bridge.scratchDir("graftcat").toPath.resolve("absedges")
       spark.sql(s"CREATE TABLE graft.`$abs` (src BIGINT, dst BIGINT)")
       assert(new java.io.File(abs.toString).isDirectory)
     } finally spark.conf.unset("spark.sql.catalog.graft.warehouse")
   }
 
   test("PARTITIONED BY (bucket(n, src)) at CREATE: inserts ride the layout") {
-    val wh = Files.createTempDirectory("graftwh").toFile
+    val wh = Bridge.scratchDir("graftwh")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh.getPath)
     try {
       spark.sql("CREATE TABLE graft.db.be (src BIGINT, dst BIGINT)" +

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The reference's labeled edge format (`vi vj label`, integer label —
   * read_edge_label, `sscanf %lu %lu %d`) through the DSv2 connector. */
@@ -13,7 +14,7 @@ class EdgeListLabeledSpec extends SparkSpec {
   private val fmt = "graft.sources.EdgeListSource"
 
   private def freshDir(): java.io.File =
-    Files.createTempDirectory("graft_l").resolve("edges").toFile
+    Bridge.scratchDir("graft_l").toPath.resolve("edges").toFile
 
   test("labeled write -> read round trip, including negative labels") {
     val dir = freshDir()

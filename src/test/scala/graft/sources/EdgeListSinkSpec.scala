@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.connector.write.WriterCommitMessage
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The connector's streaming sink must be exactly-once under Spark's
   * epoch-replay contract: a failed micro-batch re-runs with the same
@@ -16,8 +17,7 @@ class EdgeListSinkSpec extends SparkSpec {
   private val Fmt = "graft.sources.EdgeListSource"
 
   private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_sink_$tag")
-    d.toFile.deleteOnExit()
+    val d = Bridge.scratchDir(s"graft_sink_$tag").toPath
     d.toString
   }
 

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Zone-map sidecars (`_stats/<file>.zmap`): written at commit, used to
   * skip whole files whose min/max ranges can't satisfy pushed filters —
@@ -16,7 +16,7 @@ class EdgeListStatsSpec extends SparkSpec {
 
   /** Two single-file generations with disjoint src ranges. */
   private def twoFileTable(): String = {
-    val root = Files.createTempDirectory("graftzmap").resolve("edges").toString
+    val root = Bridge.scratchDir("graftzmap").toPath.resolve("edges").toString
     Seq((1L, 100L), (2L, 200L), (3L, 300L)).toDF("src", "dst").coalesce(1)
       .write.format(Fmt).mode("append").save(root)
     Seq((10L, 1000L), (11L, 1100L)).toDF("src", "dst").coalesce(1)
@@ -179,7 +179,7 @@ class EdgeListStatsSpec extends SparkSpec {
     // 4 appended files, EACH spanning the whole 64x64 key plane
     // ((src+dst)%4 slicing) -> zone maps are useless: every file plans
     // for any point or range query
-    val root = Files.createTempDirectory("graftzord").resolve("edges").toString
+    val root = Bridge.scratchDir("graftzord").toPath.resolve("edges").toString
     val all = for { s <- 0L until 64L; d <- 0L until 64L } yield (s, d)
     for (slice <- 0 until 4)
       all.filter { case (s, d) => (s + d) % 4 == slice }

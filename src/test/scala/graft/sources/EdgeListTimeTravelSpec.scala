@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.testkit.SparkSpec
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Snapshot manifests + time travel: every connector commit records a
   * `_graft_log` manifest; pinned reads (option / SQL VERSION AS OF /
@@ -16,7 +17,7 @@ class EdgeListTimeTravelSpec extends SparkSpec {
   private val fmt = "graft.sources.EdgeListSource"
 
   private def freshDir(): java.io.File =
-    Files.createTempDirectory("graft_tt").resolve("edges").toFile
+    Bridge.scratchDir("graft_tt").toPath.resolve("edges").toFile
 
   private def write(dir: java.io.File, rows: Seq[(Long, Long)],
       mode: String = "append"): Unit =
@@ -106,10 +107,10 @@ class EdgeListTimeTravelSpec extends SparkSpec {
 
   test("streaming epochs commit versions; replay does not duplicate them") {
     val dir = freshDir()
-    val src = Files.createTempDirectory("graft_tt_src").toFile
+    val src = Bridge.scratchDir("graft_tt_src")
     write(src, Seq((1L, 2L)))
     write(src, Seq((3L, 4L)))
-    val ckpt = Files.createTempDirectory("graft_tt_ckpt").toFile
+    val ckpt = Bridge.scratchDir("graft_tt_ckpt")
     val q = spark.readStream.format(fmt)
       .option("maxFilesPerTrigger", "1").load(src.getPath)
       .writeStream.format(fmt)
@@ -203,7 +204,7 @@ class EdgeListTimeTravelSpec extends SparkSpec {
     assert(chain(e1).exists(c => c.getMessage != null &&
       c.getMessage.contains("no snapshot version 99")))
     // a directory written outside the connector has no log
-    val raw = Files.createTempDirectory("graft_tt_raw").toFile
+    val raw = Bridge.scratchDir("graft_tt_raw")
     java.nio.file.Files.write(new java.io.File(raw, "e.txt").toPath,
       "1 2\n".getBytes("UTF-8"))
     val e2 = intercept[Exception] {

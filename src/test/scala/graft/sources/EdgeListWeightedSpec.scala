@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The reference's weighted edge format (`vi vj weight`,
   * read_edge_weight) through the DSv2 connector: opt-in 3-column
@@ -15,7 +16,7 @@ class EdgeListWeightedSpec extends SparkSpec {
   private val fmt = "graft.sources.EdgeListSource"
 
   private def freshDir(): java.io.File =
-    Files.createTempDirectory("graft_w").resolve("edges").toFile
+    Bridge.scratchDir("graft_w").toPath.resolve("edges").toFile
 
   test("weighted write -> read round trip is bit-exact, including ugly doubles") {
     val dir = freshDir()
@@ -141,7 +142,7 @@ class EdgeListWeightedSpec extends SparkSpec {
       .write.format(fmt).option("withWeight", "true")
       .mode("append").save(src.getPath)
     val out = freshDir()
-    val ckpt = Files.createTempDirectory("graft_w_ckpt").toFile
+    val ckpt = Bridge.scratchDir("graft_w_ckpt")
     val q = spark.readStream.format(fmt).option("withWeight", "true")
       .option("maxFilesPerTrigger", "1").load(src.getPath)
       .writeStream.format(fmt).option("withWeight", "true")

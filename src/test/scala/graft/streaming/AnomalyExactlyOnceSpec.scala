@@ -3,7 +3,7 @@ package graft.streaming
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The streaming 3-sigma anomaly flags must agree with an exact batch
   * window replica, and the idempotent-batch-id foreachBatch sink must
@@ -50,7 +50,7 @@ class AnomalyExactlyOnceSpec extends SparkSpec {
     // 20 steady values then one spike, one event type
     val rows = (1L to 20L).map(i => (i, "t", i * 1000000L, 50.0)) :+
       ((21L, "t", 21L * 1000000L, 5000.0))
-    val src = Files.createTempDirectory("graft_anom_src").toFile
+    val src = Bridge.scratchDir("graft_anom_src")
     rows.toDF("event_id", "event_type", "ts", "value")
       .withColumn("ts", timestamp_micros(col("ts")))
       .coalesce(1).write.mode("overwrite").parquet(src.getPath)
@@ -68,7 +68,7 @@ class AnomalyExactlyOnceSpec extends SparkSpec {
   }
 
   test("exactly-once sink: a replayed batch overwrites, never duplicates") {
-    val root = Files.createTempDirectory("graft_eo_spec").toFile
+    val root = Bridge.scratchDir("graft_eo_spec")
     val out = new java.io.File(root, "out")
     val ckpt = new java.io.File(root, "ckpt")
     def run(): Unit = {

@@ -5,6 +5,7 @@ import graft.graph.NeighborhoodFunction
 import graft.io.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The streaming radius-1 ANF ball must equal the batch HyperANF r=1
   * rows bit-for-bit once the stream drains (registers merge by max —
@@ -34,7 +35,7 @@ class GraphStreamsSpec extends SparkSpec {
     val whole = NeighborhoodFunction.run(spark, edges.toDF("src", "dst"), 1)
       .where(col("r") === 1).select("v", "n_est")
     // stream the same edges one file (= one micro-batch) at a time
-    val tmp = java.nio.file.Files.createTempDirectory("edge-stream").toString
+    val tmp = Bridge.scratchDir("edge-stream").getPath
     val schema = edges.toDF("src", "dst").schema
     val stream = spark.readStream.schema(schema).parquet(tmp)
     // a continuous-trigger query (runToMemory's AvailableNow would stop

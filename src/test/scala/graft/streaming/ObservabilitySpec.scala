@@ -3,6 +3,7 @@ package graft.streaming
 import graft.testkit.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Operational-telemetry proofs: the numbers an on-call engineer reads
   * off a 100 TB stream. Late rows beyond the watermark must be DROPPED
@@ -46,7 +47,7 @@ class ObservabilitySpec extends SparkSpec {
 
   test("RocksDB changelog checkpointing survives a restart exactly") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_rdb_restart").toFile
+    val root = Bridge.scratchDir("graft_rdb_restart")
     val (src, sink, ckpt) = (new java.io.File(root, "src"),
       new java.io.File(root, "sink"), new java.io.File(root, "ckpt"))
     src.mkdirs()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Checkpoint/restart fault-tolerance proof: a watermarked stateful
   * aggregation is stopped mid-stream and RESTARTED from its checkpoint,
@@ -63,7 +64,7 @@ class RestartSpec extends SparkSpec {
   }
 
   test("stateful windowed agg survives stop + checkpoint restart exactly-once") {
-    val root = Files.createTempDirectory("graft-restart").toFile
+    val root = Bridge.scratchDir("graft-restart")
     val staged = stageSlices(root)
     val src = new java.io.File(root, "src"); src.mkdirs()
     val (sink, ckpt) = (new java.io.File(root, "sink"), new java.io.File(root, "ckpt"))
@@ -109,7 +110,7 @@ class RestartSpec extends SparkSpec {
     // the encoder-serialized custom state path, not the built-in window
     // store: phase-2 rows must carry n_prior counts that CONTINUE from
     // phase-1 state rehydrated out of the checkpoint
-    val root = Files.createTempDirectory("graft-restart-fgws").toFile
+    val root = Bridge.scratchDir("graft-restart-fgws")
     val staged = stageSlices(root)
     val src = new java.io.File(root, "src"); src.mkdirs()
     def place(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
@@ -148,7 +149,7 @@ class RestartSpec extends SparkSpec {
     spark.conf.set(ConfKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val root = Files.createTempDirectory("graft-restart-ssasof").toFile
+      val root = Bridge.scratchDir("graft-restart-ssasof")
       val staged = stageSlices(root)
       val src = new java.io.File(root, "src"); src.mkdirs()
       def place(fs: Seq[java.io.File]): Unit = fs.foreach { f =>

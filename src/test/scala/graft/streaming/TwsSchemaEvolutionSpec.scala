@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** STATE SCHEMA EVOLUTION on `transformWithState`: a long-lived
   * pipeline must be able to add a field to its running state (a new
@@ -54,8 +55,7 @@ class TwsSchemaEvolutionSpec extends SparkSpec {
   }
 
   test("adding a state field mid-stream: avro-encoded state rehydrates and continues") {
-    val root = Files.createTempDirectory("graft-tws-evolve").toFile
-    root.deleteOnExit()
+    val root = Bridge.scratchDir("graft-tws-evolve")
     val staged = new java.io.File(EventStreams.stagedEventsDir(spark, sfDir, 4))
       .listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val src = new java.io.File(root, "src"); src.mkdirs()

@@ -2,6 +2,7 @@ package graft.testkit
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Shared local SparkSession for all suites (one JVM per `sbt test`
   * fork; suites share the session to amortize the ~10 s startup). */
@@ -22,7 +23,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // managed tables (bucketed-write specs) land in /tmp, not the repo
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        Bridge.scratchDir("graft-warehouse").getPath)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

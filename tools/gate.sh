@@ -5,7 +5,8 @@
 #
 #   tools/gate.sh [sfDir]          default /root/testdata/sf0.01
 #
-# Runs: sbt test -> graft.tools.EntrySmoke -> CLI pagerank on bull (cmp against
+# Runs: sbt test (then lists the graft* entries it left in /tmp) ->
+#   graft.tools.EntrySmoke -> CLI pagerank on bull (cmp against
 #   src/test/resources/bull-pr.expected) -> perfbench sbt test -> graft.Verify
 #   -> tools/check_oracle.py -> graft.Bench.
 # Every stage runs even when an earlier one failed (on a host without the
@@ -28,9 +29,18 @@ fail() {
   fi
 }
 
+# the graft* entries of /tmp before the tests: a test's scratch
+# directory must be gone when its JVM exits (Bridge.scratchDir)
+TMP_BEFORE="$(ls -1 /tmp | grep '^graft' | sort)"
+
 echo "== gate: sbt test =="
 sbt -batch test 2>&1 | tail -6
 fail "sbt test" "${PIPESTATUS[0]}"
+
+echo "== gate: test scratch left in /tmp =="
+LEFT="$(ls -1 /tmp | grep '^graft' | sort | comm -13 <(echo "$TMP_BEFORE") -)"
+[ -n "$LEFT" ] && echo "$LEFT"
+fail "test scratch left in /tmp" "$([ -z "$LEFT" ]; echo $?)"
 
 # the t1 smoke: SparkEntry.entry on a bare session (no graft conf)
 echo "== gate: graft.tools.EntrySmoke =="
