@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import graft.sources.EdgeListCatalog
 
 /** Benchmark main — one JSON line on stdout per the driver contract.
   *
@@ -270,15 +271,16 @@ object Bench {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("l_suppkey")
         .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-      def windowed = li.withColumn("rn", row_number().over(w)).where(col("rn") <= 10).drop("rn")
       // the TopKRewrite optimizer rule would silently turn THIS side
-      // into the custom operator too — hold it off so the comparison
-      // stays custom-vs-builtin
-      spark.conf.set(graft.plans.TopKRewrite.ConfKey, "false")
-      val windowSec = try {
-        materialize(windowed) // warm
-        timeIt(materialize(windowed))
-      } finally spark.conf.unset(graft.plans.TopKRewrite.ConfKey)
+      // into the custom operator too — hold it off (on a session copy)
+      // so the comparison stays custom-vs-builtin
+      val liBuiltin = Bridge.ofRows(
+        Bridge.cloneSession(spark, graft.plans.TopKRewrite.ConfKey -> "false"),
+        li.queryExecution.logical)
+      def windowed =
+        liBuiltin.withColumn("rn", row_number().over(w)).where(col("rn") <= 10).drop("rn")
+      materialize(windowed) // warm
+      val windowSec = timeIt(materialize(windowed))
       Seq("topk_custom_sec" -> topkCustom,
         "topk_window_sec" -> windowSec)
     }
@@ -304,16 +306,10 @@ object Bench {
       val fmgws = drainSec(graft.streaming.EventStreams.runningStatsStream(
         spark, graft.streaming.EventStreams.readEvents(spark, sfDir)),
         "bench_run_fmgws")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val tws = try drainSec(graft.streaming.TwsOperators.runningStatsStreamTws(
-        spark, graft.streaming.EventStreams.readEvents(spark, sfDir)),
+      val rocks = Bridge.cloneSession(spark, graft.queries.StreamingGateQueries.RocksDb)
+      val tws = drainSec(graft.streaming.TwsOperators.runningStatsStreamTws(
+        rocks, graft.streaming.EventStreams.readEvents(rocks, sfDir)),
         "bench_run_tws")
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key)
-      }
       Seq("stream_rows_per_sec" -> (if (streamSec > 0) nEvents / streamSec else 0.0),
         "running_fmgws_sec" -> fmgws, "running_tws_rocksdb_sec" -> tws)
     }
@@ -455,7 +451,6 @@ object Bench {
     // gap is what the layout buys EVERY downstream join on the key.
     val bucketSpj = section("bucket_spj") {
       val root = Bridge.scratchDir("graft_bench_spj")
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmtName = "graft.sources.EdgeListSource"
       val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey").cast("long").as("src"),
@@ -487,20 +482,10 @@ object Bench {
           s"CAST(sum(a.dst + b.dst) AS BIGINT) AS s " +
           s"FROM graft.`$root/$fa` a JOIN graft.`$root/$di` b " +
           "ON a.src = b.src"
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      def spj(): Unit = {
-        // save/restore (not unset) so pre-existing session values for
-        // the v2 bucketing confs survive later bench sections
-        val prior = keys.map(k => k -> spark.conf.getOption(k))
-        keys.foreach(spark.conf.set(_, "true"))
-        try materialize(spark.sql(q("fact_b", "dim_b")))
-        finally prior.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
-      def plain(): Unit = materialize(spark.sql(q("fact_p", "dim_p")))
+      val spjOn = Bridge.cloneSession(spark, EdgeListCatalog.SpjConfs: _*)
+      val spjOff = Bridge.cloneSession(spark, EdgeListCatalog.Mount)
+      def spj(): Unit = materialize(spjOn.sql(q("fact_b", "dim_b")))
+      def plain(): Unit = materialize(spjOff.sql(q("fact_p", "dim_p")))
       spj(); plain() // warm
       val ts = (1 to 3).map(_ => timeIt(spj())).sorted
       val tp = (1 to 3).map(_ => timeIt(plain())).sorted
@@ -516,7 +501,6 @@ object Bench {
     // it matters, on the skewed table where the tail dominates.
     val bucketSkew = section("bucket_skew") {
       val root = Bridge.scratchDir("graft_bench_skw")
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmtName = "graft.sources.EdgeListSource"
       // 20M rows, 50% remapped onto one hot key; 8 write tasks x 32
       // buckets → the hot bucket lands as 8 splittable files. Sizing
@@ -538,20 +522,12 @@ object Bench {
         s"CAST(sum(a.dst + b.dst) AS BIGINT) AS s " +
         s"FROM graft.`$root/fact_sk` a JOIN graft.`$root/dim_sk` b " +
         "ON a.src = b.src GROUP BY a.src"
-      val base = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val pcKey =
-        "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled"
-      def run(partial: Boolean): Unit = {
-        val keys = if (partial) base :+ pcKey else base
-        val prior = keys.map(k => k -> spark.conf.getOption(k))
-        keys.foreach(spark.conf.set(_, "true"))
-        try materialize(spark.sql(q))
-        finally prior.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
+      val spjOn = Bridge.cloneSession(spark, EdgeListCatalog.SpjConfs: _*)
+      val clustered = Bridge.cloneSession(spark, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled"
+          -> "true"): _*)
+      def run(partial: Boolean): Unit =
+        materialize((if (partial) clustered else spjOn).sql(q))
       run(partial = false); run(partial = true) // warm
       val tPlain = (1 to 3).map(_ => timeIt(run(partial = false))).sorted
       val tPart = (1 to 3).map(_ => timeIt(run(partial = true))).sorted
@@ -565,7 +541,6 @@ object Bench {
     // layout buys every multi-column-key join.
     val bucketGrid = section("bucket_grid") {
       val root = Bridge.scratchDir("graft_bench_grid")
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmtName = "graft.sources.EdgeListSource"
       val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey").cast("long").as("src"),
@@ -588,18 +563,10 @@ object Bench {
         s"SELECT /*+ MERGE(a) */ count(*) AS n " +
           s"FROM graft.`$root/$fa` a JOIN graft.`$root/$su` b " +
           "ON a.src = b.src AND a.dst = b.dst"
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      def spj(): Unit = {
-        val prior = keys.map(k => k -> spark.conf.getOption(k))
-        keys.foreach(spark.conf.set(_, "true"))
-        try materialize(spark.sql(q("fact_g", "sub_g")))
-        finally prior.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
-      def plain(): Unit = materialize(spark.sql(q("fact_p", "sub_p")))
+      val spjOn = Bridge.cloneSession(spark, EdgeListCatalog.SpjConfs: _*)
+      val spjOff = Bridge.cloneSession(spark, EdgeListCatalog.Mount)
+      def spj(): Unit = materialize(spjOn.sql(q("fact_g", "sub_g")))
+      def plain(): Unit = materialize(spjOff.sql(q("fact_p", "sub_p")))
       spj(); plain() // warm
       val ts = (1 to 3).map(_ => timeIt(spj())).sorted
       val tp = (1 to 3).map(_ => timeIt(plain())).sorted

@@ -95,16 +95,8 @@ object RandomWalks {
   /** Range-sorted (src, dst, gidx) with gidx a global sort index —
     * zipWithIndex's count pass + per-partition offsets; the returned
     * frame is persisted (both rankedAdjacency consumers read it) and
-    * released by rankedAdjacency once joined.
-    *
-    * zipWithIndex's two passes each execute the range sort. Whether to
-    * cache the sorted edges across them instead is a SCALE trade,
-    * switched by `spark.graft.walks.cacheSorted` (default false):
-    * measured at sf0.1/local[32] the cache round-trip + extra
-    * materialize job LOSES (g_walks 3.9 s → 5.0 s median — the sort is
-    * latency-bound, not data-bound, on a 15 k-edge frame), while on a
-    * data-bound 100 TB edge list sorting once is the only sane plan —
-    * set the conf to true there. */
+    * released by rankedAdjacency once joined. zipWithIndex's two passes
+    * each execute the range sort. */
   private[graph] def indexedEdges(spark: SparkSession,
       edges: DataFrame): DataFrame = {
     import spark.implicits._
@@ -116,22 +108,10 @@ object RandomWalks {
     // zipWithIndex = one count job for partition sizes, then a lazy map
     // adding offset + position — no per-src task ever sees more than a
     // partition's worth of one hub's edges
-    if (spark.conf.get("spark.graft.walks.cacheSorted", "false").toBoolean) {
-      val cached = sorted.rdd.map(r => (r.getLong(0), r.getLong(1)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val idx = cached.zipWithIndex()
-        .map { case ((s, d), i) => (s, d, i) }
-        .toDF("src", "dst", "gidx")
-        .persist()
-      idx.count() // materialize from the sorted cache, then drop it
-      cached.unpersist(false)
-      idx
-    } else {
-      sorted.rdd.zipWithIndex()
-        .map { case (r, i) => (r.getLong(0), r.getLong(1), i) }
-        .toDF("src", "dst", "gidx")
-        .persist()
-    }
+    sorted.rdd.zipWithIndex()
+      .map { case (r, i) => (r.getLong(0), r.getLong(1), i) }
+      .toDF("src", "dst", "gidx")
+      .persist()
   }
 
   /** Unrolled DuckDB oracle: identical ranked adjacency, identical

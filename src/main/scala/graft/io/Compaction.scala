@@ -243,26 +243,22 @@ object Compaction {
           .find(c => !base.columns.contains(c)).get
         val zc = Iterator.from(0).map(i => s"__zv$i")
           .find(c => !base.columns.contains(c)).get
-        val laid = base.select(col("*"), col("_file"))
+        val laid = ZOrder.withExactRangeSampling(base.select(col("*"), col("_file"))
           .withColumn(bc,
             regexp_extract(col("_file"), "-b(\\d+)\\.txt$", 1).cast("int"))
           .drop("_file")
           .withColumn(zc,
             ZOrder.zValueClamped(Seq(col("src"), col("dst")), bits))
           .repartitionByRange(math.max(numFiles, n), col(bc), col(zc))
-          .drop(bc, zc)
-        ZOrder.withExactRangeSampling(laid) {
-          opt.foldLeft(laid.write.format(fmt))(_.option(_, "true"))
-            .option("bucketBy", bcol).option("numBuckets", n.toString)
-            .mode(SaveMode.Overwrite).save(tmp.toString)
-        }
+          .drop(bc, zc))
+        opt.foldLeft(laid.write.format(fmt))(_.option(_, "true"))
+          .option("bucketBy", bcol).option("numBuckets", n.toString)
+          .mode(SaveMode.Overwrite).save(tmp.toString)
       case None =>
-        val laid = ZOrder.layoutBy(rd.load(dir),
-          Seq(col("src"), col("dst")), bits, numFiles)
-        ZOrder.withExactRangeSampling(laid) {
-          opt.foldLeft(laid.write.format(fmt))(_.option(_, "true"))
-            .mode(SaveMode.Overwrite).save(tmp.toString)
-        }
+        val laid = ZOrder.withExactRangeSampling(ZOrder.layoutBy(rd.load(dir),
+          Seq(col("src"), col("dst")), bits, numFiles))
+        opt.foldLeft(laid.write.format(fmt))(_.option(_, "true"))
+          .mode(SaveMode.Overwrite).save(tmp.toString)
     }
     swapWithLogHistory(fs, p, tmp, bak, "zorder")
     Report(files.length, dataFiles(spark, dir).length, bytes, bytes)

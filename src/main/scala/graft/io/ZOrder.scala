@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Z-order (Morton-curve) layout: interleave the bits of several columns
   * into one sort key so that range-partitioning + sorting on it clusters
@@ -50,33 +51,27 @@ object ZOrder {
     terms.mkString(" + ")
   }
 
-  /** Run `body` with the range-exchange sampler turned up so
-    * repartitionByRange boundaries are (near-)exact instead of
-    * 100-rows-per-partition estimates. The default sampler is also
-    * SEED-UNSTABLE across sessions (the seed derives from RDD ids), so
-    * a pathological sample can hand one output file almost the whole
+  /** `df` rebuilt on a copy of its session with the range-exchange
+    * sampler turned up, so repartitionByRange boundaries are (near-)exact
+    * instead of 100-rows-per-partition estimates. The default sampler is
+    * also SEED-UNSTABLE across sessions (the seed derives from RDD ids),
+    * so a pathological sample can hand one output file almost the whole
     * z-range and void the layout's pruning guarantee — observed once
     * under full-suite ordering. 20k samples/partition is a few hundred
     * KB on the driver and makes small/medium tables exactly
     * quantile-split; at 100 TB it is still noise next to the rewrite
-    * itself. Restored after the ACTION, not the plan build — the conf
-    * is read at exchange-planning time. */
-  def withExactRangeSampling[T](df: DataFrame)(body: => T): T = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    val prev = conf.getOption(key)
-    conf.set(key, "20000")
-    try body
-    finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
-    }
-  }
+    * itself. The conf is read at exchange-planning time, which happens
+    * in the copy whichever action runs the frame; `df`'s session is
+    * left as it was. */
+  def withExactRangeSampling(df: DataFrame): DataFrame =
+    Bridge.ofRows(Bridge.cloneSession(df.sparkSession,
+        "spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "20000"),
+      df.queryExecution.logical)
 
   /** Lay `df` out on the z-curve of `cols`: range-partition then sort by
     * the z-value, so every output file covers a small hyper-rectangle of
     * the key space (one exchange — same cost as any global sort).
-    * Callers that materialize the layout should wrap the action in
+    * Callers that materialize the layout should pass it through
     * [[withExactRangeSampling]] for boundary quality (zorderEdgeList
     * does). */
   def layoutBy(df: DataFrame, cols: Seq[Column], bits: Int,

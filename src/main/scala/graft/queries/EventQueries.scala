@@ -22,10 +22,6 @@ object EventQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** One bin-width-conf child session per parent (e_interval_join_auto). */
-  private val binSessions =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-
   /** events with ts_us BIGINT epoch-microseconds. */
   private def eventsUs(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
@@ -162,20 +158,12 @@ object EventQueries {
     // Spark alone can only nested-loop) with the RangeJoinRewrite rule
     // opted in: the optimizer itself must produce the bin-replicated
     // equi-join and the rows must hash-match e_interval_join's oracle.
-    // The conf is scoped by building on a child session (shared
-    // catalog/runtime, OWN conf) — every later action on this frame
-    // optimizes under the bin width, and the parent session never sees
-    // the key.
+    // The conf is scoped by building on a session copy — every later
+    // action on this frame optimizes under the bin width, and the
+    // session it was handed never sees the key.
     "e_interval_join_auto" -> ((s, dir) => {
-      // child-session build (analyzer + extensions) costs ~2 s — reuse
-      // one per parent session so repeated calls time the join, not
-      // SessionState construction
-      val s2 = binSessions.getOrElseUpdate(s, {
-        val n = s.newSession()
-        n.conf.set(graft.plans.RangeJoinRewrite.ConfKey,
-          (1800L * 1000000L).toString)
-        n
-      })
+      val s2 = Bridge.cloneSession(s,
+        graft.plans.RangeJoinRewrite.ConfKey -> (1800L * 1000000L).toString)
       val e = eventsUs(s2, dir)
       val p = e.where(col("event_type") === "purchase")
         .select(col("event_id").as("interval_id"), col("ts_us").as("ps"),

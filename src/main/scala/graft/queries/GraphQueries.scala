@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{Betweenness, Bipartite, Coloring, CommunityMetrics, ConnectedComponents, Coreness, DensestSubgraph, EigenvectorCentrality, GraphOps, Hits, Katz, KCore, LinkPrediction, LabelPropagation, LubyMIS, MaximalMatching, MinimumSpanningForest, NeighborhoodFunction, PageRank, RMat, RandomWalks, ShortestPaths, StronglyConnectedComponents, TopoSort, Triangles, Truss}
 import graft.io.Tables
+import graft.sources.EdgeListCatalog
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate queries for the OINK graph suite (SURVEY.md §2.5) over the
@@ -300,7 +301,6 @@ object GraphQueries {
     // grid dimension alone, and the width-reduction algebra composes
     // per dimension. The oracle computes the same two-key join.
     "g_dsv2_bucket_multi" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2bm")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -311,42 +311,33 @@ object GraphQueries {
         .repartition(2).write.format(fmtName)
         .option("bucketBy", "src,dst").option("numBuckets", "4")
         .mode("overwrite").save(s"$root/b")
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, a.dst AS w,
-             |  count(*) AS n_pairs
-             |FROM graft.`$root/a` a JOIN graft.`$root/b` b
-             |ON a.src = b.src AND a.dst = b.dst
-             |GROUP BY a.src, a.dst""".stripMargin)
-        val out = df.localCheckpoint() // executes the join
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-          "expected a sort-merge join over the grid-bucketed tables:\n" +
-            df.queryExecution.executedPlan)
-        val exchanges = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-        require(exchanges.isEmpty,
-          s"compound-key SPJ planned ${exchanges.size} Exchange(s):\n" +
-            df.queryExecution.executedPlan)
-        // full compound layout contract: files are lexicographically
-        // sorted on the pair and the two-key merge reader reports the
-        // ordering — the grid pays shuffle AND sort once, at write time
-        val sorts = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.SortExec])
-        require(sorts.isEmpty,
-          s"compound-key SPJ planned ${sorts.size} Sort(s):\n" +
-            df.queryExecution.executedPlan)
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs: _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, a.dst AS w,
+           |  count(*) AS n_pairs
+           |FROM graft.`$root/a` a JOIN graft.`$root/b` b
+           |ON a.src = b.src AND a.dst = b.dst
+           |GROUP BY a.src, a.dst""".stripMargin)
+      val out = df.localCheckpoint() // executes the join
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+        "expected a sort-merge join over the grid-bucketed tables:\n" +
+          df.queryExecution.executedPlan)
+      val exchanges = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      require(exchanges.isEmpty,
+        s"compound-key SPJ planned ${exchanges.size} Exchange(s):\n" +
+          df.queryExecution.executedPlan)
+      // full compound layout contract: files are lexicographically
+      // sorted on the pair and the two-key merge reader reports the
+      // ordering — the grid pays shuffle AND sort once, at write time
+      val sorts = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.SortExec])
+      require(sorts.isEmpty,
+        s"compound-key SPJ planned ${sorts.size} Sort(s):\n" +
+          df.queryExecution.executedPlan)
+      out
     }),
 
     // GRID RUNTIME (DPP) PRUNING (round 13, follow-on to bucket_multi):
@@ -412,7 +403,6 @@ object GraphQueries {
     // z-ordered table still plans ZERO Exchange. The oracle sees only
     // the filtered aggregate.
     "g_dsv2_zorder_bucket" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2zb")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -447,30 +437,20 @@ object GraphQueries {
         s"z-order pruning inactive on the bucketed layout: planned" +
           s" $planned of $census files")
       // the kept layout still serves the exchange-free join
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        e.select(col("dst").as("src"), col("src").as("dst"))
-          .repartition(2).write.format(fmtName)
-          .option("bucketBy", "src").option("numBuckets", "8")
-          .mode("overwrite").save(s"$root/other")
-        val j = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n
-             |FROM graft.`$root/edges` a JOIN graft.`$root/other` b
-             |ON a.src = b.src GROUP BY a.src""".stripMargin)
-        j.localCheckpoint()
-        val ex = graft.plans.PlanWalk.nodes(j.queryExecution.executedPlan)
-          .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-        require(ex == 0,
-          s"SPJ over the z-ordered bucketed table planned $ex Exchange(s):\n" +
-            j.queryExecution.executedPlan)
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      e.select(col("dst").as("src"), col("src").as("dst"))
+        .repartition(2).write.format(fmtName)
+        .option("bucketBy", "src").option("numBuckets", "8")
+        .mode("overwrite").save(s"$root/other")
+      val j = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs: _*).sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n
+           |FROM graft.`$root/edges` a JOIN graft.`$root/other` b
+           |ON a.src = b.src GROUP BY a.src""".stripMargin)
+      j.localCheckpoint()
+      val ex = graft.plans.PlanWalk.nodes(j.queryExecution.executedPlan)
+        .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      require(ex == 0,
+        s"SPJ over the z-ordered bucketed table planned $ex Exchange(s):\n" +
+          j.queryExecution.executedPlan)
       out
     }),
 
@@ -498,16 +478,16 @@ object GraphQueries {
     // the derived edge list — it never sees the table, the DML, or the
     // on-disk files.
     "g_dsv2_dml" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2dml")
       val p = s"$root/edges"
       val t = s"graft.`$p`"
-      s.sql(s"CREATE TABLE $t (src BIGINT, dst BIGINT)")
+      val cat = Bridge.cloneSession(s, EdgeListCatalog.Mount)
+      cat.sql(s"CREATE TABLE $t (src BIGINT, dst BIGINT)")
       Tables.edges(s, dir).repartition(3)
         .write.format("graft.sources.EdgeListSource").mode("append").save(p)
-      s.sql(s"DELETE FROM $t WHERE dst < 10")
-      s.sql(s"DELETE FROM $t WHERE src IN (0, 7)")
-      s.sql(s"""SELECT src, count(*) AS out_deg,
+      cat.sql(s"DELETE FROM $t WHERE dst < 10")
+      cat.sql(s"DELETE FROM $t WHERE src IN (0, 7)")
+      cat.sql(s"""SELECT src, count(*) AS out_deg,
                |  CAST(sum(dst) AS BIGINT) AS sum_dst
                |FROM $t GROUP BY src""".stripMargin)
     }),
@@ -526,53 +506,40 @@ object GraphQueries {
     // the warehouse conf. The oracle computes the same aggregate from
     // the derived edge list and never sees names, layout, or plan.
     "g_dsv2_catalog" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2cat")
-      s.conf.set("spark.sql.catalog.graft.warehouse", root.getPath)
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        s.sql("CREATE NAMESPACE graft.db")
-        s.sql("CREATE TABLE graft.db.out_edges (src BIGINT, dst BIGINT)" +
-          " PARTITIONED BY (bucket(8, src))")
-        s.sql("CREATE TABLE graft.db.in_edges (src BIGINT, dst BIGINT)" +
-          " PARTITIONED BY (bucket(8, src))")
-        Tables.edges(s, dir).createOrReplaceTempView("g_cat_src")
-        s.sql("INSERT INTO graft.db.out_edges SELECT src, dst FROM g_cat_src")
-        s.sql("INSERT INTO graft.db.in_edges" +
-          " SELECT dst AS src, src AS dst FROM g_cat_src")
-        val listed = s.sql("SHOW TABLES IN graft.db")
-          .select("tableName").collect().map(_.getString(0)).toSet
-        require(listed == Set("in_edges", "out_edges"),
-          s"SHOW TABLES IN graft.db listed $listed")
-        val df = s.sql(
-          """SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
-            |  CAST(min(b.dst) AS BIGINT) AS min_origin
-            |FROM graft.db.out_edges a
-            |JOIN graft.db.in_edges b ON a.src = b.src
-            |GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint() // executes the join
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-          "expected a sort-merge join over the named bucketed tables:\n" +
-            df.queryExecution.executedPlan)
-        val exchanges = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-        require(exchanges.isEmpty,
-          s"named-table SPJ planned ${exchanges.size} Exchange(s):\n" +
-            df.queryExecution.executedPlan)
-        out
-      } finally {
-        prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-        s.conf.unset("spark.sql.catalog.graft.warehouse")
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.catalog.graft.warehouse" -> root.getPath): _*)
+      spj.sql("CREATE NAMESPACE graft.db")
+      spj.sql("CREATE TABLE graft.db.out_edges (src BIGINT, dst BIGINT)" +
+        " PARTITIONED BY (bucket(8, src))")
+      spj.sql("CREATE TABLE graft.db.in_edges (src BIGINT, dst BIGINT)" +
+        " PARTITIONED BY (bucket(8, src))")
+      Tables.edges(spj, dir).createOrReplaceTempView("g_cat_src")
+      spj.sql("INSERT INTO graft.db.out_edges SELECT src, dst FROM g_cat_src")
+      spj.sql("INSERT INTO graft.db.in_edges" +
+        " SELECT dst AS src, src AS dst FROM g_cat_src")
+      val listed = spj.sql("SHOW TABLES IN graft.db")
+        .select("tableName").collect().map(_.getString(0)).toSet
+      require(listed == Set("in_edges", "out_edges"),
+        s"SHOW TABLES IN graft.db listed $listed")
+      val df = spj.sql(
+        """SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
+          |  CAST(min(b.dst) AS BIGINT) AS min_origin
+          |FROM graft.db.out_edges a
+          |JOIN graft.db.in_edges b ON a.src = b.src
+          |GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint() // executes the join
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+        "expected a sort-merge join over the named bucketed tables:\n" +
+          df.queryExecution.executedPlan)
+      val exchanges = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      require(exchanges.isEmpty,
+        s"named-table SPJ planned ${exchanges.size} Exchange(s):\n" +
+          df.queryExecution.executedPlan)
+      out
     }),
 
     // STORAGE-PARTITIONED JOIN through the connector — q45's zero-
@@ -590,7 +557,6 @@ object GraphQueries {
     // same 2-paths-through-v aggregate from the derived edge list and
     // never sees the layout, the catalog, or the plan.
     "g_dsv2_bucket_join" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2bj")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -601,37 +567,27 @@ object GraphQueries {
         .write.format(fmtName)
         .option("bucketBy", "src").option("numBuckets", "8")
         .mode("overwrite").save(s"$root/in_edges")
-      // storage-partitioned joins are conf-gated in Spark; set + restore
-      // around the one planning window (the gate runs queries
-      // sequentially — no concurrent-query exposure)
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
-             |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
-             |FROM graft.`$root/out_edges` a
-             |JOIN graft.`$root/in_edges` b ON a.src = b.src
-             |GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint() // executes the join
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-          "expected a sort-merge join over the bucketed connector tables:\n" +
-            df.queryExecution.executedPlan)
-        val exchanges = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-        require(exchanges.isEmpty,
-          s"bucketed connector join planned ${exchanges.size} Exchange(s):\n" +
-            df.queryExecution.executedPlan)
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      // storage-partitioned joins are conf-gated in Spark: the join is
+      // built on a session copy that carries them
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs: _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
+           |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
+           |FROM graft.`$root/out_edges` a
+           |JOIN graft.`$root/in_edges` b ON a.src = b.src
+           |GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint() // executes the join
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+        "expected a sort-merge join over the bucketed connector tables:\n" +
+          df.queryExecution.executedPlan)
+      val exchanges = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      require(exchanges.isEmpty,
+        s"bucketed connector join planned ${exchanges.size} Exchange(s):\n" +
+          df.queryExecution.executedPlan)
+      out
     }),
 
     // SORTED storage-partitioned join — the full layout contract: both
@@ -646,7 +602,6 @@ object GraphQueries {
     // amortized into the layout. The in-query audit walks the EXECUTED
     // plan (AQE stages included) for both absences.
     "g_dsv2_bucket_sorted" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2bs")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -660,40 +615,31 @@ object GraphQueries {
       require(graft.sources.BucketSpecIO.sortedOf(s"$root/out_edges") &&
         graft.sources.BucketSpecIO.sortedOf(s"$root/in_edges"),
         "bucketed writes must persist the sorted-layout flag")
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
-             |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
-             |FROM graft.`$root/out_edges` a
-             |JOIN graft.`$root/in_edges` b ON a.src = b.src
-             |GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint() // executes the join
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-          "expected a sort-merge join over the sorted bucketed tables:\n" +
-            df.queryExecution.executedPlan)
-        val exchanges = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-        require(exchanges.isEmpty,
-          s"sorted bucketed join planned ${exchanges.size} Exchange(s):\n" +
-            df.queryExecution.executedPlan)
-        val sorts = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.SortExec])
-        require(sorts.isEmpty,
-          s"sorted bucketed join planned ${sorts.size} Sort(s) — the " +
-            s"layout ordering was not honored:\n" +
-            df.queryExecution.executedPlan)
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs: _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
+           |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
+           |FROM graft.`$root/out_edges` a
+           |JOIN graft.`$root/in_edges` b ON a.src = b.src
+           |GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint() // executes the join
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+        "expected a sort-merge join over the sorted bucketed tables:\n" +
+          df.queryExecution.executedPlan)
+      val exchanges = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      require(exchanges.isEmpty,
+        s"sorted bucketed join planned ${exchanges.size} Exchange(s):\n" +
+          df.queryExecution.executedPlan)
+      val sorts = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.SortExec])
+      require(sorts.isEmpty,
+        s"sorted bucketed join planned ${sorts.size} Sort(s) — the " +
+          s"layout ordering was not honored:\n" +
+          df.queryExecution.executedPlan)
+      out
     }),
 
     // COMPATIBLE-WIDTH storage-partitioned join (ReducibleFunction,
@@ -709,7 +655,6 @@ object GraphQueries {
     // the reduced grouping, caught by the spec before it shipped).
     // The oracle computes the same join from the derived edge list.
     "g_dsv2_bucket_compat" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2bc")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -720,36 +665,26 @@ object GraphQueries {
         .repartition(2).write.format(fmtName)
         .option("bucketBy", "src").option("numBuckets", "8")
         .mode("overwrite").save(s"$root/narrow")
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled"
-          -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
-             |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
-             |FROM graft.`$root/wide` a
-             |JOIN graft.`$root/narrow` b ON a.src = b.src
-             |GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint()
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-          "expected a sort-merge join over the width-mismatched tables:\n" +
-            df.queryExecution.executedPlan)
-        val exchanges = nodes.filter(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-        require(exchanges.isEmpty,
-          s"compatible-width join planned ${exchanges.size} Exchange(s):\n" +
-            df.queryExecution.executedPlan)
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled" -> "true"): _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
+           |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
+           |FROM graft.`$root/wide` a
+           |JOIN graft.`$root/narrow` b ON a.src = b.src
+           |GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint()
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+        "expected a sort-merge join over the width-mismatched tables:\n" +
+          df.queryExecution.executedPlan)
+      val exchanges = nodes.filter(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      require(exchanges.isEmpty,
+        s"compatible-width join planned ${exchanges.size} Exchange(s):\n" +
+          df.queryExecution.executedPlan)
+      out
     }),
 
     // SPJ PARTITION FILTER (`v2.bucketing.partition.filter.enabled`):
@@ -762,7 +697,6 @@ object GraphQueries {
     // audit: zero Exchange AND the fact's executed RDD planned strictly
     // fewer files than the on-disk census. Oracle: the plain join.
     "g_dsv2_bucket_pfilter" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2pf")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -777,41 +711,32 @@ object GraphQueries {
         .mode("overwrite").save(s"$root/dim")
       val totalFiles =
         graft.sources.EdgeListSource.listFiles(s"$root/fact").size
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.partition.filter.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n,
-             |  CAST(sum(b.dst) AS BIGINT) AS s
-             |FROM graft.`$root/fact` a JOIN graft.`$root/dim` b
-             |ON a.src = b.src GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint()
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.count(
-            _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) == 0,
-          s"partition-filtered SPJ exchanged:\n${df.queryExecution.executedPlan}")
-        val fact = nodes.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-            if b.scan.description().contains("/fact") => b }.head
-        val planned = fact.inputRDDs().head.partitions.flatMap {
-          case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
-            p.inputPartitions
-          case _ => Nil
-        }.flatMap {
-          case sb: graft.sources.SortedBucketFiles => sb.files.map(_._1)
-          case er: graft.sources.EdgeRange => Seq(er.file)
-        }.distinct.size
-        require(planned < totalFiles,
-          s"partition filter inactive: planned $planned of $totalFiles files")
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.sources.v2.bucketing.partition.filter.enabled" -> "true"): _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n,
+           |  CAST(sum(b.dst) AS BIGINT) AS s
+           |FROM graft.`$root/fact` a JOIN graft.`$root/dim` b
+           |ON a.src = b.src GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint()
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.count(
+          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) == 0,
+        s"partition-filtered SPJ exchanged:\n${df.queryExecution.executedPlan}")
+      val fact = nodes.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.description().contains("/fact") => b }.head
+      val planned = fact.inputRDDs().head.partitions.flatMap {
+        case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+          p.inputPartitions
+        case _ => Nil
+      }.flatMap {
+        case sb: graft.sources.SortedBucketFiles => sb.files.map(_._1)
+        case er: graft.sources.EdgeRange => Seq(er.file)
+      }.distinct.size
+      require(planned < totalFiles,
+        s"partition filter inactive: planned $planned of $totalFiles files")
+      out
     }),
 
     // SPJ SKEW MITIGATION (partially-clustered distribution) — the one
@@ -830,7 +755,6 @@ object GraphQueries {
     // (the replication happened). The oracle computes the same skewed
     // join from the derived tables and never sees the layout.
     "g_dsv2_bucket_skew" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2sk")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -844,48 +768,38 @@ object GraphQueries {
         .repartition(1).write.format(fmtName)
         .option("bucketBy", "src").option("numBuckets", "8")
         .mode("overwrite").save(s"$root/dim")
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled"
-          -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n,
-             |  CAST(sum(a.dst + b.dst) AS BIGINT) AS s
-             |FROM graft.`$root/fact` a JOIN graft.`$root/dim` b
-             |ON a.src = b.src GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint()
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        val smj = nodes.collectFirst {
-          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }
-          .getOrElse(throw new IllegalStateException(
-            s"no SMJ:\n${df.queryExecution.executedPlan}"))
-        require(graft.plans.PlanWalk.nodes(smj)
-            .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) == 0,
-          s"exchange below the join:\n${df.queryExecution.executedPlan}")
-        val scans = nodes.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
-        val fact = scans.find(_.scan.description().contains("/fact")).get
-        val dim = scans.find(_.scan.description().contains("/dim")).get
-        require(fact.spjParams.applyPartialClustering &&
-            !fact.spjParams.replicatePartitions,
-          "fact side did not partially cluster")
-        require(dim.spjParams.replicatePartitions,
-          "dim side was not replicated")
-        val factTasks = fact.inputRDDs().head.getNumPartitions
-        val dimTasks = dim.inputRDDs().head.getNumPartitions
-        require(factTasks > 8,
-          s"hot bucket not split: $factTasks tasks for 8 buckets")
-        require(dimTasks == factTasks,
-          s"dim not replicated to match: $dimTasks vs $factTasks")
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled" -> "true"): _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n,
+           |  CAST(sum(a.dst + b.dst) AS BIGINT) AS s
+           |FROM graft.`$root/fact` a JOIN graft.`$root/dim` b
+           |ON a.src = b.src GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint()
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      val smj = nodes.collectFirst {
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j }
+        .getOrElse(throw new IllegalStateException(
+          s"no SMJ:\n${df.queryExecution.executedPlan}"))
+      require(graft.plans.PlanWalk.nodes(smj)
+          .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) == 0,
+        s"exchange below the join:\n${df.queryExecution.executedPlan}")
+      val scans = nodes.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+      val fact = scans.find(_.scan.description().contains("/fact")).get
+      val dim = scans.find(_.scan.description().contains("/dim")).get
+      require(fact.spjParams.applyPartialClustering &&
+          !fact.spjParams.replicatePartitions,
+        "fact side did not partially cluster")
+      require(dim.spjParams.replicatePartitions,
+        "dim side was not replicated")
+      val factTasks = fact.inputRDDs().head.getNumPartitions
+      val dimTasks = dim.inputRDDs().head.getNumPartitions
+      require(factTasks > 8,
+        s"hot bucket not split: $factTasks tasks for 8 buckets")
+      require(dimTasks == factTasks,
+        s"dim not replicated to match: $dimTasks vs $factTasks")
+      out
     }),
 
     // MIXED storage-partitioned join — the realistic 100 TB refresh
@@ -900,7 +814,6 @@ object GraphQueries {
     // batch rows would land in wrong partitions and matches would
     // silently vanish — the oracle's exact counts would catch it.
     "g_dsv2_bucket_mixed" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val root = Bridge.scratchDir("graft_dsv2bm")
       val fmtName = "graft.sources.EdgeListSource"
       val e = Tables.edges(s, dir)
@@ -911,34 +824,25 @@ object GraphQueries {
         .select(col("dst").as("src"), col("src").as("dst"))
         .repartition(2)
         .write.format(fmtName).mode("overwrite").save(s"$root/batch")
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = s.sql(
-          s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
-             |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
-             |FROM graft.`$root/standing` a
-             |JOIN graft.`$root/batch` b ON a.src = b.src
-             |GROUP BY a.src""".stripMargin)
-        val out = df.localCheckpoint()
-        val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
-        require(nodes.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
-          "expected a sort-merge join:\n" + df.queryExecution.executedPlan)
-        val shuffles = nodes.filter(_.isInstanceOf[
-          org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
-        require(shuffles.size == 1,
-          s"expected exactly the batch-side shuffle, got ${shuffles.size}:\n" +
-            df.queryExecution.executedPlan)
-        out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true"): _*)
+      val df = spj.sql(
+        s"""SELECT /*+ MERGE(a) */ a.src AS v, count(*) AS n_two_paths,
+           |  CAST(sum(b.dst) AS BIGINT) AS sum_origin
+           |FROM graft.`$root/standing` a
+           |JOIN graft.`$root/batch` b ON a.src = b.src
+           |GROUP BY a.src""".stripMargin)
+      val out = df.localCheckpoint()
+      val nodes = graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+      require(nodes.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]),
+        "expected a sort-merge join:\n" + df.queryExecution.executedPlan)
+      val shuffles = nodes.filter(_.isInstanceOf[
+        org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+      require(shuffles.size == 1,
+        s"expected exactly the batch-side shuffle, got ${shuffles.size}:\n" +
+          df.queryExecution.executedPlan)
+      out
     }),
 
     // BUCKET PRUNING through the gate (the layout's read-side dividend

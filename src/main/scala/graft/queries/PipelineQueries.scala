@@ -20,11 +20,6 @@ object PipelineQueries {
   private def emb(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
   private val Dim = 64
 
-  /** One fuzzy-join-rule child session per parent (d_fuzzy_sql) — same
-    * reuse rationale as EventQueries.binSessions. */
-  private val fuzzySessions =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-
   val queries: Map[String, Q] = Map(
     "d_exact" -> ((s, dir) =>
       Dedup.exact(docs(s, dir), col("doc_id"), col("text"))),
@@ -300,17 +295,9 @@ object PipelineQueries {
     // retires the image-path decode stub from the gate (the stub
     // remains only for codecs the JDK lacks, e.g. compressed video).
     "mm_png_decode" -> ((s, dir) => {
-      val key = "spark.graft.media.decoder"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "imageio")
-      try
-        Multimodal.pngDecodeFeatures(s,
-          Multimodal.withPngPayload(s, docs(s, dir))).toDF()
-          .localCheckpoint() // decode runs while the conf is active
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      val m = Bridge.cloneSession(s, "spark.graft.media.decoder" -> "imageio")
+      Multimodal.pngDecodeFeatures(m,
+        Multimodal.withPngPayload(m, docs(m, dir))).toDF()
     }),
 
     // REAL JPEG decode, exact half (round 13 — Missing #5): genuine
@@ -322,17 +309,9 @@ object PipelineQueries {
     // be a lie. The decode stub boundary is now compressed audio/video
     // codecs ONLY.
     "mm_jpeg_meta" -> ((s, dir) => {
-      val key = "spark.graft.media.decoder"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "imageio")
-      try
-        Multimodal.jpegMetaFeatures(s,
-          Multimodal.withJpegPayload(s, docs(s, dir))).toDF()
-          .localCheckpoint() // decode runs while the conf is active
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      val m = Bridge.cloneSession(s, "spark.graft.media.decoder" -> "imageio")
+      Multimodal.jpegMetaFeatures(m,
+        Multimodal.withJpegPayload(m, docs(m, dir))).toDF()
     }),
 
     // Nearest-neighbor resize of every decoded frame to a fixed 16x8
@@ -1292,16 +1271,12 @@ object PipelineQueries {
 
     // The SAME fuzzy join written as PLAIN SQL — a levenshtein(a,b) <= 2
     // join predicate Spark would nested-loop — executed under the
-    // FuzzyJoinRewrite optimizer rule (opt-in conf on a child session):
+    // FuzzyJoinRewrite optimizer rule (opt-in conf on a session copy):
     // the plan becomes the FastSS blocked join, the answer must stay the
     // all-pairs truth. FuzzyJoinRewriteSpec pins the plan shape; this
     // gate pins the values through DuckDB.
     "d_fuzzy_sql" -> ((s, dir) => {
-      val s2 = fuzzySessions.getOrElseUpdate(s, {
-        val n = s.newSession()
-        n.conf.set(graft.plans.FuzzyJoinRewrite.ConfKey, "true")
-        n
-      })
+      val s2 = Bridge.cloneSession(s, graft.plans.FuzzyJoinRewrite.ConfKey -> "true")
       Tables.part(s2, dir).createOrReplaceTempView("fz_part")
       s2.sql(
         """SELECT a.n AS name_a, b.n AS name_b, levenshtein(a.n, b.n) AS dist

@@ -511,23 +511,23 @@ object RelationalQueries {
     // control flow must be semantically invisible.
     "q43_sql_script" -> ((s, dir) => {
       Tables.registerViews(s, dir)
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      s.sql("""BEGIN
-              |  DECLARE thr DOUBLE DEFAULT 0.0;
-              |  DECLARE i INT DEFAULT 0;
-              |  WHILE i < 5 DO
-              |    SET thr = thr + 100.0;
-              |    SET i = i + 1;
-              |  END WHILE;
-              |  IF thr <> 500.0 THEN
-              |    SELECT raise_error('loop drifted') AS boom;
-              |  END IF;
-              |  SELECT event_type, count(*) AS n_above,
-              |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-              |      AS BIGINT) AS cents_above
-              |  FROM events WHERE value > thr / 1000.0
-              |  GROUP BY event_type;
-              |END""".stripMargin)
+      val scripting = Bridge.cloneSession(s, "spark.sql.scripting.enabled" -> "true")
+      scripting.sql("""BEGIN
+                      |  DECLARE thr DOUBLE DEFAULT 0.0;
+                      |  DECLARE i INT DEFAULT 0;
+                      |  WHILE i < 5 DO
+                      |    SET thr = thr + 100.0;
+                      |    SET i = i + 1;
+                      |  END WHILE;
+                      |  IF thr <> 500.0 THEN
+                      |    SELECT raise_error('loop drifted') AS boom;
+                      |  END IF;
+                      |  SELECT event_type, count(*) AS n_above,
+                      |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+                      |      AS BIGINT) AS cents_above
+                      |  FROM events WHERE value > thr / 1000.0
+                      |  GROUP BY event_type;
+                      |END""".stripMargin)
     }),
 
     // Column DEFAULT values (Spark 3.4+ SQL surface): a table declares

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStreams
+import graft.sources.EdgeListCatalog
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-gate entries that execute the Structured Streaming surface in a
@@ -27,48 +28,43 @@ object StreamingGateQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Start `df` on a memory sink, drain AvailableNow, return the table. */
-  private def drain(spark: SparkSession, df: DataFrame, name: String): DataFrame = {
+  /** Start `df` on a memory sink, drain AvailableNow, return the table
+    * (registered in the session that started the stream, `df`'s). */
+  private def drain(df: DataFrame, name: String): DataFrame = {
     val q = EventStreams.runToMemory(df, name, OutputMode.Append)
     q.stop()
-    spark.table(name)
+    df.sparkSession.table(name)
   }
 
-  val RocksDbProvider =
+  /** The conf that keeps a stream's state in RocksDB. */
+  val RocksDb: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `f` with the given state-store provider class set on the
-    * session (picked up at query start), restoring the previous value. */
-  private def withStateProvider[T](s: SparkSession, provider: String)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, provider)
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  /** `q` run on a copy of its session with the RocksDB state store: the
+    * streams it starts keep their state in RocksDB, and the session it
+    * was handed keeps its own provider. */
+  private def onRocks(q: Q): Q = (s, dir) => q(Bridge.cloneSession(s, RocksDb), dir)
 
   val queries: Map[String, Q] = Map(
     // Stateful streaming funnel (flatMapGroupsWithState, NoTimeout): in a
     // single-batch drain it reproduces the batch conditional-min stage
     // times exactly (EventStreamsSpec proves the equality).
     "st_funnel" -> ((s, dir) =>
-      drain(s, EventStreams.funnelStream(s, EventStreams.readEvents(s, dir)),
+      drain(EventStreams.funnelStream(s, EventStreams.readEvents(s, dir)),
         "st_funnel_gate")),
 
     // Streaming exact dedup (dropDuplicatesWithinWatermark): the KEY SET
     // kept is deterministic (first arrival per key); which physical row
     // carried it is not, so the gate projects to the keys.
     "st_dedup" -> ((s, dir) =>
-      drain(s, EventStreams.dedupStream(EventStreams.readEvents(s, dir),
+      drain(EventStreams.dedupStream(EventStreams.readEvents(s, dir),
           Seq("user_id", "event_type")), "st_dedup_gate")
         .select("user_id", "event_type")),
 
     // Windowed log-bin quantile sketch under append-mode eviction: only
     // windows closed by the final watermark (max event time - 2 h) emit.
     "st_window_lgq" -> ((s, dir) =>
-      drain(s, EventStreams.logQuantileStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.logQuantileStream(EventStreams.readEvents(s, dir)),
         "st_lgq_gate")),
 
     // Watermarked tumbling-window aggregation — the closed-window subset
@@ -77,7 +73,7 @@ object StreamingGateQueries {
     // surface but out of the hash (a boundary-landing value could flip
     // the 4th decimal between state-merge and scan order — ADVICE r6).
     "st_window_agg" -> ((s, dir) =>
-      drain(s, EventStreams.windowedAgg(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.windowedAgg(EventStreams.readEvents(s, dir)),
         "st_winagg_gate")
         .select(col("win_start_us"), col("event_type"), col("cnt"),
           col("total_cents"))),
@@ -88,7 +84,7 @@ object StreamingGateQueries {
     // the odd half. Windowed count + stateless stream-static left join;
     // dq_drift's batch discipline, live.
     "st_drift" -> ((s, dir) =>
-      drain(s, EventStreams.driftMonitorStream(
+      drain(EventStreams.driftMonitorStream(
         EventStreams.readEvents(s, dir).where(col("event_id") % 2 =!= 0),
         graft.io.Tables.events(s, dir).where(col("event_id") % 2 === 0)),
         "st_drift_gate")),
@@ -98,7 +94,7 @@ object StreamingGateQueries {
     // batch; the final closed-window set depends only on the final
     // watermark, so the single-batch oracle is unchanged.
     "st_drift_mb" -> ((s, dir) =>
-      drain(s, EventStreams.driftMonitorStream(
+      drain(EventStreams.driftMonitorStream(
         EventStreams.readEventsMultiBatch(s, dir)
           .where(col("event_id") % 2 =!= 0),
         graft.io.Tables.events(s, dir).where(col("event_id") % 2 === 0)),
@@ -109,7 +105,7 @@ object StreamingGateQueries {
     // window END as above. The oracle replicates each event into its
     // two covering slide-aligned starts.
     "st_sliding_window" -> ((s, dir) =>
-      drain(s, EventStreams.slidingWindowAgg(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.slidingWindowAgg(EventStreams.readEvents(s, dir)),
         "st_slidewin_gate")),
 
     // Multi-batch twin: hopping-window state (each event lives in TWO
@@ -118,12 +114,12 @@ object StreamingGateQueries {
     // order changes, the final evicted set cannot (same data, same final
     // watermark) — so the single-batch oracle is unchanged.
     "st_sliding_window_mb" -> ((s, dir) =>
-      drain(s, EventStreams.slidingWindowAgg(
+      drain(EventStreams.slidingWindowAgg(
         EventStreams.readEventsMultiBatch(s, dir)), "st_slidewin_mb_gate")),
 
     // Windowed HLL approx-distinct under the same eviction.
     "st_approx_distinct" -> ((s, dir) =>
-      drain(s, EventStreams.approxDistinctStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.approxDistinctStream(EventStreams.readEvents(s, dir)),
         "st_hll_gate")),
 
     // Windowed approx-distinct on the KMV synopsis: the aggregate's
@@ -131,10 +127,10 @@ object StreamingGateQueries {
     // across 4 micro-batches in the _mb twin; same eviction arithmetic
     // as st_approx_distinct, exact DuckDB replica of the synopsis.
     "st_kmv_distinct" -> ((s, dir) =>
-      drain(s, EventStreams.kmvDistinctStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.kmvDistinctStream(EventStreams.readEvents(s, dir)),
         "st_kmv_gate")),
     "st_kmv_distinct_mb" -> ((s, dir) =>
-      drain(s, EventStreams.kmvDistinctStream(
+      drain(EventStreams.kmvDistinctStream(
         EventStreams.readEventsMultiBatch(s, dir)), "st_kmv_mb_gate")),
 
     // Stateful gap-sessionization: a single-batch drain emits
@@ -143,14 +139,14 @@ object StreamingGateQueries {
     // (watermark and timeout compare at MILLISECOND granularity — the
     // oracle replays the ms-floor arithmetic exactly).
     "st_sessionize" -> ((s, dir) =>
-      drain(s, EventStreams.sessionize(s, EventStreams.readEvents(s, dir)),
+      drain(EventStreams.sessionize(s, EventStreams.readEvents(s, dir)),
         "st_sess_gate")),
 
     // Stream-stream range join: both sides watermarked, single-batch
     // drain holds both sides in full, so the inner join equals the batch
     // e_range_join result exactly (EventStreamsSpec proves it).
     "st_range_join" -> ((s, dir) =>
-      drain(s, EventStreams.rangeJoinStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.rangeJoinStream(EventStreams.readEvents(s, dir)),
         "st_rj_gate")),
 
     // Stream-static enrichment join: stateless, so every event emits —
@@ -158,7 +154,7 @@ object StreamingGateQueries {
     "st_enrich" -> ((s, dir) => {
       val typeStats = graft.io.Tables.events(s, dir)
         .groupBy("event_type").agg(round(avg("value"), 6).as("type_avg"))
-      drain(s, EventStreams.enrichStream(
+      drain(EventStreams.enrichStream(
         EventStreams.readEvents(s, dir), typeStats), "st_enrich_gate")
     }),
 
@@ -181,7 +177,7 @@ object StreamingGateQueries {
               Window.partitionBy("user_id").orderBy("ts_us")),
             lit(Long.MaxValue)).as("valid_to_us"),
           col("asof_value"))
-      drain(s, EventStreams.asOfEnrichStream(
+      drain(EventStreams.asOfEnrichStream(
         EventStreams.readEvents(s, dir), dim), "st_asof_gate")
     }),
 
@@ -192,7 +188,7 @@ object StreamingGateQueries {
     // starts a NEW session here (merge iff strictly inside [t, t+gap)) —
     // the oracle replays >= where e_sessionize uses >.
     "st_session_native" -> ((s, dir) =>
-      drain(s, EventStreams.sessionWindowStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.sessionWindowStream(EventStreams.readEvents(s, dir)),
         "st_sessw_gate")),
 
     // DYNAMIC per-row gap on the native session_window (purchases 60
@@ -202,16 +198,16 @@ object StreamingGateQueries {
     // watermark eviction as the fixed-gap gate. Single- and multi-batch
     // drains share it (emission only tightens monotonically).
     "st_session_dyngap" -> ((s, dir) =>
-      drain(s, EventStreams.sessionWindowDynStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.sessionWindowDynStream(EventStreams.readEvents(s, dir)),
         "st_sessdyn_gate")),
     "st_session_dyngap_mb" -> ((s, dir) =>
-      drain(s, EventStreams.sessionWindowDynStream(
+      drain(EventStreams.sessionWindowDynStream(
         EventStreams.readEventsMultiBatch(s, dir)), "st_sessdyn_mb_gate")),
 
     // Per-key running statistics (online anomaly-scoring feed): exact
     // integer cents, so the gate needs no float rounding at all.
     "st_running" -> ((s, dir) =>
-      drain(s, EventStreams.runningStatsStream(s, EventStreams.readEvents(s, dir)),
+      drain(EventStreams.runningStatsStream(s, EventStreams.readEvents(s, dir)),
         "st_running_gate")),
 
     // ---- Multi-batch twins (readEventsMultiBatch: 4 time-contiguous
@@ -225,7 +221,7 @@ object StreamingGateQueries {
     // the single-batch drains.
 
     "st_funnel_mb" -> ((s, dir) =>
-      drain(s, EventStreams.funnelStream(s,
+      drain(EventStreams.funnelStream(s,
         EventStreams.readEventsMultiBatch(s, dir)), "st_funnel_mb_gate")),
 
     // Corpus-covering horizon (31 days > the 30-day event span): per-key
@@ -234,18 +230,18 @@ object StreamingGateQueries {
     // dependent timing — the horizon-expiry path stays covered by the
     // MemoryStream specs; THIS gate pins cross-batch state hits.
     "st_dedup_mb" -> ((s, dir) =>
-      drain(s, EventStreams.dedupStream(
+      drain(EventStreams.dedupStream(
           EventStreams.readEventsMultiBatch(s, dir),
           Seq("user_id", "event_type"), horizon = "744 hours"),
         "st_dedup_mb_gate")
         .select("user_id", "event_type")),
 
     "st_running_mb" -> ((s, dir) =>
-      drain(s, EventStreams.runningStatsStream(s,
+      drain(EventStreams.runningStatsStream(s,
         EventStreams.readEventsMultiBatch(s, dir)), "st_running_mb_gate")),
 
     "st_window_lgq_mb" -> ((s, dir) =>
-      drain(s, EventStreams.logQuantileStream(
+      drain(EventStreams.logQuantileStream(
         EventStreams.readEventsMultiBatch(s, dir)), "st_lgq_mb_gate")),
 
     // Outer-join twin across 4 micro-batches: join state (both sides)
@@ -255,7 +251,7 @@ object StreamingGateQueries {
     // purchase's window always arrives while wm < p_ts + window - 2h +
     // click lag), so the final table equals the single-batch drain.
     "st_range_join_outer_mb" -> ((s, dir) =>
-      drain(s, EventStreams.rangeJoinOuterStream(
+      drain(EventStreams.rangeJoinOuterStream(
         EventStreams.readEventsMultiBatch(s, dir)), "st_rjo_mb_gate")),
 
     // Multi-batch twins for the two sessionizers: session state opened
@@ -267,11 +263,11 @@ object StreamingGateQueries {
     // event, if within gap, already arrived in a batch <= b) — so the
     // oracles are shared verbatim.
     "st_sessionize_mb" -> ((s, dir) =>
-      drain(s, EventStreams.sessionize(s,
+      drain(EventStreams.sessionize(s,
         EventStreams.readEventsMultiBatch(s, dir)), "st_sess_mb_gate")),
 
     "st_session_native_mb" -> ((s, dir) =>
-      drain(s, EventStreams.sessionWindowStream(
+      drain(EventStreams.sessionWindowStream(
         EventStreams.readEventsMultiBatch(s, dir)), "st_sessw_mb_gate")),
 
     // RocksDB-backed drains through the DuckDB gate — the provider every
@@ -280,20 +276,16 @@ object StreamingGateQueries {
     // multi-batch staging (state round-trips RocksDB BETWEEN batches),
     // same oracles: flatMapGroupsWithState custom state for running
     // moments, and the dropDuplicates key store for dedup.
-    "st_running_rocks" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, EventStreams.runningStatsStream(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_running_rocks_gate")
-      }),
+    "st_running_rocks" -> onRocks((s, dir) =>
+      drain(EventStreams.runningStatsStream(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_running_rocks_gate")),
 
-    "st_dedup_rocks" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, EventStreams.dedupStream(
-            EventStreams.readEventsMultiBatch(s, dir),
-            Seq("user_id", "event_type"), horizon = "744 hours"),
-          "st_dedup_rocks_gate")
-          .select("user_id", "event_type")
-      }),
+    "st_dedup_rocks" -> onRocks((s, dir) =>
+      drain(EventStreams.dedupStream(
+          EventStreams.readEventsMultiBatch(s, dir),
+          Seq("user_id", "event_type"), horizon = "744 hours"),
+        "st_dedup_rocks_gate")
+        .select("user_id", "event_type")),
 
     // Streaming as-of against a CHANGING dimension: foreachBatch rebuilds
     // the signup-version dim at each batch's event-time high-water mark
@@ -311,26 +303,20 @@ object StreamingGateQueries {
     // verbatim: the API generation must not change one row. All drain
     // multi-batch, so the typed state and the timers round-trip RocksDB
     // BETWEEN batches.
-    "st_running_tws" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.runningStatsStreamTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_running_tws_gate")
-      }),
+    "st_running_tws" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.runningStatsStreamTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_running_tws_gate")),
 
-    "st_dedup_tws" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.dedupStreamTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_dedup_tws_gate")
-      }),
+    "st_dedup_tws" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.dedupStreamTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_dedup_tws_gate")),
 
     // the ordered-funnel state machine on the TWS API — the 3-slot
     // per-user state crosses micro-batches on RocksDB; completes the
     // fMGWS ↔ TWS twin matrix (running, dedup, sessionize, funnel)
-    "st_funnel_tws" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.funnelStreamTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_funnel_tws_gate")
-      }),
+    "st_funnel_tws" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.funnelStreamTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_funnel_tws_gate")),
 
     // Batch-backfill → streaming handoff (StatefulProcessorWithInitial-
     // State): the first two staged slices aggregate batch-side into
@@ -339,39 +325,31 @@ object StreamingGateQueries {
     // priors over the FULL corpus but returns only the streamed half's
     // rows — a cold start (missing archive in the priors) or a replayed
     // archive (double-counted priors) both hash-mismatch.
-    "st_running_warm" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.runningStatsWarmStart(s, dir),
-          "st_running_warm_gate")
-      }),
+    "st_running_warm" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.runningStatsWarmStart(s, dir),
+        "st_running_warm_gate")),
 
     // MapState through the gate: per-user event_type → lifetime-count
     // profile; every event emits its occurrence number within
     // (user, type). Each map entry is its own state-store row.
-    "st_profile_tws" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.profileStreamTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_profile_tws_gate")
-      }),
+    "st_profile_tws" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.profileStreamTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_profile_tws_gate")),
 
     // ListState through the gate: sliding last-5 feature window — every
     // event emits count + exact-cents sum over its key's PRIOR <=5
     // events; the bounded buffer round-trips RocksDB as individual list
     // rows between batches.
-    "st_lastn_tws" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.lastNStreamTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_lastn_tws_gate")
-      }),
+    "st_lastn_tws" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.lastNStreamTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_lastn_tws_gate")),
 
     // Event-time TIMERS through the gate: sessions close via successor
     // events or via registerTimer/handleExpiredTimer as the watermark
     // ratchets across the 4 micro-batches.
-    "st_sessionize_tws" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.sessionizeTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_sess_tws_gate")
-      }),
+    "st_sessionize_tws" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.sessionizeTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_sess_tws_gate")),
 
     // VARIANT-typed TWS state through the gate: each event emits its
     // key's PREVIOUS semi-structured payload from a ValueState holding
@@ -379,22 +357,18 @@ object StreamingGateQueries {
     // extraction downstream in the plan). The _mb twin proves the
     // variant round-trips RocksDB BETWEEN micro-batches. Oracle is the
     // per-user lag of the raw JSON column.
-    "st_variant_state" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.variantLagStream(s,
-            EventStreams.readEvents(s, dir))
-          .select(col("user_id"), col("event_id"),
-            expr("try_variant_get(prev, '$.k', 'long')").as("prev_k")),
-          "st_vstate_gate")
-      }),
-    "st_variant_state_mb" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.variantLagStream(s,
-            EventStreams.readEventsMultiBatch(s, dir))
-          .select(col("user_id"), col("event_id"),
-            expr("try_variant_get(prev, '$.k', 'long')").as("prev_k")),
-          "st_vstate_mb_gate")
-      }),
+    "st_variant_state" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.variantLagStream(s,
+          EventStreams.readEvents(s, dir))
+        .select(col("user_id"), col("event_id"),
+          expr("try_variant_get(prev, '$.k', 'long')").as("prev_k")),
+        "st_vstate_gate")),
+    "st_variant_state_mb" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.variantLagStream(s,
+          EventStreams.readEventsMultiBatch(s, dir))
+        .select(col("user_id"), col("event_id"),
+          expr("try_variant_get(prev, '$.k', 'long')").as("prev_k")),
+        "st_vstate_mb_gate")),
 
     // Stream-stream AS-OF (temporal) join — the join Spark has no
     // native streaming operator for: purchases (facts) enrich with the
@@ -404,36 +378,28 @@ object StreamingGateQueries {
     // once, when the watermark proves its dim history complete; the
     // oracle is the batch as-of join below the final watermark (same
     // ms-rounded min-of-maxes arithmetic as st_range_join_outer).
-    "st_ss_asof" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.streamAsOfJoinTws(s,
-          EventStreams.readEvents(s, dir)), "st_ss_asof_gate")
-      }),
+    "st_ss_asof" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.streamAsOfJoinTws(s,
+        EventStreams.readEvents(s, dir)), "st_ss_asof_gate")),
 
     // Multi-batch twin: dim versions accrete and facts flush per batch
     // as the watermark ratchets; emission (fact_ts < wm) only tightens
     // monotonically, so the final set — and the oracle — is unchanged.
-    "st_ss_asof_mb" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.streamAsOfJoinTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_ss_asof_mb_gate")
-      }),
+    "st_ss_asof_mb" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.streamAsOfJoinTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_ss_asof_mb_gate")),
 
     // FORWARD direction with a 30-min tolerance window: each purchase
     // matches the EARLIEST same-user click in [ts, ts+30min]; a fact
     // emits once the watermark passes the END of its window (forward
     // as-of is only streamable because the tolerance bounds the wait).
     // Completes the direction matrix the batch operator has.
-    "st_ss_asof_fwd" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.streamAsOfJoinFwdTws(s,
-          EventStreams.readEvents(s, dir)), "st_ss_asof_fwd_gate")
-      }),
-    "st_ss_asof_fwd_mb" -> ((s, dir) =>
-      withStateProvider(s, RocksDbProvider) {
-        drain(s, graft.streaming.TwsOperators.streamAsOfJoinFwdTws(s,
-          EventStreams.readEventsMultiBatch(s, dir)), "st_ss_asof_fwd_mb_gate")
-      }),
+    "st_ss_asof_fwd" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.streamAsOfJoinFwdTws(s,
+        EventStreams.readEvents(s, dir)), "st_ss_asof_fwd_gate")),
+    "st_ss_asof_fwd_mb" -> onRocks((s, dir) =>
+      drain(graft.streaming.TwsOperators.streamAsOfJoinFwdTws(s,
+        EventStreams.readEventsMultiBatch(s, dir)), "st_ss_asof_fwd_mb_gate")),
 
     // State data source reader through the gate: after a checkpointed
     // TWS drain, the PERSISTED state itself (RocksDB files under the
@@ -442,20 +408,18 @@ object StreamingGateQueries {
     // debugging, backfills) proven against the same DuckDB oracle
     // discipline as query output. The running-moments state after a
     // full drain must equal the whole corpus's exact integer moments.
-    "st_state_reader" -> ((s, dir) => {
+    "st_state_reader" -> onRocks((s, dir) => {
       val root = Bridge.scratchDir("graft_sreader")
       val ckpt = new java.io.File(root, "ckpt").getPath
       val out = new java.io.File(root, "out").getPath
-      withStateProvider(s, RocksDbProvider) {
-        val q = graft.streaming.TwsOperators.runningStatsStreamTws(s,
-            EventStreams.readEventsMultiBatch(s, dir))
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", out)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      graft.streaming.TwsOperators.runningStatsStreamTws(s,
+          EventStreams.readEventsMultiBatch(s, dir))
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", out)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
       s.read.format("statestore")
         .option("path", ckpt)
         .option("stateVarName", "moments")
@@ -510,73 +474,63 @@ object StreamingGateQueries {
     // generalized to foreachBatch maintenance (EdgeListSinkSpec pins
     // both recovery branches).
     "st_dsv2_bucket" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
       val fmt = "graft.sources.EdgeListSource"
       val root = Bridge.scratchDir("graft_dsv2sb")
       val standing = s"$root/standing"
       graft.io.Tables.edges(s, dir).repartition(2).write.format(fmt)
         .option("bucketBy", "src").option("numBuckets", "8")
         .mode("overwrite").save(standing)
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val q = EventStreams.readEventsMultiBatch(s, dir)
-          .where(col("event_type") === "purchase")
-          .select((col("user_id") % 401).as("src"), col("event_id").as("dst"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // append rides the sidecar: bucketed, sorted, tagged files;
-            // the marker makes a Spark batch replay a no-op
-            batch.write.format(fmt)
-              .option("idempotencyMarker", s"b$batchId")
-              .mode("append").save(standing)
-            // the mixed SPJ rides the layout each batch: standing side
-            // moves zero bytes, only the fresh batch shuffles into the
-            // reported partitioning
-            // the micro-batch DF lives in a cloned session — the view
-            // and the join must run THERE (confs were inherited at
-            // stream start)
-            batch.createOrReplaceTempView("graft_st_bucket_batch")
-            val j = batch.sparkSession.sql(
-              s"""SELECT /*+ MERGE(a) */ a.src, count(*) AS n
-                 |FROM graft.`$standing` a
-                 |JOIN graft_st_bucket_batch b ON a.src = b.src
-                 |GROUP BY a.src""".stripMargin)
-            j.collect()
-            val nodes =
-              graft.plans.PlanWalk.nodes(j.queryExecution.executedPlan)
-            val smj = nodes.collectFirst {
-              case x: org.apache.spark.sql.execution.joins.SortMergeJoinExec => x }
-              .getOrElse(throw new IllegalStateException(
-                s"no SMJ in batch join:\n${j.queryExecution.executedPlan}"))
-            val shuffles = graft.plans.PlanWalk.nodes(smj).count(_.isInstanceOf[
-              org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
-            require(shuffles == 1,
-              s"expected only the batch-side shuffle under the SMJ, got " +
-                s"$shuffles:\n${j.queryExecution.executedPlan}")
-            ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        // layout survived streaming maintenance: all files tagged
-        val files = graft.sources.EdgeListSource.listFiles(standing)
-        require(files.nonEmpty && files.forall(f =>
-          graft.sources.BucketSpecIO.bucketOf(f.getName).exists(_ < 8)),
-          "streaming appends broke the bucket tagging")
-        s.read.format(fmt).load(standing)
-          .groupBy("src")
-          .agg(count(lit(1)).as("n"), sum("dst").cast("long").as("sum_dst"),
-            min("dst").as("min_dst"), max("dst").as("max_dst"))
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val spj = Bridge.cloneSession(s, EdgeListCatalog.SpjConfs :+
+        ("spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true"): _*)
+      val q = EventStreams.readEventsMultiBatch(spj, dir)
+        .where(col("event_type") === "purchase")
+        .select((col("user_id") % 401).as("src"), col("event_id").as("dst"))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // append rides the sidecar: bucketed, sorted, tagged files;
+          // the marker makes a Spark batch replay a no-op
+          batch.write.format(fmt)
+            .option("idempotencyMarker", s"b$batchId")
+            .mode("append").save(standing)
+          // the mixed SPJ rides the layout each batch: standing side
+          // moves zero bytes, only the fresh batch shuffles into the
+          // reported partitioning
+          // the micro-batch DF lives in the stream's clone of `spj` —
+          // the view and the join must run THERE (its confs were
+          // copied at stream start)
+          batch.createOrReplaceTempView("graft_st_bucket_batch")
+          val j = batch.sparkSession.sql(
+            s"""SELECT /*+ MERGE(a) */ a.src, count(*) AS n
+               |FROM graft.`$standing` a
+               |JOIN graft_st_bucket_batch b ON a.src = b.src
+               |GROUP BY a.src""".stripMargin)
+          j.collect()
+          val nodes =
+            graft.plans.PlanWalk.nodes(j.queryExecution.executedPlan)
+          val smj = nodes.collectFirst {
+            case x: org.apache.spark.sql.execution.joins.SortMergeJoinExec => x }
+            .getOrElse(throw new IllegalStateException(
+              s"no SMJ in batch join:\n${j.queryExecution.executedPlan}"))
+          val shuffles = graft.plans.PlanWalk.nodes(smj).count(_.isInstanceOf[
+            org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+          require(shuffles == 1,
+            s"expected only the batch-side shuffle under the SMJ, got " +
+              s"$shuffles:\n${j.queryExecution.executedPlan}")
+          ()
+        }
+        .option("checkpointLocation", s"$root/ckpt")
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      // layout survived streaming maintenance: all files tagged
+      val files = graft.sources.EdgeListSource.listFiles(standing)
+      require(files.nonEmpty && files.forall(f =>
+        graft.sources.BucketSpecIO.bucketOf(f.getName).exists(_ < 8)),
+        "streaming appends broke the bucket tagging")
+      spj.read.format(fmt).load(standing)
+        .groupBy("src")
+        .agg(count(lit(1)).as("n"), sum("dst").cast("long").as("sum_dst"),
+          min("dst").as("min_dst"), max("dst").as("max_dst"))
     }),
 
     // The sink's MAINTENANCE companion: a 4-epoch drain accretes small
@@ -852,7 +806,7 @@ object StreamingGateQueries {
       val schema = graft.io.Tables.parquetSchema(s, s"$dir/documents.parquet")
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      drain(s, graft.text.TextAnalysis.chunk(
+      drain(graft.text.TextAnalysis.chunk(
         docsStream, col("doc_id"), col("text"), window = 64, stride = 48),
         "st_chunk_gate")
     }),
@@ -864,7 +818,7 @@ object StreamingGateQueries {
       val schema = graft.io.Tables.parquetSchema(s, s"$dir/documents.parquet")
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      drain(s, graft.text.TextAnalysis.classify(
+      drain(graft.text.TextAnalysis.classify(
         docsStream, col("doc_id"), col("text")), "st_classify_gate")
     }),
 
@@ -874,7 +828,7 @@ object StreamingGateQueries {
     // parse + typed-path extraction is stateless, so every row emits
     // immediately; the oracle re-derives each value from raw columns.
     "st_variant" -> ((s, dir) =>
-      drain(s, EventStreams.readEvents(s, dir)
+      drain(EventStreams.readEvents(s, dir)
         .withColumn("v", expr(EventQueries.VariantPayloadSql))
         .select(col("event_id"),
           expr("variant_get(v, '$.p.k', 'bigint')").as("k"),
@@ -889,7 +843,7 @@ object StreamingGateQueries {
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .withColumn("tts", timestamp_micros((col("doc_id") + 1) * 1000000L))
-      drain(s, EventStreams.nearDupStream(s, docsStream), "st_neardup_gate")
+      drain(EventStreams.nearDupStream(s, docsStream), "st_neardup_gate")
     }),
 
     // KEYLESS stream-stream interval-overlap join: no equi-key exists in
@@ -897,7 +851,7 @@ object StreamingGateQueries {
     // becomes the symmetric hash join's key; shares the batch
     // e_interval_join oracle (single-batch drain holds both sides).
     "st_interval_join" -> ((s, dir) =>
-      drain(s, EventStreams.intervalJoinStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.intervalJoinStream(EventStreams.readEvents(s, dir)),
         "st_ij_gate")),
 
     // Stream-stream LEFT OUTER range join: matched purchase→click pairs
@@ -906,7 +860,7 @@ object StreamingGateQueries {
     // eviction path (purchases still inside the horizon at end-of-
     // stream never emit, which the oracle replays).
     "st_range_join_outer" -> ((s, dir) =>
-      drain(s, EventStreams.rangeJoinOuterStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.rangeJoinOuterStream(EventStreams.readEvents(s, dir)),
         "st_rjo_gate")),
 
     // FULL OUTER stream-stream range join: unmatched rows from BOTH
@@ -917,11 +871,11 @@ object StreamingGateQueries {
     // per state row, so mid-drain watermark advances change WHEN null
     // rows appear, never the final multiset).
     "st_range_join_full" -> ((s, dir) =>
-      drain(s, EventStreams.rangeJoinFullStream(EventStreams.readEvents(s, dir)),
+      drain(EventStreams.rangeJoinFullStream(EventStreams.readEvents(s, dir)),
         "st_rjf_gate")),
 
     "st_range_join_full_mb" -> ((s, dir) =>
-      drain(s, EventStreams.rangeJoinFullStream(
+      drain(EventStreams.rangeJoinFullStream(
         EventStreams.readEventsMultiBatch(s, dir)), "st_rjf_mb_gate")),
 
     // Streaming 3-sigma anomaly flags on the running moments — exact
@@ -929,7 +883,7 @@ object StreamingGateQueries {
     // so the boolean never rides a float. Multi-batch drain: the prior-
     // moments state crosses micro-batch boundaries.
     "st_anomaly" -> ((s, dir) =>
-      drain(s, EventStreams.anomalyStream(s,
+      drain(EventStreams.anomalyStream(s,
         EventStreams.readEventsMultiBatch(s, dir)), "st_anomaly_gate")),
 
     // Explicit _mb twin completing the multi-batch matrix (VERDICT r8
@@ -938,7 +892,7 @@ object StreamingGateQueries {
     // round-trips the store across twice as many batch boundaries
     // (including boundaries that split a single event_type's run).
     "st_anomaly_mb" -> ((s, dir) =>
-      drain(s, EventStreams.anomalyStream(s,
+      drain(EventStreams.anomalyStream(s,
         EventStreams.readEventsMultiBatch(s, dir, nFiles = 8)),
         "st_anomaly_mb_gate")),
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   *  - **path literals** — a backquoted absolute path IS the table:
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")
+  *   Bridge.cloneSession(spark, EdgeListCatalog.Mount)   -- then, on that copy:
   *   CREATE TABLE graft.`/data/edges` (src BIGINT, dst BIGINT)
   *   INSERT INTO  graft.`/data/edges` VALUES (1, 2)
   *   SELECT ...   FROM graft.`/data/edges`
@@ -296,4 +296,15 @@ class EdgeListCatalog extends TableCatalog with SupportsNamespaces
     java.nio.file.Files.move(from.toPath, to.toPath)
     ()
   }
+}
+
+object EdgeListCatalog {
+  /** The conf that mounts this catalog as `graft`. */
+  val Mount: (String, String) = "spark.sql.catalog.graft" -> classOf[EdgeListCatalog].getName
+
+  /** [[Mount]] plus the two confs a storage-partitioned join over the
+    * catalog's bucketed tables needs. */
+  val SpjConfs: Seq[(String, String)] = Seq(Mount,
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
 }

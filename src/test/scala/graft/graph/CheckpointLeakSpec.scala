@@ -1,15 +1,16 @@
 package graft.graph
 
-import graft.testkit.SparkSpec
+import graft.testkit.{CheckpointLeaks, SparkSpec}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Every iterative graph entry point releases its loop's checkpoints:
   * after the result is collected, the only persisted RDDs the call added
-  * are the checkpoints the returned plan reads directly. Algorithms with
-  * a bounded sequential tail run in the pure distributed regime
-  * (tailThreshold = 0), with a mid-flight cutover (16) and at the
+  * are the checkpoints the returned plan reads directly; a checkpoint
+  * dropped without a release fails the row whether or not the garbage
+  * collector has taken it ([[graft.testkit.CheckpointLeaks]]).
+  * Algorithms with a bounded sequential tail run in the pure distributed
+  * regime (tailThreshold = 0), with a mid-flight cutover (16) and at the
   * default. */
 class CheckpointLeakSpec extends SparkSpec {
   import spark.implicits._
@@ -63,13 +64,7 @@ class CheckpointLeakSpec extends SparkSpec {
     test(s"$name leaves only the checkpoints its result reads") {
       cc.collect()
       assert(sources.nonEmpty)
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val result = call()
-      result.collect()
-      val own = result.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }.toSet
-      // the registry holds RDDs weakly, so entries from before the call
-      // may vanish; only additions are checked
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(added.subsetOf(own), s"$name left persisted RDDs behind: ${added -- own}")
+      val left = CheckpointLeaks.leftBehind(spark)(call())
+      assert(left.isEmpty, s"$name left persisted RDDs behind: $left")
     }
 }

@@ -76,13 +76,5 @@ class RandomWalksSpec extends SparkSpec {
     val c = RandomWalks.run(spark, raw.toDF("src", "dst"), 10L, 5)
       .as[(Long, Long, Long)].collect().sorted.toSeq
     assert(a != c, "different seeds should diverge")
-    // the sort-once scale path (spark.graft.walks.cacheSorted) is
-    // byte-identical in output
-    spark.conf.set("spark.graft.walks.cacheSorted", "true")
-    try {
-      val d = RandomWalks.run(spark, raw.toDF("src", "dst"), 9L, 5)
-        .as[(Long, Long, Long)].collect().sorted.toSeq
-      assert(a == d, "cacheSorted path must produce identical walks")
-    } finally spark.conf.unset("spark.graft.walks.cacheSorted")
   }
 }

@@ -1,14 +1,15 @@
 package graft.streaming
 
-import graft.testkit.SparkSpec
+import graft.testkit.{CheckpointLeaks, SparkSpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** [[graft.graph.CheckpointLeakSpec]]'s contract for every sink that
   * folds micro-batches into a state: after the result is collected, the
   * only persisted RDDs the call added are the checkpoints the returned
   * plan reads directly. Each superseded state, each per-batch checkpoint
-  * and each set-up checkpoint the result does not read is released. */
+  * and each set-up checkpoint the result does not read is released; one
+  * dropped without a release fails the row even once the garbage
+  * collector has taken it ([[graft.testkit.CheckpointLeaks]]). */
 class FoldCheckpointLeakSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -44,13 +45,7 @@ class FoldCheckpointLeakSpec extends SparkSpec {
 
   for ((name, sink) <- sinks)
     test(s"$name leaves only the checkpoints its result reads") {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val result = sink(spark, dir)
-      result.collect()
-      val own = result.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }.toSet
-      // the registry holds RDDs weakly, so entries from before the call
-      // may vanish; only additions are checked
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(added.subsetOf(own), s"$name left persisted RDDs behind: ${added -- own}")
+      val left = CheckpointLeaks.leftBehind(spark)(sink(spark, dir))
+      assert(left.isEmpty, s"$name left persisted RDDs behind: $left")
     }
 }

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class BridgeSpec extends AnyFunSuite {
@@ -15,6 +17,26 @@ class BridgeSpec extends AnyFunSuite {
     // Spark's shutdown hook deletes it with its contents at JVM exit
     assert(org.apache.spark.util.ShutdownHookManager.hasShutdownDeleteDir(a))
     assert(org.apache.spark.util.ShutdownHookManager.hasShutdownDeleteDir(b))
+  }
+
+  test("cloneSession scopes its confs to the frames built on the copy") {
+    val spark = graft.testkit.SparkSpec.session
+    val key = "spark.sql.shuffle.partitions"
+    spark.range(40).createOrReplaceTempView("graft_bridge_clone_view")
+    val before = spark.conf.getAll
+    def shuffleWidths(df: DataFrame): Seq[Int] = {
+      df.collect()
+      graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+        .collect { case e: ShuffleExchangeExec => e.numPartitions }
+    }
+    // built inside the call, collected after it returns
+    def onCopy(): DataFrame = Bridge.cloneSession(spark, key -> "3")
+      .table("graft_bridge_clone_view").repartition(col("id"))
+    assert(shuffleWidths(onCopy()) == Seq(3))
+    assert(spark.conf.getAll == before)
+    assert(shuffleWidths(spark.table("graft_bridge_clone_view").repartition(col("id"))) ==
+      Seq(spark.conf.get(key).toInt))
+    spark.catalog.dropTempView("graft_bridge_clone_view")
   }
 }
 

@@ -5,7 +5,9 @@
 #
 #   tools/gate.sh [sfDir]          default /root/testdata/sf0.01
 #
-# Runs: sbt test (then lists the graft* entries it left in /tmp) ->
+# Runs: the conf-scoping check (no newSession() or conf.unset( in
+#   src/main/scala outside Bridge.scala) -> sbt test (then lists the
+#   graft* entries it left in /tmp) ->
 #   graft.tools.EntrySmoke -> CLI pagerank on bull (cmp against
 #   src/test/resources/bull-pr.expected) -> perfbench sbt test -> graft.Verify
 #   -> tools/check_oracle.py -> graft.Bench.
@@ -28,6 +30,14 @@ fail() {
     FAILED+=("$1")
   fi
 }
+
+# a query scopes its confs on a session copy (Bridge.cloneSession) and
+# never writes the session it was handed: only Bridge.scala may start a
+# child session or unset a conf. Names every file that does.
+echo "== gate: conf scoping =="
+SCOPE="$(grep -rlE 'newSession\(\)|conf\.unset\(' src/main/scala | grep -v '/Bridge\.scala$')"
+[ -n "$SCOPE" ] && echo "$SCOPE"
+fail "conf scoping" "$([ -z "$SCOPE" ]; echo $?)"
 
 # the graft* entries of /tmp before the tests: a test's scratch
 # directory must be gone when its JVM exits (Bridge.scratchDir)
