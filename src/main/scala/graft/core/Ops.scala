@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputRDDCodegen, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Thin typed operator algebra mirroring the reference MR-MPI surface
@@ -257,5 +260,45 @@ object Ops {
       .withColumn("asof_" + value, last("__v", ignoreNulls = true).over(w))
       .where(col("__side") === 1)
       .drop("__side", "__v")
+  }
+
+  /** Spread a narrow scan over every core ahead of CPU-bound row work
+    * (the map phase the reference runs on every processor). A parquet
+    * table smaller than one row group scans in one task, and a
+    * row-local kernel over it (MinHash signatures, SimHash sketches,
+    * tokenizing) then runs on one core. When `df` is narrow (no
+    * operator between its root and its scans shuffles) and its scans
+    * plan fewer than `p` = `defaultParallelism` partitions, this returns
+    * `df.repartition(p)`, or `df.repartition(p, keys: _*)` given keys;
+    * otherwise, and for a streaming frame, `df` itself. The count is
+    * read off the planned scans on the driver: no Spark job runs.
+    *
+    * Call it only where the per-row cost dwarfs one exchange of the row,
+    * never ahead of an operator that shuffles its input anyway (a join,
+    * an aggregate, a window): there the spread is one more exchange for
+    * nothing. Keyed on the window's partition key, the repartition is
+    * the window's own exchange, and AQE does not coalesce it. */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    if (df.isStreaming) df
+    else {
+      val p = df.sparkSession.sparkContext.defaultParallelism
+      scanPartitions(df.queryExecution.sparkPlan) match {
+        case Some(n) if n < p =>
+          if (keys.isEmpty) df.repartition(p) else df.repartition(p, keys: _*)
+        case _ => df
+      }
+    }
+
+  /** Partitions the scans of a narrow physical plan run in; None when
+    * an operator of `plan` shuffles or reads a leaf whose partitions it
+    * cannot count. */
+  private def scanPartitions(plan: SparkPlan): Option[Int] = plan match {
+    case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+    case s: InputRDDCodegen => Some(s.inputRDD.getNumPartitions) // local rows, checkpoints
+    case _: Exchange => None
+    case o if o.children.nonEmpty &&
+        o.requiredChildDistribution.forall(_ == UnspecifiedDistribution) =>
+      o.children.map(scanPartitions).reduce((a, b) => a.zip(b).map { case (x, y) => x max y })
+    case _ => None
   }
 }

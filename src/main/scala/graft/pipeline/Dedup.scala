@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Ops
 import graft.functions.Hashing
 import graft.text.TextAnalysis
 
@@ -13,11 +14,13 @@ import graft.text.TextAnalysis
   *
   * Scale shape (100 TB corpus):
   *  - exact: one hash-shuffle on a 60-bit digest — no full-text compare.
-  *  - MinHash: signature computation is a single scan (shingle explode ×
-  *    16 hashes, map-side partial min); LSH banding turns all-pairs into
+  *  - MinHash: signatures are one fused native expression per document
+  *    in a single scan, spread over every core first when the scan has
+  *    fewer splits than cores; LSH banding turns all-pairs into
   *    per-bucket joins, the standard way near-dup detection survives
   *    web scale. Candidate verification joins stay per-bucket.
-  *  - SimHash: one scan to 60-bit sketches; Hamming-near pairs via
+  *  - SimHash: one scan to 60-bit sketches (one fused expression per
+  *    document, spread as MinHash is); Hamming-near pairs via
   *    pigeonhole band-join on sketch bands + exact popcount verify.
   */
 object Dedup {
@@ -50,13 +53,16 @@ object Dedup {
   def minHashSignatures(docs: DataFrame, id: Column, text: Column): DataFrame = {
     // Fused row-local form (r13, graft.functions.MinHashSigExpr): one
     // native loop per document replaces the exploded-shingle rows, the
-    // interpreted shingle lambda, and the groupBy exchange — ZERO
-    // shuffle at any scale, values bit-identical to the aggregate form
-    // below (PipelineSpec pins it). Docs shorter than the shingle width
-    // yield a null signature and are filtered, exactly the rows the
-    // aggregate form never produced a group for.
+    // interpreted shingle lambda, and the groupBy exchange, values
+    // bit-identical to the aggregate form below (PipelineSpec pins it).
+    // No exchange of its own: a narrow scan with fewer splits than cores
+    // is spread first (Ops.spread, one round-robin exchange of the
+    // documents), a scan with enough splits runs shuffle-free. Docs
+    // shorter than the shingle width yield a null signature and are
+    // filtered, exactly the rows the aggregate form never produced a
+    // group for.
     val coeffs = (0 until NumHashes).map(minHashCoeffs)
-    val sig = docs
+    val sig = Ops.spread(docs)
       .select(id.as("doc_id"), TextAnalysis.tokens(text).as("toks"))
       // filter on the CHEAP size predicate, not sig.isNotNull: the
       // optimizer pushes filters into the scan, and a sig-referencing
@@ -249,19 +255,20 @@ object Dedup {
 
   /** 60-bit SimHash over token hashes: bit j set iff the sum over tokens
     * of ±1 (sign of token-hash bit j) is positive — computed as
-    * 2·count_of_ones(j) > ntokens, with the 60 one-counts packed into
-    * 20 aggregation longs ([[CountersPerLong]] each). Identical output
-    * to the per-bit formulation (the DuckDB oracle still computes the
-    * plain 60-sum form). Duplicate tokens weigh multiply — standard
-    * SimHash with unit weights. */
+    * 2·count_of_ones(j) > ntokens, the 60 one-counts kept in one native
+    * loop per document. Identical output to the per-bit formulation
+    * (the DuckDB oracle still computes the plain 60-sum form).
+    * Duplicate tokens weigh multiply — standard SimHash with unit
+    * weights. */
   def simHash(docs: DataFrame, id: Column, text: Column): DataFrame =
     // Fused row-local form (r13, graft.functions.SimHashExpr): one
     // native loop per document — no exploded token rows, no per-token
-    // 60-shift packing tree, no groupBy exchange at any scale. Sketch
-    // values bit-identical to the packed aggregate form kept below
-    // (PipelineSpec pins it); empty docs filtered on the cheap size
-    // predicate, exactly the rows the aggregate never grouped.
-    docs.select(id.as("doc_id"), TextAnalysis.tokens(text).as("toks"))
+    // 60-shift packing tree, no groupBy exchange. The only exchange is
+    // Ops.spread's, on a narrow scan with fewer splits than cores.
+    // Sketch values bit-identical to the packed aggregate form kept
+    // below (PipelineSpec pins it); empty docs filtered on the cheap
+    // size predicate, exactly the rows the aggregate never grouped.
+    Ops.spread(docs).select(id.as("doc_id"), TextAnalysis.tokens(text).as("toks"))
       .where(size(col("toks")) > 0)
       .select(col("doc_id"),
         graft.functions.SimHashExpr.simHash60(col("toks")).as("simhash"))

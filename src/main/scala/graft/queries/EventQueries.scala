@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Ops
 import graft.io.Tables
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -52,12 +53,14 @@ object EventQueries {
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 4).as("total_value"))),
 
     // Gap-based sessionization (30 min): the flatMapGroupsWithState
-    // batch analogue, expressed with window functions.
+    // batch analogue, expressed with window functions. The spread keyed
+    // on user_id is the windows' and the groupBy's one exchange; unlike
+    // the window's own, AQE does not coalesce it to one partition.
     "e_sessionize" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val byUser = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))
-      eventsUs(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts_us"))
+      Ops.spread(eventsUs(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts_us")), col("user_id"))
         .withColumn("prev_us", lag("ts_us", 1).over(byUser))
         .withColumn("new_sess",
           when(col("prev_us").isNull || col("ts_us") - col("prev_us") > 1800L * 1000000L, 1L)

@@ -651,11 +651,12 @@ private[sources] class EdgeListScan(path: String, chunkBytes: Long,
         // tasks + a k-way merge nobody reads the order of). Spark only
         // consumes the partitioning/ordering reports when V2 bucketing
         // is on (DataSourceV2ScanExecBase.groupedPartitions gates on
-        // it), so a scan under the default conf keeps byte-range splits
-        // — full-scan/compaction parallelism is never sacrificed to an
-        // ordering report no operator will use.
-        org.apache.spark.sql.internal.SQLConf.get.getConfString(
-          "spark.sql.sources.v2.bucketing.enabled", "false").toBoolean &&
+        // it), so a scan with it off keeps byte-range splits —
+        // full-scan/compaction parallelism is never sacrificed to an
+        // ordering report no operator will use. The key is read as
+        // Spark registers it (on by default in Spark 4), so an unset
+        // key and an explicit `true` plan the same scan.
+        org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled &&
         // SKEW INTERPLAY (round 13 — selective, no longer give-up):
         // under partially-clustered distribution, planInputPartitions
         // keeps merged+ordered partitions for COLD buckets and splits
@@ -677,9 +678,7 @@ private[sources] class EdgeListScan(path: String, chunkBytes: Long,
         // count were dropped — caught by EdgeListBucketJoinSpec's
         // compatible-width case before it could ship). Chunk-granular
         // planning under this conf is both correct and honest.
-        !org.apache.spark.sql.internal.SQLConf.get.getConfString(
-          "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled",
-          "false").toBoolean
+        !org.apache.spark.sql.internal.SQLConf.get.v2BucketingAllowCompatibleTransforms
     }
 
   override def outputOrdering():
@@ -697,8 +696,8 @@ private[sources] class EdgeListScan(path: String, chunkBytes: Long,
     * a fully-bucketed table reports `bucket(n, col)` key-grouped
     * partitioning — each chunk carries its bucket id — so two tables
     * bucketed alike join with ZERO Exchange once Catalyst resolves the
-    * transform through [[EdgeListCatalog]]'s function catalog (enable
-    * `spark.sql.sources.v2.bucketing.enabled`). The shuffle is paid
+    * transform through [[EdgeListCatalog]]'s function catalog (with
+    * `spark.sql.sources.v2.bucketing.enabled`, on by default). The shuffle is paid
     * once at write time and amortized over every later join — the
     * reference's `aggregate`-once idiom (`mapreduce.cpp:382-536`) as a
     * durable layout. */
@@ -880,10 +879,8 @@ private[sources] class EdgeListScan(path: String, chunkBytes: Long,
           else required.fieldNames.indexOf(specCols(1))
         val gridN = bucketSpec.filter(_._1.contains(",")).map(_._2)
           .getOrElse(0)
-        val partialClustering =
-          org.apache.spark.sql.internal.SQLConf.get.getConfString(
-            "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled",
-            "false").toBoolean
+        val partialClustering = org.apache.spark.sql.internal.SQLConf.get
+          .v2BucketingPartiallyClusteredDistributionEnabled
         val byBucket = kept.groupBy { case (f, _) =>
           BucketSpecIO.bucketOf(f.getName).get }.toSeq.sortBy(_._1)
         val medianBytes: Long =

@@ -25,9 +25,10 @@ object TextAnalysis {
   /** `wordfreq N` — global top-N words with deterministic tie-break.
     * Catalyst plans partial counts before the exchange and
     * TakeOrderedAndProject for the limit (the reference hand-writes both:
-    * per-proc top-10 then gather+sort). */
+    * per-proc top-10 then gather+sort). Tokenizing is the cost, so a
+    * narrow scan is spread over every core first ([[graft.core.Ops.spread]]). */
   def wordFreq(docs: DataFrame, text: Column, n: Int): DataFrame =
-    docs.select(explode(tokens(text)).as("word"))
+    graft.core.Ops.spread(docs).select(explode(tokens(text)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word").asc)
       .limit(n)

@@ -1,10 +1,121 @@
 package graft.core
 
+import graft.pipeline.Dedup
+import graft.plans.PlanWalk
 import graft.testkit.SparkSpec
+import graft.text.TextAnalysis
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 class OpsSpec extends SparkSpec {
   import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** sf0.001's `documents` and `events` rewritten into a scratch
+    * directory as one file each, and again as `p` files each: the first
+    * scans in one task (a narrow scan to spread), the second in `p`. */
+  private lazy val (narrowDir, wideDir) = {
+    val p = spark.sparkContext.defaultParallelism
+    val root = Bridge.scratchDir("graft-spread")
+    for ((dir, files) <- Seq("narrow" -> 1, "wide" -> p); t <- Seq("documents", "events"))
+      graft.io.Tables.table(spark, sf, t).repartition(files)
+        .write.parquet(s"$root/$dir/$t.parquet")
+    (s"$root/narrow", s"$root/wide")
+  }
+
+  private def exchanges(df: DataFrame): Int =
+    PlanWalk.nodes(df.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeExec])
+
+  /** Whether `df` plans an explicit repartition by number: the spread. */
+  private def spreads(df: DataFrame): Boolean =
+    PlanWalk.nodes(df.queryExecution.executedPlan).exists {
+      case e: ShuffleExchangeExec => e.shuffleOrigin == REPARTITION_BY_NUM
+      case _ => false
+    }
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  /** The task count of each stage `body` runs from this thread, in
+    * stage order, and the number of its jobs. */
+  private def stagesOf(body: => Any): (Seq[Int], Int) = {
+    val sc = spark.sparkContext
+    val group = "ops-spread-spec"
+    val jobs = new AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      private def ours(props: java.util.Properties) =
+        props != null && props.getProperty("spark.jobGroup.id") == group
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (ours(j.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (ours(s.properties)) stages.put(s.stageInfo.stageId, s.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ops spread spec")
+    try {
+      body
+      Bridge.drainListeners(sc)
+      import scala.jdk.CollectionConverters._
+      (stages.asScala.toSeq.sortBy(_._1).map(_._2), jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("spread: a kernel over a one-file parquet table runs defaultParallelism tasks") {
+    val p = spark.sparkContext.defaultParallelism
+    val docs = graft.io.Tables.documents(spark, narrowDir)
+    assert(docs.rdd.getNumPartitions == 1, "fixture must scan in one task")
+    val sig = Dedup.minHashSignatures(docs, col("doc_id"), col("text"))
+    assert(exchanges(sig) == 1)
+    val (tasks, jobs) = stagesOf(sig.write.format("noop").mode("overwrite").save())
+    // the scan stage, then the kernel stage reading the spread
+    assert(tasks == Seq(1, p), s"stage tasks $tasks over $jobs jobs")
+  }
+
+  test("spread: a frame with p partitions and a streaming frame come back unchanged") {
+    val wide = graft.io.Tables.documents(spark, wideDir)
+    assert(wide.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+    assert(Ops.spread(wide) eq wide)
+    assert(exchanges(Dedup.simHash(wide, col("doc_id"), col("text"))) == 0)
+    val joined = graft.io.Tables.documents(spark, narrowDir).as("a")
+      .join(graft.io.Tables.documents(spark, narrowDir).as("b"), "doc_id")
+    assert(Ops.spread(joined) eq joined, "a frame that shuffles already is left alone")
+    val stream = spark.readStream.format("rate").load()
+    assert(Ops.spread(stream, col("value")) eq stream)
+  }
+
+  test("spread: building the spread kernels launches no Spark job") {
+    val (_, jobs) = stagesOf {
+      val docs = graft.io.Tables.documents(spark, narrowDir)
+      Ops.spread(docs)
+      Dedup.minHashSignatures(docs, col("doc_id"), col("text"))
+      Dedup.simHash(docs, col("doc_id"), col("text"))
+      TextAnalysis.wordFreq(docs, col("text"), 20)
+      graft.SparkEntry.queries("e_sessionize")(spark, narrowDir)
+    }
+    assert(jobs == 0)
+  }
+
+  test("spread: the kernels give the same rows with and without the spread") {
+    def both(f: String => DataFrame): Unit = {
+      val (spread, plain) = (f(narrowDir), f(wideDir))
+      assert(spreads(spread) && !spreads(plain))
+      val rows = sortedRows(spread)
+      assert(rows.nonEmpty && rows == sortedRows(plain))
+    }
+    def docs(dir: String) = graft.io.Tables.documents(spark, dir)
+    both(d => Dedup.minHashSignatures(docs(d), col("doc_id"), col("text")))
+    both(d => Dedup.simHash(docs(d), col("doc_id"), col("text")))
+    both(d => TextAnalysis.wordFreq(docs(d), col("text"), 20))
+    both(d => graft.SparkEntry.queries("e_sessionize")(spark, d))
+  }
 
   test("asofJoin picks the most recent right value at or before each left ts") {
     val left = Seq((1L, 10L, 100L), (1L, 11L, 250L), (2L, 12L, 50L))

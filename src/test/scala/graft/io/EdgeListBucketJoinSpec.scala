@@ -549,6 +549,31 @@ class EdgeListBucketJoinSpec extends SparkSpec {
       .except(edges(6000).groupBy("src", "dst").count()).isEmpty)
   }
 
+  test("v2 bucketing: an unset key and an explicit true plan the same input partitions") {
+    val root = tmp()
+    edges(6000).repartition(4).write.format(fmt)
+      .option("bucketBy", "src").option("numBuckets", "8")
+      .mode("overwrite").save(s"$root/t")
+    val key = "spark.sql.sources.v2.bucketing.enabled"
+    /** The input partitions a plain read of the table plans on `s`. */
+    def planned(s: org.apache.spark.sql.SparkSession): Seq[String] = {
+      val prev = org.apache.spark.sql.SparkSession.getActiveSession
+      org.apache.spark.sql.SparkSession.setActiveSession(s)
+      try graft.plans.PlanWalk.nodes(
+          s.read.format(fmt).load(s"$root/t").queryExecution.executedPlan)
+        .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputPartitions.map(_.toString) }.flatten
+      finally prev.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+    }
+    val unset = Bridge.cloneSession(spark)
+    unset.conf.unset(key)
+    val on = planned(Bridge.cloneSession(spark, key -> "true"))
+    // on by default: one merged partition per bucket either way
+    assert(on.length === 8)
+    assert(planned(unset) === on)
+    assert(planned(Bridge.cloneSession(spark, key -> "false")).length > 8)
+  }
+
   test("sorted SPJ: sort-merge join with ZERO Exchange and ZERO Sort") {
     val root = tmp()
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.EdgeListCatalog")

@@ -54,6 +54,22 @@ class PlanAuditSpec extends SparkSpec {
       s"cartesian product in: ${offenders.mkString(", ")}")
   }
 
+  test("the spread stays off shuffling operators: no round robin, no extra exchange") {
+    // Ops.spread goes only ahead of row-local kernels; a blanket
+    // round-robin repartition after small scans slows the aggregates and
+    // windows that shuffle their input anyway
+    def exchanges(name: String) = PlanWalk.nodes(
+      graft.SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      .collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e }
+    for (name <- Seq("q1_agg", "q3_join_agg", "e_window_agg"))
+      assert(!exchanges(name).exists(_.outputPartitioning
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]),
+        s"$name plans a round-robin exchange")
+    // the spread keyed on user_id is the windows' and the groupBy's one
+    // exchange, as the window's own was before it
+    assert(exchanges("e_sessionize").length <= 1)
+  }
+
   test("single-table scan queries read a pruned schema, not every column") {
     // representative narrow projections: the scan must not drag the full
     // table row (lineitem has 16 columns, documents 3+)
